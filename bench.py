@@ -205,10 +205,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     spark = get_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    # the core count the session actually runs with (labels the detail
+    # file below), not a second parse of the env var
+    cpus = spark.sparkContext.defaultParallelism
 
     # Warmup: first Spark job pays JVM + codegen + parquet-footer startup.
     registry.REGISTRY["vec_sim_topk"][0](spark, sf_dir).collect()

@@ -638,9 +638,11 @@ def dedup_assign(
     labels = docs.select(F.col(id_col).alias("id")).withColumn(
         "keeper_id", F.col("id")
     )
-    from demo_pgvector_spark.session import scoped_shuffle_partitions
+    from demo_pgvector_spark.session import scoped_conf
 
-    with scoped_shuffle_partitions(docs.sparkSession, shuffle_partitions):
+    with scoped_conf(
+        docs.sparkSession, "spark.sql.shuffle.partitions", shuffle_partitions
+    ):
         labels = _cc_rounds(edges, labels, max_iters)
     return labels.withColumn("is_keeper", F.col("id") == F.col("keeper_id"))
 

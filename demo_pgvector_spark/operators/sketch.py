@@ -173,23 +173,6 @@ def hll_build(
     )
 
 
-def hll_est_expr(p: int = HLL_P):
-    """The estimate COLUMN over (n_set, zeros, z_num) columns — factored
-    so every consumer (``hll_estimate``'s register-relation path and
-    graph.py's packed-register HyperBall state) executes the IDENTICAL
-    float-op sequence: one alpha·m²·2^(Q+1)/z_num division, the
-    linear-counting branch m·ln(m/zeros), 4dp round."""
-    m = 1 << p
-    raw = F.lit(hll_alpha_num(p)) / F.col("z_num")
-    return F.round(
-        F.when(
-            (raw <= 2.5 * m) & (F.col("zeros") > 0),
-            F.lit(float(m)) * F.log(F.lit(float(m)) / F.col("zeros")),
-        ).otherwise(raw),
-        4,
-    )
-
-
 def hll_estimate(
     registers: DataFrame,
     group_cols: tuple[str, ...] = (),
@@ -215,9 +198,10 @@ def hll_estimate(
             F.expr(f"shiftleft(cast(1 as bigint), {q + 1} - rho)")
         ).alias("_z_set"),
     )
+    zeros = F.lit(m) - F.col("n_set")
     # ONE float literal (folded in Python) and ONE division, so Spark
     # and the DuckDB oracle execute the identical IEEE op sequence.
-    zeros = F.lit(m) - F.col("n_set")
+    raw = F.lit(hll_alpha_num(p)) / F.col("z_num")
     return (
         per_group.select(
             *group_cols,
@@ -234,6 +218,12 @@ def hll_estimate(
             "n_set",
             "zeros",
             "z_num",
-            hll_est_expr(p).alias("hll_est"),
+            F.round(
+                F.when(
+                    (raw <= 2.5 * m) & (F.col("zeros") > 0),
+                    F.lit(float(m)) * F.log(F.lit(float(m)) / F.col("zeros")),
+                ).otherwise(raw),
+                4,
+            ).alias("hll_est"),
         )
     )

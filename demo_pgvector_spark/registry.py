@@ -2088,10 +2088,8 @@ def q_stream_hnsw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     work = tempfile.mkdtemp(prefix="spark_graft_hnswst_run_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
+    stream = stream_ingest_ops.landing_stream(
+        spark, landing, "vec_id long, embedding array<double>"
     )
     emb = tables.load(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 5 != 0).select(
@@ -3262,12 +3260,8 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema_ddl = (
         "id long, event_id long, user_id long, event_type string, value double"
     )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
+    stream = stream_ingest_ops.landing_stream(
+        spark, landing, "event_id long, user_id long, event_type string, value double"
     )
     root = os.path.join(work, "table")
     stream_ingest_ops.run_upsert_stream(
@@ -5033,10 +5027,8 @@ def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     work = tempfile.mkdtemp(prefix="spark_graft_cmsk_run_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
-    stream = (
-        spark.readStream.schema("event_id long, user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
+    stream = stream_ingest_ops.landing_stream(
+        spark, landing, "event_id long, user_id long"
     )
     root = os.path.join(work, "sketch")
     stream_sketch_ops.run_countmin_stream(
@@ -5757,10 +5749,8 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     work = tempfile.mkdtemp(prefix="spark_graft_blsk_run_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
+    stream = stream_ingest_ops.landing_stream(
+        spark, landing, "doc_id long, text string"
     )
     root = os.path.join(work, "bloom")
     stream_sketch_ops.run_bloom_stream(
@@ -5800,10 +5790,8 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     work = tempfile.mkdtemp(prefix="spark_graft_hllsk_run_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
-    stream = (
-        spark.readStream.schema("l_orderkey long, l_returnflag string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
+    stream = stream_ingest_ops.landing_stream(
+        spark, landing, "l_orderkey long, l_returnflag string"
     )
     root = os.path.join(work, "hll")
     stream_sketch_ops.run_hll_stream(
@@ -5912,12 +5900,8 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(False).alias("is_current"),
         )
     )
-    stream = (
-        spark.readStream.schema(
-            "c_custkey long, c_name string, c_acctbal double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
+    stream = stream_ingest_ops.landing_stream(
+        spark, landing, "c_custkey long, c_name string, c_acctbal double"
     )
     root = os.path.join(work, "dim")
     schema_ddl = (
@@ -6440,10 +6424,8 @@ def q_stream_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     work = tempfile.mkdtemp(prefix="spark_graft_crsk_run_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
+    stream = stream_ingest_ops.landing_stream(
+        spark, landing, "doc_id long, text string"
     )
     docs = tables.load(spark, sf_dir, "documents")
     non_eval = F.col("doc_id") % 41 != 0

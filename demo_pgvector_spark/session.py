@@ -113,10 +113,13 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
 
 class scoped_conf:
-    """Set an arbitrary runtime conf for a bounded scope and restore the
-    previous value on exit (the generic sibling of
-    ``scoped_shuffle_partitions``; same sequential-rows safety
-    argument). ``value=None`` is a no-op."""
+    """Set a runtime conf for a bounded scope and restore the previous
+    value on exit. Consumers: streaming drains (``ingest.drain``) and
+    small-graph iterative loops (the CC rounds in ``dedup.dedup_assign``
+    exchange few-hundred-row label tables; 32-wide exchanges there
+    schedule mostly-empty tasks every round). Registry rows run
+    sequentially, so the session-global set/restore cannot race another
+    query; ``value=None`` is a no-op."""
 
     def __init__(self, spark: SparkSession, key: str, value):
         self._spark, self._key, self._value = spark, key, value
@@ -141,30 +144,4 @@ class scoped_conf:
                     self._spark.conf.unset(self._key)
                 except Exception:
                     pass  # conf locked down — nothing to restore
-        return False
-
-
-class scoped_shuffle_partitions:
-    """Set ``spark.sql.shuffle.partitions`` for a bounded scope and
-    restore the previous value on exit. Two consumers: streaming drains
-    (the conf is read at a stream's FIRST micro-batch and frozen into
-    its checkpoint, so scoping pins the state-partition count per query
-    — see streaming/late.py) and small-graph iterative loops (the CC
-    rounds in ``dedup.semdedup`` exchange few-hundred-row label tables;
-    32-wide exchanges there schedule mostly-empty tasks every round).
-    Registry rows run sequentially, so the session-global set/restore
-    cannot race another query; ``n=None`` is a no-op."""
-
-    def __init__(self, spark: SparkSession, n: int | None):
-        self._spark, self._n = spark, n
-        self._prev: str | None = None
-
-    def __enter__(self):
-        if self._n is not None:
-            self._prev = self._spark.conf.get("spark.sql.shuffle.partitions")
-            self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
-
-    def __exit__(self, *exc):
-        if self._prev is not None:
-            self._spark.conf.set("spark.sql.shuffle.partitions", self._prev)
         return False

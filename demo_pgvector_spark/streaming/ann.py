@@ -5,7 +5,8 @@ versioned ingest — the daily-crawl index tick running as a real
 maintenance loop for the serving index family exactly as
 streaming/curate.py does for the curation tick.
 
-Two versioned tables under one root (streaming/ingest.py storage):
+Two versioned tables under one root (streaming/ingest.py storage,
+maintained by ``ingest.staged_recompute_sink``):
 
 - ``staged/`` — the crawl batch accumulated so far, grown per epoch by
   an anti-join upsert (idempotent: a retried epoch stages nothing new
@@ -51,14 +52,9 @@ def hnsw_sink(
     planes: np.ndarray,
 ) -> Callable[[DataFrame, int], None]:
     """A ``foreachBatch`` function maintaining the appended half of the
-    small-world index: per epoch, stage the slice (anti-join upsert on
-    vec_id), then recompute ``smallworld_append`` over the full staged
-    batch and commit the adjacency table. Both commits are idempotent
-    re-runs on a retried epoch; a crash between them is repaired by
-    the retry."""
-    stage_root = os.path.join(root, "staged")
-    adj_root = os.path.join(root, "adj")
-
+    small-world index: per epoch, stage the slice on vec_id, then
+    recompute ``smallworld_append`` over the full staged batch and commit
+    the adjacency table (``ingest.staged_recompute_sink``)."""
     # the base side of every epoch's append is STATIC: band it once per
     # stream (lazy localCheckpoint — materializes inside epoch 1's job,
     # reused by later epochs). Without this each epoch re-ran the
@@ -69,25 +65,15 @@ def hnsw_sink(
     base_entries = ann_ops.smallworld_base_entries(base, planes).localCheckpoint(
         eager=False
     )
-
-    def apply(batch: DataFrame, _epoch_id: int) -> None:
-        spark = batch.sparkSession
-        staged = ingest_ops.read_table(spark, stage_root, STAGE_SCHEMA_DDL)
-        fresh = batch.select("vec_id", "embedding").join(
-            staged.select("vec_id"), "vec_id", "left_anti"
-        )
-        # the staged crawl batch is GROW-ONLY: add-files commit writes
-        # the slice, hardlinks the rest (O(slice), not O(batch) per epoch)
-        ingest_ops.commit_table(fresh, stage_root, delta=True)
-        staged_now = ingest_ops.read_table(
-            spark, stage_root, STAGE_SCHEMA_DDL
-        )
-        adj = ann_ops.smallworld_append(
-            base, staged_now, planes, base_entries=base_entries
-        )
-        ingest_ops.commit_table(adj, adj_root)
-
-    return apply
+    return ingest_ops.staged_recompute_sink(
+        root,
+        STAGE_SCHEMA_DDL,
+        "vec_id",
+        lambda staged: ann_ops.smallworld_append(
+            base, staged, planes, base_entries=base_entries
+        ),
+        "adj",
+    )
 
 
 def run_hnsw_stream(
@@ -96,24 +82,17 @@ def run_hnsw_stream(
     base: DataFrame,
     planes: np.ndarray,
     checkpoint_dir: str,
-    batch_shuffle_partitions: int | None = 8,
 ) -> None:
     """Drain ``stream_df`` through the index-maintenance sink
-    (availableNow trigger, narrow scoped shuffle — the
-    run_curate_stream shape: per-epoch output is ≤ 2·m rows per staged
-    vector)."""
-    from demo_pgvector_spark.streaming.late import _scoped_shuffle_partitions
-
-    with _scoped_shuffle_partitions(
-        stream_df.sparkSession, batch_shuffle_partitions
-    ):
-        q = (
-            stream_df.writeStream.foreachBatch(hnsw_sink(root, base, planes))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    (``ingest.drain``)."""
+    ingest_ops.drain(
+        stream_df,
+        checkpoint_dir,
+        hnsw_sink(root, base, planes),
+        # narrow width, the run_curate_stream shape: per-epoch output
+        # is ≤ 2·m rows per staged vector
+        confs={"spark.sql.shuffle.partitions": 8},
+    )
 
 
 def read_adjacency(spark: SparkSession, root: str) -> DataFrame:

@@ -7,7 +7,8 @@ land as stream files, and every epoch re-audits the staged day-batch
 against the incumbent corpus, the materialized band index, and the
 eval bloom, committing the verdict table the pipeline logs per tick.
 
-Two versioned tables under one root (streaming/ingest.py storage):
+Two versioned tables under one root (streaming/ingest.py storage,
+maintained by ``ingest.staged_recompute_sink``):
 
 - ``staged/`` — the day-batch accumulated so far, grown per epoch by
   an anti-join upsert (idempotent: a retried epoch stages nothing new
@@ -53,32 +54,22 @@ def curate_sink(
     corpus_bands: DataFrame | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """A ``foreachBatch`` function maintaining the day-batch audit: per
-    epoch, stage the slice (anti-join upsert on doc_id), then recompute
-    ``curate_incremental`` over the full staged batch and commit the
-    verdict table. Both commits are idempotent re-runs on a retried
-    epoch; a crash between them is repaired by the retry."""
-
-    stage_root = os.path.join(root, "staged")
-    verdict_root = os.path.join(root, "verdicts")
-
-    def apply(batch: DataFrame, _epoch_id: int) -> None:
-        spark = batch.sparkSession
-        staged = ingest_ops.read_table(spark, stage_root, STAGE_SCHEMA_DDL)
-        fresh = batch.select("doc_id", "text").join(
-            staged.select("doc_id"), "doc_id", "left_anti"
-        )
-        # the staged day-batch is GROW-ONLY: add-files commit writes
-        # the slice, hardlinks the rest (O(slice), not O(day) per epoch)
-        ingest_ops.commit_table(fresh, stage_root, delta=True)
-        staged_now = ingest_ops.read_table(
-            spark, stage_root, STAGE_SCHEMA_DDL
-        )
-        verdicts = curation_ops.curate_incremental(
-            corpus, staged_now, eval_docs, corpus_bands=corpus_bands
-        )
-        ingest_ops.commit_table(verdicts, verdict_root)
-
-    return apply
+    epoch, stage the slice on doc_id, then recompute ``curate_incremental``
+    over the full staged batch and commit the verdict table
+    (``ingest.staged_recompute_sink``). Both commits are idempotent
+    re-runs on a retried epoch; a crash between them is repaired by the
+    retry."""
+    return ingest_ops.staged_recompute_sink(
+        root,
+        STAGE_SCHEMA_DDL,
+        "doc_id",
+        # looked up per call, not bound here, so a wrapped or patched
+        # curate_incremental is the one each epoch runs
+        lambda staged: curation_ops.curate_incremental(
+            corpus, staged, eval_docs, corpus_bands=corpus_bands
+        ),
+        "verdicts",
+    )
 
 
 def run_curate_stream(
@@ -88,25 +79,16 @@ def run_curate_stream(
     eval_docs: DataFrame,
     checkpoint_dir: str,
     corpus_bands: DataFrame | None = None,
-    batch_shuffle_partitions: int | None = 8,
 ) -> None:
-    """Drain ``stream_df`` through the curation sink (availableNow
-    trigger, narrow scoped shuffle — the run_countmin_stream shape: the
-    per-epoch audit output is one row per staged doc)."""
-    from demo_pgvector_spark.streaming.late import _scoped_shuffle_partitions
-
-    with _scoped_shuffle_partitions(
-        stream_df.sparkSession, batch_shuffle_partitions
-    ):
-        q = (
-            stream_df.writeStream.foreachBatch(
-                curate_sink(root, corpus, eval_docs, corpus_bands)
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    """Drain ``stream_df`` through the curation sink (``ingest.drain``)."""
+    ingest_ops.drain(
+        stream_df,
+        checkpoint_dir,
+        curate_sink(root, corpus, eval_docs, corpus_bands),
+        # narrow width, the run_countmin_stream shape: the per-epoch
+        # audit output is one row per staged doc
+        confs={"spark.sql.shuffle.partitions": 8},
+    )
 
 
 def read_verdicts(spark: SparkSession, root: str) -> DataFrame:

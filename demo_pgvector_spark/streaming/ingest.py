@@ -27,12 +27,14 @@ previous version and write of the next never touch the same files.
 
 from __future__ import annotations
 
+import contextlib
 import os
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
 from demo_pgvector_spark.operators import write as write_ops
+from demo_pgvector_spark.session import scoped_conf
 
 _POINTER = "_CURRENT"
 
@@ -118,6 +120,91 @@ def commit_table(
     return nxt
 
 
+def landing_stream(
+    spark: SparkSession, landing: str, schema_ddl: str
+) -> DataFrame:
+    """A parquet file stream over a staged landing directory with ONE
+    micro-batch per file (``maxFilesPerTrigger=1``, mtime order) — the
+    deterministic epoch split every staged drain and its oracle replay
+    rely on."""
+    return (
+        spark.readStream.schema(schema_ddl)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing)
+    )
+
+
+def drain(
+    df: DataFrame,
+    checkpoint_dir: str,
+    sink: Callable[[DataFrame, int], None] | None = None,
+    *,
+    output_mode: str = "append",
+    confs: Mapping[str, object] | None = None,
+) -> DataFrame | None:
+    """Run ``df`` to completion over the files present now
+    (``Trigger.AvailableNow``; a production deployment drops the trigger
+    and runs continuously against the landing directory).
+
+    With a ``sink`` each micro-batch goes to ``foreachBatch(sink)``.
+    Without one the stream lands in a parquet file sink at
+    ``checkpoint_dir + ".out"``, read back with the stream's schema (no
+    inference pass; a zero-row drain is a well-typed empty frame), so
+    result size never touches driver memory.
+
+    ``confs`` hold from before ``start()`` until the query ends, and are
+    restored even if an epoch raises. A stream reads
+    ``spark.sql.shuffle.partitions`` at its FIRST micro-batch and freezes
+    it into the checkpoint as the state-partition count, so the scope
+    pins that width per query instead of mutating the session."""
+    spark = df.sparkSession
+    out_dir = checkpoint_dir.rstrip("/") + ".out"
+    with contextlib.ExitStack() as scope:
+        for key, value in (confs or {}).items():
+            scope.enter_context(scoped_conf(spark, key, value))
+        writer = df.writeStream.outputMode(output_mode)
+        if sink is not None:
+            writer = writer.foreachBatch(sink)
+        else:
+            writer = writer.format("parquet").option("path", out_dir)
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+        writer.trigger(availableNow=True).start().awaitTermination()
+    return None if sink is not None else spark.read.schema(df.schema).parquet(out_dir)
+
+
+def staged_recompute_sink(
+    root: str,
+    stage_ddl: str,
+    key: str,
+    recompute: Callable[[DataFrame], DataFrame],
+    out_name: str,
+) -> Callable[[DataFrame, int], None]:
+    """A ``foreachBatch`` function keeping two versioned tables under
+    ``root``: ``staged/``, the batch so far, and ``out_name/``,
+    ``recompute`` over the FULL staged batch (not the epoch slice, so
+    the output is epoch-split-invariant).
+
+    Per epoch: stage the slice by an anti-join on ``key`` (grow-only, so
+    an add-files delta commit, O(slice)), re-read the staged whole,
+    recompute, commit whole. A retried epoch stages nothing and
+    recommits the same output, so both commits are idempotent and a
+    crash between them is repaired by the retry."""
+    stage_root = os.path.join(root, "staged")
+    out_root = os.path.join(root, out_name)
+
+    def apply(batch: DataFrame, _epoch_id: int) -> None:
+        spark = batch.sparkSession
+        staged = read_table(spark, stage_root, stage_ddl)
+        fresh = batch.select(*staged.columns).join(
+            staged.select(key), key, "left_anti"
+        )
+        commit_table(fresh, stage_root, delta=True)
+        staged_now = read_table(spark, stage_root, stage_ddl)
+        commit_table(recompute(staged_now), out_root)
+
+    return apply
+
+
 def upsert_sink(
     root: str,
     keys: Sequence[str],
@@ -158,35 +245,20 @@ def run_upsert_stream(
     checkpoint_dir: str,
     id_col: str = "id",
     batch_order: Sequence[str] | None = None,
-    batch_shuffle_partitions: int | None = None,
 ) -> None:
-    """Drain ``stream_df`` through the upsert sink with an availableNow
-    trigger (process everything staged, then stop — the batch-friendly
-    trigger; a production deployment drops the trigger and runs
-    continuously against the landing directory).
+    """Drain ``stream_df`` through the upsert sink (``drain``).
 
-    ``batch_shuffle_partitions`` optionally scopes the shuffle width of
-    the per-epoch upsert jobs. Unlike the late-data rows' state stores
-    (whose per-batch task count is pure overhead at small key
-    cardinality), an ingest epoch shuffles the WHOLE micro-batch through
-    its dedup window — volume that scales with the stream — so the
-    default inherits the session width; pass a value only when epochs
-    are known-tiny (measured at sf0.1: 4-wide costs ~15% over 32-wide
-    on 200k-row epochs, the inverse of the late-data rows)."""
-    from demo_pgvector_spark.streaming.late import _scoped_shuffle_partitions
-
-    with _scoped_shuffle_partitions(
-        stream_df.sparkSession, batch_shuffle_partitions
-    ):
-        q = (
-            stream_df.writeStream.foreachBatch(
-                upsert_sink(root, keys, schema_ddl, id_col, batch_order)
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    No width override: unlike the late-data rows' state stores (whose
+    per-batch task count is pure overhead at small key cardinality), an
+    ingest epoch shuffles the WHOLE micro-batch through its dedup window
+    — volume that scales with the stream — so it inherits the session
+    width (measured at sf0.1: 4-wide costs ~15% over 32-wide on
+    200k-row epochs, the inverse of the late-data rows)."""
+    drain(
+        stream_df,
+        checkpoint_dir,
+        upsert_sink(root, keys, schema_ddl, id_col, batch_order),
+    )
 
 
 def list_versions(root: str) -> list[str]:
@@ -342,24 +414,13 @@ def run_scd2_stream(
     checkpoint_dir: str,
     effective_date: str,
     seed: DataFrame | None = None,
-    batch_shuffle_partitions: int | None = 8,
 ) -> None:
-    """Drain ``stream_df`` through the SCD2 sink (availableNow trigger;
-    dimension change batches are small, so the narrow scoped shuffle of
-    the late-data rows applies, not the whole-stream ingest width)."""
-    from demo_pgvector_spark.streaming.late import _scoped_shuffle_partitions
-
-    with _scoped_shuffle_partitions(
-        stream_df.sparkSession, batch_shuffle_partitions
-    ):
-        q = (
-            stream_df.writeStream.foreachBatch(
-                scd2_sink(
-                    root, keys, attr_cols, schema_ddl, effective_date, seed
-                )
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    """Drain ``stream_df`` through the SCD2 sink (``drain``)."""
+    drain(
+        stream_df,
+        checkpoint_dir,
+        scd2_sink(root, keys, attr_cols, schema_ddl, effective_date, seed),
+        # dimension change batches are small: the narrow width of the
+        # late-data rows applies, not the whole-stream ingest width
+        confs={"spark.sql.shuffle.partitions": 8},
+    )

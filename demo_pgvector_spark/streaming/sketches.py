@@ -130,29 +130,20 @@ def run_countmin_stream(
     checkpoint_dir: str,
     depth: int = sketch_ops.CM_DEPTH,
     width: int = sketch_ops.CM_WIDTH,
-    batch_shuffle_partitions: int | None = 8,
 ) -> None:
-    """Drain ``stream_df`` through the count-min sink with an
-    availableNow trigger. The per-epoch jobs aggregate into ≤ d·w cells,
-    so the default scopes the shuffle narrow (the late-data-row
-    argument: session-wide 32 partitions schedule mostly-empty tasks
-    for a 1024-cell result); a production deployment drops the trigger
-    and the sketch table becomes a continuously-maintained ingest
-    artifact queried independently of the stream."""
-    from demo_pgvector_spark.streaming.late import _scoped_shuffle_partitions
-
-    with _scoped_shuffle_partitions(
-        stream_df.sparkSession, batch_shuffle_partitions
-    ):
-        q = (
-            stream_df.writeStream.foreachBatch(
-                countmin_sink(root, item_col, depth, width)
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    """Drain ``stream_df`` through the count-min sink (``ingest.drain``);
+    a production deployment drops the trigger and the sketch table
+    becomes a continuously-maintained ingest artifact queried
+    independently of the stream."""
+    ingest_ops.drain(
+        stream_df,
+        checkpoint_dir,
+        countmin_sink(root, item_col, depth, width),
+        # the per-epoch jobs aggregate into ≤ d·w cells: session-wide 32
+        # partitions would schedule mostly-empty tasks for a 1024-cell
+        # result (the late-data-row argument)
+        confs={"spark.sql.shuffle.partitions": 8},
+    )
 
 
 def read_sketch(spark, root: str) -> DataFrame:
@@ -199,23 +190,16 @@ def run_bloom_stream(
     root: str,
     checkpoint_dir: str,
     text_col: str = "text",
-    batch_shuffle_partitions: int | None = 8,
 ) -> None:
-    """Drain ``stream_df`` through the bloom sink (availableNow trigger;
-    the run_countmin_stream shape — narrow scoped shuffle because the
-    fold's result is ≤ BLOOM_M narrow rows)."""
-    from demo_pgvector_spark.streaming.late import _scoped_shuffle_partitions
-
-    with _scoped_shuffle_partitions(
-        stream_df.sparkSession, batch_shuffle_partitions
-    ):
-        q = (
-            stream_df.writeStream.foreachBatch(bloom_sink(root, text_col))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    """Drain ``stream_df`` through the bloom sink (``ingest.drain``)."""
+    ingest_ops.drain(
+        stream_df,
+        checkpoint_dir,
+        bloom_sink(root, text_col),
+        # narrow, the run_countmin_stream shape: the fold's result is
+        # ≤ BLOOM_M narrow rows
+        confs={"spark.sql.shuffle.partitions": 8},
+    )
 
 
 def read_bloom(spark, root: str) -> DataFrame:
@@ -270,26 +254,17 @@ def run_hll_stream(
     item_col: str,
     checkpoint_dir: str,
     group_cols: tuple[str, ...] = (),
-    batch_shuffle_partitions: int | None = 8,
     schema_ddl: str = HLL_SCHEMA_DDL,
 ) -> None:
-    """Drain ``stream_df`` through the HLL sink (availableNow trigger;
-    the run_countmin_stream shape — narrow scoped shuffle because the
-    fold's result is ≤ m rows per group)."""
-    from demo_pgvector_spark.streaming.late import _scoped_shuffle_partitions
-
-    with _scoped_shuffle_partitions(
-        stream_df.sparkSession, batch_shuffle_partitions
-    ):
-        q = (
-            stream_df.writeStream.foreachBatch(
-                hll_sink(root, item_col, group_cols, schema_ddl=schema_ddl)
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    """Drain ``stream_df`` through the HLL sink (``ingest.drain``)."""
+    ingest_ops.drain(
+        stream_df,
+        checkpoint_dir,
+        hll_sink(root, item_col, group_cols, schema_ddl=schema_ddl),
+        # narrow, the run_countmin_stream shape: the fold's result is
+        # ≤ m rows per group
+        confs={"spark.sql.shuffle.partitions": 8},
+    )
 
 
 def read_hll(spark, root: str, schema_ddl: str = HLL_SCHEMA_DDL) -> DataFrame:

@@ -19,6 +19,20 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from demo_pgvector_spark.streaming.ingest import drain, landing_stream
+
+# Both state machines cross Arrow per (state partition × micro-batch) in
+# a Python worker — the priced cost (measured A/B, SCALE.md round 8).
+# Larger Arrow batches cut the crossing count (maxRecordsPerBatch 10k →
+# 1M: ~9.3 → ~7.2 s at sf0.1), and 8 state partitions beat the old 4 by
+# ~2× (6.3 vs 13.5 s same-box: more state machines run concurrently; 16
+# adds nothing over 8 on 32 cores). Scoped to the drain, not
+# session-global.
+_PY_STATE_CONFS = {
+    "spark.sql.shuffle.partitions": 8,
+    "spark.sql.execution.arrow.maxRecordsPerBatch": 1_000_000,
+}
+
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
 STATE_SCHEMA = "n long, total double"
 
@@ -176,44 +190,16 @@ def run_funnel_stream(
     schema_ddl: str,
     delay: str = "1 day",
     ts_col: str = "ts",
-    state_partitions: int = 8,
 ) -> DataFrame:
     """Drain a staged landing directory (one micro-batch per file, mtime
     order) through the watermarked funnel machine; return the emitted
     rows as a batch DataFrame via the parquet-file-sink read-back (no
     driver materialization). The trailing no-data batch of
     ``availableNow`` fires the event-time timeouts with the final
-    watermark — that is where 'expired' rows for quiet users emit.
-
-    Tuning (measured A/B, SCALE.md round 8): the priced cost is the
-    Python state worker crossing Arrow per (state partition ×
-    micro-batch). Larger Arrow batches cut the crossing count
-    (maxRecordsPerBatch 10k → 1M: ~9.3 → ~7.2 s at sf0.1), and
-    state_partitions=8 beats the old 4 by ~2× (6.3 vs 13.5 s same-box:
-    more state machines run concurrently; 16 adds nothing over 8 on 32
-    cores). Both scoped to the drain, not session-global."""
-    from demo_pgvector_spark.session import scoped_conf, scoped_shuffle_partitions
-
-    stream = (
-        spark.readStream.schema(schema_ddl)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+    watermark — that is where 'expired' rows for quiet users emit."""
+    stream = landing_stream(spark, landing, schema_ddl)
     out = funnel_sessions(stream.withWatermark(ts_col, delay))
-    out_dir = checkpoint_dir.rstrip("/") + ".out"
-    with scoped_shuffle_partitions(spark, state_partitions), scoped_conf(
-        spark, "spark.sql.execution.arrow.maxRecordsPerBatch", 1_000_000
-    ):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.schema(out.schema).parquet(out_dir)
+    return drain(out, checkpoint_dir, confs=_PY_STATE_CONFS)
 
 
 # ---------------------------------------------------------------------------
@@ -319,34 +305,10 @@ def run_anomaly_stream(
     landing: str,
     checkpoint_dir: str,
     schema_ddl: str = "event_id long, ts timestamp, user_id long, value double",
-    state_partitions: int = 8,
 ) -> DataFrame:
     """Drain a staged landing directory through the anomaly machine
     (one micro-batch per file, mtime order — the funnel drain shape,
     same Arrow/state-partition tuning) and return the emitted rows via
     the parquet-sink read-back."""
-    from demo_pgvector_spark.session import (
-        scoped_conf,
-        scoped_shuffle_partitions,
-    )
-
-    stream = (
-        spark.readStream.schema(schema_ddl)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    out = anomaly_flags(stream)
-    out_dir = checkpoint_dir.rstrip("/") + ".out"
-    with scoped_shuffle_partitions(spark, state_partitions), scoped_conf(
-        spark, "spark.sql.execution.arrow.maxRecordsPerBatch", 1_000_000
-    ):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.schema(out.schema).parquet(out_dir)
+    out = anomaly_flags(landing_stream(spark, landing, schema_ddl))
+    return drain(out, checkpoint_dir, confs=_PY_STATE_CONFS)

@@ -317,3 +317,49 @@ def test_upsert_sink_delta_version_is_content_identical(spark, tmp_path):
         for r in ingest.read_table(spark, root, SCHEMA).collect()
     }
     assert again == got
+
+
+def test_drain_restores_width_after_a_failing_sink(spark, tmp_path):
+    """``drain`` scopes its confs from ``start()`` until the query ends:
+    the stream's own session plans with the override, and the caller's
+    session is back at its prior width even when an epoch raises."""
+    from pyspark.errors import StreamingQueryException
+
+    land = str(tmp_path / "landing")
+    spark.range(3).coalesce(1).write.parquet(land)
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    assert prior != "3"
+    seen = []
+
+    def failing_sink(batch, _epoch_id):
+        seen.append(batch.sparkSession.conf.get(key))
+        raise RuntimeError("injected sink failure")
+
+    with pytest.raises(StreamingQueryException, match="injected sink failure"):
+        ingest.drain(
+            ingest.landing_stream(spark, land, "id long"),
+            str(tmp_path / "ckpt"),
+            failing_sink,
+            confs={key: 3},
+        )
+    assert seen == ["3"]
+    assert spark.conf.get(key) == prior
+
+
+def test_streaming_package_has_one_drain():
+    """Every streaming query in ``streaming/`` starts inside
+    ``ingest.drain`` (or the test-only memory-sink ``run_to_memory``):
+    no module builds its own ``writeStream`` block."""
+    import ast
+    import pathlib
+
+    owners = set()
+    for path in sorted(pathlib.Path(ingest.__file__).parent.glob("*.py")):
+        for node in ast.parse(path.read_text(encoding="utf-8")).body:
+            if any(
+                isinstance(n, ast.Attribute) and n.attr == "writeStream"
+                for n in ast.walk(node)
+            ):
+                owners.add((path.name, getattr(node, "name", None)))
+    assert owners == {("ingest.py", "drain"), ("windows.py", "run_to_memory")}

@@ -651,6 +651,86 @@ def test_curate_sink_is_epoch_idempotent_and_split_invariant(spark, tmp_path):
     assert again == three
 
 
+def test_curate_stream_retry_repairs_a_crash_between_the_commits(
+    spark, tmp_path, monkeypatch
+):
+    """streaming/curate.py's crash claim, through the real drain: epoch 1
+    stages its slice, then its recompute raises before the verdict
+    commit. Draining again from the same checkpoint replays epoch 1
+    (already staged — the anti-join stages nothing) and epoch 2, and
+    the committed verdicts equal one batch curate_incremental call."""
+    import glob
+    import os
+    import shutil
+    import time
+
+    from pyspark.errors import StreamingQueryException
+
+    from demo_pgvector_spark.operators import curation
+    from demo_pgvector_spark.streaming import curate as sc
+    from demo_pgvector_spark.streaming import ingest
+
+    ddl = "doc_id long, text string"
+    base = " ".join(f"w{i}" for i in range(25))
+    fresh = " ".join(f"fresh{i}" for i in range(30))
+    corpus = spark.createDataFrame([(100, base)], ddl)
+    eval_docs = spark.createDataFrame(
+        [(900, " ".join(f"e{i}" for i in range(25)))], ddl
+    )
+    slices = [
+        [(0, base)],
+        [(1, fresh), (2, fresh.rsplit(" ", 1)[0] + " changedtail")],
+        [(3, "too short")],
+    ]
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    for i, rows in enumerate(slices):
+        staged_dir = str(tmp_path / f"_stage_{i}")
+        spark.createDataFrame(rows, ddl).coalesce(1).write.parquet(staged_dir)
+        flat = os.path.join(landing, f"batch-{i}.parquet")
+        shutil.copyfile(glob.glob(f"{staged_dir}/part-*.parquet")[0], flat)
+        os.utime(flat, (time.time() - 100 + i * 10,) * 2)
+
+    real = curation.curate_incremental
+    calls = []
+
+    def crash_on_second_call(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected crash after staging")
+        return real(*args, **kwargs)
+
+    root, ckpt = str(tmp_path / "curate"), str(tmp_path / "ckpt")
+
+    def run():
+        sc.run_curate_stream(
+            ingest.landing_stream(spark, landing, ddl),
+            root,
+            corpus,
+            eval_docs,
+            ckpt,
+        )
+
+    monkeypatch.setattr(curation, "curate_incremental", crash_on_second_call)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run()
+    staged = ingest.read_table(spark, os.path.join(root, "staged"), ddl)
+    assert sorted(r["doc_id"] for r in staged.collect()) == [0, 1, 2]
+    assert [r["doc_id"] for r in sc.read_verdicts(spark, root).collect()] == [0]
+
+    monkeypatch.setattr(curation, "curate_incremental", real)
+    run()
+    got = sorted(tuple(r) for r in sc.read_verdicts(spark, root).collect())
+    everything = spark.createDataFrame([r for s in slices for r in s], ddl)
+    want = sorted(
+        tuple(r)
+        for r in curation.curate_incremental(
+            corpus, everything, eval_docs
+        ).collect()
+    )
+    assert got == want and len(got) == 4
+
+
 def test_curate_sink_serves_near_dups_from_the_provided_index(spark, tmp_path):
     """The streaming tick must read corpus bands from the PROVIDED
     index table, never re-band the corpus: with a truthful index the
