@@ -26,7 +26,7 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (vec_sim_topk) on /root/testdata/sf0.001."""
-    return registry.q_vec_sim_topk(spark, SMOKE_SF_DIR)
+    return registry.queries()["vec_sim_topk"](spark, SMOKE_SF_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -76,11 +76,6 @@ def round4(c: Column) -> Column:
     return F.round(c, 4)
 
 
-def json_get(c: Column, key: str) -> Column:
-    """JSONB field access (metadata round-trip, src/lib/database.py:256,333-334)."""
-    return F.get_json_object(c, f"$.{key}")
-
-
 def excerpt_template(title: Column, author: Column, pub: Column, text: Column) -> Column:
     """The RAG excerpt template, byte-exact with cli/generate_text.py:77-84
     (leading newline, trailing two blank lines, f-string '+=' concatenation)."""

@@ -238,17 +238,6 @@ FROM toks
 """
 
 
-O_STR_TOKENIZE = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}_]+'),
-                     x -> x <> '') AS t
-  FROM documents
-)
-SELECT doc_id, CAST(len(t) AS INTEGER) AS n_tokens, t[1] AS first_token FROM toks
-"""
-
-
 O_AGG_WORD_COUNTS = r"""
 SELECT word, CAST(count(*) AS BIGINT) AS cnt
 FROM (
@@ -350,13 +339,6 @@ SELECT d.doc_id,
 FROM documents d
 JOIN read_parquet('/root/repo/golden/emb_hash_embed.parquet') g
   ON sha256(d.text) = g.text_sha
-"""
-
-
-O_HASH_SHA256 = """
-SELECT doc_id, sha256(text) AS sha256_hex, md5(text) AS md5_hex,
-       CAST(('0x' || substring(sha256(text), 1, 8))::UBIGINT AS BIGINT) AS base_seed
-FROM documents
 """
 
 
@@ -516,40 +498,6 @@ FROM lineitem l JOIN orders o
  AND l.l_shipdate >= o.o_orderdate
  AND l.l_shipdate <= o.o_orderdate + INTERVAL '120 days'
 GROUP BY l_returnflag
-"""
-
-
-O_AGG_CUBE = """
-SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-       CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(38,6))), 2) AS DOUBLE) AS sum_qty
-FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
-
-
-O_AGG_ROLLUP = """
-SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n,
-       CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(38,6))), 2) AS DOUBLE) AS sum_price
-FROM orders GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
-"""
-
-
-O_AGG_GROUPING_SETS = """
-SELECT l_returnflag, l_linestatus, COUNT(*) AS n
-FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-"""
-
-
-O_SET_INTERSECT = """
-SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
-INTERSECT
-SELECT o_custkey FROM orders WHERE year(o_orderdate) = 2000
-"""
-
-
-O_SET_EXCEPT = """
-SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
-EXCEPT
-SELECT o_custkey FROM orders WHERE year(o_orderdate) = 2000
 """
 
 

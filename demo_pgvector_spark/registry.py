@@ -18,11 +18,20 @@ columns by name):
 - cast DuckDB integer SUMs to BIGINT (DuckDB widens to HUGEINT, Spark
   keeps BIGINT);
 - deterministic tie-breaks on every ORDER BY ... LIMIT.
+
+Session policy: the ``q_*`` functions assume a session carrying
+``session._RUNTIME_CONFS``. ``get_session`` builds one; a session the
+driver built is tuned once, in ``queries()``, and nowhere else.
+Write-once artifacts (layouts, indexes, staged landing files) go
+through ``_staged``, and every temp dir through ``_work_dir``.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -72,14 +81,11 @@ from demo_pgvector_spark.fixtures import (
 )
 from demo_pgvector_spark.oracles import (  # noqa: F401
     O_AGG_CONTEXT_CONCAT,
-    O_AGG_CUBE,
-    O_AGG_GROUPING_SETS,
     O_AGG_MULTIDIM,
     O_AGG_APPROX_DISTINCT,
     O_AGG_PERCENTILES,
     O_AGG_PERCENTILES_APPROX,
     O_AGG_PIVOT,
-    O_AGG_ROLLUP,
     O_AGG_WORD_COUNTS,
     O_CHUNK_BPE,
     O_CHUNK_BPE_PRETRAINED,
@@ -110,7 +116,6 @@ from demo_pgvector_spark.oracles import (  # noqa: F401
     O_FILT_FILES,
     O_FILT_PREDICATES,
     O_FILT_THRESHOLD,
-    O_HASH_SHA256,
     O_INS_CHUNK_TXN,
     O_JOIN_ASOF,
     O_JOIN_BUCKETED,
@@ -174,8 +179,6 @@ from demo_pgvector_spark.oracles import (  # noqa: F401
     O_RAG_PROMPTS,
     O_RETRIEVAL_RRF,
     O_SEQ_FUNNEL,
-    O_SET_EXCEPT,
-    O_SET_INTERSECT,
     O_SET_OPS,
     O_SINK_STDOUT,
     O_SRC_CONVERT_EPUB,
@@ -188,7 +191,6 @@ from demo_pgvector_spark.oracles import (  # noqa: F401
     O_STREAM_SESSION_WINDOWS,
     O_STREAM_WINDOWS,
     O_STR_SCALARS,
-    O_STR_TOKENIZE,
     O_CURATE_CORPUS,
     O_CURATE_FUZZY,
     O_CURATE_INCREMENTAL,
@@ -285,6 +287,32 @@ from demo_pgvector_spark.streaming import stateful as stream_stateful_ops
 from demo_pgvector_spark.streaming import windows as stream_ops
 from demo_pgvector_spark.session import tune_session
 
+
+def _work_dir(prefix: str) -> str:
+    """A fresh temp dir, reclaimed at process exit (not inline: the
+    returned frames read from it, and an exception mid-call must not
+    leak it)."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    return work
+
+
+# Staged write-once artifacts: (prefix, key) -> (work dir, build result).
+_STAGED: dict[tuple[str, object], tuple[str, object]] = {}
+
+
+def _staged(key, prefix: str, build: Callable[[str], object]):
+    """Return ``build(work_dir)`` memoized per process for (prefix, key),
+    rebuilding in a fresh ``_work_dir(prefix)`` when the cached work dir
+    is gone. Staged artifacts are ingest-time work (layouts, indexes,
+    landing files, version histories): steady-state calls time the
+    probe over them, never the build."""
+    hit = _STAGED.get((prefix, key))
+    if hit is None or not os.path.isdir(hit[0]):
+        work = _work_dir(prefix)
+        hit = _STAGED[(prefix, key)] = (work, build(work))
+    return hit[1]
+
 # The flagship query's parameter vector: the stored embedding of vec_id=0
 # (the reference embeds the user's prompt at query time,
 # cli/search_doc_chunks.py:69-76; here the deterministic equivalent is an
@@ -362,7 +390,6 @@ def q_vec_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship (reference src/lib/database.py:282-337): top-k cosine with
     threshold, payload join. threshold=0.2 (the synthetic 64-dim vectors are
     near-orthogonal; the reference default 0.7 is a parameter — SURVEY Q2)."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     docs = tables.load(spark, sf_dir, "documents")
     out = sim_topk(
@@ -393,7 +420,6 @@ def q_vec_cosine_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``<=>`` cosine distance (src/lib/database.py:301), ``<->`` euclidean,
     ``<#>`` negative inner product, plus per-vector ``norm`` and
     ``unit_norm`` (≡ 1 within rounding)."""
-    tune_session(spark)
     from demo_pgvector_spark.functions.vector import (
         euclidean_distance,
         inner_product_distance,
@@ -427,7 +453,6 @@ def q_vec_cosine_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_proj_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Computed projection incl. payload (src/lib/database.py:299-305):
     SELECT id, 1 - (embedding <=> :q) AS similarity_score, chunk_text, metadata."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     docs = tables.load(spark, sf_dir, "documents")
     qv = query_vector_literal(_query_vec(spark, sf_dir))
@@ -447,7 +472,6 @@ def q_vec_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extension (SURVEY §2.3): table×table kNN join — for each probe vector
     (vec_id < 20) the true top-3 most similar OTHER vectors (self-matches
     excluded before ranking, so ranks are 1..3)."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
@@ -468,7 +492,6 @@ def q_vec_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_filt_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicate on the computed similarity column (src/lib/database.py:306)."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     qv = query_vector_literal(_query_vec(spark, sf_dir))
     scored = emb.select(
@@ -483,7 +506,6 @@ def q_filt_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_filt_model_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equality lookup (src/lib/database.py:68-70: SELECT id FROM models
     WHERE name = %s), over the documents dim as the stand-in lookup table."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return docs.filter(F.col("source") == F.lit("src3")).select("doc_id")
 
@@ -492,7 +514,6 @@ def q_filt_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-safe multi-key predicate (src/lib/database.py:152-159:
     IS NOT DISTINCT FROM). NULLs are synthesized with NULLIF so the
     null-matching branch is actually exercised."""
-    tune_session(spark)
     cust = tables.load(spark, sf_dir, "customer")
     keyed = cust.select(
         "c_custkey",
@@ -512,7 +533,6 @@ def q_filt_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches stay independently planned — the equality branch's
     predicate pushdown and the null-safe branch's NULLIF synthesis are
     still pinned per-branch in tests/test_plans.py / pytest."""
-    tune_session(spark)
     eq = q_filt_model_eq(spark, sf_dir).select(
         F.lit("model_eq").alias("branch"), F.col("doc_id").cast("long").alias("id")
     )
@@ -536,7 +556,6 @@ def q_filt_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_chunk_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's only join (src/lib/database.py:304-305): vectors
     INNER JOIN payload on id = chunk_id."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     docs = tables.load(spark, sf_dir, "documents")
     return emb.join(docs, emb.vec_id == docs.doc_id, "inner").select(
@@ -553,7 +572,6 @@ def q_proj_sim_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     with payload join, the predicate on the computed column, and the
     reference's vectors⋈payload join), so pushdown/broadcast behavior per
     branch is unchanged and still pinned by pytest."""
-    tune_session(spark)
     null_s = F.lit(None).cast("string")
     proj = q_proj_similarity(spark, sf_dir).select(
         F.lit("proj").alias("branch"),
@@ -594,7 +612,6 @@ def q_classify_source_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     stand-in metadata columns synthesized from the documents dim (the
     testdata has no text_type/genre; the mapping below is applied
     identically on both sides so the classifier itself is what's tested)."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     staged = docs.select(
         "doc_id",
@@ -623,7 +640,6 @@ def q_extract_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     path. ``year_str`` is the raw str(pub)[:4] slice — the
     ``str_slice_year`` SURVEY row (src/lib/database.py:134), consolidated
     here so both year operators share one correctness-window slot."""
-    tune_session(spark)
     orders = tables.load(spark, sf_dir, "orders")
     staged = orders.select(
         "o_orderkey",
@@ -651,7 +667,6 @@ def q_str_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ``hash_sha256``/``hash_md5`` — text→hex digests + the sha-prefix
     base seed (src/lib/embedding.py:80,93). All columns come off the
     same single documents scan — one stage, no exchange."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     padded = F.concat(F.lit("  "), F.upper(F.col("source")), F.lit(" \t"))
     toks = text_fns.tokenize(F.col("text"))
@@ -670,23 +685,9 @@ def q_str_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_str_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """\\b\\w+\\b word tokenization (src/lib/embedding.py:77) — token count
-    and first token per document."""
-    tune_session(spark)
-    docs = tables.load(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", text_fns.tokenize(F.col("text")).alias("toks"))
-    return toks.select(
-        "doc_id",
-        F.size("toks").alias("n_tokens"),
-        F.element_at("toks", 1).alias("first_token"),
-    )
-
-
 def q_agg_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus word frequencies (scaled form of src/lib/embedding.py:88-107's
     per-text Counter): explode(tokenize) → groupBy(word).count, top-50."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     words = docs.select(
         F.explode(text_fns.tokenize(F.col("text"))).alias("word")
@@ -706,7 +707,6 @@ def q_json_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVEY row (the import stamp, src/lib/documents.py:53, in its
     injected-column deterministic form per SURVEY §1.2), consolidated
     here (same table) so both fit one correctness-window slot."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events")
     return ev.select(
         "event_id",
@@ -728,7 +728,6 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of re-joining lineitem a second time (classic Q18 re-scans
     it); the aggregate is partial-combined before its one exchange and
     the tail is TakeOrderedAndProject."""
-    tune_session(spark)
     cust = tables.load(spark, sf_dir, "customer")
     orders = tables.load(spark, sf_dir, "orders")
     li = tables.load(spark, sf_dir, "lineitem")
@@ -762,7 +761,6 @@ def q_join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     salt space, and the join key becomes (key, salt), spreading each hot
     key over 8 reducers. The oracle is the PLAIN join + rollup — salting
     must not change a single row."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events").select("event_id", "event_type")
     dim = ev.groupBy("event_type").agg(F.min("event_id").alias("type_min_id"))
     joined = skew_ops.salted_join(ev, dim, key="event_type", salt_buckets=8)
@@ -787,7 +785,6 @@ def q_join_skew_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same integer per-mille formula) and the RESULT as the plain join —
     the salted branch must not change a row. One extra pre-pass
     aggregate per case is the entire diagnostic cost."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id"
     )
@@ -819,7 +816,6 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (region filter prunes it before it ever touches a fact
     row); only the fact-fact joins shuffle. DECIMAL sums for
     order-independent parity."""
-    tune_session(spark)
     region = tables.load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = tables.load(spark, sf_dir, "nation")
     supp = tables.load(spark, sf_dir, "supplier")
@@ -856,7 +852,6 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter → orders → lineitem) + revenue aggregation + top-10. The
     segment filter prunes the customer side before either join; revenue
     sums run in DECIMAL for order-independent parity."""
-    tune_session(spark)
     cust = tables.load(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -890,7 +885,6 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     date/discount/quantity predicates all reach the parquet scan as
     PushedFilters; at 100 TB row-group statistics skip most of the
     table)."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     price = F.col("l_extendedprice").cast("decimal(18,2)")
     disc = F.col("l_discount").cast("decimal(18,2)")
@@ -915,7 +909,6 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     All money arithmetic runs in DECIMAL so the sums are order-independent
     (double summation order differs between Spark partitions and DuckDB's
     single-threaded fold, which would break value-hash parity)."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity").cast("decimal(18,2)")
     price = F.col("l_extendedprice").cast("decimal(18,2)")
@@ -950,7 +943,6 @@ def q_join_lineitem_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue rollup per order priority. Both sides exceed the broadcast
     threshold at scale → sort-merge/shuffled-hash on l_orderkey=o_orderkey;
     AQE picks the strategy and coalesces post-shuffle partitions."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     orders = tables.load(spark, sf_dir, "orders")
     price = F.col("l_extendedprice").cast("decimal(18,2)")
@@ -989,7 +981,6 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     widened, duplicates never materialize, and the semi join
     short-circuits per order. Both scans keep their pushed date
     filters."""
-    tune_session(spark)
     orders = tables.load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
@@ -1015,7 +1006,6 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     under different aliases; the pair filter collapses the supplier side
     to ~2/25 of rows before the orders join. Year extraction is a plain
     projection (no UDF); revenue sums run in DECIMAL."""
-    tune_session(spark)
     nation = tables.load(spark, sf_dir, "nation")
     n1 = nation.select(
         F.col("n_nationkey").alias("_n1_key"), F.col("n_name").alias("supp_nation")
@@ -1065,7 +1055,6 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     and date filters are pushed to their scans before the joins; the
     customer/nation enrichment broadcasts; the tail is
     TakeOrderedAndProject with a custkey tiebreak."""
-    tune_session(spark)
     cust = tables.load(spark, sf_dir, "customer")
     nation = tables.load(spark, sf_dir, "nation")
     orders = tables.load(spark, sf_dir, "orders").filter(
@@ -1097,7 +1086,6 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     join (part broadcasts). Both sums run in DECIMAL (exact, so the
     double division below is bit-identical across engines); the ratio is
     a single-row result."""
-    tune_session(spark)
     part = tables.load(spark, sf_dir, "part").select("p_partkey", "p_type")
     li = tables.load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-03-01").cast("timestamp"))
@@ -1138,7 +1126,6 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast ANTI join before counting. The bridge dedup partial-
     aggregates before its one exchange; count_distinct rides the same
     grouping."""
-    tune_session(spark)
     part = tables.load(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "PROMO")
@@ -1180,7 +1167,6 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     second lineitem scan, no driver-side loop. The quantity average and
     the 0.2 threshold stay in DECIMAL so the comparison is exact on
     both engines."""
-    tune_session(spark)
     part = tables.load(spark, sf_dir, "part").filter(
         F.col("p_brand") == "Brand#3"
     ).select("p_partkey")
@@ -1219,7 +1205,6 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     part scan; l_quantity <= 30 on the lineitem scan) from the
     disjunction, so both scans prune before the broadcast join — the
     pushdown shape the plan test pins."""
-    tune_session(spark)
     part = tables.load(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_size"
     )
@@ -1263,7 +1248,6 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier/nation/region chain broadcasts; the bridge partial-combines
     per (part, supp) before its one exchange; cost equality is exact
     DECIMAL."""
-    tune_session(spark)
     region = tables.load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = tables.load(spark, sf_dir, "nation")
     supp = tables.load(spark, sf_dir, "supplier")
@@ -1317,7 +1301,6 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a second-level aggregate — the distribution of distributions.
     Both aggregates partial-combine; the first one's grouping rides the
     join's custkey partitioning."""
-    tune_session(spark)
     cust = tables.load(spark, sf_dir, "customer").select("c_custkey")
     orders = tables.load(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
@@ -1346,7 +1329,6 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     The one-row total broadcasts; the per-part aggregate
     partial-combines (no partsupp in the testdata — observed lineitem
     value per (part, nation-supplier) stands in)."""
-    tune_session(spark)
     supp = tables.load(spark, sf_dir, "supplier")
     nation = tables.load(spark, sf_dir, "nation").filter(
         F.col("n_name") == "NATION_5"
@@ -1390,7 +1372,6 @@ def q_seq_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     A\" that scales to billions of events (state per user, not per
     event). Timestamps are formatted and the conversion flag is
     null-safe, so users who never click still appear."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events")
     fa = (
         ev.filter(F.col("event_type") == "view")
@@ -1430,7 +1411,6 @@ def q_win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     (RANGE includes all ties), DECIMAL sums so peer order can't flake.
     One hash exchange on the customer key; frames are bounded by a
     customer's 30-day order density."""
-    tune_session(spark)
     orders = tables.load(spark, sf_dir, "orders")
     # NTZ → timestamp → epoch seconds (a fixed offset cancels inside
     # the 30-day difference frame)
@@ -1457,7 +1437,6 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q2 = per-group min rejoin; this is the global variant). Both the
     view aggregate and the max are DECIMAL-exact, so the equality join
     back cannot flake; the one-row max broadcasts."""
-    tune_session(spark)
     supp = tables.load(spark, sf_dir, "supplier")
     li = tables.load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -1495,7 +1474,6 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlated EXISTS/NOT-EXISTS form, so the hash match PROVES the
     rewrite. One lineitem-orders join + one per-order aggregate; the
     nation dim broadcasts."""
-    tune_session(spark)
     supp = tables.load(spark, sf_dir, "supplier")
     nation = tables.load(spark, sf_dir, "nation").filter(
         F.col("n_name") == "NATION_3"
@@ -1552,7 +1530,6 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct recent-buyer key set — unhinted, because that set scales
     with |customer|: AQE's size-based choice (broadcast at test SF,
     shuffle at 100 TB) is the right strategy."""
-    tune_session(spark)
     cust = tables.load(spark, sf_dir, "customer")
     cents = F.round(F.col("c_acctbal") * 100).cast("long")
     pos = (
@@ -1596,7 +1573,6 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     the customer side before the fact join; part's type filter
     broadcasts; both sums run in DECIMAL so the final double division
     is the only inexact step and is bit-identical across engines."""
-    tune_session(spark)
     nation = tables.load(spark, sf_dir, "nation")
     region = tables.load(spark, sf_dir, "region").filter(
         F.col("r_name") == "ASIA"
@@ -1675,7 +1651,6 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     one), where double ROUND is engine-dependent; HALF-UP to cents is
     done with BIGINT div (sign-symmetric, both engines truncate toward
     zero) and the only float op is the exact cents/100 emission."""
-    tune_session(spark)
     part = tables.load(spark, sf_dir, "part").filter(
         F.col("p_name").like("%bolt%")
     ).select("p_partkey", "p_retailprice")
@@ -1727,7 +1702,6 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional sums in one grouped aggregation over the li ⨝ orders
     join (no pivot, no second scan). Counts stay in BIGINT end to end —
     the oracle casts its CASE sums, the r5 HUGEINT lesson."""
-    tune_session(spark)
     orders = tables.load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
@@ -1762,7 +1736,6 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     and NO per-row subquery survives in the physical plan
     (tests/test_plans.py pins zero InSubquery/ScalarSubquery nodes).
     Quantities compare in DECIMAL so the 0.5·total boundary is exact."""
-    tune_session(spark)
     tables.load(spark, sf_dir, "supplier").createOrReplaceTempView("_q20_supp")
     tables.load(spark, sf_dir, "part").createOrReplaceTempView("_q20_part")
     tables.load(spark, sf_dir, "lineitem").createOrReplaceTempView("_q20_li")
@@ -1806,7 +1779,6 @@ def q_emb_hash_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the driver's order-insensitive hash sorts cell values and cannot
     sort array cells — r2's array<double> output crashed its
     canonicalizer; full vectors are golden-pytested)."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     emb = emb_fns.hash_embed(F.col("text"))
     return docs.select(
@@ -1818,21 +1790,6 @@ def q_emb_hash_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_hash_sha256(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sha256/md5 text→hex scalar parity (the seed derivation of
-    src/lib/embedding.py:80,93) — JVM built-ins, no Python."""
-    tune_session(spark)
-    docs = tables.load(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.sha2(F.col("text"), 256).alias("sha256_hex"),
-        F.md5(F.col("text")).alias("md5_hex"),
-        F.conv(F.substring(F.sha2(F.col("text"), 256), 1, 8), 16, 10)
-        .cast("long")
-        .alias("base_seed"),
-    )
-
-
 def q_emb_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embedding *pipeline* wrapper (src/lib/embedding.py:27-67):
     build the analysis prompt per text, obtain the model response (the
@@ -1840,7 +1797,6 @@ def q_emb_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic), hash-embed text+response. With the stub the vector
     equals emb_hash_embed's; the row additionally gates the prompt
     template byte-for-byte."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     # byte-exact reference template (src/lib/embedding.py:32-35)
     prompt = F.concat(
@@ -1894,7 +1850,6 @@ def q_vec_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ's codebook path. Full DuckDB replay (bounds → codes → decoded
     ADC scores), bit-identical because quantization and decode are
     one left-associated IEEE op sequence shared by both engines."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     return ann_ops.sq8_topk(emb, _query_vec(spark, sf_dir), top_k=10)
 
@@ -1909,7 +1864,6 @@ def q_vec_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the <=50-row shortlist; the corpus scan is integer-only.
     Oracle replays pack -> Hamming -> shortlist -> rescore; recall@10
     vs the exact scan is pytest-gated."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     return ann_ops.bq_topk(emb, _query_vec(spark, sf_dir), top_k=10)
 
@@ -1922,39 +1876,28 @@ def q_vec_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # atexit-reclaimed. kind: "full" = bootstrap build over the whole
 # corpus (vec_hnsw_topk); "append" = 4/5 bootstrap + 1/5 incremental
 # batch with backlinks (vec_hnsw_append).
-_SW_ADJ_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _sw_adjacency(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    key = (sf_dir, kind)
-    path = _SW_ADJ_CACHE.get(key)
-    if path is not None and os.path.isdir(path):
-        return path
-    import atexit
-    import shutil
-    import tempfile
+    def build(work: str) -> str:
+        emb = tables.load(spark, sf_dir, "embeddings")
+        planes = ann_ops.hyperplanes(len(_query_vec(spark, sf_dir)))
+        if kind == "append":
+            base = emb.filter(F.col("vec_id") % 5 != 0)
+            batch = emb.filter(F.col("vec_id") % 5 == 0)
+            adj = ann_ops.smallworld_build(base, planes).unionByName(
+                ann_ops.smallworld_append(base, batch, planes)
+            )
+        elif kind == "base":
+            # the standing 4/5 index alone - the streaming ingest row
+            # merges it with the drained appended half
+            adj = ann_ops.smallworld_build(
+                emb.filter(F.col("vec_id") % 5 != 0), planes
+            )
+        else:
+            adj = ann_ops.smallworld_build(emb, planes)
+        adj.write.mode("overwrite").parquet(work)
+        return work
 
-    work = tempfile.mkdtemp(prefix=f"spark_graft_hnsw_{kind}_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    emb = tables.load(spark, sf_dir, "embeddings")
-    planes = ann_ops.hyperplanes(len(_query_vec(spark, sf_dir)))
-    if kind == "append":
-        base = emb.filter(F.col("vec_id") % 5 != 0)
-        batch = emb.filter(F.col("vec_id") % 5 == 0)
-        adj = ann_ops.smallworld_build(base, planes).unionByName(
-            ann_ops.smallworld_append(base, batch, planes)
-        )
-    elif kind == "base":
-        # the standing 4/5 index alone - the streaming ingest row
-        # merges it with the drained appended half
-        adj = ann_ops.smallworld_build(
-            emb.filter(F.col("vec_id") % 5 != 0), planes
-        )
-    else:
-        adj = ann_ops.smallworld_build(emb, planes)
-    adj.write.mode("overwrite").parquet(work)
-    _SW_ADJ_CACHE[key] = work
-    return work
+    return _staged(sf_dir, f"spark_graft_hnsw_{kind}_", build)
 
 
 def q_vec_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1973,15 +1916,11 @@ def q_vec_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and replays the identical walk (SQL set-UNION = the Spark
     distinct()); recall@10 on clustered data is pytest-gated (the
     bq_topk protocol)."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     adj = spark.read.parquet(_sw_adjacency(spark, sf_dir, "full"))
     return ann_ops.smallworld_topk(
         emb, _query_vec(spark, sf_dir), k=10, adj=adj
     )
-
-
-_SW_STORE_CACHE: dict[str, str] = {}
 
 
 def _sw_store(spark: SparkSession, sf_dir: str) -> str:
@@ -1990,22 +1929,16 @@ def _sw_store(spark: SparkSession, sf_dir: str) -> str:
     nb meta) to a per-process temp dir — the same ingest-artifact
     convention as _sw_adjacency, one directory richer. Probes against
     it are pruned point lookups; bench passes time the walk."""
-    path = _SW_STORE_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
-        return path
-    import atexit
-    import shutil
-    import tempfile
 
-    work = tempfile.mkdtemp(prefix="spark_graft_hnsw_store_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    emb = tables.load(spark, sf_dir, "embeddings")
-    planes = ann_ops.hyperplanes(len(_query_vec(spark, sf_dir)))
-    # reuse the staged full adjacency rather than re-running the build
-    adj = spark.read.parquet(_sw_adjacency(spark, sf_dir, "full"))
-    ann_ops.smallworld_store_write(emb, planes, work, adj=adj)
-    _SW_STORE_CACHE[sf_dir] = work
-    return work
+    def build(work: str) -> str:
+        emb = tables.load(spark, sf_dir, "embeddings")
+        planes = ann_ops.hyperplanes(len(_query_vec(spark, sf_dir)))
+        # reuse the staged full adjacency rather than re-running the build
+        adj = spark.read.parquet(_sw_adjacency(spark, sf_dir, "full"))
+        ann_ops.smallworld_store_write(emb, planes, work, adj=adj)
+        return work
+
+    return _staged(sf_dir, "spark_graft_hnsw_store_", build)
 
 
 def q_vec_hnsw_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2026,7 +1959,6 @@ def q_vec_hnsw_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     recurrence, same Catalyst cosine on the same doubles as
     vec_hnsw_topk — identical rows, so the row shares O_VEC_HNSW_TOPK
     verbatim (the vec_ivf_pruned convention)."""
-    tune_session(spark)
     return ann_ops.smallworld_topk_pruned(
         spark, _sw_store(spark, sf_dir), _query_vec(spark, sf_dir), k=10
     )
@@ -2051,7 +1983,6 @@ def q_vec_hnsw_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjacency halves exactly and replays the identical walk;
     append-batch-rows ≡ full-rebuild-restricted-to-batch is
     pytest-pinned (the pure-function candidate rule)."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     adj = spark.read.parquet(_sw_adjacency(spark, sf_dir, "append"))
     return ann_ops.smallworld_topk(
@@ -2073,11 +2004,6 @@ def q_stream_hnsw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically to the one-shot batch append and this row shares
     ``O_VEC_HNSW_APPEND`` verbatim - the stream_curate stream==batch
     recipe applied to the serving index."""
-    import atexit
-    import shutil
-    import tempfile
-
-    tune_session(spark)
     _, landing = _stage_late_batches(
         "hnswst",
         sf_dir,
@@ -2086,8 +2012,7 @@ def q_stream_hnsw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         table="embeddings",
         order_by="vec_id",
     )
-    work = tempfile.mkdtemp(prefix="spark_graft_hnswst_run_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("spark_graft_hnswst_run_")
     stream = stream_ingest_ops.landing_stream(
         spark, landing, "vec_id long, embedding array<double>"
     )
@@ -2130,7 +2055,6 @@ def q_vec_ood_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULLIF (ANSI-safe) and flags nothing. One assignment pass + one
     per-cluster moment aggregate + one broadcast join back: the
     profile_corr cost class, per cluster."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     cents = _seed_vectors(spark, sf_dir)
     assigned = ivf_ops.assign_clusters_auto(emb, cents)
@@ -2186,7 +2110,6 @@ def q_vec_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     compressed path a 100 TB corpus serves when full vectors don't fit
     hot storage. Recall on clustered data is pytest-gated
     (tests/test_ann.py) — this row gates the cross-engine ADC replay."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     return ann_ops.pq_topk(
         emb, None, _query_vec(spark, sf_dir), codebooks=_pq_codebooks()
@@ -2200,42 +2123,33 @@ def q_vec_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # probe. One process builds each layout once per sf_dir; steady-state
 # bench passes therefore time the probe alone, not the staging write.
 # Dirs are atexit-reclaimed (no /tmp leak).
-_IVF_LAYOUT_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _ivf_layout(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    key = (sf_dir, kind)
-    path = _IVF_LAYOUT_CACHE.get(key)
-    if path is not None and os.path.isdir(path):
-        return path
-    import atexit
-    import shutil
-    import tempfile
+    def build(work: str) -> str:
+        emb = tables.load(spark, sf_dir, "embeddings")
+        cents = _seed_vectors(spark, sf_dir)
+        if kind == "ivfpq":
+            ann_ops.ivfpq_write(emb, cents, _pq_codebooks(), work)
+        elif kind == "ivfsq":
+            ann_ops.ivfsq_write(emb, cents, work)
+        elif kind == "ivf_append":
+            # grown-corpus replay: base layout from 4/5 of the corpus,
+            # then the remaining 1/5 arrives as a new batch and is
+            # APPENDED against the same trained centroids — no rebuild
+            ivf_ops.ivf_write_clustered(
+                emb.filter(F.col("vec_id") % 5 != 0), cents, work
+            )
+            ivf_ops.ivf_append(
+                emb.filter(F.col("vec_id") % 5 == 0), cents, work
+            )
+        elif kind == "ivf_filtered":
+            # label rides into the partitioned store so probe-time
+            # predicates push down next to the cluster partition filter
+            ivf_ops.ivf_write_filtered(emb, cents, work, meta_cols=("label",))
+        else:
+            ivf_ops.ivf_write_clustered(emb, cents, work)
+        return work
 
-    work = tempfile.mkdtemp(prefix=f"spark_graft_{kind}_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    emb = tables.load(spark, sf_dir, "embeddings")
-    cents = _seed_vectors(spark, sf_dir)
-    if kind == "ivfpq":
-        ann_ops.ivfpq_write(emb, cents, _pq_codebooks(), work)
-    elif kind == "ivfsq":
-        ann_ops.ivfsq_write(emb, cents, work)
-    elif kind == "ivf_append":
-        # grown-corpus replay: base layout from 4/5 of the corpus, then
-        # the remaining 1/5 arrives as a new batch and is APPENDED
-        # against the same trained centroids — no rebuild
-        ivf_ops.ivf_write_clustered(
-            emb.filter(F.col("vec_id") % 5 != 0), cents, work
-        )
-        ivf_ops.ivf_append(emb.filter(F.col("vec_id") % 5 == 0), cents, work)
-    elif kind == "ivf_filtered":
-        # label rides into the partitioned store so probe-time
-        # predicates push down next to the cluster partition filter
-        ivf_ops.ivf_write_filtered(emb, cents, work, meta_cols=("label",))
-    else:
-        ivf_ops.ivf_write_clustered(emb, cents, work)
-    _IVF_LAYOUT_CACHE[key] = work
-    return work
+    return _staged(sf_dir, f"spark_graft_{kind}_", build)
 
 
 def q_vec_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2251,7 +2165,6 @@ def q_vec_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan, not the answer. The layout is built once per process
     (``_ivf_layout``) so this row measures the PROBE, not the staging
     write (VERDICT r5 #2)."""
-    tune_session(spark)
     work = _ivf_layout(spark, sf_dir, "ivfpq")
     cents = _seed_vectors(spark, sf_dir)
     return ann_ops.ivfpq_topk_pruned(
@@ -2265,7 +2178,6 @@ def q_vec_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     asymmetric-distance shortlist over the survivors, exact-L2 re-rank
     (operators/ann.py ivfpq_topk — one zero-exchange plan composing the
     vec_ivf_topk assignment with the vec_pq_topk scorer)."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     seeds = _seed_vectors(spark, sf_dir)
     return ann_ops.ivfpq_topk(
@@ -2278,7 +2190,6 @@ def q_vec_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (codegen, zero shuffle) → exact re-rank over candidates only
     (TakeOrderedAndProject). The scale path the reference lacks entirely
     (no ivfflat/hnsw index exists — config/init.sql:27-32)."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     out = ann_ops.ann_topk(emb, _query_vec(spark, sf_dir), k=10)
     return out.select(
@@ -2318,7 +2229,6 @@ def q_src_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     routing verdict is src/lib/sources.py:184-240): ready / convert /
     rejected — 'rejected' is the side output the reference silently
     drops (SURVEY Q6)."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     files = docs.select("doc_id", _spark_filepath().alias("filepath"))
     return ingest_ops.route(files).select(
@@ -2343,7 +2253,6 @@ def q_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything; no floats are compared that both engines didn't derive
     by the identical single IEEE add. Re-applying the same batch is a
     no-op — pinned in tests/test_write.py."""
-    tune_session(spark)
     cust = tables.load(spark, sf_dir, "customer")
     base = cust.select(
         "c_custkey",
@@ -2414,7 +2323,6 @@ def q_src_sniff_magic(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-extensioned files surfacing as an explicit ``mismatch`` column.
     Tampered-magic pin in tests/test_formats.py proves the verdict
     reads bytes, not names."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     hdr = F.element_at(
         F.array(*[F.lit(h) for h in SNIFF_LANE_HEADERS]),
@@ -2444,7 +2352,6 @@ def q_src_sniff_magic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_filt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The kept set (plaintext or convertible — the implicit filter at
     src/lib/sources.py:226-239, made explicit)."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     files = docs.select("doc_id", _spark_filepath().alias("filepath"))
     return ingest_ops.ingestion_ready(files).select("doc_id", "mime", "route")
@@ -2466,7 +2373,6 @@ def q_meta_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
       (src/lib/documents.py:94-96) — sidecar path = source path +
       '.meta.yml', left-joined on the derived filename key (sidecars
       exist for every 3rd doc) → ``meta_path``/``has_sidecar``."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     sidecars = spark.createDataFrame(
         [(s, {"author": a, "genre": g}) for s, a, g in _SIDECARS],
@@ -2516,7 +2422,6 @@ def q_sink_stdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Result presentation (cli/search_doc_chunks.py:101-124): the
     flagship top-k formatted as the CLI's display block — rank header,
     id, 4-decimal score, 500-char truncated text."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     docs = tables.load(spark, sf_dir, "documents")
     hits = sim_topk(
@@ -2553,7 +2458,6 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-date domain) gets its customer's latest order at-or-before the
     probe time. One shuffle on the key, union+carry-forward window — no
     range explosion."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events")
     orders = tables.load(spark, sf_dir, "orders")
     probes = ev.select(
@@ -2591,7 +2495,6 @@ def q_join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's native ASOF JOIN run BOTH directions + the same tie rule
     — two independent engines' nearest semantics must agree row for
     row."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events")
     orders = tables.load(spark, sf_dir, "orders")
     probes = ev.select(
@@ -2627,7 +2530,6 @@ def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi+range join: lineitems shipped within 120 days of their
     order's date, aggregated per return flag. The equi key keeps the
     physical plan a hash join; the range predicate rides along."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     orders = tables.load(spark, sf_dir, "orders")
     j = rel_ops.range_join(li, orders, days=120)
@@ -2648,7 +2550,6 @@ def q_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan pinned no-nested-loop in tests/test_plans.py. All-integer
     bounds; the oracle runs the plain inequality join, proving the grid
     path is lossless."""
-    tune_session(spark)
     orders = tables.load(spark, sf_dir, "orders")
     part = tables.load(spark, sf_dir, "part")
     day0 = F.lit("1992-01-01").cast("date")
@@ -2678,7 +2579,6 @@ def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (returnflag, linestatus): all 2^2 grouping combinations
     in one pass (partial-aggregable; Spark expands grouping sets before
     the single shuffle)."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     # DECIMAL sum, not double: the cube's grand total reaches ~1e12 at
     # the 30× replica scale, where double summation error across
@@ -2695,7 +2595,6 @@ def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP over (priority, status) on orders."""
-    tune_session(spark)
     orders = tables.load(spark, sf_dir, "orders")
     # DECIMAL sum for the same reason as q_agg_cube: the rollup grand
     # total (~1.1e12 at 30×) sits past the magnitude where double sums
@@ -2711,7 +2610,6 @@ def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via the SQL surface (the engine exposes
     both DataFrame and SQL APIs; Catalyst plans them identically)."""
-    tune_session(spark)
     tables.load(spark, sf_dir, "lineitem").createOrReplaceTempView("_li_gs")
     return spark.sql(
         """
@@ -2724,7 +2622,6 @@ def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT: customers ordering in both 1995 and 2000."""
-    tune_session(spark)
     orders = tables.load(spark, sf_dir, "orders")
     a = orders.filter(F.year("o_orderdate") == 1995).select("o_custkey")
     b = orders.filter(F.year("o_orderdate") == 2000).select("o_custkey")
@@ -2734,7 +2631,6 @@ def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (anti-join's set-op twin): customers who ordered in 1995
     but never in 2000."""
-    tune_session(spark)
     orders = tables.load(spark, sf_dir, "orders")
     a = orders.filter(F.year("o_orderdate") == 1995).select("o_custkey")
     b = orders.filter(F.year("o_orderdate") == 2000).select("o_custkey")
@@ -2749,17 +2645,11 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch-tagged union; each branch keeps its own independently
     planned set-op (intersect = left-semi shape, exceptAll = anti
     shape — both one exchange on the key)."""
-    tune_session(spark)
-    orders = tables.load(spark, sf_dir, "orders")
-    a = orders.filter(F.year("o_orderdate") == 1995).select("o_custkey")
-    b = orders.filter(F.year("o_orderdate") == 2000).select("o_custkey")
-    inter = a.intersect(b).select(
+    inter = q_set_intersect(spark, sf_dir).select(
         F.lit("intersect").alias("branch"), "o_custkey"
     )
-    exc = (
-        a.distinct()
-        .exceptAll(b.distinct())
-        .select(F.lit("except").alias("branch"), "o_custkey")
+    exc = q_set_except(spark, sf_dir).select(
+        F.lit("except").alias("branch"), "o_custkey"
     )
     return inter.unionByName(exc)
 
@@ -2773,7 +2663,6 @@ def q_agg_multidim(spark: SparkSession, sf_dir: str) -> DataFrame:
     status), explicit GROUPING SETS via the SQL surface. Each branch
     keeps its own single-shuffle expanded-grouping-sets plan; the
     union is plan-level concatenation, no extra exchange."""
-    tune_session(spark)
     cube = q_agg_cube(spark, sf_dir).select(
         F.lit("cube").alias("branch"),
         F.col("l_returnflag").alias("k1"),
@@ -2801,7 +2690,6 @@ def q_agg_multidim(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_win_rank_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking window: top-3 orders by price per customer — partitioned
     by customer (never a global window), deterministic tie-break."""
-    tune_session(spark)
     orders = tables.load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
@@ -2824,7 +2712,6 @@ def q_win_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange on the partition key. Deterministic peer order via the
     (o_orderdate, o_orderkey) total order; DECIMAL running sums so
     partial-order-of-addition can't break the value hash."""
-    tune_session(spark)
     orders = tables.load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     price = F.col("o_totalprice").cast("decimal(18,2)")
@@ -2856,7 +2743,6 @@ def q_agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped aggregation — one shuffle, map-side partial per (priority,
     status) cell; the explicit value list keeps the schema static, which
     a 100 TB plan needs anyway to avoid a discovery pass)."""
-    tune_session(spark)
     orders = tables.load(spark, sf_dir, "orders")
     price = F.col("o_totalprice").cast("decimal(18,2)")
     out = (
@@ -2890,7 +2776,6 @@ def q_agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort; the final aggregate sees ≤4 rows per group. The documented
     sketch path for approximate needs remains ``percentile_approx``
     (t-digest, partial-aggregable, no cross-engine oracle)."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     vals = li.select("l_returnflag", F.col("l_extendedprice").alias("v"))
     ranked = rel_ops.group_ranked(vals, keys=("l_returnflag",), value_col="v")
@@ -2950,7 +2835,6 @@ def q_agg_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle independently computes n and asserts the verdicts
     TRUE, so a band violation hash-mismatches. The rank check is one
     extra broadcast-join scan (k sketch rows against the fact table)."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     # ONE sketch per group serving both percentiles (array form) — two
     # separate percentile_approx calls would build and merge two
@@ -3005,7 +2889,6 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     2% rsd; a gross sketch failure flips it false) — and the oracle
     recomputes the exact count and asserts TRUE, so any violation
     hash-mismatches."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
@@ -3034,7 +2917,6 @@ def q_src_convert_epub(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/lib/sources.py:64-172): deterministic SPKB containers built from
     each document, parsed and rendered by mapInPandas; the oracle
     predicts the markdown from the source text."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return convert_ops.convert_epub(convert_ops.fake_epubs(docs))
 
@@ -3052,7 +2934,6 @@ def q_src_convert_epub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_mm_decode_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary image column → mapInPandas decode → pixel statistics."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     media = mm_ops.fake_images(docs).select("doc_id", "content")
     out = mm_ops.decode_images(media)
@@ -3061,7 +2942,6 @@ def q_mm_decode_image(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary audio column → amplitude statistics (mean, RMS)."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     media = mm_ops.fake_audio(docs).select("doc_id", "content")
     out = mm_ops.audio_features(media)
@@ -3072,7 +2952,6 @@ def q_mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame sampling: 1 media row → N frame rows via mapInPandas."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     media = mm_ops.fake_videos(docs).select("doc_id", "content")
     return mm_ops.sample_frames(media)
@@ -3089,7 +2968,6 @@ def q_mm_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     typed NULLs. The ``resize`` branch (stride-2 downsample) reuses the
     image columns: width/height are the RESIZED dims, mean_intensity the
     resized mean."""
-    tune_session(spark)
     null_i = F.lit(None).cast("int")
     null_d = F.lit(None).cast("double")
     null_s = F.lit(None).cast("string")
@@ -3173,7 +3051,6 @@ def q_mm_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 10-minute window counts + value sums per event_type."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events")
     return stream_ops.windowed_counts(ev, window="10 minutes")
 
@@ -3181,7 +3058,6 @@ def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (10-minute window, 5-minute slide) — each event
     lands in two windows."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events")
     return stream_ops.windowed_counts(ev, window="10 minutes", slide="5 minutes")
 
@@ -3193,7 +3069,6 @@ def q_stream_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the same events table, tagged by kind. Each branch keeps its
     own single-exchange partial-agg plan (pinned in tests/test_plans.py);
     the union is plan-level free (no extra shuffle)."""
-    tune_session(spark)
     t = q_stream_window_counts(spark, sf_dir)
     s = q_stream_sliding_counts(spark, sf_dir)
     return t.select(F.lit("tumbling").alias("kind"), "*").unionAll(
@@ -3206,7 +3081,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     state) in its batch-equivalent form: distinct (user_id, event_type)
     pairs. The streaming execution with cross-micro-batch duplicates is
     exercised in tests/test_streaming.py."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events")
     return stream_ops.stream_dedup(ev, key_cols=("user_id", "event_type")).select(
         "user_id", "event_type"
@@ -3217,7 +3091,6 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows with a 5-minute inactivity gap
     (F.session_window; stateful merge in streaming, gaps-and-islands in
     batch — the oracle is the lag+cumsum islands form)."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events")
     return stream_ops.session_windows(ev, gap="5 minutes")
 
@@ -3233,11 +3106,6 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches as a DuckDB window cascade: within-batch first-event-wins
     dedup, earliest-batch-wins across batches, ids allocated per batch in
     user_id order — exactly operators/write.py upsert semantics."""
-    import atexit
-    import shutil
-    import tempfile
-
-    tune_session(spark)
     # Staging is harness scaffolding (a real deployment's landing files
     # already exist); DuckDB writes the three batch files straight from
     # the source parquet without routing 10k-10M rows through the Spark
@@ -3252,11 +3120,9 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         [f"event_id % 3 = {b}" for b in range(3)],
         select="event_id, user_id, event_type, ROUND(value, 6) AS value",
     )
-    work = tempfile.mkdtemp(prefix="spark_graft_ingest_run_")
-    # atexit, not inline rmtree (ADVICE r6: an exception during the drain
-    # leaked the dir) — and the committed table now outlives the call so
-    # the returned frame can stay DISTRIBUTED (no driver collect).
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    # the committed table outlives the call so the returned frame can
+    # stay DISTRIBUTED (no driver collect)
+    work = _work_dir("spark_graft_ingest_run_")
     schema_ddl = (
         "id long, event_id long, user_id long, event_type string, value double"
     )
@@ -3286,9 +3152,6 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once in its first containing micro-batch — the oracle's
     (key, MIN(batch_no)) replay; eviction/re-emission semantics are
     pinned with a short delay in tests/test_streaming.py."""
-    import tempfile
-
-    tune_session(spark)
     weeks = ["ts < TIMESTAMP '2024-01-11'",
              "ts >= TIMESTAMP '2024-01-11' AND ts < TIMESTAMP '2024-01-21'",
              "ts >= TIMESTAMP '2024-01-21'"]
@@ -3312,9 +3175,6 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scaffolding priced out of steady-state). Checkpoint dirs stay fresh
 # per run — the stream itself always reprocesses. Work dirs are
 # atexit-reclaimed.
-_LATE_LANDING_CACHE: dict[tuple[str, str, str], str] = {}
-
-
 def _stage_late_batches(
     tag: str,
     sf_dir: str,
@@ -3332,35 +3192,29 @@ def _stage_late_batches(
     same-tag caller passing textually identical predicates/projection —
     a future divergent caller would have read stale files with no error.
     """
-    import atexit
     import hashlib
-    import shutil
-    import tempfile
 
     import duckdb
 
     digest = hashlib.sha256(
         "\x1f".join([select, table, order_by, *batch_conds]).encode()
     ).hexdigest()[:16]
-    cache_key = (tag, sf_dir, digest)
-    cached = _LATE_LANDING_CACHE.get(cache_key)
-    if cached is not None and os.path.isdir(os.path.join(cached, "landing")):
-        return cached, os.path.join(cached, "landing")
-    work = tempfile.mkdtemp(prefix=f"spark_graft_{tag}_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    for b, cond in enumerate(batch_conds):
-        path = os.path.join(landing, f"batch-{b}.parquet")
-        duckdb.sql(
-            f"COPY (SELECT {select}"
-            f" FROM '{sf_dir}/{table}.parquet'"
-            f" WHERE {cond} ORDER BY {order_by})"
-            f" TO '{path}' (FORMAT parquet)"
-        )
-        os.utime(path, (1_000_000 + b * 1000, 1_000_000 + b * 1000))
-    _LATE_LANDING_CACHE[cache_key] = work
-    return work, landing
+
+    def build(work: str) -> tuple[str, str]:
+        landing = os.path.join(work, "landing")
+        os.makedirs(landing)
+        for b, cond in enumerate(batch_conds):
+            path = os.path.join(landing, f"batch-{b}.parquet")
+            duckdb.sql(
+                f"COPY (SELECT {select}"
+                f" FROM '{sf_dir}/{table}.parquet'"
+                f" WHERE {cond} ORDER BY {order_by})"
+                f" TO '{path}' (FORMAT parquet)"
+            )
+            os.utime(path, (1_000_000 + b * 1000, 1_000_000 + b * 1000))
+        return work, landing
+
+    return _staged((sf_dir, digest), f"spark_graft_{tag}_", build)
 
 
 def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3376,9 +3230,6 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the oracle computes. State bounded by (delay + band) x key
     cardinality; output (a_id, b_id, user_id, lag_seconds) is
     BIGINT-exact."""
-    import tempfile
-
-    tune_session(spark)
     weeks = ["ts < TIMESTAMP '2024-01-11'",
              "ts >= TIMESTAMP '2024-01-11' AND ts < TIMESTAMP '2024-01-21'",
              "ts >= TIMESTAMP '2024-01-21'"]
@@ -3410,9 +3261,6 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract). No state store, no exchange: every micro-batch is
     scan → broadcast hash join → append, so the drained result equals
     the batch join by construction, which is the oracle."""
-    import tempfile
-
-    tune_session(spark)
     weeks = ["ts < TIMESTAMP '2024-01-11'",
              "ts >= TIMESTAMP '2024-01-11' AND ts < TIMESTAMP '2024-01-21'",
              "ts >= TIMESTAMP '2024-01-21'"]
@@ -3447,9 +3295,6 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``a.ts + band < min(side ms-truncated maxes) − delay``, which the
     oracle replays verbatim — the watermark-eviction analog of the
     late-data rows' cascade pin."""
-    import tempfile
-
-    tune_session(spark)
     weeks = ["ts < TIMESTAMP '2024-01-11'",
              "ts >= TIMESTAMP '2024-01-11' AND ts < TIMESTAMP '2024-01-21'",
              "ts >= TIMESTAMP '2024-01-21'"]
@@ -3481,9 +3326,6 @@ def q_stream_join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
     matchable by future lefts only while ``b.ts >= wm``; probe: a right
     row at exactly wm stays in state). Oracle = matched pairs UNION
     unmatched rights with ``epoch_ms(b.ts) < wm_ms`` verbatim."""
-    import tempfile
-
-    tune_session(spark)
     weeks = ["ts < TIMESTAMP '2024-01-11'",
              "ts >= TIMESTAMP '2024-01-11' AND ts < TIMESTAMP '2024-01-21'",
              "ts >= TIMESTAMP '2024-01-21'"]
@@ -3515,9 +3357,6 @@ def q_stream_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_join_right pin); wm = min(per-side ms-truncated maxes) −
     delay at the trailing no-data batch. The oracle is literally the
     three-way UNION of the verified predicates."""
-    import tempfile
-
-    tune_session(spark)
     weeks = ["ts < TIMESTAMP '2024-01-11'",
              "ts >= TIMESTAMP '2024-01-11' AND ts < TIMESTAMP '2024-01-21'",
              "ts >= TIMESTAMP '2024-01-21'"]
@@ -3556,9 +3395,6 @@ def q_stream_stateful_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     one tuple per clicked user — key-cardinality-bounded, evicted by
     the event-time timeout. The oracle replays the machine as a batch
     cascade; BIGINT ids and lag, no floats."""
-    import tempfile
-
-    tune_session(spark)
     weeks = ["ts < TIMESTAMP '2024-01-11'",
              "ts >= TIMESTAMP '2024-01-11' AND ts < TIMESTAMP '2024-01-21'",
              "ts >= TIMESTAMP '2024-01-21'"]
@@ -3587,9 +3423,6 @@ def q_stream_late_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch that touched it, with the then-running count — which the
     oracle replays from the same filter cascade as the append row.
     BIGINT aggregates only."""
-    import tempfile
-
-    tune_session(spark)
     work, landing = _stage_late_batches(
         "lateu",
         sf_dir,
@@ -3623,9 +3456,6 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-check that late ODD ids are missing while on-time EVEN ids
     count. Aggregates are count + sum(event_id): BIGINT-exact, no
     float summation order."""
-    import tempfile
-
-    tune_session(spark)
     work, landing = _stage_late_batches(
         "late",
         sf_dir,
@@ -3657,7 +3487,6 @@ def q_text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles an open one) → per-doc rank window over length-bounded
     partitions. The ln determinism contract matches the perplexity
     rows."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return curation_ops.keyword_tfidf(docs, k=5)
 
@@ -3665,7 +3494,6 @@ def q_text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-profile language ID: per-language marker-hit counts and
     the argmax prediction (alphabetical tie-break, 'unknown' on zero)."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     # Stage tokens → hit columns → argmax: inlined, lang_id(text) would
     # re-split + re-filter per language per argmax branch (~15 token
@@ -3692,7 +3520,6 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns (whitespace / BPE-ish regex pre-tokenization / chars-per-4
     estimate) are the ``text_token_count`` pillar row, consolidated here
     (same table, pure Catalyst) for the correctness window."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     # Stage tokens → components → score: quality_score(text) would
     # recompute every component from a fresh split (lambda-opaque CSE).
@@ -3747,7 +3574,6 @@ def q_text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions; the word-count rule varies naturally (10-99-word
     docs), and only the stop-word lane can produce keep=true.
     Pure scan-fused Catalyst projection: zero shuffles, zero Python."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     aug = (
         F.when(
@@ -3818,7 +3644,6 @@ def q_text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-sensitive polynomial rolling hash over the word stream —
     the document-fingerprint complement to the bag-of-words MinHash."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", textstats.fingerprint(F.col("text")).alias("fingerprint")
@@ -3831,7 +3656,6 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter flag. Pure Catalyst (sequence+transform n-grams — linear per
     row, no self-product), scan-fused, shuffle-free; complements
     quality_components, which can't see boilerplate/stuffing."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     # Tokenize ONCE: _toks/_lines are projected columns, so the three
     # gram lambdas + line screen all read the same materialized arrays
@@ -3871,7 +3695,6 @@ def q_chunk_docling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic token-bounded splitter (the engine's chunk_docling,
     reference src/lib/documents.py:67-78): 1 document row → N chunk rows
     via posexplode; whole-stage codegen, no shuffle."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return chunk_ops.chunk_split(docs, max_tokens=_CHUNK_TOKENS)
 
@@ -3881,7 +3704,6 @@ def q_chunk_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata merged with the four constant fields; import_date is the
     injected deterministic constant (SURVEY §1.2). metadata_json is the
     merged map serialized with fixed key order."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     out = chunk_ops.chunk_enrich(docs, max_tokens=_CHUNK_TOKENS)
     return out.select(
@@ -3902,7 +3724,6 @@ def q_win_chunk_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     window. The one exchange (hash by doc_id) is the window's own; the
     posexplode form in chunk_docling stays shuffle-free, and this row
     hash-checks that the two forms agree (chunk_number = chunk_number_w)."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     out = chunk_ops.chunk_numbers_windowed(docs, max_tokens=_CHUNK_TOKENS)
     return out.select("doc_id", "chunk_number", "token_offset", "chunk_number_w", "n_chunks")
@@ -3922,7 +3743,6 @@ def q_chunk_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (chunk_ops.chunk_bpe) remains pytest-pinned for merge-free use."""
     from demo_pgvector_spark.functions import bpe as bpe_fns
 
-    tune_session(spark)
     merges = bpe_fns.load_merges(
         os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                      "golden", "bpe_merges.txt")
@@ -3948,7 +3768,6 @@ def q_chunk_bpe_pretrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     pretrained golden (piece, cost) parquet."""
     from demo_pgvector_spark.functions import bpe as bpe_fns
 
-    tune_session(spark)
     merges = bpe_fns.load_merges(
         os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                      "golden", "bpe_pretrained_merges.txt")
@@ -3973,7 +3792,6 @@ def q_vec_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected once (16×64 doubles) and inlined, so the big side is scan →
     argmax projection → IN-filter → top-k with ZERO data exchange
     (previously a broadcast crossJoin + full groupBy(vec_id) per probe)."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     cents = _seed_vectors(spark, sf_dir)
     out = ivf_ops.ivf_topk_inline(
@@ -4000,7 +3818,6 @@ def q_cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     margin over all sf0.01 vectors is 3.7e-6 (p1 = 2.9e-3), nine orders
     above the ~1e-15 float noise between engines — same methodology as
     the IVF row's >=1e-5 measurement."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     assigned, _ = ivf_ops.kmeans_lloyd(
         emb.select("vec_id", "embedding"), k=4, iters=2
@@ -4010,7 +3827,6 @@ def q_cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: one row per distinct text, deterministic keeper + count."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return dedup_ops.exact_dedup(docs)
 
@@ -4032,7 +3848,6 @@ def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Signature computation: k=5 word shingles, H=12 universal hashes over
     an md5-derived 32-bit base (``dedup_minhash``), fully recomputed by
     the oracle's CTE chain."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     out = dedup_ops.minhash_pairs(docs)
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
@@ -4054,7 +3869,6 @@ def q_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single exchange carries canonical URLs. Oracle replays
     synthesis + canonicalization with identical string ops ('g' flag on
     the DuckDB side where Spark replaces all matches)."""
-    tune_session(spark)
     cust = tables.load(spark, sf_dir, "customer")
     k = F.col("c_custkey")
     base = F.concat(
@@ -4107,7 +3921,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL minhash pair computation and restricts it to batch-touching
     pairs — proving the incremental path loses nothing and adds
     nothing."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % DEDUP_BATCH_MOD != 0)
     batch = docs.filter(F.col("doc_id") % DEDUP_BATCH_MOD == 0)
@@ -4123,29 +3936,19 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # APPENDED) and every later indexed-incremental call measures the index
 # SCAN, not the build (the _ivf_layout / join_bucketed precedent).
 # Dirs are atexit-reclaimed.
-_BANDIDX_CACHE: dict[str, str] = {}
-
-
 def _band_index_layout(spark: SparkSession, sf_dir: str) -> str:
-    path = _BANDIDX_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
-        return path
-    import atexit
-    import shutil
-    import tempfile
+    def build(work: str) -> str:
+        docs = tables.load(spark, sf_dir, "documents")
+        p = os.path.join(work, "bands")
+        dedup_ops.band_index_write(
+            docs.filter(F.col("doc_id") % DEDUP_BATCH_MOD != 0), p
+        )
+        dedup_ops.band_index_append(
+            docs.filter(F.col("doc_id") % DEDUP_BATCH_MOD == 0), p
+        )
+        return p
 
-    work = tempfile.mkdtemp(prefix="spark_graft_bandidx_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    docs = tables.load(spark, sf_dir, "documents")
-    p = os.path.join(work, "bands")
-    dedup_ops.band_index_write(
-        docs.filter(F.col("doc_id") % DEDUP_BATCH_MOD != 0), p
-    )
-    dedup_ops.band_index_append(
-        docs.filter(F.col("doc_id") % DEDUP_BATCH_MOD == 0), p
-    )
-    _BANDIDX_CACHE[sf_dir] = p
-    return p
+    return _staged(sf_dir, "spark_graft_bandidx_", build)
 
 
 def q_dedup_index_write(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4160,7 +3963,6 @@ def q_dedup_index_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets. 100 TB: the index build is the one-time shingle+minhash
     pass; every later incremental-dedup run scans ~6 small rows/doc
     instead of re-hashing corpus text."""
-    tune_session(spark)
     idx = spark.read.parquet(_band_index_layout(spark, sf_dir))
     bk = idx.groupBy("band", "key").agg(F.count(F.lit(1)).alias("n_docs"))
     return bk.groupBy(F.col("band").cast("long").alias("band")).agg(
@@ -4184,7 +3986,6 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer reads the corpus "version" via a partition-friendly id
     predicate, standing in for the version column a real ingest table
     carries."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % DEDUP_BATCH_MOD != 0)
     batch = docs.filter(F.col("doc_id") % DEDUP_BATCH_MOD == 0)
@@ -4209,7 +4010,6 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01 the naive join sees ~11.5k candidate pairs; the
     prefix+PPJoin filters cut that to 780 before verification, 25
     true)."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return dedup_ops.ngram_jaccard_pairs(docs, threshold=0.3, k=3)
 
@@ -4225,7 +4025,6 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     |corpus|² — plan pinned to a hash join on the 8-byte gram hash, no
     cartesian). The oracle reconstructs the same runs from a DuckDB
     shared-gram self-join + gaps-and-islands."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return dedup_ops.substring_pairs(docs)
 
@@ -4242,7 +4041,6 @@ def q_mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     8 bands). The oracle recomputes every pixel from the md5-chain
     SPKM spec and replays fingerprints, banding, and verification —
     DuckDB never parses the binary, the spec IS the payload."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     media = mm_ops.fake_images_neardup(docs)
     return mm_ops.phash_pairs(media)
@@ -4259,13 +4057,9 @@ def q_mm_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (saturating edits flip sign bits only at their boundaries). The
     oracle recomputes every sample from the md5-chain spec and replays
     energies → bits → bands → verify — no blob parsing."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     media = mm_ops.fake_audio_neardup(docs)
     return mm_ops.audiohash_pairs(media)
-
-
-_PHASHIDX_CACHE: dict[str, str] = {}
 
 
 def _phash_index_layout(spark: SparkSession, sf_dir: str) -> str:
@@ -4274,24 +4068,18 @@ def _phash_index_layout(spark: SparkSession, sf_dir: str) -> str:
     write(first half) + append(second half) so the append ≡ rebuild
     contract is under the oracle gate too (any append divergence
     changes the served pairs)."""
-    path = _PHASHIDX_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
-        return path
-    import atexit
-    import shutil
-    import tempfile
 
-    work = tempfile.mkdtemp(prefix="spark_graft_phashidx_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    docs = tables.load(spark, sf_dir, "documents")
-    media = mm_ops.fake_images_neardup(docs).filter(
-        F.col("doc_id") % DEDUP_BATCH_MOD != 0
-    )
-    p = os.path.join(work, "phash_bands")
-    mm_ops.phash_index_write(media.filter(F.col("doc_id") < 100), p)
-    mm_ops.phash_index_append(media.filter(F.col("doc_id") >= 100), p)
-    _PHASHIDX_CACHE[sf_dir] = p
-    return p
+    def build(work: str) -> str:
+        docs = tables.load(spark, sf_dir, "documents")
+        media = mm_ops.fake_images_neardup(docs).filter(
+            F.col("doc_id") % DEDUP_BATCH_MOD != 0
+        )
+        p = os.path.join(work, "phash_bands")
+        mm_ops.phash_index_write(media.filter(F.col("doc_id") < 100), p)
+        mm_ops.phash_index_append(media.filter(F.col("doc_id") >= 100), p)
+        return p
+
+    return _staged(sf_dir, "spark_graft_phashidx_", build)
 
 
 def q_mm_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4310,7 +4098,6 @@ def q_mm_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-touching pairs — the index-served path must lose nothing and
     add nothing. Tampered-index + batch-only-decode pins in
     tests/test_multimodal.py."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     batch = mm_ops.fake_images_neardup(docs).filter(
         F.col("doc_id") % DEDUP_BATCH_MOD == 0
@@ -4329,7 +4116,6 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     host graph. 5 iterations, ranks 6dp-quantized per step, ALL
     iterations one job (no per-iteration action); the oracle unrolls the
     identical recurrence (the kmeans-oracle pattern)."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     edges = li.select(
         F.col("l_partkey").alias("src"),
@@ -4349,7 +4135,6 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain SQL; BIGINT-exact throughout. Degree orientation caps the
     wedge fan-out at O(√m) per node — the 100 TB skew argument lives in
     the operator docstring."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem").filter(
         F.col("l_quantity") > TRI_QTY_MIN
     )
@@ -4367,7 +4152,6 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     NO convergence action: all rounds compile into ONE Spark job (the
     graph_pagerank shape). Integer-exact end to end; the oracle unrolls
     the same Bellman-Ford relaxation."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     supp = tables.load(spark, sf_dir, "supplier")
     edges = li.select(
@@ -4389,7 +4173,6 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     (restart lands only on seeds). PAGERANK_ITERS iterations compiled
     into ONE job, integer fixed point, no new action-per-round
     (VERDICT r7 #7); oracle unrolls the identical recurrence."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     supp = tables.load(spark, sf_dir, "supplier")
     edges = li.select(
@@ -4419,7 +4202,6 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     its boolean core membership plus the convergence flag; oracle
     unrolls the identical peeling rounds and derives the same flag
     from its last two CTEs."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem").filter(
         F.col("l_quantity") > TRI_QTY_MIN
     )
@@ -4450,7 +4232,6 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     concentrate on; in corpus terms, index pages vs canonical
     documents. Oracle unrolls the identical rounds with DuckDB `//`
     integer division; the only float is the final display division."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem").filter(
         F.col("l_quantity") > TRI_QTY_MIN
     )
@@ -4473,7 +4254,6 @@ def q_graph_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-bridge integers, z_num exact BIGINT, estimates the shared
     one-literal division @4dp, the harmonic a fixed left fold — the
     DuckDB oracle replays the whole chain bit-for-bit."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem").filter(
         F.col("l_quantity") > TRI_QTY_MIN
     )
@@ -4501,7 +4281,6 @@ def q_graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output (node_id, component_id) with component_id = the component's
     minimum node id; oracle = the bounded grouped-min recursive CTE
     (the dedup_assign convention)."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem").filter(
         F.col("l_quantity") > TRI_QTY_MIN
     )
@@ -4527,7 +4306,6 @@ def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     / domain-cluster grouping is this exact operator over host graphs.
     Fixed LPA_ITERS rounds compile into ONE job; integer-exact; oracle
     unrolls the rounds with a ROW_NUMBER argmax."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem").filter(
         F.col("l_quantity") > TRI_QTY_MIN
     )
@@ -4545,7 +4323,6 @@ def q_sample_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = PRIORITY_K largest win, ties on ascending doc_id. Plan is a
     scan-fused projection + TakeOrderedAndProject: no shuffle, no
     global sort (pinned in tests/test_plans.py)."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return curation_ops.sample_priority(docs, k=PRIORITY_K, salt=PRIORITY_SALT)
 
@@ -4557,7 +4334,6 @@ def q_layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max — the data-skipping statistics a pruned scan reads. Pure
     integer bit arithmetic (shift/mask/or), exact on both engines; one
     partial-combined hash exchange."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return layout_ops.zorder_envelopes(
         li, "l_partkey", "l_suppkey", bucket_bits=ZORDER_BUCKET_BITS
@@ -4565,45 +4341,35 @@ def q_layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Z-ordered layout cache: write-once artifact, same contract as
-# _IVF_LAYOUT_CACHE (the join_bucketed precedent) — at 100 TB the
+# _ivf_layout (the join_bucketed precedent) — at 100 TB the
 # z-order rewrite is the OPTIMIZE/compaction job paid once; every query
 # after that pays only the pruned scan, so steady-state rows time the
 # READ. Dirs are atexit-reclaimed.
-_ZORDER_LAYOUT_CACHE: dict[str, str] = {}
-
-
 def _zorder_layout(spark: SparkSession, sf_dir: str, kind: str = "full") -> str:
-    key = f"{sf_dir}|{kind}"
-    path = _ZORDER_LAYOUT_CACHE.get(key)
-    if path is not None and os.path.isdir(path):
-        return path
-    import atexit
-    import shutil
-    import tempfile
+    def build(work: str) -> str:
+        li = tables.load(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
+        )
+        if kind == "append":
+            # grown-corpus replay (the _ivf_layout "ivf_append" shape):
+            # 4/5 written as the base compaction, the last 1/5 appended
+            # later — no rewrite of the base tiles
+            layout_ops.zorder_write(
+                li.filter(F.col("l_orderkey") % 5 != 0), work,
+                "l_partkey", "l_suppkey", bucket_bits=ZORDER_BUCKET_BITS,
+            )
+            layout_ops.zorder_append(
+                li.filter(F.col("l_orderkey") % 5 == 0), work,
+                "l_partkey", "l_suppkey", bucket_bits=ZORDER_BUCKET_BITS,
+            )
+        else:
+            layout_ops.zorder_write(
+                li, work, "l_partkey", "l_suppkey",
+                bucket_bits=ZORDER_BUCKET_BITS,
+            )
+        return work
 
-    work = tempfile.mkdtemp(prefix=f"spark_graft_zorder_{kind}_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    li = tables.load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
-    )
-    if kind == "append":
-        # grown-corpus replay (the _ivf_layout "ivf_append" shape): 4/5
-        # written as the base compaction, the last 1/5 appended later —
-        # no rewrite of the base tiles
-        layout_ops.zorder_write(
-            li.filter(F.col("l_orderkey") % 5 != 0), work,
-            "l_partkey", "l_suppkey", bucket_bits=ZORDER_BUCKET_BITS,
-        )
-        layout_ops.zorder_append(
-            li.filter(F.col("l_orderkey") % 5 == 0), work,
-            "l_partkey", "l_suppkey", bucket_bits=ZORDER_BUCKET_BITS,
-        )
-    else:
-        layout_ops.zorder_write(
-            li, work, "l_partkey", "l_suppkey", bucket_bits=ZORDER_BUCKET_BITS
-        )
-    _ZORDER_LAYOUT_CACHE[key] = work
-    return work
+    return _staged(sf_dir, f"spark_graft_zorder_{kind}_", build)
 
 
 def q_layout_zorder_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4619,7 +4385,6 @@ def q_layout_zorder_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     computation since the layout changes the plan, not the result. The
     layout is built once per process (``_zorder_layout``) so this row
     measures the PRUNED READ, not the compaction write."""
-    tune_session(spark)
     work = _zorder_layout(spark, sf_dir)
     x_lo, x_hi, y_lo, y_hi = ZORDER_BOX
     df = layout_ops.zorder_pruned_scan(
@@ -4662,7 +4427,6 @@ def q_layout_zorder_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     names, never file lineage, so appended files inside surviving tiles
     are picked up for free. Layout built once per process; steady state
     measures the pruned read."""
-    tune_session(spark)
     work = _zorder_layout(spark, sf_dir, "append")
     df = layout_ops.zorder_pruned_scan(
         spark,
@@ -4701,7 +4465,6 @@ def q_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     where an exact per-key table would carry the full key domain
     through the shuffle. Salted-md5 hash rows — bit-identical on both
     engines, no float anywhere."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events")
     sk = sketch_ops.countmin_build(ev, "user_id")
     probes = (
@@ -4734,7 +4497,6 @@ def q_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     (6σ of the 3.25 % std err), so a gross estimator failure
     hash-mismatches. The 100 TB case: distinct-count state is m BIGINTs
     per group, not the key domain, through every shuffle."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     regs = sketch_ops.hll_build(li, "l_orderkey", group_cols=("l_returnflag",))
     est = sketch_ops.hll_estimate(regs, group_cols=("l_returnflag",))
@@ -4774,7 +4536,6 @@ def q_profile_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     covariance matrix shuffle, and DECIMAL(38) keeps the moments exact
     to ~10^38 (≈ 10^12 rows of squared cents) before a wider type or
     Welford-style pairwise merging is needed."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     ints = li.select(
         F.expr("cast(round(l_quantity * 100) as decimal(19,0))").alias("q"),
@@ -4849,7 +4610,6 @@ def q_ts_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 20-row frame — the classic streaming-friendly shape (the
     watermarked variant would ride applyInPandasWithState like
     stream_stateful_funnel)."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -4908,7 +4668,6 @@ def q_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed fold — no self-join, no explode; oracle replays the frame
     list and the same indexed fold via DuckDB's windowed list() +
     list_transform with index."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events")
     return ts_ops.ewma_trailing(ev)
 
@@ -4925,7 +4684,6 @@ def q_sketch_hll_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate against 15 % of the exact union (≈ 2.7σ of the
     √3-compounded 3.25 % register error). One row out; all three
     register tables stay ≤ m rows."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     a_items = li.filter(F.col("l_returnflag") == "R").select("l_orderkey")
     b_items = li.filter(F.col("l_returnflag") == "N").select("l_orderkey")
@@ -4994,7 +4752,6 @@ def q_profile_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. All-integer output, TakeOrdered + single-row summary
     broadcast (two passes over the n_keys-sized count table, the
     profile_table two-scan precedent)."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events")
     return rel_ops.profile_skew(ev, "event_type", top_n=5)
 
@@ -5014,19 +4771,13 @@ def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     epochs are skipped via an epoch marker (cell addition is not
     idempotent); state is d×w BIGINTs forever, whatever the stream
     length."""
-    import atexit
-    import shutil
-    import tempfile
-
-    tune_session(spark)
     _, landing = _stage_late_batches(
         "cmsk",
         sf_dir,
         [f"event_id % 3 = {b}" for b in range(3)],
         select="event_id, user_id",
     )
-    work = tempfile.mkdtemp(prefix="spark_graft_cmsk_run_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("spark_graft_cmsk_run_")
     stream = stream_ingest_ops.landing_stream(
         spark, landing, "event_id long, user_id long"
     )
@@ -5066,7 +4817,6 @@ def q_ts_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-independent floor(x·1e6 + 0.5) BIGINT — multiply, add,
     floor: three IEEE ops both engines execute bit-identically on the
     bit-identical operand (SCALE.md round 9)."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events").filter(
         F.col("user_id") % TS_USER_MOD == 0
     )
@@ -5090,7 +4840,6 @@ def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan as expand + two-phase aggregate), unpivoted via stack().
     Profiled columns are BIGINT/string only — their string forms are
     engine-exact where double formatting is not."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return rel_ops.profile_columns(
         li,
@@ -5107,7 +4856,6 @@ def q_win_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-session AGGREGATE view is stream_session_windows). One hash
     exchange on user_id feeds all three window passes; integer
     epoch-second gap math; (ts, event_id) total order."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events")
     return rel_ops.sessionize(ev, gap_seconds=300)
 
@@ -5126,7 +4874,6 @@ def q_vec_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (standard retrieval; leaving it in makes pick 1 the query and every
     later score collapse to exactly 0.0 — sim-to-query IS the max pair
     sim — reducing the whole gate to an id-order tie-break)."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") != QUERY_VEC_ID
     )
@@ -5145,7 +4892,6 @@ def q_ts_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     through from storage untouched, so parity needs no rounding
     contract; the user slice (% TS_USER_MOD) keeps the collected grid
     proportionate."""
-    tune_session(spark)
     ev = tables.load(spark, sf_dir, "events").filter(
         F.col("user_id") % TS_USER_MOD == 0
     )
@@ -5167,7 +4913,6 @@ def q_join_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the same names, so row parity proves the segment filter lost no
     pair — the dedup_ngram proof shape. Output (id_a, id_b, dist),
     BIGINT-exact."""
-    tune_session(spark)
     cust = tables.load(spark, sf_dir, "customer")
     ent = (
         cust.filter(F.col("c_custkey") < FUZZY_MAX_KEY)
@@ -5217,7 +4962,6 @@ def q_text_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines; keep-boundary margin min|z| ≥ 6.2e-5 (measured,
     printed by the trainer). The model-based sibling of the heuristic
     text_quality row."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     golden = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "golden"
@@ -5243,7 +4987,6 @@ def q_vec_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd CTE chain with O_CLUSTER_KMEANS, so the replays cannot
     diverge). Complements vec_pq_topk's trained codebooks (VERDICT r4
     ask) with the trained coarse stage."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # train once per (process, sf_dir) — the join_bucketed/IVFPQ-layout
     # precedent: training is the pay-once ingest cost, steady-state
@@ -5273,7 +5016,6 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     so row parity proves the matmul enumeration lost no pair. One row
     per vector: (vec_id, cluster, component, keeper_id, is_keeper,
     cent_cos)."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     cents = _seed_vectors(spark, sf_dir)
     return dedup_ops.semdedup(
@@ -5292,7 +5034,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     containing side fully); the oracle is the brute-force shared-gram
     enumeration, so row parity proves the adapted filter lost no
     pair."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return dedup_ops.ngram_containment_pairs(docs, threshold=0.9, k=3)
 
@@ -5308,7 +5049,6 @@ def q_win_range_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     BETWEEN n PRECEDING/FOLLOWING. DECIMAL sums (a RANGE frame is a
     peer-SET sum, so exactness makes peer order unobservable); one hash
     exchange on the part key, frames bounded by per-part band density."""
-    tune_session(spark)
     li = tables.load(spark, sf_dir, "lineitem").filter(F.col("l_partkey") < 200)
     qty = F.col("l_quantity").cast("long")
     w = Window.partitionBy("l_partkey").orderBy(qty).rangeBetween(-5, 5)
@@ -5331,31 +5071,27 @@ def q_win_range_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
 # writes — VERDICT r4 #6: bench's steady-state pass now times the query
 # side alone) and the /tmp leak (ADVICE r4: the whole work dir is
 # atexit-reclaimed instead of lingering for the machine's uptime).
-_BUCKETED_CACHE: dict[str, tuple[str, str, str]] = {}
-
-
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
-    cached = _BUCKETED_CACHE.get(sf_dir)
-    if cached is not None and spark.catalog.tableExists(cached[0]):
-        return cached
-    import atexit
-    import shutil
-    import tempfile
+    def build(work: str) -> tuple[str, str, str]:
+        tag = os.path.basename(work).rsplit("_", 1)[-1].lower()
+        li_t, ord_t = f"li_b_{tag}", f"ord_b_{tag}"
+        rel_ops.write_bucketed(
+            tables.load(spark, sf_dir, "lineitem"), li_t, "l_orderkey",
+            os.path.join(work, "li"),
+        )
+        rel_ops.write_bucketed(
+            tables.load(spark, sf_dir, "orders"), ord_t, "o_orderkey",
+            os.path.join(work, "ord"),
+        )
+        return li_t, ord_t, work
 
-    work = tempfile.mkdtemp(prefix="spark_graft_bkt_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    tag = os.path.basename(work).rsplit("_", 1)[-1].lower()
-    li_t, ord_t = f"li_b_{tag}", f"ord_b_{tag}"
-    rel_ops.write_bucketed(
-        tables.load(spark, sf_dir, "lineitem"), li_t, "l_orderkey",
-        os.path.join(work, "li"),
-    )
-    rel_ops.write_bucketed(
-        tables.load(spark, sf_dir, "orders"), ord_t, "o_orderkey",
-        os.path.join(work, "ord"),
-    )
-    _BUCKETED_CACHE[sf_dir] = (li_t, ord_t, work)
-    return _BUCKETED_CACHE[sf_dir]
+    staged = _staged(sf_dir, "spark_graft_bkt_", build)
+    if not spark.catalog.tableExists(staged[0]):
+        # the catalog tables died with an earlier SparkContext: drop the
+        # stale dir so _staged rebuilds both tables
+        shutil.rmtree(staged[2], ignore_errors=True)
+        staged = _staged(sf_dir, "spark_graft_bkt_", build)
+    return staged
 
 
 def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5369,7 +5105,6 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pay-the-shuffle-once-at-ingest contract between tables that join
     repeatedly. Results are identical to the ad-hoc layout, so the
     oracle is a plain DuckDB join."""
-    tune_session(spark)
     li_t, ord_t, work = _bucketed_tables(spark, sf_dir)
     out = rel_ops.bucketed_revenue_join(spark, li_t, ord_t)
     # Materialize JVM-side: the per-order result is millions of rows
@@ -5390,7 +5125,6 @@ def q_vec_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     two rows share one oracle; this row gates the PRUNED path. Layout
     built once per process (``_ivf_layout``) so steady-state times the
     probe, not the staging write (VERDICT r5 #2)."""
-    tune_session(spark)
     work = _ivf_layout(spark, sf_dir, "ivf")
     cents = _seed_vectors(spark, sf_dir)
     out = ivf_ops.ivf_topk_pruned(
@@ -5410,7 +5144,6 @@ def q_vec_ivfsq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF family; the oracle replays assignment, probe ranking, bounds,
     codes, decode, and the ordered fold end to end. Layout built once
     per process (_ivf_layout), so steady state times the probe."""
-    tune_session(spark)
     work = _ivf_layout(spark, sf_dir, "ivfsq")
     cents = _seed_vectors(spark, sf_dir)
     return ann_ops.ivfsq_topk_pruned(
@@ -5430,7 +5163,6 @@ def q_vec_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     for); tests/test_ivf.py additionally pins row-for-row layout
     equality with a rebuild and the compaction path. Built once per
     process (``_ivf_layout``), so steady state times the probe."""
-    tune_session(spark)
     work = _ivf_layout(spark, sf_dir, "ivf_append")
     cents = _seed_vectors(spark, sf_dir)
     out = ivf_ops.ivf_topk_pruned(
@@ -5450,7 +5182,6 @@ def q_vec_ivf_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger firing is pytest-gated in tests/test_ivf.py). The layout
     side is one partial-combining count over the partition column —
     directory metadata, not vector payloads."""
-    tune_session(spark)
     work = _ivf_layout(spark, sf_dir, "ivf_append")
     emb = tables.load(spark, sf_dir, "embeddings")
     cents = _seed_vectors(spark, sf_dir)
@@ -5472,7 +5203,6 @@ def q_dedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage truncated per round). The oracle replays the same pair
     generation and resolves components with a recursive CTE (min label
     reachable over the symmetric edge set)."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     pairs = dedup_ops.minhash_pairs(docs)
     return dedup_ops.dedup_assign(docs, pairs)
@@ -5480,7 +5210,6 @@ def q_dedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document (partial-aggregable bit votes)."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return dedup_ops.simhash(docs)
 
@@ -5488,7 +5217,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs over LSH-bucket candidates
     (reuses the ANN planes; bucket self-join, never a cross product)."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     out = dedup_ops.embedding_pairs(emb, threshold=0.25)
     return out.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
@@ -5499,7 +5227,6 @@ def q_vec_ann_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank 1): bucket equi-join candidate generation — the big side is
     never cross-joined or shuffled; compare vec_knn_join which scores
     every pair."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
@@ -5522,7 +5249,6 @@ def q_upsert_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     models synthesized from nation, incoming batch = even-keyed nations
     (overlap → looked up) + region names (novel → inserted with
     max-id + row_number ids)."""
-    tune_session(spark)
     nation = tables.load(spark, sf_dir, "nation")
     region = tables.load(spark, sf_dir, "region")
     existing = nation.filter(F.col("n_nationkey") < 15).select(
@@ -5568,7 +5294,6 @@ def q_upsert_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows k<100 (one row per key, lowest-k wins = first occurrence, id=k);
     incoming batch k∈[50,450] overlaps existing AND contains intra-batch
     duplicate keys, exercising batch dedup + anti-join + id allocation."""
-    tune_session(spark)
     staged = _staged_sources(spark, sf_dir)
     w = Window.partitionBy("model_id", "author", "title", "year").orderBy(
         F.col("k").asc()
@@ -5588,7 +5313,6 @@ def q_ins_chunk_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vector + payload) rows gets a shared allocated chunk id, split into
     source_chunks / source_chunk_data projections, then re-joined — the
     same join shape the read path uses (database.py:304-305)."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     docs = tables.load(spark, sf_dir, "documents")
     existing = emb.filter(F.col("vec_id") < 100).select(
@@ -5651,7 +5375,6 @@ def _rag_hits(spark: SparkSession, sf_dir: str, threshold: float) -> DataFrame:
 
 def q_agg_context_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered string aggregation of top-5 excerpts (cli/generate_text.py:68-85)."""
-    tune_session(spark)
     hits = _rag_hits(spark, sf_dir, threshold=0.01)
     return rag.aggregated_excerpts(hits)
 
@@ -5659,7 +5382,6 @@ def q_agg_context_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rag_prompt_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full contextualized prompt (cli/generate_text.py:121-140) — the
     deterministic end of the RAG pipeline; generation is an external sink."""
-    tune_session(spark)
     agg = rag.aggregated_excerpts(_rag_hits(spark, sf_dir, threshold=0.01))
     return rag.contextualized_prompt(agg, RAG_PROMPT)
 
@@ -5667,7 +5389,6 @@ def q_rag_prompt_context(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rag_prompt_nocontext(spark: SparkSession, sf_dir: str) -> DataFrame:
     """No-context fallback branch (cli/generate_text.py:103-119): an
     impossible threshold retrieves nothing → disclaimer template."""
-    tune_session(spark)
     agg = rag.aggregated_excerpts(_rag_hits(spark, sf_dir, threshold=1.0 - 1e-12))
     return rag.contextualized_prompt(agg, RAG_PROMPT)
 
@@ -5679,7 +5400,6 @@ def q_rag_prompts(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches of cli/generate_text.py:100-142 — the contextualized prompt
     over real top-5 hits AND the empty-retrieval disclaimer — as two
     tagged byte-exact prompt rows."""
-    tune_session(spark)
     ctx = q_rag_prompt_context(spark, sf_dir)
     noctx = q_rag_prompt_nocontext(spark, sf_dir)
     return ctx.select(F.lit("context").alias("branch"), "prompt").unionAll(
@@ -5697,7 +5417,6 @@ def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     13-word gram with it are flagged. Broadcast eval-gram set, 8-byte
     xxhash64 join keys, one partial-combined per-doc count shuffle —
     see operators/curation.py scale notes."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     split = F.col("doc_id") % 41 == 0
     return curation_ops.decontaminate(docs.filter(~split), docs.filter(split))
@@ -5713,7 +5432,6 @@ def q_decon_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     negatives by construction (pinned vs the exact screen in
     tests/test_curation.py), false positives bounded by
     (1−e^{−kn/m})^k. Oracle replays the bloom bit-identically."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     split = F.col("doc_id") % 41 == 0
     return curation_ops.bloom_decontaminate(
@@ -5734,11 +5452,6 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``O_DECON_BLOOM`` — proving OR-of-epoch-blooms ≡ bloom-of-union end
     to end. The nightly-eval-suite-update production shape; state ≤
     BLOOM_M positions forever."""
-    import atexit
-    import shutil
-    import tempfile
-
-    tune_session(spark)
     _, landing = _stage_late_batches(
         "blsk",
         sf_dir,
@@ -5747,8 +5460,7 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         table="documents",
         order_by="doc_id",
     )
-    work = tempfile.mkdtemp(prefix="spark_graft_blsk_run_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("spark_graft_blsk_run_")
     stream = stream_ingest_ops.landing_stream(
         spark, landing, "doc_id long, text string"
     )
@@ -5775,11 +5487,6 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     the FINAL table must equal the one-shot batch sketch bit-for-bit —
     this row shares ``O_SKETCH_HLL``, proving max-of-epoch-registers ≡
     registers-of-union end to end. State ≤ m rows per group forever."""
-    import atexit
-    import shutil
-    import tempfile
-
-    tune_session(spark)
     _, landing = _stage_late_batches(
         "hllsk",
         sf_dir,
@@ -5788,8 +5495,7 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         table="lineitem",
         order_by="l_orderkey, l_linenumber",
     )
-    work = tempfile.mkdtemp(prefix="spark_graft_hllsk_run_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("spark_graft_hllsk_run_")
     stream = stream_ingest_ops.landing_stream(
         spark, landing, "l_orderkey long, l_returnflag string"
     )
@@ -5832,7 +5538,6 @@ def q_text_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape — two ≤ B-row bucket tables broadcast onto the exploded
     stream, ordered per-doc fold, corpus never shuffled except the
     final per-doc aggregate."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     w = curation_ops.dsir_weights(
         docs,
@@ -5859,11 +5564,6 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     slices), so they commute and the drained table must equal the
     one-shot batch apply bit-for-bit — this row shares
     ``O_SCD2_APPLY``."""
-    import atexit
-    import shutil
-    import tempfile
-
-    tune_session(spark)
     change_select = (
         "CASE WHEN c_custkey % 7 = 2 THEN c_custkey + 1000000"
         " ELSE c_custkey END AS c_custkey, "
@@ -5880,8 +5580,7 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         table="customer",
         order_by="1",
     )
-    work = tempfile.mkdtemp(prefix="spark_graft_scd2sk_run_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("spark_graft_scd2sk_run_")
     cust = tables.load(spark, sf_dir, "customer")
     seed = cust.select(
         "c_custkey",
@@ -5940,11 +5639,6 @@ def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     row — this row shares ``O_TS_ANOMALY``, proving
     state-across-epochs ≡ batch window end to end. State is 3×20 longs
     per user forever (key-bounded, never event-volume)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    tune_session(spark)
     weeks = [
         "ts < TIMESTAMP '2024-01-11'",
         "ts >= TIMESTAMP '2024-01-11' AND ts < TIMESTAMP '2024-01-21'",
@@ -5957,14 +5651,10 @@ def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         select="event_id, ts, user_id, value",
         order_by="ts, event_id",
     )
-    work = tempfile.mkdtemp(prefix="spark_graft_anomsk_run_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("spark_graft_anomsk_run_")
     return stream_stateful_ops.run_anomaly_stream(
         spark, landing, checkpoint_dir=os.path.join(work, "ckpt")
     )
-
-
-_TTRAVEL_CACHE: dict[str, str] = {}
 
 
 def q_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5978,20 +5668,13 @@ def q_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact membership from the batch definitions — so both the
     visibility rule (a doc appears in every version from its commit
     onward) and the compaction no-op contract are driver-gated."""
-    import atexit
-    import shutil
-    import tempfile
-
-    tune_session(spark)
     ddl = "doc_id long, n_chars long"
+
     # build the version history once per (process, sf_dir) — steady
     # state times the AS-OF read-back, not the staging commits (the
     # _ivf_layout precedent)
-    root = _TTRAVEL_CACHE.get(sf_dir)
-    if root is None or not os.path.isdir(root):
+    def build(work: str) -> str:
         docs = tables.load(spark, sf_dir, "documents")
-        work = tempfile.mkdtemp(prefix="spark_graft_ttravel_")
-        atexit.register(shutil.rmtree, work, ignore_errors=True)
         root = os.path.join(work, "table")
         for k in range(3):
             batch = docs.filter(F.col("doc_id") % 3 == k).select(
@@ -6002,7 +5685,9 @@ def q_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 existing.unionByName(batch), root
             )
         stream_ingest_ops.compact_table(spark, root, ddl)
-        _TTRAVEL_CACHE[sf_dir] = root
+        return root
+
+    root = _staged(sf_dir, "spark_graft_ttravel_", build)
     parts = []
     for i, v in enumerate(stream_ingest_ops.list_versions(root), start=1):
         parts.append(
@@ -6020,7 +5705,6 @@ def q_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 top-15 for a fixed bag-of-terms query — the sparse
     complement to the dense vec_* retrieval family. Two scans, zero
     joins on the corpus side, TakeOrderedAndProject tail."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return curation_ops.bm25_topk(
         docs, curation_ops.BM25_TERMS, k=curation_ops.BM25_TOPK
@@ -6042,7 +5726,6 @@ def q_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     docs = tables.load(spark, sf_dir, "documents")
     dense_hits = (
@@ -6093,7 +5776,6 @@ def q_rag_hybrid_prompts(spark: SparkSession, sf_dir: str) -> DataFrame:
     for byte."""
     from pyspark.sql import Window
 
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     docs = tables.load(spark, sf_dir, "documents")
     qvec = _query_vec(spark, sf_dir)
@@ -6175,7 +5857,6 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic domain-mixing downsample of the documents corpus —
     salted md5 ticket per doc, per-source per-mille rates. Scan-fused
     filter, zero shuffles; rerunnable and append-stable."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return curation_ops.sample_stratified(
         docs, SAMPLE_RATES, default_per_mille=SAMPLE_DEFAULT
@@ -6197,7 +5878,6 @@ def q_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     T·w_d·1000 — over the same salted md5 ticket as the stratified row.
     Two-pass: broadcast domain counts back onto the scan, then a
     scan-fused filter; the corpus itself never shuffles."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     out = curation_ops.sample_mixture(
         docs, MIXTURE_WEIGHTS, MIXTURE_TARGET, domain_col="lang"
@@ -6216,7 +5896,6 @@ def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold, thresholds floor to integers, and the keep decision is the
     pure-integer salted-ticket test — exact at the boundary. Oracle
     replays counts → ordered-fold denominator → thresholds → tickets."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     out = curation_ops.sample_temperature(docs, target_total=400)
     return out.select("doc_id", "lang", "source", "ticket")
@@ -6230,7 +5909,6 @@ def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-document mean an ORDERED position fold so the doubles are
     bit-identical across engines). The only corpus-sized exchange is
     the per-document aggregation."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return curation_ops.bigram_logprob(docs)
 
@@ -6260,7 +5938,6 @@ def q_text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining unpartitioned window runs over the per-partition offset
     rows (≤ spark.sql.shuffle.partitions of them), never the corpus;
     tests/test_plans.py pins no ntile-window plan survives."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     scored = curation_ops.bigram_logprob(docs)
     # Orderable struct: asc struct order == (avg_logp DESC, doc_id ASC)
@@ -6310,7 +5987,6 @@ def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     texts (the corpus has them — dedup_exact's reason to exist) drop
     too, identically on both engines. 60-bit md5-bridge line keys, no
     floats anywhere."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     aug = F.concat(
         F.col("text"),
@@ -6334,7 +6010,6 @@ def q_text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     phone number (which the masks must hit) — the oracle builds the
     identical augmentation. Pure scan-fused Catalyst projection: zero
     shuffles, zero Python (operators/curation.py scrub_text)."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     aug = F.concat(
         F.col("text"),
@@ -6354,7 +6029,6 @@ def q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     length screen → decontamination → stratified sample → sequence
     packing (operators/curation.py curate_corpus). The end-to-end
     'training-data job' a user of the engine actually submits."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return curation_ops.curate_corpus(
         docs, SAMPLE_RATES, default_per_mille=SAMPLE_DEFAULT,
@@ -6376,7 +6050,6 @@ def q_curate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched only for hash projection and candidate-hit verification.
     The oracle replays all four verdicts (full pair set restricted to
     non-eval batch-touching pairs; bit-identical bloom)."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     non_eval = F.col("doc_id") % 41 != 0
     is_batch = F.col("doc_id") % DEDUP_BATCH_MOD == 0
@@ -6405,11 +6078,6 @@ def q_stream_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≡ the one-shot batch audit bit for bit (the stream_bloom ≡
     decon_bloom recipe, one level up the stack). Epoch idempotence
     (retry changes nothing) is pinned in tests/test_streaming.py."""
-    import atexit
-    import shutil
-    import tempfile
-
-    tune_session(spark)
     _, landing = _stage_late_batches(
         "crsk",
         sf_dir,
@@ -6422,8 +6090,7 @@ def q_stream_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         table="documents",
         order_by="doc_id",
     )
-    work = tempfile.mkdtemp(prefix="spark_graft_crsk_run_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("spark_graft_crsk_run_")
     stream = stream_ingest_ops.landing_stream(
         spark, landing, "doc_id long, text string"
     )
@@ -6455,7 +6122,6 @@ def q_curate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Gopher/RefinedWeb-style fuzzy-dedup training-data job. The
     oracle composes the full minhash replay, a recursive-CTE CC
     resolution, and the screen/sample/pack cascade in one statement."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return curation_ops.curate_corpus_fuzzy(
         docs, SAMPLE_RATES, default_per_mille=SAMPLE_DEFAULT,
@@ -6467,7 +6133,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget sequence packing over the documents corpus: stratum
     prefix-sum → pack assignment (chunk-then-concat contract). One
     stratum exchange + running-sum window."""
-    tune_session(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return curation_ops.pack_sequences(docs, budget=PACK_BUDGET)
 
@@ -6493,7 +6158,6 @@ def q_vec_f16_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≈ 1 (pytest-gated ≥ 0.9) — the storage cut you take BEFORE lossy
     quantization. Plan: scan → scan-fused transform + fold →
     TakeOrderedAndProject; zero shuffle, zero training job."""
-    tune_session(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     return ann_ops.f16_topk(emb, _query_vec(spark, sf_dir), top_k=10)
 
@@ -6516,7 +6180,6 @@ def q_vec_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the corpus. The oracle replays order, minimal prefix, and
     filtered re-rank end to end; recall under the filter is
     pytest-gated against the exact filtered scan."""
-    tune_session(spark)
     work = _ivf_layout(spark, sf_dir, "ivf_filtered")
     cents = _seed_vectors(spark, sf_dir)
     return ivf_ops.ivf_topk_filtered(
@@ -6784,7 +6447,13 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
 
 
 def queries() -> dict[str, QueryFn]:
-    return {k: fn for k, (fn, _sql) in REGISTRY.items()}
+    """The driver's surface: each function first tunes the session it
+    is handed (``session.tune_session``), since the driver builds that
+    session itself."""
+    return {
+        k: lambda spark, sf_dir, fn=fn: fn(tune_session(spark), sf_dir)
+        for k, (fn, _sql) in REGISTRY.items()
+    }
 
 
 def oracle_sql() -> dict[str, str]:

@@ -13,6 +13,45 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Runtime-settable confs the engine's results and plans depend on. The
+# builder applies them to the sessions it builds; ``tune_session`` applies
+# them to a session the caller built (the driver's).
+_RUNTIME_CONFS: list[tuple[str, str]] = [
+    # deterministic timestamp semantics regardless of host
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    # Round 13 (guide §3.1/§9): allow shuffled-hash join when its
+    # size conditions are met instead of always sort-merge — skips
+    # both sides' sorts on the per-round joins of the iterative
+    # operators (measured: pagerank plan 10 SMJ → 10 SHJ, no sorts).
+    # Scale posture: SHJ is chosen only when the planner's size
+    # conditions hold (build side fits per-partition); sort-merge
+    # remains the fallback for same-size giant joins.
+    ("spark.sql.join.preferSortMergeJoin", "false"),
+    # Round 13: the engine's streaming surface is short-lived
+    # availableNow drains; the default 60 s state-store maintenance
+    # cadence snapshots dozens of accumulated (already-terminated)
+    # providers and measurably taxes later micro-batches (A/B:
+    # aged-session no-op drain 2.3 s @60s vs 1.0 s @600s). A continuous
+    # production stream picks the cadence for its recovery-time target.
+    ("spark.sql.streaming.stateStore.maintenanceInterval", "600s"),
+    # The testdata's events.ts reads as TIMESTAMP (micros), but outside
+    # parquet may carry TIMESTAMP(NANOS), which a plain scan rejects:
+    # read nanos as LongType session-wide (tables.load truncates to
+    # micros explicitly).
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+]
+# Scan-split override for scale experiments: a single-file local table
+# in the tens of MB sits below the default 128 MB split size, so one
+# task scans it regardless of cores — a layout no real multi-file lake
+# has. SCALE.md sets this to a few MB when benchmarking replicated
+# data; production keeps the default (files there are ~1 GB and split
+# 8 ways each). Row groups must be comparably small or splits can't
+# bisect the file (parquet assigns a row group to one split).
+if _max_split := os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES"):
+    _RUNTIME_CONFS.append(("spark.sql.files.maxPartitionBytes", _max_split))
+
 
 def get_session(app_name: str = "demo_pgvector_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the SparkSession used by tests and bench runs."""
@@ -22,28 +61,7 @@ def get_session(app_name: str = "demo_pgvector_spark", cpus: int | None = None) 
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Round 13 (guide §3.1/§9): allow shuffled-hash join when its
-        # size conditions are met instead of always sort-merge — skips
-        # both sides' sorts on the per-round joins of the iterative
-        # operators (measured: pagerank plan 10 SMJ → 10 SHJ, no sorts).
-        # Scale posture: SHJ is chosen only when the planner's size
-        # conditions hold (build side fits per-partition); sort-merge
-        # remains the fallback for same-size giant joins.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        # Round 13: the engine's streaming surface is short-lived
-        # availableNow drains; the default 60 s state-store maintenance
-        # cadence snapshots dozens of accumulated (already-terminated)
-        # providers and measurably taxes later micro-batches (A/B:
-        # aged-session no-op drain 2.3 s @60s vs 1.0 s @600s). For a
-        # continuous production stream pick the cadence for its
-        # recovery-time target via SPARK_GRAFT_STATE_MAINT_INTERVAL.
-        .config(
-            "spark.sql.streaming.stateStore.maintenanceInterval",
-            os.environ.get("SPARK_GRAFT_STATE_MAINT_INTERVAL", "600s"),
-        )
         # Round 14 (guide §5 caching/driver): the engine's iterative and
         # streaming operators localCheckpoint intermediates whose blocks
         # are reclaimed by ContextCleaner only after a JVM GC enqueues
@@ -55,56 +73,24 @@ def get_session(app_name: str = "demo_pgvector_spark", cpus: int | None = None) 
         # Measured same-session: an explicit System.gc() after ~30 keys
         # took graph_hyperball from 10.2 to 8.7 s. Static conf, so it is
         # set here (builder) and cannot be applied by tune_session.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "5min"),
-        )
+        .config("spark.cleaner.periodicGC.interval", "5min")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # testdata events.ts is TIMESTAMP(NANOS): session-wide decision to
-        # read nanos as LongType (loaders truncate to micros explicitly).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    for k, v in _RUNTIME_CONFS:
+        builder = builder.config(k, v)
     return builder.getOrCreate()
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an externally provided session.
+    """Apply ``_RUNTIME_CONFS`` to an externally provided session.
 
     The driver harness constructs its own SparkSession and hands it to
-    ``queries()`` callables; these confs are all runtime-settable and make
-    results deterministic (UTC timestamps) and fast (AQE) without needing
-    to own the builder.
+    ``queries()`` callables, which tune it here; every conf in the table
+    is runtime-settable, so no builder ownership is needed.
     """
-    confs = [
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        # guide §3.1/§9 — see get_session; runtime-settable, so the
-        # driver-owned session gets the same join menu
-        ("spark.sql.join.preferSortMergeJoin", "false"),
-        # see get_session — short-lived drains don't need 60 s snapshots
-        (
-            "spark.sql.streaming.stateStore.maintenanceInterval",
-            os.environ.get("SPARK_GRAFT_STATE_MAINT_INTERVAL", "600s"),
-        ),
-        # nanos-timestamp parquet (events.ts) reads as LongType session-wide;
-        # see tables.load for the explicit truncation to micros.
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-    ]
-    # Scan-split override for scale experiments: a single-file local table
-    # in the tens of MB sits below the default 128 MB split size, so one
-    # task scans it regardless of cores — a layout no real multi-file lake
-    # has. SCALE.md sets this to a few MB when benchmarking replicated
-    # data; production keeps the default (files there are ~1 GB and split
-    # 8 ways each). Row groups must be comparably small or splits can't
-    # bisect the file (parquet assigns a row group to one split).
-    mpb = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-    if mpb:
-        confs.append(("spark.sql.files.maxPartitionBytes", mpb))
-    for k, v in confs:
+    for k, v in _RUNTIME_CONFS:
         try:
             spark.conf.set(k, v)
         except Exception:

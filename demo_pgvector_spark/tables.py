@@ -78,9 +78,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ``events.ts`` is normalized to a session-timezone TIMESTAMP whatever
     the parquet physical type: TIMESTAMP(NANOS) data arrives as raw nanos
-    LongType (the ``spark.sql.legacy.parquet.nanosAsLong`` conf is set once
-    at session construction — ``session.get_session`` /
-    ``session.tune_session`` — NOT mutated here) and is truncated to micros
+    LongType (the ``spark.sql.legacy.parquet.nanosAsLong`` conf is in
+    ``session._RUNTIME_CONFS`` — NOT mutated here) and is truncated to micros
     (same truncation DuckDB applies casting TIMESTAMP_NS → TIMESTAMP);
     TIMESTAMP_MICROS(isAdjustedToUTC=0) data arrives as TIMESTAMP_NTZ and is
     cast to TIMESTAMP — the session timezone is pinned UTC, so the instant
@@ -97,10 +96,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TESTDATA_TABLES}
 
 
 SUPPORTED_FORMATS = ("parquet", "orc", "json", "csv")
@@ -132,9 +127,3 @@ def read_table(spark: SparkSession, path: str, fmt: str = "parquet", schema=None
     if fmt == "csv":
         r = r.option("header", "true")
     return r.load(path)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all testdata tables as temp views for spark.sql queries."""
-    for name in TESTDATA_TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

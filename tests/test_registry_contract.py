@@ -12,13 +12,22 @@ the driver, so they are pinned here:
    registry entries (r1: 19/19, r2: 50 of 74). The 50-slot head must
    contain every SURVEY §2 item and every LLM-pipeline pillar operator;
    a key appended carelessly could silently push one past the window.
+
+The driver also runs ``queries()`` on a session it built itself, so the
+session tuning at that boundary and the per-process artifact staging
+are pinned here too.
 """
 
 from __future__ import annotations
 
+import ast
+import os
+import shutil
+
 from pyspark.sql.types import ArrayType, MapType, StructType
 
 from demo_pgvector_spark import registry
+from demo_pgvector_spark.session import _RUNTIME_CONFS
 
 SF = "/root/testdata/sf0.001"
 
@@ -80,3 +89,63 @@ def test_every_key_has_an_oracle():
     # since round 3 every key (including cluster_kmeans) carries SQL.
     rows_only = [k for k, (_fn, sql) in registry.REGISTRY.items() if sql is None]
     assert rows_only == [], rows_only
+
+
+def test_queries_tune_a_driver_owned_session(spark):
+    """A session the engine did not build (own runtime conf, shared
+    context) is brought to the conf table by ``queries()``, and the
+    tuning stays on that session."""
+    keys = ("spark.sql.session.timeZone", "spark.sql.adaptive.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
+    s2 = spark.newSession()
+    s2.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    registry.queries()["tpch_q6"](s2, SF).collect()
+    table = dict(_RUNTIME_CONFS)
+    assert {k: s2.conf.get(k) for k in keys} == {k: table[k] for k in keys}
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+
+def _top_level_owners(is_target) -> set[str]:
+    with open(registry.__file__, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    return {
+        getattr(node, "name", None)
+        for node in tree.body
+        if any(is_target(n) for n in ast.walk(node))
+    }
+
+
+def test_registry_tunes_and_registers_cleanup_in_one_place():
+    """``tune_session`` runs only at the ``queries()`` boundary and
+    ``atexit.register`` only inside ``_work_dir``: no query function
+    owns either policy."""
+    tunes = _top_level_owners(
+        lambda n: isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Name)
+        and n.func.id == "tune_session"
+    )
+    cleanups = _top_level_owners(
+        lambda n: isinstance(n, ast.Attribute)
+        and n.attr == "register"
+        and isinstance(n.value, ast.Name)
+        and n.value.id == "atexit"
+    )
+    assert tunes == {"queries"}
+    assert cleanups == {"_work_dir"}
+
+
+def test_staged_builds_once_and_rebuilds_when_its_dir_is_gone():
+    calls = []
+
+    def build(work):
+        calls.append(work)
+        return work
+
+    first = registry._staged("k", "spark_graft_staged_test_", build)
+    assert registry._staged("k", "spark_graft_staged_test_", build) == first
+    assert calls == [first]
+    shutil.rmtree(first)
+    second = registry._staged("k", "spark_graft_staged_test_", build)
+    assert second != first and os.path.isdir(second)
+    assert calls == [first, second]
