@@ -220,8 +220,9 @@ def curate(
     )
     out.write.mode("overwrite").parquet(out_path)
     # serve the WRITTEN rows — returning the unexecuted cascade would
-    # recompute the whole pipeline on every downstream action
-    return spark.read.parquet(out_path)
+    # recompute the whole pipeline on every downstream action; read with
+    # the schema just written, so no inference job
+    return spark.read.schema(out.schema).parquet(out_path)
 
 
 def mix(
@@ -246,7 +247,7 @@ def mix(
         docs, weights, target_total, salt=salt, domain_col=domain_col
     )
     out.write.mode("overwrite").parquet(out_path)
-    return spark.read.parquet(out_path)
+    return spark.read.schema(out.schema).parquet(out_path)
 
 
 def maintain(
@@ -311,7 +312,7 @@ def quality_filter(
     else:
         out = docs.join(scored.select("doc_id", "score", "keep"), "doc_id")
     out.write.mode("overwrite").parquet(out_path)
-    return spark.read.parquet(out_path)
+    return spark.read.schema(out.schema).parquet(out_path)
 
 
 def semdedup(
@@ -341,4 +342,4 @@ def semdedup(
         "vec_id",
     )
     out.write.mode("overwrite").parquet(out_path)
-    return spark.read.parquet(out_path)
+    return spark.read.schema(out.schema).parquet(out_path)

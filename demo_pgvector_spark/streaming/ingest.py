@@ -28,15 +28,20 @@ previous version and write of the next never touch the same files.
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 from collections.abc import Callable, Mapping, Sequence
 
+import pyarrow.parquet as papq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from demo_pgvector_spark.operators import write as write_ops
 from demo_pgvector_spark.session import scoped_conf
 
 _POINTER = "_CURRENT"
+# the footer key where Spark's parquet writer stores the row schema as JSON
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def current_version(root: str) -> str | None:
@@ -49,13 +54,54 @@ def current_version(root: str) -> str | None:
         return None
 
 
-def read_table(spark: SparkSession, root: str, schema_ddl: str) -> DataFrame:
+def _read_version(
+    spark: SparkSession, version_dir: str, schema_ddl: str | StructType
+) -> DataFrame:
+    """``version_dir`` read with the declared schema once one data file's
+    footer agrees with it (see ``read_table``)."""
+    df = spark.read.schema(schema_ddl).parquet(version_dir)
+    files = sorted(
+        n for n in os.listdir(version_dir)
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    )
+    if not files:
+        return df
+    footer = papq.read_schema(os.path.join(version_dir, files[0])).metadata
+    written = StructType.fromJson(json.loads(footer[_SPARK_SCHEMA_KEY]))
+
+    def columns(schema: StructType) -> list[tuple[str, str]]:
+        return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+    if columns(written) != columns(df.schema):
+        raise ValueError(
+            f"{version_dir} holds {written.simpleString()}, "
+            f"read declared {df.schema.simpleString()}"
+        )
+    return df
+
+
+def read_table(
+    spark: SparkSession, root: str, schema_ddl: str | StructType
+) -> DataFrame:
     """The committed table state (empty frame with the declared schema
-    before the first commit)."""
+    before the first commit).
+
+    The read uses the declared schema, so planning it launches no Spark
+    job (an undeclared read runs a one-task schema-inference job per
+    table). A declared read would turn a column the files lack into
+    silent NULLs, so the driver first reads one data file's footer
+    (pyarrow, no Spark job): the schema Spark's writer stored there must
+    match the declaration column for column — same names, same order,
+    same ``simpleString`` types — else ``ValueError`` with the path and
+    both schemas. Nullability is not compared: Spark reads file sources
+    as nullable whatever the declaration says, and a written
+    ``array<float>`` keeps ``containsNull=true`` where
+    ``tables.SOURCE_CHUNKS_SCHEMA`` declares false. A version directory
+    with no data file has nothing to check."""
     v = current_version(root)
     if v is None:
         return spark.createDataFrame([], schema_ddl)
-    return spark.read.parquet(os.path.join(root, v))
+    return _read_version(spark, os.path.join(root, v), schema_ddl)
 
 
 def commit_table(
@@ -95,7 +141,12 @@ def commit_table(
     bytes a newer version still references. Before the first commit
     ``delta`` degrades to a whole write (the delta IS the table).
     The trade is the small-files accretion every add-file log pays;
-    ``compact_table`` is the standing OPTIMIZE pairing."""
+    ``compact_table`` is the standing OPTIMIZE pairing.
+
+    Durability: the pointer's temp file is fsynced before the
+    ``os.replace`` and the table root directory after it, so once this
+    returns a power loss can neither leave an empty pointer nor roll the
+    rename back to the previous version."""
     import shutil
 
     v = current_version(root)
@@ -116,7 +167,14 @@ def commit_table(
     tmp = os.path.join(root, f".{_POINTER}.tmp")
     with open(tmp, "w", encoding="utf-8") as fh:
         fh.write(nxt)
+        fh.flush()
+        os.fsync(fh.fileno())
     os.replace(tmp, os.path.join(root, _POINTER))
+    root_fd = os.open(root, os.O_RDONLY)
+    try:
+        os.fsync(root_fd)
+    finally:
+        os.close(root_fd)
     return nxt
 
 
@@ -314,19 +372,21 @@ def vacuum_versions(root: str, keep: int = 2) -> list[str]:
 
 
 def read_table_at(
-    spark: SparkSession, root: str, schema_ddl: str, version: str
+    spark: SparkSession, root: str, schema_ddl: str | StructType, version: str
 ) -> DataFrame:
     """Time-travel read: the table as of a specific committed version
     (any directory still retained by ``vacuum_versions``). Versions are
     immutable once the pointer has moved past them, so this is a
     consistent snapshot — the rollback/debug/reproducibility half of
-    the versioned-table contract (Delta/Iceberg ``VERSION AS OF``)."""
+    the versioned-table contract (Delta/Iceberg ``VERSION AS OF``).
+    Read like ``read_table``: with the declared schema behind the same
+    footer check, so planning it launches no Spark job."""
     if version not in list_versions(root):
         raise ValueError(
             f"version {version!r} not present under {root}; "
             f"have {list_versions(root)}"
         )
-    return spark.read.parquet(os.path.join(root, version))
+    return _read_version(spark, os.path.join(root, version), schema_ddl)
 
 
 def compact_table(

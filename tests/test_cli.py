@@ -18,11 +18,12 @@ from demo_pgvector_spark import cli
 
 EXAMPLES = "/root/reference/examples"
 
-pytestmark = pytest.mark.skipif(
+needs_examples = pytest.mark.skipif(
     not os.path.isdir(EXAMPLES), reason="reference examples not present"
 )
 
 
+@needs_examples
 def test_import_search_generate_roundtrip(spark, tmp_path):
     wh = str(tmp_path / "warehouse")
     books = sorted(glob.glob(f"{EXAMPLES}/*.epub"))
@@ -173,6 +174,7 @@ def test_mix_verb_rebalances_domains(spark, tmp_path):
     assert sorted(r.doc_id for r in again.collect()) == first_ids
 
 
+@needs_examples
 def test_maintain_verb_compacts_and_vacuums(spark, tmp_path):
     """After two imports the warehouse holds multiple versions per
     table; maintain compacts each to one file and prunes history,

@@ -363,3 +363,122 @@ def test_streaming_package_has_one_drain():
             ):
                 owners.add((path.name, getattr(node, "name", None)))
     assert owners == {("ingest.py", "drain"), ("windows.py", "run_to_memory")}
+
+
+def _jobs(spark, fn):
+    """(result, Spark jobs ``fn`` launched): the scheduler's next job id
+    counts every job, whichever thread launches it."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    out = fn()
+    return out, sched.nextJobId() - before
+
+
+def test_versioned_reads_plan_without_a_job(spark, tmp_path):
+    """Reading the warehouse launches no Spark job (declared schemas, no
+    inference), so a ``generate_text`` request costs only its retrieval
+    jobs; a time-travel read of an older version plans without a job too."""
+    from demo_pgvector_spark import cli, tables
+
+    wh = str(tmp_path / "wh")
+    # ~2k words a doc: more chunks than generate_text's top_k, the serving
+    # shape (with fewer hits than top_k the plan runs one job less)
+    words = "lake engines plan declared reads without inference jobs "
+    first = tmp_path / "first.txt"
+    first.write_text(words * 300, encoding="utf-8")
+    (tmp_path / "first.txt.meta.yml").write_text(
+        "author: A. Writer\ntitle: Declared Reads\ntext_type: book\n"
+        "genre: fiction\npublication_date: \"1999-01-01\"\n",
+        encoding="utf-8",
+    )
+    second = tmp_path / "second.txt"
+    second.write_text("vectors cluster near their centroids " * 400, encoding="utf-8")
+    cli.import_doc(spark, wh, [str(first)])
+    cli.import_doc(spark, wh, [str(second)])
+
+    state, jobs = _jobs(spark, lambda: cli.load_state(spark, wh))
+    assert jobs == 0
+    assert state["sources"].count() == 2
+    prompt, jobs = _jobs(spark, lambda: cli.generate_text(spark, wh, words))
+    assert jobs == 3
+    assert 'Excerpt from "Declared Reads"' in prompt
+
+    root = os.path.join(wh, "sources")
+    older = ingest.list_versions(root)[0]
+    assert older != ingest.current_version(root)
+    old, jobs = _jobs(
+        spark,
+        lambda: ingest.read_table_at(spark, root, tables.SOURCES_SCHEMA, older),
+    )
+    assert jobs == 0
+    assert old.count() == 1
+
+
+@pytest.mark.parametrize(
+    "ddl, named",
+    [("id long, label string", "label"), ("id long, name int", "name:int")],
+)
+def test_read_rejects_declaration_the_files_do_not_match(spark, tmp_path, ddl, named):
+    """A declaration that disagrees with the written files in a column
+    name or type fails loudly at read time instead of reading NULLs."""
+    root = str(tmp_path / "t")
+    v1 = ingest.commit_table(spark.createDataFrame([(1, "a")], SCHEMA), root)
+    with pytest.raises(ValueError, match=named):
+        ingest.read_table(spark, root, ddl)
+    with pytest.raises(ValueError, match=named):
+        ingest.read_table_at(spark, root, ddl, v1)
+
+
+def test_read_ignores_nullability(spark, tmp_path):
+    """A declaration that differs from the files only in nullability
+    reads fine: the ``chunks.embedding`` case, written
+    ``containsNull=true`` and declared false."""
+    from pyspark.sql import types as T
+
+    root = str(tmp_path / "vecs")
+    ingest.commit_table(
+        spark.createDataFrame([(1, [0.5, None])], "id long, v array<float>"), root
+    )
+    declared = T.StructType(
+        [
+            T.StructField("id", T.LongType(), False),
+            T.StructField("v", T.ArrayType(T.FloatType(), False), True),
+        ]
+    )
+    got = ingest.read_table(spark, root, declared).collect()
+    assert [tuple(r) for r in got] == [(1, [0.5, None])]
+
+
+def test_commit_fsyncs_pointer_then_root(tmp_path, monkeypatch):
+    """``commit_table`` makes its pointer swap durable: the temp pointer
+    file is fsynced before the rename, the table root directory after."""
+    import stat
+
+    class _Frame:
+        """Stands in for a DataFrame: the write makes the version dir."""
+
+        @property
+        def write(self):
+            return self
+
+        def mode(self, _mode):
+            return self
+
+        def parquet(self, path):
+            os.makedirs(path, exist_ok=True)
+
+    real_fsync = os.fsync
+    synced = []
+
+    def recording_fsync(fd):
+        kind = "dir" if stat.S_ISDIR(os.fstat(fd).st_mode) else "file"
+        synced.append((kind, os.path.exists(os.path.join(root, "_CURRENT"))))
+        real_fsync(fd)
+
+    root = str(tmp_path / "t")
+    monkeypatch.setattr(os, "fsync", recording_fsync)
+    assert ingest.commit_table(_Frame(), root) == "v000001"
+    # the file is synced while the pointer does not exist yet (before the
+    # rename), the directory once it does
+    assert synced == [("file", False), ("dir", True)]
+    assert ingest.current_version(root) == "v000001"
