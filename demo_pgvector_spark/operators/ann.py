@@ -53,6 +53,7 @@ from demo_pgvector_spark.functions.vector import (
     query_vector_literal,
 )
 from demo_pgvector_spark.operators.similarity import topk_per_group
+from demo_pgvector_spark.tables import read_partitions, written_schema
 
 DEFAULT_BITS = 8
 DEFAULT_TABLES = 4
@@ -531,7 +532,7 @@ def ivfpq_topk(
     """
     from demo_pgvector_spark.operators import ivf as ivf_ops
 
-    probe_ids = ivf_ops._rank_centroids(spark, cents, query, nprobe)
+    probe_ids = ivf_ops._rank_centroids(cents, query, nprobe)
     assigned = ivf_ops.assign_clusters_auto(vectors, cents, id_col, vec_col)
     cand = assigned.filter(F.col("cluster").isin(probe_ids)).select(
         id_col, vec_col
@@ -763,8 +764,10 @@ def ivfpq_topk_pruned(
 
     m = len(codebooks)
     qtables = _adc_qtables(codebooks, query)
-    probe_ids = _rank_centroids(spark, cents, query, nprobe)
-    df = spark.read.parquet(path).filter(F.col("cluster").isin(probe_ids))
+    probe_ids = _rank_centroids(cents, query, nprobe)
+    df = read_partitions(spark, path, "cluster", probe_ids).filter(
+        F.col("cluster").isin(probe_ids)
+    )
     adc_terms = []
     for s in range(m):
         qlits = ", ".join(f"{v!r}D" for v in qtables[s])
@@ -950,10 +953,14 @@ def ivfsq_topk_pruned(
     compounding win this composition exists for."""
     from demo_pgvector_spark.operators import ivf as ivf_ops
 
-    probe_ids = ivf_ops._rank_centroids(spark, cents, qvec, nprobe)
-    bounds = spark.read.parquet(path + "_bounds")
+    probe_ids = ivf_ops._rank_centroids(cents, qvec, nprobe)
+    bounds = spark.read.schema(written_schema(path + "_bounds")).parquet(
+        path + "_bounds"
+    )
     q_lit = F.array(*[F.lit(float(x)) for x in qvec])
-    cand = spark.read.parquet(path).filter(F.col("cluster").isin(probe_ids))
+    cand = read_partitions(spark, path, "cluster", probe_ids).filter(
+        F.col("cluster").isin(probe_ids)
+    )
     scored = (
         cand.crossJoin(F.broadcast(bounds))
         .withColumn("_query", q_lit)
@@ -1480,7 +1487,7 @@ def _sw_pruned_scores(
     q = query_vector_literal(qvec)
     bs = sorted({int(i) % int(nb) for i in ids})
     return (
-        spark.read.parquet(os.path.join(root, "vectors"))
+        read_partitions(spark, os.path.join(root, "vectors"), "bucket", bs)
         .filter(F.col("bucket").isin(bs))
         .filter(F.col(id_col).isin([int(i) for i in ids]))
         .select(
@@ -1514,8 +1521,7 @@ def smallworld_topk_pruned(
     and its neighbor expansion, ~100 values), turns them into literal
     partition/row-group predicates, and launches the next pruned
     lookup. That is the graph-traversal serving pattern itself (a
-    pointer chase needs the pointer values), the same accepted class as
-    the IVF probes' k-row centroid collects — no data row ever reaches
+    pointer chase needs the pointer values) — no data row ever reaches
     the driver, and the ranking that DECIDES the walk stays in Spark
     (orderBy + limit over the pruned lookup), so float ordering is
     engine-side and replayable. Plans pinned in tests/test_ann.py:
@@ -1531,15 +1537,13 @@ def smallworld_topk_pruned(
     (O_VEC_HNSW_TOPK)."""
     import os
 
+    def read(name: str) -> DataFrame:
+        path = os.path.join(root, name)
+        return spark.read.schema(written_schema(path)).parquet(path)
+
     if nb is None:
-        nb = int(
-            spark.read.parquet(os.path.join(root, "meta"))
-            .collect()[0]["nb"]
-        )
-    rep_ids = [
-        int(r["id"])
-        for r in spark.read.parquet(os.path.join(root, "reps")).collect()
-    ]
+        nb = int(read("meta").collect()[0]["nb"])
+    rep_ids = [int(r["id"]) for r in read("reps").collect()]
 
     def _top_ids(ids: list[int], n: int) -> list[int]:
         return [
@@ -1559,7 +1563,7 @@ def smallworld_topk_pruned(
         abuckets = sorted({i % int(nb) for i in beam_ids})
         nbr_ids = [
             int(r["dst"])
-            for r in spark.read.parquet(adj_root)
+            for r in read_partitions(spark, adj_root, "bucket", abuckets)
             .filter(F.col("bucket").isin(abuckets))
             .filter(F.col("src").isin(beam_ids))
             .select("dst")

@@ -20,10 +20,13 @@ the driver between iterations (the same shape MLlib's KMeans uses).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from demo_pgvector_spark.functions.vector import cosine_similarity, query_vector_literal
+from demo_pgvector_spark.tables import read_partitions
 
 
 def assign_clusters(
@@ -93,18 +96,7 @@ def ivf_topk(
         assigned["cluster"] == top_clusters[centroid_id],
         "leftsemi",
     )
-    scored = cand.select(
-        F.col(id_col), cosine_similarity(F.col(vec_col), q).alias("similarity_score")
-    )
-    top = scored.orderBy(
-        F.col("similarity_score").desc(), F.col(id_col).asc()
-    ).limit(int(k))
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.col("similarity_score").desc(), F.col(id_col).asc())
-    return top.select(
-        id_col, "similarity_score", F.row_number().over(w).alias("rank")
-    )
+    return _ranked_topk(cand, q, k, id_col, vec_col)
 
 
 def ivf_topk_inline(
@@ -127,27 +119,33 @@ def ivf_topk_inline(
     membership is a projected column and the probe set is ``nprobe``
     integer literals, so the big side never shuffles at all — the same
     plan shape a partition-pruned read of write-time-clustered data
-    gives. Centroid RANKING stays a Spark job over the k-row centroid
-    frame (collecting ``nprobe`` ints), keeping its float semantics and
-    tie-break identical to ``ivf_topk``'s."""
-    spark = vectors.sparkSession
-    q = query_vector_literal(qvec)
-    probe_ids = _rank_centroids(spark, cents, qvec, nprobe)
+    gives. Centroids are ranked on the driver (``_rank_centroids``),
+    with the float semantics and tie-break of ``ivf_topk``'s Spark
+    ranking."""
+    probe_ids = _rank_centroids(cents, qvec, nprobe)
     cand = assign_clusters_auto(vectors, cents, id_col, vec_col).filter(
         F.col("cluster").isin(probe_ids)
     )
-    scored = cand.select(
-        F.col(id_col), cosine_similarity(F.col(vec_col), q).alias("similarity_score")
-    )
-    top = scored.orderBy(
-        F.col("similarity_score").desc(), F.col(id_col).asc()
-    ).limit(int(k))
-    from pyspark.sql import Window
+    return _ranked_topk(cand, query_vector_literal(qvec), k, id_col, vec_col)
 
-    w = Window.orderBy(F.col("similarity_score").desc(), F.col(id_col).asc())
-    return top.select(
-        id_col, "similarity_score", F.row_number().over(w).alias("rank")
-    )
+
+def _ranked_topk(
+    cand: DataFrame,
+    q,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    payload_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """The IVF probes' tail: (id, payload..., similarity_score, rank),
+    the exact-cosine top-``k`` candidates against the query literal
+    ``q``, ties to the lower id — TakeOrderedAndProject, then row_number
+    over the ≤k survivors."""
+    order = (F.col("similarity_score").desc(), F.col(id_col).asc())
+    sim = cosine_similarity(F.col(vec_col), q).alias("similarity_score")
+    top = cand.select(id_col, *payload_cols, sim).orderBy(*order).limit(int(k))
+    rank = F.row_number().over(Window.orderBy(*order)).alias("rank")
+    return top.select(id_col, *payload_cols, "similarity_score", rank)
 
 
 # Ceiling for the inline-literal assignment strategy: above this many
@@ -189,24 +187,43 @@ def assign_clusters_auto(
 
 
 def _rank_centroids(
-    spark, cents: list[list[float]], qvec: list[float], nprobe: int
+    cents: list[list[float]], qvec: list[float], nprobe: int
 ) -> list[int]:
-    """Top-``nprobe`` centroid ids for a probe vector — a tiny Spark job
-    over the k-row centroid frame so float semantics and the
-    (sim DESC, cid ASC) tie-break match the DataFrame path exactly."""
-    q = query_vector_literal(qvec)
-    cdf = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cid int, cv array<double>"
-    )
-    return [
-        r["cid"]
-        for r in cdf.select(
-            "cid", cosine_similarity(F.col("cv"), q).alias("_csim")
-        )
-        .orderBy(F.col("_csim").desc(), F.col("cid").asc())
-        .limit(int(nprobe))
-        .collect()
-    ]
+    """Top-``nprobe`` centroid ids for a probe vector, ranked on the
+    driver with no Spark job, bit for bit as Spark ranks
+    ``cosine_similarity(cv, q)`` by (sim DESC, cid ASC) in ``ivf_topk``:
+    sequential float64 left folds for the dots, as ``aggregate(zip_with
+    …)`` evaluates them (``numpy.dot`` sums pairwise and can round
+    differently); sim = dot(c, q) / sqrt(dot(c, c) · dot(q, q)), null
+    when that product is 0 (``try_divide``); nulls rank last, NaN first
+    (Spark's double order), ties to the lower cid. A query whose length
+    differs from a centroid's raises ``ValueError``: ``zip_with`` would
+    pad with nulls, and the probe would silently rank clusters by cid."""
+
+    def dot(a: list[float], b: list[float]) -> float:
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    q = [float(x) for x in qvec]
+    qq = dot(q, q)
+    keys = []
+    for cid, cent in enumerate(cents):
+        if len(cent) != len(q):
+            raise ValueError(
+                f"centroid {cid} has {len(cent)} dimensions, the query {len(q)}"
+            )
+        c = [float(x) for x in cent]
+        norm = math.sqrt(dot(c, c) * qq)
+        sim = dot(c, q) / norm if norm != 0.0 else None
+        if sim is None:
+            keys.append((2, 0.0, cid))
+        elif math.isnan(sim):
+            keys.append((0, 0.0, cid))
+        else:
+            keys.append((1, -sim, cid))
+    return [cid for _, _, cid in sorted(keys)[: int(nprobe)]]
 
 
 def ivf_write_clustered(
@@ -286,22 +303,14 @@ def ivf_topk_pruned(
     is a PARTITION filter — the scan never touches the other k−nprobe
     directories (pinned: tests/test_ivf.py asserts the pushed
     PartitionFilters and that only nprobe partitions are read). Results
-    are identical to ``ivf_topk_inline`` over the same centroids."""
-    q = query_vector_literal(qvec)
-    probe_ids = _rank_centroids(spark, cents, qvec, nprobe)
-    cand = spark.read.parquet(path).filter(F.col("cluster").isin(probe_ids))
-    scored = cand.select(
-        F.col(id_col), cosine_similarity(F.col(vec_col), q).alias("similarity_score")
+    are identical to ``ivf_topk_inline`` over the same centroids.
+    Building it launches no Spark job (driver ranking, and
+    ``tables.read_partitions``), so ``collect`` is the probe's one job."""
+    probe_ids = _rank_centroids(cents, qvec, nprobe)
+    cand = read_partitions(spark, path, "cluster", probe_ids).filter(
+        F.col("cluster").isin(probe_ids)
     )
-    top = scored.orderBy(
-        F.col("similarity_score").desc(), F.col(id_col).asc()
-    ).limit(int(k))
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.col("similarity_score").desc(), F.col(id_col).asc())
-    return top.select(
-        id_col, "similarity_score", F.row_number().over(w).alias("rank")
-    )
+    return _ranked_topk(cand, query_vector_literal(qvec), k, id_col, vec_col)
 
 
 def assign_clusters_inline(
@@ -329,8 +338,6 @@ def assign_clusters_inline(
     ~65 Py4J round-trips each (see functions/vector.py
     query_vector_literal); one expr string is a single round-trip.
     """
-    import math
-
     dots = []
     for c in cents:
         n = math.sqrt(sum(float(x) * float(x) for x in c))
@@ -631,12 +638,12 @@ def ivf_topk_filtered(
     ~k/p candidate rows' worth of directories, never the corpus; the
     final top-k is TakeOrderedAndProject over the pruned survivors."""
     n_cl = len(cents)
-    order = _rank_centroids(spark, cents, qvec, n_cl)
+    order = _rank_centroids(cents, qvec, n_cl)
     np_cur = max(1, min(int(nprobe0), n_cl))
     while True:
         probe = order[:np_cur]
         surv = (
-            spark.read.parquet(path)
+            read_partitions(spark, path, "cluster", probe)
             .filter(F.col("cluster").isin(probe))
             .filter(predicate)
         )
@@ -647,8 +654,6 @@ def ivf_topk_filtered(
         f"WHEN {int(c)} THEN {i + 1}" for i, c in enumerate(probe)
     ) + " END"
     surv = surv.withColumn("_pos", F.expr(pos_case).cast("int"))
-    from pyspark.sql import Window
-
     # ≤K-row frames throughout: counts per probed cluster, cumulative
     # prefix sums, and the 1-row minimal-prefix scalar (constant-key
     # window per the repo's ≤k-row convention).
@@ -668,22 +673,8 @@ def ivf_topk_filtered(
             ).alias("_pstar")
         )
     )
-    q = query_vector_literal(qvec)
     cand = surv.crossJoin(F.broadcast(pstar)).filter(
         F.col("_pos") <= F.col("_pstar")
     )
-    scored = cand.select(
-        F.col(id_col),
-        *[F.col(c) for c in payload_cols],
-        cosine_similarity(F.col(vec_col), q).alias("_s"),
-    )
-    top = scored.orderBy(F.desc("_s"), F.asc(id_col)).limit(int(k))
-    w = Window.partitionBy(F.col(id_col) - F.col(id_col)).orderBy(
-        F.desc("_s"), F.asc(id_col)
-    )
-    return top.select(
-        F.col(id_col),
-        *[F.col(c) for c in payload_cols],
-        F.round("_s", 6).alias("similarity_score"),
-        F.row_number().over(w).cast("int").alias("rank"),
-    )
+    top = _ranked_topk(cand, query_vector_literal(qvec), k, id_col, vec_col, payload_cols)
+    return top.withColumn("similarity_score", F.round("similarity_score", 6))

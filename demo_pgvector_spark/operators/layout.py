@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from demo_pgvector_spark.tables import read_partitions
+
 ZBITS = 16  # bits kept per dimension; z fits in 32 bits
 
 _SPREAD_STEPS = (
@@ -183,11 +185,14 @@ def zorder_pruned_scan(
     are listed/read — pinned in tests/test_layout.py), and the exact
     rectangle predicate remains as the residual row filter inside the
     surviving tiles. Results are identical to the unpruned scan; only
-    the I/O changes."""
+    the I/O changes. ``tables.read_partitions`` lists only the
+    intersecting tiles' directories (a tile no row fell in has none) and
+    declares the written schema, so building the scan launches no Spark
+    job."""
     x_lo, x_hi, y_lo, y_hi = box
     buckets = buckets_for_box(x_lo, x_hi, y_lo, y_hi, bucket_bits)
     return (
-        spark.read.parquet(path)
+        read_partitions(spark, path, "z_bucket", buckets)
         .filter(F.col("z_bucket").isin(buckets))
         .filter(
             F.col(x_col).between(x_lo, x_hi)

@@ -28,20 +28,17 @@ previous version and write of the next never touch the same files.
 from __future__ import annotations
 
 import contextlib
-import json
 import os
 from collections.abc import Callable, Mapping, Sequence
 
-import pyarrow.parquet as papq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from demo_pgvector_spark.operators import write as write_ops
 from demo_pgvector_spark.session import scoped_conf
+from demo_pgvector_spark.tables import written_schema
 
 _POINTER = "_CURRENT"
-# the footer key where Spark's parquet writer stores the row schema as JSON
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def current_version(root: str) -> str | None:
@@ -60,14 +57,9 @@ def _read_version(
     """``version_dir`` read with the declared schema once one data file's
     footer agrees with it (see ``read_table``)."""
     df = spark.read.schema(schema_ddl).parquet(version_dir)
-    files = sorted(
-        n for n in os.listdir(version_dir)
-        if n.endswith(".parquet") and not n.startswith((".", "_"))
-    )
-    if not files:
+    written = written_schema(version_dir)
+    if written is None:
         return df
-    footer = papq.read_schema(os.path.join(version_dir, files[0])).metadata
-    written = StructType.fromJson(json.loads(footer[_SPARK_SCHEMA_KEY]))
 
     def columns(schema: StructType) -> list[tuple[str, str]]:
         return [(f.name, f.dataType.simpleString()) for f in schema.fields]

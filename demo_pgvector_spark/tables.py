@@ -14,6 +14,11 @@ and nothing here ever collects.
 
 from __future__ import annotations
 
+import json
+import os
+from collections.abc import Iterable
+
+import pyarrow.parquet as papq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -127,3 +132,58 @@ def read_table(spark: SparkSession, path: str, fmt: str = "parquet", schema=None
     if fmt == "csv":
         r = r.option("header", "true")
     return r.load(path)
+
+
+# the footer key where Spark's parquet writer stores the row schema as JSON
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def written_schema(data_dir: str) -> T.StructType | None:
+    """The row schema Spark's writer stored in the footer of the first
+    data file under ``data_dir``, or None when it holds no data file.
+
+    The footer is read with pyarrow, so this costs no Spark job. Files
+    are visited in name order, depth first, skipping ``.``/``_`` names:
+    a flat version directory answers from its first file, a partitioned
+    layout from its first ``key=value`` directory. The footer holds the
+    data columns only; a layout's partition column lives in the
+    directory names."""
+    for top, dirs, files in os.walk(data_dir):
+        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+        data = sorted(
+            f for f in files
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        )
+        if data:
+            footer = papq.read_schema(os.path.join(top, data[0])).metadata
+            return T.StructType.fromJson(json.loads(footer[_SPARK_SCHEMA_KEY]))
+    return None
+
+
+def read_partitions(
+    spark: SparkSession, root: str, column: str, values: Iterable[int]
+) -> DataFrame:
+    """The ``root/column=v`` directories of a partitioned layout, one per
+    value, read so that planning the scan launches no Spark job.
+
+    A read of the whole root lists every directory (past Spark's 32-path
+    threshold that listing is itself a job) and infers the schema (one
+    more job). Here only the named directories are listed, and the read
+    declares the data schema the writer stored in a footer
+    (``written_schema``). ``basePath`` keeps ``column`` a partition
+    column, its type inferred on the driver from the directory names as
+    in a read of the whole root. A value with no directory (an empty
+    cluster, a tile no row fell in) is skipped; when none has one, the
+    result is an empty frame with the written columns plus ``column`` as
+    int. Callers keep their ``column IN (values)`` filter on top, so the
+    scan still shows it as a partition filter."""
+    schema = written_schema(root)
+    if schema is None:
+        raise ValueError(f"{root} holds no parquet data file")
+    dirs = [os.path.join(root, f"{column}={v}") for v in sorted(set(values))]
+    dirs = [d for d in dirs if os.path.isdir(d)]
+    if not dirs:
+        return spark.createDataFrame(
+            [], T.StructType([*schema.fields, T.StructField(column, T.IntegerType())])
+        )
+    return spark.read.schema(schema).option("basePath", root).parquet(*dirs)

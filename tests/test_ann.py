@@ -232,7 +232,7 @@ def test_ivfpq_pruned_matches_direct_composition(spark, clustered_df, tmp_path):
     ann.ivfpq_write(clustered_df, cents, books, path)
     pruned = ann.ivfpq_topk_pruned(spark, path, cents, books, q).collect()
 
-    probe_ids = ivf_ops._rank_centroids(spark, cents, q, 4)
+    probe_ids = ivf_ops._rank_centroids(cents, q, 4)
     cand = (
         ivf_ops.assign_clusters_auto(clustered_df, cents)
         .filter(F.col("cluster").isin(probe_ids))
@@ -321,7 +321,7 @@ def test_ivfsq_pruned_reads_codes_only_from_nprobe_partitions(
 
     # cross-check: decode-and-score the same probed clusters without the
     # layout — identical ids in identical order
-    probe_ids = ivf._rank_centroids(spark, cents, q, 2)
+    probe_ids = ivf._rank_centroids(cents, q, 2)
     assigned = ivf.assign_clusters_auto(clustered_df, cents)
     subset = assigned.filter(F.col("cluster").isin(probe_ids)).select(
         "vec_id", "embedding"

@@ -123,6 +123,117 @@ def test_ivf_pruned_probe_reads_only_nprobe_partitions(spark, clustered_df, tmp_
         assert int(m.group(1)) == 2, plan
 
 
+def _spark_rank(spark, cases):
+    """The Spark ranking ``_rank_centroids`` replaced, kept as its
+    oracle: ``cosine_similarity(cv, q)`` ordered by (_csim DESC, cid ASC),
+    the full order of every (centroids, query) case, one job for all."""
+    from pyspark.sql import Window
+
+    from demo_pgvector_spark.functions.vector import cosine_similarity
+
+    cdf = spark.createDataFrame(
+        [
+            (n, cid, [float(x) for x in c], [float(x) for x in q])
+            for n, (cents, q) in enumerate(cases)
+            for cid, c in enumerate(cents)
+        ],
+        "case int, cid int, cv array<double>, q array<double>",
+    )
+    w = Window.partitionBy("case").orderBy(F.col("_csim").desc(), F.col("cid").asc())
+    ranked = (
+        cdf.select("case", "cid", cosine_similarity(F.col("cv"), F.col("q")).alias("_csim"))
+        .select("case", "cid", F.row_number().over(w).alias("rn"))
+        .collect()
+    )
+    orders = [[] for _ in cases]
+    for r in sorted(ranked, key=lambda r: (r["case"], r["rn"])):
+        orders[r["case"]].append(r["cid"])
+    return orders
+
+
+def test_rank_centroids_matches_spark_ranking(spark):
+    """The driver ranking must equal Spark's full order (nprobe = k) on
+    exact ties (a duplicate and a scaled duplicate centroid), a zero-norm
+    centroid (null score: ranks last), a NaN centroid (Spark orders NaN
+    above every double), a query equal to a centroid, and random rounded
+    centroids."""
+    rng = np.random.RandomState(11)
+    base = np.round(rng.normal(0, 1, (6, 8)), 2).tolist()
+    q = np.round(rng.normal(0, 1, 8), 2).tolist()
+    zero = [0.0] * 8
+    ties = [base[0], base[1], list(base[1]), [2 * x for x in base[1]], base[2]]
+    special = [
+        (ties, q),
+        ([zero] + base, q),
+        ([base[3], zero, [float("nan")] + base[0][1:], base[4]], q),
+        (base, base[3]),
+        (ties + [zero], ties[3]),
+    ]
+    randoms = [
+        (np.round(rng.normal(0, 1, (16, 8)), 1).tolist(),
+         np.round(rng.normal(0, 1, 8), 1).tolist())
+        for _ in range(60)
+    ]
+    cases = special + randoms
+    want = _spark_rank(spark, cases)
+    got = [ivf._rank_centroids(cents, qv, len(cents)) for cents, qv in cases]
+    assert got == want
+    tied = got[0].index(1)
+    assert got[0][tied:tied + 3] == [1, 2, 3]  # three tied centroids, cid ASC
+    assert got[1][-1] == 0  # the zero-norm centroid ranks last
+    assert got[2][0] == 2 and got[2][-1] == 1  # NaN first, null last
+    assert got[3][0] == 3  # the query's own centroid ranks first
+
+
+def test_rank_centroids_rejects_a_dimension_mismatch():
+    """A query whose length differs from the centroids' must fail loudly:
+    zip_with pads with nulls, so every score would be null and the probe
+    would silently rank clusters by cid."""
+    with pytest.raises(ValueError, match="centroid 0 has 3 dimensions, the query 2"):
+        ivf._rank_centroids([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]], [1.0, 0.0], 1)
+    with pytest.raises(ValueError, match="centroid 1 has 2 dimensions, the query 3"):
+        ivf._rank_centroids([[1.0, 0.0, 0.0], [0.0, 1.0]], [1.0, 0.0, 0.0], 1)
+
+
+def test_pruned_probe_plans_without_a_job_and_skips_an_empty_cluster(
+    spark, clustered_df, tmp_path
+):
+    """Building ``ivf_topk_pruned`` launches no Spark job (driver
+    ranking, declared footer schema, only the probed directories listed)
+    and its collect launches one. A scaled duplicate of the query's
+    nearest centroid ties with it, so it is probed, yet owns no vector
+    (assignment ties go to the lower cid) and has no directory: the
+    probe must skip it and still equal the inline probe."""
+    import os
+
+    from demo_pgvector_spark import tables
+    from tests.test_stream_ingest import _jobs
+
+    rows = _clustered()
+    cents = [rows[c * 60][1] for c in range(8)]
+    cents.append([2 * x for x in cents[0]])
+    path = str(tmp_path / "ivf_empty_cluster")
+    ivf.ivf_write_clustered(clustered_df, cents, path)
+    q = rows[1][1]
+    assert ivf._rank_centroids(cents, q, 2) == [0, 8]
+    assert not os.path.isdir(os.path.join(path, "cluster=8"))
+
+    pruned, jobs = _jobs(spark, lambda: ivf.ivf_topk_pruned(spark, path, cents, q, k=10, nprobe=2))
+    assert jobs == 0
+    got, jobs = _jobs(spark, pruned.collect)
+    assert jobs == 1
+    inline = ivf.ivf_topk_inline(clustered_df, cents, q, k=10, nprobe=2).collect()
+    assert [(r["vec_id"], r["rank"]) for r in got] == [
+        (r["vec_id"], r["rank"]) for r in inline
+    ]
+
+    empty = tables.read_partitions(spark, path, "cluster", [8])
+    assert empty.dtypes == [
+        ("vec_id", "bigint"), ("embedding", "array<double>"), ("cluster", "int")
+    ]
+    assert empty.collect() == []
+
+
 def test_assign_auto_strategy_switch(spark, clustered_df):
     """``assign_clusters_auto`` must pick the inlined-literal projection
     below INLINE_MAX_LITERALS and the broadcast-join path above it, with
@@ -345,7 +456,7 @@ def test_filtered_probe_equals_minimal_prefix_replay(spark, labeled_df, tmp_path
     out = ivf.ivf_topk_filtered(
         spark, path, cents, q, F.col("label") == 3, k=10, nprobe0=2
     ).collect()
-    order = ivf._rank_centroids(spark, cents, q, len(cents))
+    order = ivf._rank_centroids(cents, q, len(cents))
     layout = spark.read.parquet(path).collect()
     want = _filtered_replay(layout, order, q, lambda r: r["label"] == 3, 10)
     assert [r["vec_id"] for r in out] == want
