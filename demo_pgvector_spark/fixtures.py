@@ -57,11 +57,10 @@ FUZZY_MAX_KEY = 2000
 # whole computation one deterministic unrolled plan on both engines.
 PAGERANK_ITERS = 5
 
-# Round 14 (VERDICT r13 #2): the iterative graph keys' loop width is no
-# longer a registry-side constant — operators/graph.py _loop_width
-# derives it from the edge input's scan-split count, clamped into
-# [MIN_LOOP_PARTITIONS, session width], so the same declared queries run
-# narrow at bench scale and wide on a lake-scale input.
+# The iterative graph keys' loop width is no registry-side constant:
+# operators/graph.py takes session.width_for(edges), so the same
+# declared queries run narrow at bench scale and wide on a lake-scale
+# input.
 SUPP_NODE_OFFSET = 10_000_000
 
 # graph_triangles: the part co-order graph (two parts linked iff they

@@ -38,13 +38,12 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from demo_pgvector_spark.operators import ann
+from demo_pgvector_spark.session import scan_splits, width_for
 
 SHINGLE_K = 5
 NUM_HASHES = 12
@@ -573,7 +572,6 @@ def dedup_assign(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iters: int = 20,
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """Resolve near-dup PAIRS into per-document keeper assignments — the
     stage a training-data pipeline actually runs after pair generation
@@ -606,17 +604,9 @@ def dedup_assign(
     Returns (id, keeper_id, is_keeper). Docs with no near-dup partner
     keep themselves.
 
-    ``shuffle_partitions`` scopes the loop's exchange width (set/restore
-    around the rounds, the streaming-drain convention): the label and
-    edge tables are output-volume-sized — orders of magnitude below the
-    corpus — so the session's batch width schedules mostly-empty tasks
-    on EVERY round's three-plus stages. Default 8 suits pair graphs up
-    to a few million edges; pass None to inherit the session width (a
-    100 TB run with a billion-edge graph would).
+    The rounds run at the session width; the edge pre-partition takes
+    ``session.width_for(pairs)``.
     """
-    loop_width = shuffle_partitions or int(
-        docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -628,22 +618,17 @@ def dedup_assign(
         # LAZY: round 0's convergence-count job computes it, caches the
         # blocks, and truncates lineage at job end — an eager checkpoint
         # here would spend a whole extra job on the same materialization.
-        # Pre-partitioned by the per-round join key at the LOOP's width
-        # (round 13, guide §2.4: every propagation round joins edges on
-        # dst; one exchange here instead of one per round — explicit
-        # width so AQE cannot coalesce it away from the rounds' width).
-        .repartition(loop_width, F.col("dst"))
+        # Pre-partitioned by the per-round join key (round 13, guide
+        # §2.4: every propagation round joins edges on dst; one exchange
+        # here instead of one per round — explicit width so AQE cannot
+        # coalesce it away).
+        .repartition(width_for(pairs), F.col("dst"))
         .localCheckpoint(eager=False)
     )
     labels = docs.select(F.col(id_col).alias("id")).withColumn(
         "keeper_id", F.col("id")
     )
-    from demo_pgvector_spark.session import scoped_conf
-
-    with scoped_conf(
-        docs.sparkSession, "spark.sql.shuffle.partitions", shuffle_partitions
-    ):
-        labels = _cc_rounds(edges, labels, max_iters)
+    labels = _cc_rounds(edges, labels, max_iters)
     return labels.withColumn("is_keeper", F.col("id") == F.col("keeper_id"))
 
 
@@ -693,42 +678,6 @@ def _cc_rounds(edges: DataFrame, labels: DataFrame, max_iters: int) -> DataFrame
         if changed == 0:
             break
     return labels
-
-
-def _size_conf_bytes(value: str) -> int:
-    """Parse a Spark byte-size conf string ('134217728b', '8m', '1g')."""
-    s = value.strip().lower()
-    if s.endswith("b"):
-        s = s[:-1]
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    if s and s[-1] in units:
-        return int(float(s[:-1]) * units[s[-1]])
-    return int(s)
-
-
-def _estimated_scan_splits(df: DataFrame) -> int:
-    """Metadata-only estimate of how many input splits ``df``'s scan
-    yields: local input file sizes against
-    ``spark.sql.files.maxPartitionBytes`` (no DataFrame→RDD conversion,
-    no job — VERDICT r9 #8). Remote or unstat-able inputs return a
-    large count (trust the lake layout — thousands of splits there);
-    an in-memory frame (no input files) returns 0 (always spread)."""
-    files = df.inputFiles()
-    if not files:
-        return 0
-    local = [f[5:] if f.startswith("file:") else f for f in files]
-    if any("://" in f for f in local):
-        return 1 << 30
-    try:
-        total = sum(os.path.getsize(f) for f in local)
-    except OSError:
-        return 1 << 30
-    max_pb = _size_conf_bytes(
-        df.sparkSession.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728b"
-        )
-    )
-    return max(len(files), -(-total // max(max_pb, 1)))
 
 
 def ngram_jaccard_pairs(
@@ -784,7 +733,7 @@ def ngram_jaccard_pairs(
     # (VERDICT r9 #8: the previous src.rdd.getNumPartitions() probe
     # forced a DataFrame→RDD conversion on the hot path); remote files
     # skip the probe and trust the lake layout.
-    if _estimated_scan_splits(src) < spark.sparkContext.defaultParallelism:
+    if scan_splits(src) < spark.sparkContext.defaultParallelism:
         src = src.repartition(spark.sparkContext.defaultParallelism)
     grams = (
         with_shingles(src, text_col, k)
@@ -906,7 +855,7 @@ def ngram_containment_pairs(
     # Metadata-only split estimate, exactly as ngram_jaccard_pairs does
     # (VERDICT r10 #2 retired this function's .rdd.getNumPartitions()
     # probe — the last DataFrame→RDD conversion on any hot path).
-    if _estimated_scan_splits(src) < spark.sparkContext.defaultParallelism:
+    if scan_splits(src) < spark.sparkContext.defaultParallelism:
         src = src.repartition(spark.sparkContext.defaultParallelism)
     grams = (
         with_shingles(src, text_col, k)
@@ -1115,15 +1064,13 @@ def semdedup(
     pairs = semantic_pairs(assigned, threshold, id_col, vec_col)
     # CC only over vertices that APPEAR in a pair (singletons trivially
     # keep themselves and would just pad every propagation round's label
-    # exchange), and with a narrow scoped shuffle width: the label table
-    # is a few hundred rows, so the session's 32-wide exchanges schedule
-    # mostly-empty tasks each of the loop's rounds.
+    # exchange).
     verts = (
         pairs.select(F.col("id_a").alias(id_col))
         .union(pairs.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    comp = dedup_assign(verts, pairs, id_col=id_col, shuffle_partitions=4).select(
+    comp = dedup_assign(verts, pairs, id_col=id_col).select(
         F.col("id").alias(id_col), F.col("keeper_id").alias("component")
     )
     labeled = (
@@ -1200,7 +1147,7 @@ def substring_pairs(
     pillar coverage per SURVEY §2.8."""
     spark = docs.sparkSession
     src = docs.select(id_col, text_col)
-    if _estimated_scan_splits(src) < spark.sparkContext.defaultParallelism:
+    if scan_splits(src) < spark.sparkContext.defaultParallelism:
         src = src.repartition(spark.sparkContext.defaultParallelism)
     # The token arrays feed FOUR plan branches (both candidate-join
     # sides + both verify sides) — materialize the projection once

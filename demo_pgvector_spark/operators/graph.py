@@ -47,46 +47,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from demo_pgvector_spark.session import width_for
+
 # Fixed-point units: ranks in micro (1e-6), contributions in nano (1e-9);
 # damping 0.85 applied as the exact rational 17/20. All arithmetic BIGINT.
 MICRO = 1_000_000
 RESET_MICRO = 150_000  # 0.15 in micro-units; rank_0 = 1.0 = 1_000_000
-
-
-MIN_LOOP_PARTITIONS = 8
-
-
-def _loop_width(df: DataFrame, requested: int | None = None) -> int:
-    """Partition width for the iterative loops' pre-partitioned static
-    frames. EXPLICIT (never a bare ``repartition(col)``) because the
-    width is a contract: per-round joins align their other side to the
-    checkpointed frame's partitioning (the bucketed-join alignment in
-    EnsureRequirements), so whatever number is frozen here is the
-    loop's parallelism. ``requested`` overrides (the dedup_assign
-    ``shuffle_partitions`` convention).
-
-    ``None`` (the default, and what every registry call site passes
-    since round 14) derives the width from the INPUT SIZE feeding the
-    edge frame, clamped into [MIN_LOOP_PARTITIONS, session width]
-    (VERDICT r13 #2: the old registry-side constant 8 was a bench-scale
-    number baked into the declared query path — a billion-edge graph
-    would have run 8-wide loops). The estimate is the scan-split count
-    of ``df``'s source files against maxPartitionBytes (metadata only,
-    no job): a few-MB local edge table floors at 8 — 32-wide rounds
-    over it schedule mostly-empty tasks on every one of K×3 stages,
-    measured as a 1.5-2× regression at bench scale in r13 — while a
-    lake-scale input saturates to the session width. In-memory frames
-    (no input files) floor at MIN_LOOP_PARTITIONS; results are
-    width-invariant by the pytest pin either way."""
-    if requested is not None:
-        return int(requested)
-    from demo_pgvector_spark.operators.dedup import _estimated_scan_splits
-
-    session_width = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    splits = _estimated_scan_splits(df)
-    return max(MIN_LOOP_PARTITIONS, min(session_width, splits))
 
 
 def pagerank(
@@ -94,7 +60,6 @@ def pagerank(
     iterations: int = 5,
     src_col: str = "src",
     dst_col: str = "dst",
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """(node_id, pr) after ``iterations`` fixed PageRank steps over the
     DISTINCT directed edge set. Nodes = every id appearing as src or
@@ -111,7 +76,7 @@ def pagerank(
         # freezes hashpartitioning(src) into the cached blocks, so
         # EnsureRequirements shuffles only the (small) rank side per
         # round. lazy: materialized by the final action's first pass.
-        .repartition(_loop_width(edges, loop_partitions), F.col("src"))
+        .repartition(width_for(edges), F.col("src"))
         .localCheckpoint(eager=False)
     )
     nodes = (
@@ -119,7 +84,7 @@ def pagerank(
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
         # same argument: nodes is joined on id every round
-        .repartition(_loop_width(edges, loop_partitions), F.col("id"))
+        .repartition(width_for(edges), F.col("id"))
         .localCheckpoint(eager=False)
     )
     # deg inherits hashpartitioning(src) from e (groupBy over the
@@ -164,7 +129,6 @@ def personalized_pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     seed_col: str = "id",
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """Personalized PageRank from a seed SET over the UNDIRECTED graph —
     the TrustRank primitive (Gyöngyi et al., VLDB 2004): random walks
@@ -197,7 +161,7 @@ def personalized_pagerank(
         .dropDuplicates(["s", "d"])
         # static side pre-partitioned by its per-round join key (round
         # 13, guide §2.4) — see pagerank for the argument
-        .repartition(_loop_width(edges, loop_partitions), F.col("s"))
+        .repartition(width_for(edges), F.col("s"))
         .localCheckpoint(eager=False)
     )
     seed_ids = seeds.select(F.col(seed_col).alias("sid")).distinct()
@@ -212,7 +176,7 @@ def personalized_pagerank(
             .cast("bigint")
             .alias("reset"),
         )
-        .repartition(_loop_width(edges, loop_partitions), F.col("id"))
+        .repartition(width_for(edges), F.col("id"))
         .localCheckpoint(eager=False)
     )
     deg = (
@@ -333,7 +297,6 @@ def bfs_hops(
     src_col: str = "src",
     dst_col: str = "dst",
     seed_col: str = "id",
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """Minimum hop distance from a seed set over the UNDIRECTED graph,
     bounded at ``max_hops`` — multi-source BFS, the propagation-radius
@@ -362,7 +325,7 @@ def bfs_hops(
         .dropDuplicates(["s", "d"])
         # static side pre-partitioned by its per-round join key (round
         # 13, guide §2.4) — see pagerank for the argument
-        .repartition(_loop_width(edges, loop_partitions), F.col("s"))
+        .repartition(width_for(edges), F.col("s"))
         .localCheckpoint(eager=False)
     )
     dist = seeds.select(F.col(seed_col).alias("id")).distinct().withColumn(
@@ -393,7 +356,6 @@ def label_propagation(
     iterations: int = 3,
     src_col: str = "src",
     dst_col: str = "dst",
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """Community detection via synchronous label propagation (Raghavan
     2007; the GraphX ``LabelPropagation`` contract) over the UNDIRECTED
@@ -419,7 +381,7 @@ def label_propagation(
         .dropDuplicates(["s", "d"])
         # static side pre-partitioned by its per-round join key (round
         # 13, guide §2.4) — see pagerank for the argument
-        .repartition(_loop_width(edges, loop_partitions), F.col("s"))
+        .repartition(width_for(edges), F.col("s"))
         .localCheckpoint(eager=False)
     )
     nodes = sym.select(F.col("s").alias("id")).distinct().localCheckpoint(
@@ -460,7 +422,6 @@ def kcore_membership(
     k: int = KCORE_K,
     rounds: int = KCORE_ROUNDS,
     node_col: str = "node",
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """k-core membership by iterative peeling (Seidman 1983; the
     Batagelj-Zaversnik fixpoint): repeatedly drop nodes whose degree in
@@ -498,12 +459,12 @@ def kcore_membership(
         # static side pre-partitioned by the first per-round join key
         # (round 13, guide §2.4); the dst-side join of each round still
         # shuffles the induced intermediate — that one is fundamental
-        .repartition(_loop_width(edges, loop_partitions), F.col("src"))
+        .repartition(width_for(edges), F.col("src"))
         .localCheckpoint(eager=False)
     )
     kept = (
         nodes.select(F.col(node_col).alias("n"))
-        .repartition(_loop_width(edges, loop_partitions), F.col("n"))
+        .repartition(width_for(edges), F.col("n"))
         .localCheckpoint(eager=False)
     )
     prev = kept
@@ -553,7 +514,6 @@ def hits(
     iterations: int = 4,
     src_col: str = "src",
     dst_col: str = "dst",
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over the DISTINCT
     directed edge set: ``iterations`` fixed power-iteration rounds of
@@ -598,11 +558,11 @@ def hits(
     e_src = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .dropDuplicates(["src", "dst"])
-        .repartition(_loop_width(edges, loop_partitions), F.col("src"))
+        .repartition(width_for(edges), F.col("src"))
         .localCheckpoint(eager=False)
     )
     e_dst = e_src.repartition(
-        _loop_width(edges, loop_partitions), F.col("dst")
+        width_for(edges), F.col("dst")
     ).localCheckpoint(eager=False)
     hubs = e_src.select(F.col("src").alias("id")).distinct().localCheckpoint(
         eager=False
@@ -660,7 +620,6 @@ def hyperball_harmonic(
     rounds: int = 3,
     node_col: str = "node",
     p: int = 6,
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """Bounded-radius harmonic centrality via HyperBall (Boldi & Vigna,
     2013) — the algorithm web-scale corpus pipelines actually use to
@@ -724,7 +683,7 @@ def hyperball_harmonic(
         # static side pre-partitioned by its per-round join key (the
         # round merge joins sym.dst == state.node each round — round 13,
         # guide §2.4)
-        .repartition(_loop_width(edges, loop_partitions), F.col("dst"))
+        .repartition(width_for(edges), F.col("dst"))
         .localCheckpoint(eager=False)
     )
     items0 = nodes.select(

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from demo_pgvector_spark.session import session_width
+
 
 def asof_join(
     probes: DataFrame,
@@ -147,7 +149,6 @@ def group_ranked(
     vals: DataFrame,
     keys: tuple[str, ...],
     value_col: str = "v",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Global 0-based rank of ``value_col`` within each key group, with
     the group size — the distributed building block for EXACT order
@@ -173,12 +174,11 @@ def group_ranked(
     values (ranks among equal values are interchangeable for order
     statistics). Returns ``keys… value_col rn n``.
     """
-    parts = num_partitions or vals.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"
-    )
     kcols = [F.col(k) for k in keys]
     r = (
-        vals.repartitionByRange(int(parts), *kcols, F.col(value_col))
+        vals.repartitionByRange(
+            session_width(vals.sparkSession), *kcols, F.col(value_col)
+        )
         .sortWithinPartitions(*kcols, F.col(value_col))
         .select(*kcols, value_col, F.monotonically_increasing_id().alias("_mid"))
     )

@@ -89,9 +89,6 @@ def run_hnsw_stream(
         stream_df,
         checkpoint_dir,
         hnsw_sink(root, base, planes),
-        # narrow width, the run_curate_stream shape: per-epoch output
-        # is ≤ 2·m rows per staged vector
-        confs={"spark.sql.shuffle.partitions": 8},
     )
 
 

@@ -85,9 +85,6 @@ def run_curate_stream(
         stream_df,
         checkpoint_dir,
         curate_sink(root, corpus, eval_docs, corpus_bands),
-        # narrow width, the run_countmin_stream shape: the per-epoch
-        # audit output is one row per staged doc
-        confs={"spark.sql.shuffle.partitions": 8},
     )
 
 

@@ -96,6 +96,29 @@ def read_table(
     return _read_version(spark, os.path.join(root, v), schema_ddl)
 
 
+@contextlib.contextmanager
+def _next_version(root: str):
+    """Yield ``(current version, next version's directory)`` for the
+    block to write, then publish the next version: the pointer's temp
+    file is written and fsynced, ``os.replace``d over ``_CURRENT``, and
+    the root directory fsynced. A block that raises publishes nothing."""
+    v = current_version(root)
+    nxt = f"v{(int(v[1:]) + 1) if v else 1:06d}"
+    os.makedirs(root, exist_ok=True)
+    yield v, os.path.join(root, nxt)
+    tmp = os.path.join(root, f".{_POINTER}.tmp")
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(nxt)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, os.path.join(root, _POINTER))
+    root_fd = os.open(root, os.O_RDONLY)
+    try:
+        os.fsync(root_fd)
+    finally:
+        os.close(root_fd)
+
+
 def commit_table(
     df: DataFrame, root: str, single_file: bool = False, delta: bool = False
 ) -> str:
@@ -141,33 +164,19 @@ def commit_table(
     rename back to the previous version."""
     import shutil
 
-    v = current_version(root)
-    nxt = f"v{(int(v[1:]) + 1) if v else 1:06d}"
-    os.makedirs(root, exist_ok=True)
-    dst = os.path.join(root, nxt)
-    out = df.coalesce(1) if single_file else df
-    if delta and v is not None:
-        shutil.rmtree(dst, ignore_errors=True)  # orphan from a crash
-        os.makedirs(dst)
-        prev = os.path.join(root, v)
-        for name in os.listdir(prev):
-            if name.endswith(".parquet"):
-                os.link(os.path.join(prev, name), os.path.join(dst, name))
-        out.write.mode("append").parquet(dst)
-    else:
-        out.write.mode("overwrite").parquet(dst)
-    tmp = os.path.join(root, f".{_POINTER}.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(nxt)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(root, _POINTER))
-    root_fd = os.open(root, os.O_RDONLY)
-    try:
-        os.fsync(root_fd)
-    finally:
-        os.close(root_fd)
-    return nxt
+    with _next_version(root) as (v, dst):
+        out = df.coalesce(1) if single_file else df
+        if delta and v is not None:
+            shutil.rmtree(dst, ignore_errors=True)  # orphan from a crash
+            os.makedirs(dst)
+            prev = os.path.join(root, v)
+            for name in os.listdir(prev):
+                if name.endswith(".parquet"):
+                    os.link(os.path.join(prev, name), os.path.join(dst, name))
+            out.write.mode("append").parquet(dst)
+        else:
+            out.write.mode("overwrite").parquet(dst)
+    return os.path.basename(dst)
 
 
 def landing_stream(
@@ -202,23 +211,26 @@ def drain(
     inference pass; a zero-row drain is a well-typed empty frame), so
     result size never touches driver memory.
 
-    ``confs`` hold from before ``start()`` until the query ends, and are
-    restored even if an epoch raises. A stream reads
-    ``spark.sql.shuffle.partitions`` at its FIRST micro-batch and freezes
-    it into the checkpoint as the state-partition count, so the scope
-    pins that width per query instead of mutating the session."""
+    ``confs`` hold only across ``start()``: Spark clones the session for
+    the query there, and the stream (its ``foreachBatch`` batches'
+    ``sparkSession`` too) keeps the cloned values. The caller's session
+    is restored as soon as ``start()`` returns, so other queries on it do
+    not plan with the override while the stream runs. Every drain runs
+    at the session's shuffle width, which a stateful stream freezes into
+    its checkpoint as the state-partition count."""
     spark = df.sparkSession
     out_dir = checkpoint_dir.rstrip("/") + ".out"
+    writer = df.writeStream.outputMode(output_mode)
+    if sink is not None:
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format("parquet").option("path", out_dir)
+    writer = writer.option("checkpointLocation", checkpoint_dir)
     with contextlib.ExitStack() as scope:
         for key, value in (confs or {}).items():
             scope.enter_context(scoped_conf(spark, key, value))
-        writer = df.writeStream.outputMode(output_mode)
-        if sink is not None:
-            writer = writer.foreachBatch(sink)
-        else:
-            writer = writer.format("parquet").option("path", out_dir)
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-        writer.trigger(availableNow=True).start().awaitTermination()
+        query = writer.trigger(availableNow=True).start()
+    query.awaitTermination()
     return None if sink is not None else spark.read.schema(df.schema).parquet(out_dir)
 
 
@@ -296,14 +308,7 @@ def run_upsert_stream(
     id_col: str = "id",
     batch_order: Sequence[str] | None = None,
 ) -> None:
-    """Drain ``stream_df`` through the upsert sink (``drain``).
-
-    No width override: unlike the late-data rows' state stores (whose
-    per-batch task count is pure overhead at small key cardinality), an
-    ingest epoch shuffles the WHOLE micro-batch through its dedup window
-    — volume that scales with the stream — so it inherits the session
-    width (measured at sf0.1: 4-wide costs ~15% over 32-wide on
-    200k-row epochs, the inverse of the late-data rows)."""
+    """Drain ``stream_df`` through the upsert sink (``drain``)."""
     drain(
         stream_df,
         checkpoint_dir,
@@ -472,7 +477,4 @@ def run_scd2_stream(
         stream_df,
         checkpoint_dir,
         scd2_sink(root, keys, attr_cols, schema_ddl, effective_date, seed),
-        # dimension change batches are small: the narrow width of the
-        # late-data rows applies, not the whole-stream ingest width
-        confs={"spark.sql.shuffle.partitions": 8},
     )

@@ -103,13 +103,7 @@ def run_stream_stream_join(
             F.unix_timestamp(f"b.{ts_col}") - F.unix_timestamp(f"a.{ts_col}")
         ).alias("lag_seconds"),
     )
-    return drain(
-        sel,
-        checkpoint_dir,
-        # the join's state store is sized like the aggregate rows' (one
-        # task per state partition per micro-batch): key cardinality
-        confs={"spark.sql.shuffle.partitions": 4},
-    )
+    return drain(sel, checkpoint_dir)
 
 
 def run_stream_static_join(
@@ -138,5 +132,4 @@ def run_stream_static_join(
     enriched = stream.join(
         F.broadcast(dim), stream[key_col] == dim[dim_key], "inner"
     ).drop(dim_key)
-    # no width override: the plan has no exchange to size
     return drain(enriched, checkpoint_dir)

@@ -100,18 +100,7 @@ def run_late_data_stream(
             F.sum(id_col).alias("sum_ids"),
         )
     )
-    out = drain(
-        agg,
-        checkpoint_dir,
-        # state-store width: fixed at the first checkpoint, and every
-        # micro-batch schedules one task per state partition regardless
-        # of data volume, so it tracks the stream's KEY cardinality, not
-        # the session's batch-shuffle width. State here is (day-window ×
-        # event_type) — a handful of keys — and 32 session-default
-        # partitions would pay 8× the per-batch scheduling for empty
-        # state stores; a deployment with millions of keys sizes it up.
-        confs={"spark.sql.shuffle.partitions": 4},
-    )
+    out = drain(agg, checkpoint_dir)
     return out.select(
         F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         F.col(key_col),
@@ -164,14 +153,7 @@ def run_late_data_stream_update(
     def _append_delta(batch: DataFrame, _epoch_id: int) -> None:
         batch.write.mode("append").parquet(out_dir)
 
-    drain(
-        agg,
-        checkpoint_dir,
-        _append_delta,
-        output_mode="update",
-        # the append row's state width (see run_late_data_stream)
-        confs={"spark.sql.shuffle.partitions": 4},
-    )
+    drain(agg, checkpoint_dir, _append_delta, output_mode="update")
     return spark.read.schema(agg.schema).parquet(out_dir).select(
         F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         F.col(key_col),

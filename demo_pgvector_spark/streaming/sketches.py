@@ -68,7 +68,7 @@ def _last_epoch(root: str) -> int:
 
 
 def _commit_with_epoch(df: DataFrame, root: str, epoch_id: int) -> str:
-    """``ingest.commit_table``'s write-then-swap with the epoch marker
+    """``ingest.commit_table``'s write-then-publish with the epoch marker
     written INSIDE the not-yet-visible version directory (an
     underscore-prefixed file, invisible to parquet file discovery like
     ``_SUCCESS``), so the single atomic pointer ``os.replace`` commits
@@ -76,21 +76,13 @@ def _commit_with_epoch(df: DataFrame, root: str, epoch_id: int) -> str:
     a root-level marker written after the swap left a crash window in
     which a retried epoch re-merged an already-live delta and
     double-counted)."""
-    v = ingest_ops.current_version(root)
-    nxt = f"v{(int(v[1:]) + 1) if v else 1:06d}"
-    os.makedirs(root, exist_ok=True)
-    # single file: the sketch is ≤ d×w rows by construction — see
-    # ingest.commit_table(single_file=True) for the small-files argument
-    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(root, nxt))
-    with open(
-        os.path.join(root, nxt, _EPOCH_MARKER), "w", encoding="utf-8"
-    ) as fh:
-        fh.write(str(epoch_id))
-    tmp = os.path.join(root, f".{ingest_ops._POINTER}.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(nxt)
-    os.replace(tmp, os.path.join(root, ingest_ops._POINTER))
-    return nxt
+    with ingest_ops._next_version(root) as (_v, dst):
+        # single file: the sketch is ≤ d×w rows by construction — see
+        # ingest.commit_table(single_file=True) for the small-files argument
+        df.coalesce(1).write.mode("overwrite").parquet(dst)
+        with open(os.path.join(dst, _EPOCH_MARKER), "w", encoding="utf-8") as fh:
+            fh.write(str(epoch_id))
+    return os.path.basename(dst)
 
 
 def countmin_sink(
@@ -139,10 +131,6 @@ def run_countmin_stream(
         stream_df,
         checkpoint_dir,
         countmin_sink(root, item_col, depth, width),
-        # the per-epoch jobs aggregate into ≤ d·w cells: session-wide 32
-        # partitions would schedule mostly-empty tasks for a 1024-cell
-        # result (the late-data-row argument)
-        confs={"spark.sql.shuffle.partitions": 8},
     )
 
 
@@ -196,9 +184,6 @@ def run_bloom_stream(
         stream_df,
         checkpoint_dir,
         bloom_sink(root, text_col),
-        # narrow, the run_countmin_stream shape: the fold's result is
-        # ≤ BLOOM_M narrow rows
-        confs={"spark.sql.shuffle.partitions": 8},
     )
 
 
@@ -261,9 +246,6 @@ def run_hll_stream(
         stream_df,
         checkpoint_dir,
         hll_sink(root, item_col, group_cols, schema_ddl=schema_ddl),
-        # narrow, the run_countmin_stream shape: the fold's result is
-        # ≤ m rows per group
-        confs={"spark.sql.shuffle.partitions": 8},
     )
 
 

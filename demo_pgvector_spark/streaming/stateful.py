@@ -24,14 +24,9 @@ from demo_pgvector_spark.streaming.ingest import drain, landing_stream
 # Both state machines cross Arrow per (state partition × micro-batch) in
 # a Python worker — the priced cost (measured A/B, SCALE.md round 8).
 # Larger Arrow batches cut the crossing count (maxRecordsPerBatch 10k →
-# 1M: ~9.3 → ~7.2 s at sf0.1), and 8 state partitions beat the old 4 by
-# ~2× (6.3 vs 13.5 s same-box: more state machines run concurrently; 16
-# adds nothing over 8 on 32 cores). Scoped to the drain, not
-# session-global.
-_PY_STATE_CONFS = {
-    "spark.sql.shuffle.partitions": 8,
-    "spark.sql.execution.arrow.maxRecordsPerBatch": 1_000_000,
-}
+# 1M: ~9.3 → ~7.2 s at sf0.1). Scoped to the drain, not session-global;
+# the state width is the session's.
+_PY_STATE_CONFS = {"spark.sql.execution.arrow.maxRecordsPerBatch": 1_000_000}
 
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
 STATE_SCHEMA = "n long, total double"

@@ -184,12 +184,7 @@ def run_stream_dedup(
         .dropDuplicatesWithinWatermark(list(key_cols))
         .select(*key_cols, "batch_no")
     )
-    return drain(
-        deduped,
-        checkpoint_dir,
-        # state is one row per key: sized like the late-data rows' stores
-        confs={"spark.sql.shuffle.partitions": 4},
-    )
+    return drain(deduped, checkpoint_dir)
 
 
 def run_to_memory(

@@ -433,23 +433,20 @@ def test_hyperball_matches_python_replay(spark):
 
 
 def test_loop_partitions_is_result_invariant(spark):
-    """Round 13: the iterative ops pre-partition their static frames at
-    an explicit loop width (and registry passes a narrow bench-scale
-    width). The width is a pure physical-plan knob — results must be
-    bit-identical across widths, including widths that differ from the
-    session shuffle-partition count."""
+    """The iterative ops pre-partition their static frames at an explicit
+    loop width (``session.width_for``: the session width for an in-memory
+    edge frame). The width is a pure physical-plan knob — results must be
+    bit-identical across session widths."""
+    from demo_pgvector_spark.session import scoped_conf
+
     df = spark.createDataFrame(EDGES, "src long, dst long")
     base = sorted(map(tuple, graph.pagerank(df, 3).collect()))
-    for w in (1, 3, 8):
-        got = sorted(
-            map(tuple, graph.pagerank(df, 3, loop_partitions=w).collect())
-        )
-        assert got == base, f"loop_partitions={w} changed the result"
     lpa_base = sorted(map(tuple, graph.label_propagation(df, 2).collect()))
-    lpa_w = sorted(
-        map(
-            tuple,
-            graph.label_propagation(df, 2, loop_partitions=2).collect(),
-        )
-    )
-    assert lpa_w == lpa_base
+    for w in (1, 3, 8):
+        with scoped_conf(spark, "spark.sql.shuffle.partitions", w):
+            got = sorted(map(tuple, graph.pagerank(df, 3).collect()))
+            lpa_w = sorted(
+                map(tuple, graph.label_propagation(df, 2).collect())
+            )
+        assert got == base, f"session width {w} changed the pagerank result"
+        assert lpa_w == lpa_base, f"session width {w} changed the LPA result"

@@ -20,7 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from demo_pgvector_spark.operators import write as write_ops
-from demo_pgvector_spark.streaming import ingest
+from demo_pgvector_spark.streaming import ingest, sketches
 
 SCHEMA = "id long, name string"
 
@@ -320,9 +320,10 @@ def test_upsert_sink_delta_version_is_content_identical(spark, tmp_path):
 
 
 def test_drain_restores_width_after_a_failing_sink(spark, tmp_path):
-    """``drain`` scopes its confs from ``start()`` until the query ends:
-    the stream's own session plans with the override, and the caller's
-    session is back at its prior width even when an epoch raises."""
+    """``drain`` scopes its confs across ``start()`` only: the stream's
+    own session plans with the override, while the caller's session is
+    already back at its prior width inside the running epoch, and stays
+    there when the epoch raises."""
     from pyspark.errors import StreamingQueryException
 
     land = str(tmp_path / "landing")
@@ -333,7 +334,7 @@ def test_drain_restores_width_after_a_failing_sink(spark, tmp_path):
     seen = []
 
     def failing_sink(batch, _epoch_id):
-        seen.append(batch.sparkSession.conf.get(key))
+        seen.append((batch.sparkSession.conf.get(key), spark.conf.get(key)))
         raise RuntimeError("injected sink failure")
 
     with pytest.raises(StreamingQueryException, match="injected sink failure"):
@@ -343,7 +344,7 @@ def test_drain_restores_width_after_a_failing_sink(spark, tmp_path):
             failing_sink,
             confs={key: 3},
         )
-    assert seen == ["3"]
+    assert seen == [("3", prior)]
     assert spark.conf.get(key) == prior
 
 
@@ -363,6 +364,54 @@ def test_streaming_package_has_one_drain():
             ):
                 owners.add((path.name, getattr(node, "name", None)))
     assert owners == {("ingest.py", "drain"), ("windows.py", "run_to_memory")}
+
+
+def test_package_has_one_width_rule():
+    """Widths come only from ``session``: no module outside it names the
+    shuffle-width conf, and no function takes a width parameter."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(ingest.__file__).parent.parent
+    literals, params = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and node.value == "spark.sql.shuffle.partitions"
+                and path.name != "session.py"
+            ):
+                literals.append(f"{path.name}:{node.lineno}")
+            if isinstance(node, ast.arg) and node.arg in (
+                "loop_partitions",
+                "shuffle_partitions",
+                "num_partitions",
+            ):
+                params.append(f"{path.name}:{node.lineno}:{node.arg}")
+    assert literals == []
+    assert params == []
+
+
+def test_width_for_is_the_session_width_capped_by_the_scan(spark, tmp_path):
+    """``width_for``: the session width ``S`` for an in-memory frame;
+    ``min(S, max(8, splits))`` for a local parquet scan."""
+    from demo_pgvector_spark.session import scan_splits, scoped_conf, width_for
+
+    key = "spark.sql.shuffle.partitions"
+    mem = spark.range(100)
+    path = str(tmp_path / "p")
+    spark.range(20_000).coalesce(1).write.parquet(path)
+    files = spark.read.parquet(path)
+    for s in (4, 32):
+        with scoped_conf(spark, key, s):
+            assert width_for(mem) == s
+            assert scan_splits(files) == 1
+            assert width_for(files) == min(s, 8)
+            with scoped_conf(spark, "spark.sql.files.maxPartitionBytes", 4096):
+                splits = scan_splits(files)
+                assert splits > 8
+                assert width_for(files) == min(s, splits)
 
 
 def _jobs(spark, fn):
@@ -449,9 +498,18 @@ def test_read_ignores_nullability(spark, tmp_path):
     assert [tuple(r) for r in got] == [(1, [0.5, None])]
 
 
-def test_commit_fsyncs_pointer_then_root(tmp_path, monkeypatch):
-    """``commit_table`` makes its pointer swap durable: the temp pointer
-    file is fsynced before the rename, the table root directory after."""
+@pytest.mark.parametrize(
+    "commit",
+    [
+        ingest.commit_table,
+        lambda df, root: sketches._commit_with_epoch(df, root, 0),
+    ],
+    ids=["commit_table", "countmin_commit"],
+)
+def test_commit_fsyncs_pointer_then_root(tmp_path, monkeypatch, commit):
+    """Both versioned-table commits make their pointer swap durable: the
+    temp pointer file is fsynced before the rename, the table root
+    directory after."""
     import stat
 
     class _Frame:
@@ -459,6 +517,9 @@ def test_commit_fsyncs_pointer_then_root(tmp_path, monkeypatch):
 
         @property
         def write(self):
+            return self
+
+        def coalesce(self, _n):
             return self
 
         def mode(self, _mode):
@@ -477,7 +538,7 @@ def test_commit_fsyncs_pointer_then_root(tmp_path, monkeypatch):
 
     root = str(tmp_path / "t")
     monkeypatch.setattr(os, "fsync", recording_fsync)
-    assert ingest.commit_table(_Frame(), root) == "v000001"
+    assert commit(_Frame(), root) == "v000001"
     # the file is synced while the pointer does not exist yet (before the
     # rename), the directory once it does
     assert synced == [("file", False), ("dir", True)]
