@@ -13,11 +13,13 @@ This module exposes the same three verbs with the same parameters and
 defaults, so switching is a drop-in: Postgres+pgvector becomes a
 directory of the four engine tables (models / sources / source_chunks /
 source_chunk_data) stored as versioned parquet with atomic pointer
-commits (streaming/ingest.py machinery — a crash mid-import leaves the
-previous state visible, the job-level analog of the reference's
-transaction). ``generate_text`` is deterministic up to the byte-exact
-prompt; token sampling itself is the pluggable external LLM sink
-(interfaces.LLMClient), exactly as SURVEY §2.4 scopes it.
+commits (streaming/ingest.py machinery — a crash mid-import leaves
+every table at a committed version and the chunk pair whole, and
+rerunning the import finishes it: the job-level analog of the
+reference's transaction, see ``save_state``). ``generate_text`` is
+deterministic up to the byte-exact prompt; token sampling itself is
+the pluggable external LLM sink (interfaces.LLMClient), exactly as
+SURVEY §2.4 scopes it.
 
 Real files in, real answers out: ``.epub`` goes through the stdlib
 EPUB→text parser (operators/convert.py, no pandoc needed), ``.txt`` /
@@ -28,7 +30,11 @@ reference's examples/ directory.
 
 from __future__ import annotations
 
+import contextlib
+import functools
+import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,22 +54,94 @@ _TABLE_SCHEMAS = {
 }
 
 
+_PAIR = "_PAIR"  # the open chunk pair's base versions (JSON)
+# the allocated chunk batch while the pair is open; no leading "_", which
+# Spark's reader warns about as a hidden path
+_STAGED_CHUNKS = "staged_chunks"
+
+
+def _pair_bases(warehouse: str) -> dict[str, str | None]:
+    """The base versions an unfinished chunk-pair publish recorded, or
+    ``{}`` when no pair is open."""
+    try:
+        with open(os.path.join(warehouse, _PAIR), encoding="utf-8") as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return {}
+
+
 def load_state(spark: SparkSession, warehouse: str) -> dict[str, DataFrame]:
     """The committed warehouse state (all tables empty before the first
-    import — the ``config/init.sql`` analog is just these schemas)."""
-    return {
-        name: ingest.read_table(spark, os.path.join(warehouse, name), schema)
-        for name, schema in _TABLE_SCHEMAS.items()
+    import — the ``config/init.sql`` analog is just these schemas). A
+    table named in ``_PAIR`` is read at its base version, so no reader
+    sees one half of a chunk pair whose publish did not finish."""
+    bases = _pair_bases(warehouse)
+    state = {}
+    for name, schema in _TABLE_SCHEMAS.items():
+        root = os.path.join(warehouse, name)
+        if name in bases:
+            state[name] = ingest.read_table_at(spark, root, schema, bases[name])
+        else:
+            state[name] = ingest.read_table(spark, root, schema)
+    return state
+
+
+def save_state(
+    spark: SparkSession, warehouse: str, name: str, new_rows: DataFrame
+) -> DataFrame:
+    """Commit one table's new rows as its next version and return the
+    committed table, which the next import step reads.
+
+    ``import_doc`` commits in dependency order — models, sources, then
+    the chunk pair (chunks, chunk_data) — each as an add-files delta
+    (``commit_table(delta=True)``: the previous version's files
+    hardlinked, only the new rows written). A crash after the models or
+    the sources commit is repaired by rerunning the import: their
+    upserts find the committed keys and add nothing. The chunk pair is
+    published under ``<warehouse>/_PAIR``, which names both tables'
+    base versions from before the pair's first commit until after its
+    second: ``load_state`` reads those tables at their bases, and
+    ``import_doc`` and ``maintain`` first point them back there
+    (``_repair_pair``), so a rerun allocates chunk ids from the same
+    base and the pair never tears."""
+    root = os.path.join(warehouse, name)
+    ingest.commit_table(new_rows, root, delta=True)
+    return ingest.read_table(spark, root, _TABLE_SCHEMAS[name])
+
+
+def _open_pair(spark: SparkSession, warehouse: str, allocated: DataFrame) -> DataFrame:
+    """Start the chunk-pair publish: record both tables' base versions
+    in ``_PAIR``, then write the allocated chunk batch once to the
+    staging directory and read it back with its own schema — the frame
+    both halves of the pair project, so chunking, embedding and id
+    allocation run once."""
+    bases = {
+        n: ingest.current_version(os.path.join(warehouse, n))
+        for n in ("chunks", "chunk_data")
     }
+    ingest.write_atomic(os.path.join(warehouse, _PAIR), json.dumps(bases))
+    staged = os.path.join(warehouse, _STAGED_CHUNKS)
+    allocated.write.mode("overwrite").parquet(staged)
+    return spark.read.schema(allocated.schema).parquet(staged)
 
 
-def save_state(state: dict[str, DataFrame], warehouse: str) -> None:
-    """Commit every table as a new version behind its pointer. Tables
-    commit independently; the import recomputes from committed inputs,
-    so a crash between table commits is repaired by rerunning the
-    (idempotent) import."""
-    for name in _TABLE_SCHEMAS:
-        ingest.commit_table(state[name], os.path.join(warehouse, name))
+def _close_pair(warehouse: str) -> None:
+    """End the chunk-pair publish: drop ``_PAIR`` and the staged batch."""
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(os.path.join(warehouse, _PAIR))
+    shutil.rmtree(os.path.join(warehouse, _STAGED_CHUNKS), ignore_errors=True)
+
+
+def _repair_pair(warehouse: str) -> None:
+    """Undo an unfinished chunk-pair publish: point each table ``_PAIR``
+    names back at its base version, then close the pair. A no-op when
+    no pair is open; a crash inside it leaves ``_PAIR`` for the next
+    repair."""
+    for name, base in _pair_bases(warehouse).items():
+        root = os.path.join(warehouse, name)
+        if ingest.current_version(root) != base:
+            ingest.publish_version(root, base)
+    _close_pair(warehouse)
 
 
 def _read_files(spark: SparkSession, files: list[str]) -> DataFrame:
@@ -111,11 +189,13 @@ def import_doc(
 ) -> dict[str, DataFrame]:
     """``inv import.doc-file`` / cli/import_doc.py: convert each file,
     join its ``.meta.yml`` sidecar when present, upsert the model and
-    source dimensions, chunk, embed, append — then commit.
+    source dimensions, chunk, embed, append — committing each table as
+    it is computed (``save_state``), in one pass over the files.
     ``tokenizer="bpe"`` budgets chunks by real learned BPE token counts
     (the reference's tokenizer-driven chunker shape)."""
     if not files:
         return load_state(spark, warehouse)
+    _repair_pair(warehouse)
     frame = _read_files(spark, files)
     side_paths = [f + ".meta.yml" for f in files if os.path.exists(f + ".meta.yml")]
     sidecars = (
@@ -135,8 +215,10 @@ def import_doc(
         model_name=model,
         max_tokens=max_tokens,
         tokenizer=tokenizer,
+        commit=functools.partial(save_state, spark, warehouse),
+        stage=functools.partial(_open_pair, spark, warehouse),
     )
-    save_state(state, warehouse)
+    _close_pair(warehouse)
     return state
 
 
@@ -262,7 +344,10 @@ def maintain(
     history beyond ``keep_versions``. Returns per-table
     (new version, file count, deleted versions). Safe while readers
     run — compaction commits a fresh version atomically and vacuum
-    only removes versions strictly older than the retained window."""
+    only removes versions strictly older than the retained window. A
+    chunk pair an interrupted import left open is rolled back first
+    (``_repair_pair``), so compaction never publishes half of it."""
+    _repair_pair(warehouse)
     out: dict[str, tuple[str, int, list[str]]] = {}
     for name, schema in _TABLE_SCHEMAS.items():
         root = os.path.join(warehouse, name)

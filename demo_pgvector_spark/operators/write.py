@@ -37,7 +37,7 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 import functools
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -161,35 +161,47 @@ def append_chunks(
     batch: DataFrame,
     id_col: str = "id",
     order_by: Sequence[str] = ("source_id", "chunk_number"),
+    stage: Callable[[DataFrame], DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The two-table chunk insert (src/lib/database.py:217-280) as one
     lineage: allocate a shared chunk id per batch row, then project the
     vector row (``source_chunks``) and the payload row
     (``source_chunk_data``) from the same allocated frame.
 
-    ``batch`` columns: source_id, model_id, embedding, metadata (JSON
-    string), chunk_text, plus the ``order_by`` columns that make id
-    allocation deterministic. Atomicity is the Parquet job-level
-    all-or-nothing commit instead of a DB transaction.
+    ``batch`` columns: source_id, model_id, embedding, metadata,
+    chunk_text, plus the ``order_by`` columns that make id allocation
+    deterministic. Atomicity is the Parquet job-level all-or-nothing
+    commit instead of a DB transaction.
 
-    ``order_by`` MUST be a TOTAL order over the batch (no ties). The two
-    returned tables are independently-executed projections of the same
-    window: under a tied order, re-execution may rank tied rows
-    differently per action, pairing one chunk's embedding with another
-    chunk's text and making ids nondeterministic across reruns. Callers
-    with multiple documents per source must include the document key —
-    see pipeline.import_documents, which orders by
+    ``stage``, when given, receives the allocated frame (id, source_id,
+    model_id, embedding, metadata, chunk_text) and returns a
+    materialised copy of it — pipeline.import_documents passes a staged
+    parquet write read back — so both projections read those rows and
+    the batch's lineage and the allocation window run once.
+
+    ``order_by`` MUST be a TOTAL order over the batch (no ties): under a
+    tied order, re-execution may rank tied rows differently, making ids
+    nondeterministic across reruns and — without ``stage``, where the
+    two returned tables are independently-executed projections of the
+    window — pairing one chunk's embedding with another chunk's text.
+    Callers with multiple documents per source must include the
+    document key — see pipeline.import_documents, which orders by
     (source_id, doc_id, chunk_number).
     """
     max_id = existing_chunks.agg(
         F.coalesce(F.max(id_col), F.lit(0)).cast("long").alias("_max_id")
     )
     w = Window.orderBy(*[F.col(c).asc_nulls_first() for c in order_by])
-    allocated = (
-        batch.crossJoin(F.broadcast(max_id))
-        .withColumn(id_col, (F.col("_max_id") + F.row_number().over(w)).cast("long"))
-        .drop("_max_id")
+    allocated = batch.crossJoin(F.broadcast(max_id)).select(
+        (F.col("_max_id") + F.row_number().over(w)).cast("long").alias(id_col),
+        "source_id",
+        "model_id",
+        "embedding",
+        "metadata",
+        "chunk_text",
     )
+    if stage is not None:
+        allocated = stage(allocated)
     chunks = allocated.select(id_col, "source_id", "model_id", "embedding")
     chunk_data = allocated.select(
         F.col(id_col).alias("chunk_id"), "metadata", "chunk_text"

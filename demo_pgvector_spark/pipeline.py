@@ -13,13 +13,17 @@ with a DB round-trip each, cli/import_doc.py:48-73).
     chunk + enrich → hash-embed each chunk → two-table chunk append
 
 Every stage is one of the tested operators; this module only wires
-them. All tables are plain DataFrames in and out — callers persist with
-``convert.write_partitioned`` (or any sink) between runs. Re-running an
-import of the same corpus is a no-op for the dimension tables
-(anti-join upserts) — proven in tests/test_pipeline_e2e.py.
+them. Each table's NEW rows go to a ``commit`` callable in dependency
+order (models → sources → the chunk pair), and the next step reads what
+it returns: in memory by default, a versioned add-files commit in
+cli.import_doc. Re-running an import of the same corpus is a no-op for
+the dimension tables (anti-join upserts) — proven in
+tests/test_pipeline_e2e.py.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,10 +59,21 @@ def import_documents(
     model_name: str = DEFAULT_MODEL_NAME,
     max_tokens: int = 32,
     tokenizer: str = "words",
+    commit: Callable[[str, DataFrame], DataFrame] | None = None,
+    stage: Callable[[DataFrame], DataFrame] | None = None,
 ) -> dict[str, DataFrame]:
     """Batch import. ``files``: (doc_id, filepath, text); ``sidecars``:
     (filepath, author, title, genre, text_type, publication_date) — the
     ``*.meta.yml`` analog. Returns the four updated tables.
+
+    Each table's new rows only are computed in dependency order —
+    models, sources, chunks, chunk_data — and handed to
+    ``commit(name, new_rows)``, which returns the table the next step
+    reads, so a later step never re-derives an earlier one. The default
+    appends in memory (``state[name].unionByName(new_rows)``);
+    cli.import_doc passes a versioned add-files commit. ``stage``, when
+    given, materialises the allocated chunk batch once before its two
+    projections (``write.append_chunks``).
 
     ``tokenizer``: ``"words"`` budgets chunks by whitespace words (the
     deterministic stand-in); ``"bpe"`` budgets by REAL learned BPE token
@@ -68,6 +83,10 @@ def import_documents(
     cost their post-merge symbol count (upper-bounded by length), exactly
     how real BPE prices OOV text.
     """
+    if commit is None:
+        def commit(name: str, new_rows: DataFrame) -> DataFrame:
+            return state[name].unionByName(new_rows)
+
     kept = ingest.ingestion_ready(files)  # route; rejected rows dropped (Q6 side output available)
 
     docs = kept.join(F.broadcast(sidecars), "filepath", "left")
@@ -76,7 +95,9 @@ def import_documents(
     incoming_model = spark.createDataFrame(
         [(model_name, EMBEDDING_DIM)], "name string, embedding_dim int"
     )
-    models = write.upsert_models(state["models"], incoming_model)
+    models = commit(
+        "models", write.upsert_allocated(state["models"], incoming_model, keys=["name"])
+    )
     model_id = F.broadcast(
         models.filter(F.col("name") == model_name).select(
             F.col("id").alias("model_id")
@@ -99,7 +120,12 @@ def import_documents(
             "model_id",
         )
     )
-    sources = write.upsert_sources(state["sources"], src_batch)
+    sources = commit(
+        "sources",
+        write.upsert_allocated(
+            state["sources"], src_batch, keys=list(write.SOURCE_UNIQUE_KEYS)
+        ),
+    )
 
     # resolve each doc's source_id through the upserted dimension
     doc_sources = docs.crossJoin(model_id).withColumn(
@@ -152,32 +178,32 @@ def import_documents(
     batch = chunks.select(
         "source_id",
         "model_id",
-        emb_fns.hash_embed(F.col("chunk_text")).alias("embedding"),
-        F.to_json("metadata").alias("metadata"),
+        # storage types: embeddings are float32 (init.sql vector type),
+        # chunk_data.metadata is map<string,string>
+        emb_fns.hash_embed(F.col("chunk_text")).cast("array<float>").alias("embedding"),
+        F.from_json(F.to_json("metadata"), "map<string,string>").alias("metadata"),
         "chunk_text",
         "doc_id",
         "chunk_number",
     )
     # (source_id, doc_id, chunk_number) is a TOTAL order over the batch:
     # two documents upserted into the same source tie on
-    # (source_id, chunk_number) alone, and a tied order would let the two
-    # separately-executed projections of the allocation window (chunks /
-    # chunk_data) disagree on which row got which id — silently pairing
-    # one chunk's embedding with another's text.
+    # (source_id, chunk_number) alone, and a tied order would let a rerun
+    # allocate different ids — and, without ``stage``, let the two
+    # separately-executed projections of the allocation window disagree
+    # on which row got which id.
     new_chunks, new_chunk_data = write.append_chunks(
-        state["chunks"], batch, order_by=("source_id", "doc_id", "chunk_number")
+        state["chunks"],
+        batch,
+        order_by=("source_id", "doc_id", "chunk_number"),
+        stage=stage,
     )
-    # metadata contract: chunk_data.metadata is map<string,string>
-    new_chunk_data = new_chunk_data.withColumn(
-        "metadata", F.from_json("metadata", "map<string,string>")
-    )
-    chunk_data = state["chunk_data"].select("chunk_id", "metadata", "chunk_text").unionByName(
-        new_chunk_data
-    ).withColumn("id", F.col("chunk_id")).select("id", "chunk_id", "metadata", "chunk_text")
-    all_chunks = state["chunks"].unionByName(
-        new_chunks.withColumn(
-            "embedding", F.col("embedding").cast("array<float>")
-        )
+    all_chunks = commit("chunks", new_chunks)
+    chunk_data = commit(
+        "chunk_data",
+        new_chunk_data.select(
+            F.col("chunk_id").alias("id"), "chunk_id", "metadata", "chunk_text"
+        ),
     )
     return {
         "models": models,

@@ -96,27 +96,42 @@ def read_table(
     return _read_version(spark, os.path.join(root, v), schema_ddl)
 
 
+def write_atomic(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` so that a crash leaves the old or
+    the new content, never a mix, and a power loss cannot undo it once
+    this returns: a temp file beside it is written and fsynced,
+    ``os.replace``d over ``path``, and the directory fsynced."""
+    parent, name = os.path.split(path)
+    tmp = os.path.join(parent, f".{name}.tmp")
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+    dir_fd = os.open(parent, os.O_RDONLY)
+    try:
+        os.fsync(dir_fd)
+    finally:
+        os.close(dir_fd)
+
+
+def publish_version(root: str, version: str | None) -> None:
+    """Point ``root``'s ``_CURRENT`` at ``version`` (``write_atomic``).
+    ``None`` is the state before the first commit: readers see the
+    empty table and the next commit writes ``v000001``."""
+    write_atomic(os.path.join(root, _POINTER), version or "")
+
+
 @contextlib.contextmanager
 def _next_version(root: str):
     """Yield ``(current version, next version's directory)`` for the
-    block to write, then publish the next version: the pointer's temp
-    file is written and fsynced, ``os.replace``d over ``_CURRENT``, and
-    the root directory fsynced. A block that raises publishes nothing."""
+    block to write, then publish the next version. A block that raises
+    publishes nothing."""
     v = current_version(root)
     nxt = f"v{(int(v[1:]) + 1) if v else 1:06d}"
     os.makedirs(root, exist_ok=True)
     yield v, os.path.join(root, nxt)
-    tmp = os.path.join(root, f".{_POINTER}.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(nxt)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(root, _POINTER))
-    root_fd = os.open(root, os.O_RDONLY)
-    try:
-        os.fsync(root_fd)
-    finally:
-        os.close(root_fd)
+    publish_version(root, nxt)
 
 
 def commit_table(
@@ -369,15 +384,21 @@ def vacuum_versions(root: str, keep: int = 2) -> list[str]:
 
 
 def read_table_at(
-    spark: SparkSession, root: str, schema_ddl: str | StructType, version: str
+    spark: SparkSession,
+    root: str,
+    schema_ddl: str | StructType,
+    version: str | None,
 ) -> DataFrame:
     """Time-travel read: the table as of a specific committed version
-    (any directory still retained by ``vacuum_versions``). Versions are
+    (any directory still retained by ``vacuum_versions``; ``None``, the
+    state before the first commit, is the empty frame). Versions are
     immutable once the pointer has moved past them, so this is a
     consistent snapshot — the rollback/debug/reproducibility half of
     the versioned-table contract (Delta/Iceberg ``VERSION AS OF``).
     Read like ``read_table``: with the declared schema behind the same
     footer check, so planning it launches no Spark job."""
+    if version is None:
+        return spark.createDataFrame([], schema_ddl)
     if version not in list_versions(root):
         raise ValueError(
             f"version {version!r} not present under {root}; "

@@ -1,6 +1,7 @@
 """The three-command user surface (cli.py) — the reference's
 tasks.py example.load_and_query_1 as separate invocations against a
-persistent warehouse, on the reference's own example corpus.
+persistent warehouse, on the reference's own example corpus (or, where
+it is absent, five generated EPUBs of the same shape).
 
 Each command call reloads state from disk (load_state), exactly like
 the reference's CLI processes reconnecting to Postgres — nothing is
@@ -10,7 +11,10 @@ carried in memory between verbs.
 from __future__ import annotations
 
 import glob
+import io
 import os
+import random
+import zipfile
 
 import pytest
 
@@ -18,15 +22,79 @@ from demo_pgvector_spark import cli
 
 EXAMPLES = "/root/reference/examples"
 
-needs_examples = pytest.mark.skipif(
-    not os.path.isdir(EXAMPLES), reason="reference examples not present"
-)
+# stand-in corpus: five books of BOOK_WORDS words each, so two books make
+# more than 40 chunks at import_doc's default 256-word budget
+BOOK_WORDS = 6200
+VOCAB = (
+    "the a of and to in that it was he she they machines robots build "
+    "themselves rise up city war world ruins soldiers claws tunnel bunker "
+    "radio signal school tomorrow together arise factory metal steel wire "
+    "engine light dark night morning cold wind dust road river bridge tower "
+    "voice silence memory story letter captain major scott hendricks moon "
+    "earth sky ship orbit base camp forest field stone glass fire water "
+    "hand eye face door window wall floor roof house street market child "
+    "woman man old young long short slow fast first last every never always"
+).split()
 
 
-@needs_examples
-def test_import_search_generate_roundtrip(spark, tmp_path):
+def _epub_bytes(title: str, paragraphs: list[str]) -> bytes:
+    """A minimal valid EPUB: stored ``mimetype``, container.xml, an OPF
+    package with one spine item, and one XHTML chapter (the same builder
+    as perfbench/gen.py, which tests do not import)."""
+    container = (
+        '<?xml version="1.0"?>'
+        '<container version="1.0" xmlns="urn:oasis:names:tc:opendocument:xmlns:container">'
+        '<rootfiles><rootfile full-path="OEBPS/content.opf" '
+        'media-type="application/oebps-package+xml"/></rootfiles></container>'
+    )
+    opf = (
+        '<?xml version="1.0"?>'
+        '<package xmlns="http://www.idpf.org/2007/opf" version="3.0">'
+        f"<metadata><title>{title}</title></metadata>"
+        '<manifest><item id="c1" href="c1.xhtml" media-type="application/xhtml+xml"/></manifest>'
+        '<spine><itemref idref="c1"/></spine></package>'
+    )
+    body = "".join(f"<p>{p}</p>" for p in paragraphs)
+    xhtml = (
+        '<?xml version="1.0"?><html xmlns="http://www.w3.org/1999/xhtml">'
+        f"<head><title>{title}</title></head><body>{body}</body></html>"
+    )
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
+        z.writestr(zipfile.ZipInfo("mimetype"), "application/epub+zip")
+        z.writestr("META-INF/container.xml", container)
+        z.writestr("OEBPS/content.opf", opf)
+        z.writestr("OEBPS/c1.xhtml", xhtml)
+    return buf.getvalue()
+
+
+def _write_book(path: str, i: int, words: int) -> str:
+    """Book ``i``: ``words`` seeded words in one paragraph (paragraph
+    breaks would end up inside word tokens) plus its ``.meta.yml``."""
+    rng = random.Random(i)
+    text = " ".join(rng.choice(VOCAB) for _ in range(words))
+    with open(path, "wb") as fh:
+        fh.write(_epub_bytes(f"Book {i}", [text]))
+    with open(path + ".meta.yml", "w", encoding="utf-8") as fh:
+        fh.write(
+            f"author: Author {i}\ntitle: Book {i}\ntext_type: novel\n"
+            f'genre: science fiction\npublication_date: "{1950 + i}-01-01"\n'
+        )
+    return path
+
+
+@pytest.fixture(scope="module")
+def books(tmp_path_factory) -> list[str]:
+    """The reference's five example EPUBs (with their sidecars) when
+    present, else five generated ones of the same shape."""
+    if os.path.isdir(EXAMPLES):
+        return sorted(glob.glob(f"{EXAMPLES}/*.epub"))
+    d = tmp_path_factory.mktemp("books")
+    return [_write_book(str(d / f"book{i}.epub"), i, BOOK_WORDS) for i in range(5)]
+
+
+def test_import_search_generate_roundtrip(spark, tmp_path, books):
     wh = str(tmp_path / "warehouse")
-    books = sorted(glob.glob(f"{EXAMPLES}/*.epub"))
 
     # invocation 1: import two books
     cli.import_doc(spark, wh, books[:2])
@@ -174,15 +242,13 @@ def test_mix_verb_rebalances_domains(spark, tmp_path):
     assert sorted(r.doc_id for r in again.collect()) == first_ids
 
 
-@needs_examples
-def test_maintain_verb_compacts_and_vacuums(spark, tmp_path):
+def test_maintain_verb_compacts_and_vacuums(spark, tmp_path, books):
     """After two imports the warehouse holds multiple versions per
     table; maintain compacts each to one file and prunes history,
     leaving query results unchanged."""
     from demo_pgvector_spark import cli
     from demo_pgvector_spark.streaming import ingest
 
-    books = sorted(glob.glob(f"{EXAMPLES}/*.epub"))
     wh = str(tmp_path / "wh")
     cli.import_doc(spark, wh, books[:1])
     cli.import_doc(spark, wh, books[1:2])
@@ -200,6 +266,114 @@ def test_maintain_verb_compacts_and_vacuums(spark, tmp_path):
         for n, df in cli.load_state(spark, wh).items()
     }
     assert after == before
+
+
+@pytest.fixture(scope="module")
+def small_books(tmp_path_factory) -> list[str]:
+    """Three generated EPUBs of three chunks each: the first import's
+    one, then the second import's two."""
+    d = tmp_path_factory.mktemp("small_books")
+    return [_write_book(str(d / f"b{i}.epub"), 10 + i, 600) for i in range(3)]
+
+
+def _tables(spark, wh: str) -> dict[str, list[tuple]]:
+    return {
+        n: sorted(tuple(r) for r in df.collect())
+        for n, df in cli.load_state(spark, wh).items()
+    }
+
+
+@pytest.fixture(scope="module")
+def clean_import(spark, tmp_path_factory, small_books) -> dict[str, list[tuple]]:
+    wh = str(tmp_path_factory.mktemp("clean") / "wh")
+    cli.import_doc(spark, wh, small_books[:1])
+    cli.import_doc(spark, wh, small_books[1:])
+    return _tables(spark, wh)
+
+
+@pytest.mark.parametrize("boundary", ["models", "sources", "chunks"])
+def test_import_rerun_repairs_a_crash_between_the_commits(
+    spark, tmp_path, monkeypatch, small_books, clean_import, boundary
+):
+    """A second import crashes right after its ``boundary`` table
+    commits. A reader before the rerun sees a whole chunk pair, and
+    rerunning the same import gives the four tables of a clean run and
+    leaves only the table roots in the warehouse."""
+    from demo_pgvector_spark.streaming import ingest
+
+    wh = str(tmp_path / "wh")
+    cli.import_doc(spark, wh, small_books[:1])
+    real = ingest.commit_table
+
+    def crash_after(df, root, *args, **kwargs):
+        v = real(df, root, *args, **kwargs)
+        if os.path.basename(root) == boundary:
+            raise RuntimeError(f"injected crash after the {boundary} commit")
+        return v
+
+    monkeypatch.setattr(ingest, "commit_table", crash_after)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        cli.import_doc(spark, wh, small_books[1:])
+    monkeypatch.setattr(ingest, "commit_table", real)
+
+    st = cli.load_state(spark, wh)
+    assert {r["id"] for r in st["chunks"].select("id").collect()} == {
+        r["chunk_id"] for r in st["chunk_data"].select("chunk_id").collect()
+    }
+    cli.import_doc(spark, wh, small_books[1:])
+    assert _tables(spark, wh) == clean_import
+    assert sorted(os.listdir(wh)) == sorted(cli._TABLE_SCHEMAS)
+
+
+def test_second_import_links_the_old_files_and_writes_only_its_rows(
+    spark, tmp_path, monkeypatch, small_books
+):
+    """The chunk pair commits add files: after a second import each
+    pair table's version holds every file of the one before as a
+    hardlink, its other files hold exactly the new rows, and each pair
+    commit is one Spark job (a write of the staged batch — the import
+    lineage does not run again)."""
+    import pyarrow.parquet as pq
+
+    from demo_pgvector_spark.streaming import ingest
+
+    wh = str(tmp_path / "wh")
+    cli.import_doc(spark, wh, small_books[:1])
+    before = {r["id"] for r in cli.load_state(spark, wh)["chunks"].collect()}
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    real, jobs = ingest.commit_table, {}
+
+    def counted(df, root, *args, **kwargs):
+        first = sched.nextJobId()
+        v = real(df, root, *args, **kwargs)
+        jobs[os.path.basename(root)] = sched.nextJobId() - first
+        return v
+
+    monkeypatch.setattr(ingest, "commit_table", counted)
+    cli.import_doc(spark, wh, small_books[1:])
+    assert jobs["chunks"] == jobs["chunk_data"] == 1
+    assert sorted(os.listdir(wh)) == sorted(cli._TABLE_SCHEMAS)
+
+    after = {r["id"] for r in cli.load_state(spark, wh)["chunks"].collect()}
+    added = sorted(after - before)
+    assert before and len(added) == 6  # two books of three chunks
+    for name, id_col in (("chunks", "id"), ("chunk_data", "chunk_id")):
+        root = os.path.join(wh, name)
+        prev, cur = (os.path.join(root, v) for v in ingest.list_versions(root)[-2:])
+        assert ingest.current_version(root) == os.path.basename(cur)
+
+        def inodes(d):
+            return {
+                f: os.stat(os.path.join(d, f)).st_ino
+                for f in os.listdir(d) if f.endswith(".parquet")
+            }
+
+        old, now = inodes(prev), inodes(cur)
+        assert old and all(now.get(f) == ino for f, ino in old.items())
+        fresh = [os.path.join(cur, f) for f in now if f not in old]
+        ids = [i for f in fresh for i in pq.read_table(f, columns=[id_col])[id_col].to_pylist()]
+        assert sorted(ids) == added
 
 
 def test_quality_filter_verb_scores_and_keeps(spark, tmp_path):
