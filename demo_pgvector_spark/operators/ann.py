@@ -43,6 +43,8 @@ DuckDB's list_dot_product agree on every sign.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -107,6 +109,97 @@ def with_signatures(
             for t in range(planes.shape[0])
         }
     )
+
+
+def bucket_rows(
+    df: DataFrame,
+    keys: Sequence[Column],
+    keep: Sequence[str],
+    names: tuple[str, str] = ("t", "sig"),
+    bands: Sequence[int] | None = None,
+) -> DataFrame:
+    """Bucket membership rows: one row per (row of ``df``, key) holding
+    the ``keep`` columns plus ``names`` = (band, key) — band ``i`` for
+    ``keys[i]``, or ``bands[i]`` when one band lists several keys (a
+    multiprobe). One ``explode`` of an array of structs, in codegen: the
+    candidate-generation side of every banded operator (LSH tables,
+    minhash bands, fingerprint bands)."""
+    band, key = names
+    bands = range(len(keys)) if bands is None else bands
+    entries = F.array(
+        *[F.struct(F.lit(b).alias(band), k.alias(key)) for b, k in zip(bands, keys)]
+    )
+    return df.select(*keep, F.explode(entries).alias("_bk")).select(
+        *keep, f"_bk.{band}", f"_bk.{key}"
+    )
+
+
+def signature_rows(
+    df: DataFrame, planes: np.ndarray, keep: Sequence[str], vec_col: str = "embedding"
+) -> DataFrame:
+    """(keep..., t, sig): ``df``'s bucket membership rows, one per hash
+    table of ``planes`` (``with_signatures`` then ``bucket_rows``)."""
+    sigs = with_signatures(df, planes, vec_col)
+    return bucket_rows(sigs, [F.col(f"sig_{t}") for t in range(planes.shape[0])], keep)
+
+
+def bucket_pairs(
+    left: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    on: Sequence[str] = ("t", "sig"),
+    id_col: str = "vec_id",
+    ids: tuple[str, str] = ("id_a", "id_b"),
+    payload: Sequence[str] = (),
+    order: str = "<",
+    group_payload: bool = False,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Candidate pairs of rows that share a bucket: the bucket rows
+    (``bucket_rows``) of ``left`` and ``right`` — default ``left``, the
+    self-join — equi-joined on the bucket columns ``on`` (never a cross
+    product), then deduplicated, since a pair meets once per shared
+    bucket. Output: ``ids`` = (a, b), then each ``payload`` column ``c``
+    of both sides as ``c_a`` and ``c_b``.
+
+    ``order`` picks the pairs kept: ``"<"`` keeps a < b, each unordered
+    pair once; ``"!="`` keeps both directions (directed links);
+    ``"sorted"`` keeps a != b and reports it as (least, greatest) — a
+    batch joined to a corpus, where either side may hold the smaller id
+    (the payload stays with its side, so a verify on it must be
+    symmetric).
+
+    The dedup groups on the id pair and carries the payload, which suits
+    a wide payload (vectors). ``group_payload=True`` groups on the
+    payload too: a payload is a function of its row's id, so the rows
+    are the same, but a verify filter on a narrow payload (fingerprint
+    halves) then pushes below the dedup into the join.
+
+    ``max_bucket_size`` drops every bucket of ``right`` holding more
+    rows — the boilerplate guard, since a bucket of B rows yields
+    B·(B-1)/2 pairs — by one size aggregate joined back on ``on``."""
+    on = list(on)
+    self_join = right is None
+    right = left if self_join else right
+    if max_bucket_size is not None:
+        sizes = right.groupBy(*on).agg(F.count(F.lit(1)).alias("_bsize"))
+        right = right.join(sizes.where(F.col("_bsize") <= max_bucket_size), on)
+        right = right.drop("_bsize")
+        left = right if self_join else left
+    ia, ib = ids
+    a = left.select(*on, F.col(id_col).alias(ia), *[F.col(c).alias(f"{c}_a") for c in payload])
+    b = right.select(*on, F.col(id_col).alias(ib), *[F.col(c).alias(f"{c}_b") for c in payload])
+    carried = [f"{c}_{side}" for side in "ab" for c in payload]
+    pairs = a.join(b, on).where(
+        F.col(ia) < F.col(ib) if order == "<" else F.col(ia) != F.col(ib)
+    )
+    if order == "sorted":
+        pairs = pairs.select(
+            F.least(ia, ib).alias(ia), F.greatest(ia, ib).alias(ib), *carried
+        )
+    else:
+        pairs = pairs.select(ia, ib, *carried)
+    return pairs.distinct() if group_payload else pairs.dropDuplicates([ia, ib])
 
 
 def probe_signatures(qvec: list[float], planes: np.ndarray) -> list[int]:
@@ -217,30 +310,18 @@ def ann_join(
         planes = hyperplanes(dim)
     tables_n, bits = planes.shape[0], planes.shape[1]
 
-    sigs = with_signatures(vectors, planes, vec_col)
-    sig_entries = F.array(
-        *[
-            F.struct(F.lit(t).alias("t"), F.col(f"sig_{t}").alias("sig"))
-            for t in range(tables_n)
-        ]
-    )
-    vec_buckets = sigs.select(
-        F.col(id_col), F.col(vec_col), F.explode(sig_entries).alias("b")
-    ).select(id_col, vec_col, F.col("b.t").alias("t"), F.col("b.sig").alias("sig"))
-
-    probe_sigs = with_signatures(probes, planes, probe_vec)
-    bucket_entries = []
+    vec_buckets = signature_rows(vectors, planes, [id_col, vec_col], vec_col)
+    flips = bits if hamming >= 1 else 0
+    probe_keys = []
     for t in range(tables_n):
         base = F.col(f"sig_{t}")
-        buckets = [base] + (
-            [base.bitwiseXOR(F.lit(1 << j)) for j in range(bits)] if hamming >= 1 else []
-        )
-        bucket_entries += [
-            F.struct(F.lit(t).alias("t"), b.alias("sig")) for b in buckets
-        ]
-    probe_buckets = probe_sigs.select(
-        F.col(probe_id), F.col(probe_vec), F.explode(F.array(*bucket_entries)).alias("b")
-    ).select(probe_id, probe_vec, F.col("b.t").alias("t"), F.col("b.sig").alias("sig"))
+        probe_keys += [base] + [base.bitwiseXOR(F.lit(1 << j)) for j in range(flips)]
+    probe_buckets = bucket_rows(
+        with_signatures(probes, planes, probe_vec),
+        probe_keys,
+        [probe_id, probe_vec],
+        bands=[t for t in range(tables_n) for _ in range(1 + flips)],
+    )
 
     cand = (
         vec_buckets.join(F.broadcast(probe_buckets), ["t", "sig"], "inner")
@@ -1076,30 +1157,6 @@ def bq_topk(
     return rescored.orderBy(F.desc("bq_score"), F.asc(id_col)).limit(top_k)
 
 
-def _sw_entries(
-    df: DataFrame,
-    coarse: np.ndarray,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(id, t, sig) bucket membership rows — codegen signatures, then
-    one explode; vectors deliberately left behind (bare ids travel
-    through the bucket join and dedup shuffles)."""
-    sigs = with_signatures(df, coarse, vec_col)
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("t"), F.col(f"sig_{t}").alias("sig")
-            )
-            for t in range(coarse.shape[0])
-        ]
-    )
-    return sigs.select(
-        F.col(id_col),
-        F.explode(entries).alias("e"),
-    ).select(id_col, F.col("e.t").alias("t"), F.col("e.sig").alias("sig"))
-
-
 def _sw_topm(
     pairs: DataFrame,
     emb: DataFrame,
@@ -1168,14 +1225,9 @@ def smallworld_build(
     # (two id equi-joins the optimizer is free to broadcast at test
     # scale and shuffle-on-id at cluster scale) - shuffling ~pair-count
     # x 1 KB of vector payload twice was the build's dominant cost.
-    exploded = _sw_entries(emb, coarse, id_col, vec_col)
-    a = exploded.select("t", "sig", F.col(id_col).alias("src"))
-    b = exploded.select("t", "sig", F.col(id_col).alias("dst"))
-    pairs = (
-        a.join(b, ["t", "sig"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .dropDuplicates(["src", "dst"])
+    pairs = bucket_pairs(
+        signature_rows(emb, coarse, [id_col], vec_col),
+        id_col=id_col, ids=("src", "dst"), order="!=",
     )
     return _sw_topm(pairs, emb, m, id_col, vec_col)
 
@@ -1194,7 +1246,7 @@ def smallworld_base_entries(
     via ``smallworld_append(base_entries=...)`` is bit-identical to
     letting each call re-derive it, it just stops E epochs from paying
     E signature scans over the never-changing base corpus."""
-    return _sw_entries(emb_base, planes[:, :coarse_bits, :], id_col, vec_col)
+    return signature_rows(emb_base, planes[:, :coarse_bits, :], [id_col], vec_col)
 
 
 def smallworld_append(
@@ -1239,22 +1291,17 @@ def smallworld_append(
     set-distinct candidate unions)."""
     coarse = planes[:, :coarse_bits, :]
     grown = emb_base.unionByName(emb_batch)
-    batch_e = _sw_entries(emb_batch, coarse, id_col, vec_col)
+    batch_e = signature_rows(emb_batch, coarse, [id_col], vec_col)
     # entries(grown) == entries(base) ∪ entries(batch) row for row
     # (the signature is per-node); a caller looping appends against a
     # static base passes its entries once instead of re-banding the
     # corpus every call.
     if base_entries is None:
-        all_e = _sw_entries(grown, coarse, id_col, vec_col)
+        all_e = signature_rows(grown, coarse, [id_col], vec_col)
     else:
         all_e = base_entries.unionByName(batch_e)
-    a = batch_e.select("t", "sig", F.col(id_col).alias("src"))
-    b = all_e.select("t", "sig", F.col(id_col).alias("dst"))
-    pairs = (
-        a.join(b, ["t", "sig"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .dropDuplicates(["src", "dst"])
+    pairs = bucket_pairs(
+        batch_e, all_e, id_col=id_col, ids=("src", "dst"), order="!="
     )
     fwd = _sw_topm(pairs, grown, m, id_col, vec_col)
     if not backlinks:

@@ -7,7 +7,7 @@ Six operators, all pure Catalyst expressions (no Python in any row path):
 - exact_dedup        — content-hash groupBy; keeper = min id per hash.
 - minhash_signatures — k-word shingles → H minhashes via universal
                        hashing over an md5-derived 32-bit base.
-- minhash_pairs      — banded-LSH candidate pairs (bucket self-join — no
+- minhash_pairs      — banded-LSH candidate pairs (bucket aggregate — no
                        all-pairs product) + exact shingle-Jaccard verify.
 - simhash            — 32-bit SimHash: per-token hash bit votes,
                        partial-aggregable (map-side combine).
@@ -29,11 +29,21 @@ Scale notes (100 TB posture):
 - exact_dedup and simhash are single hash-partitioned aggregations with
   map-side partial combine; no skew beyond genuine heavy-hitter dupes.
 - minhash_pairs shuffles (doc, band-key) rows — H/r keys per doc — then
-  self-joins per bucket. Bucket sizes are bounded by real duplicate
-  clusters, not table size; pathological buckets (e.g. boilerplate) are
-  the classic salting candidates and would be capped with a per-bucket
-  limit before pairing.
-- embedding_pairs joins on (table, signature) buckets — same shape.
+  enumerates each bucket's pairs from one collected id array. Bucket
+  sizes are bounded by real duplicate clusters, not table size;
+  pathological buckets (e.g. boilerplate) are the classic salting
+  candidates and are capped by ``max_bucket_size`` before pairing.
+- embedding_pairs self-joins on (table, signature) buckets, carrying
+  the vectors to the cosine verify.
+
+Candidate-then-verify machinery, shared with multimodal.py and ann.py:
+bucket rows come from ``ann.bucket_rows``; pairs from the bucket
+aggregate ``_bucket_id_pairs`` (id-only text buckets — minhash_pairs and
+the within-batch half of minhash_pairs_incremental, where it measured
+faster than a self-join in round 4) or from the ``ann.bucket_pairs``
+self-join (buckets carrying fingerprints or vectors, batch-vs-corpus
+crosses, the small-world build); text pairs are verified by
+``_with_both_shingles``.
 """
 
 from __future__ import annotations
@@ -121,23 +131,59 @@ def minhash_signatures(
     )
 
 
-def _band_keys(mh_col: str = "minhash") -> F.Column:
-    """Array of (band, key) structs: key = the band's r minhashes joined."""
-    bands = NUM_HASHES // BAND_R
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "_",
-                    *[
-                        F.col(mh_col).getItem(b * BAND_R + r).cast("string")
-                        for r in range(BAND_R)
-                    ],
-                ).alias("key"),
-            )
-            for b in range(bands)
-        ]
+def _bucket_id_pairs(
+    rows: DataFrame, id_col: str, max_bucket_size: int | None = None
+) -> DataFrame:
+    """(id_a, id_b), id_a < id_b, for every two ids sharing a (band, key)
+    bucket of ``rows``, each pair once — the bucket-aggregate enumerator
+    for id-only text buckets. ONE hash aggregation collects each
+    bucket's sorted member ids, then ordered pairs are projected from
+    the array: the round-3 two-sided self-join shuffled AND sorted the
+    banded rows twice for a merge join. The per-bucket array is bounded
+    by the largest duplicate cluster (or by ``max_bucket_size``, a plain
+    size filter), so collect_list never sees unbounded state."""
+    buckets = (
+        rows.groupBy("band", "key")
+        .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
+        .filter(F.size("_ids") >= 2)
+    )
+    if max_bucket_size is not None:
+        buckets = buckets.filter(F.size("_ids") <= max_bucket_size)
+    return (
+        buckets.select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(_ids, (x, i) ->"
+                    " transform(slice(_ids, i + 2, size(_ids)),"
+                    " y -> struct(x AS id_a, y AS id_b))))"
+                )
+            ).alias("p")
+        )
+        .select("p.id_a", "p.id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _with_both_shingles(
+    cand: DataFrame, shingles: DataFrame, id_col: str
+) -> DataFrame:
+    """``cand`` (id_a, id_b, ...) with each side's shingle array attached
+    as ``sh_a`` and ``sh_b`` (two id equi-joins against ``shingles``, an
+    (id_col, shingles) frame) — the exact verify every text pair
+    operator scores."""
+    return cand.join(
+        shingles.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")),
+        "id_a",
+    ).join(
+        shingles.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")),
+        "id_b",
+    )
+
+
+def _jaccard() -> F.Column:
+    """Exact Jaccard of the ``sh_a``/``sh_b`` shingle arrays."""
+    return F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
+        F.array_union("sh_a", "sh_b")
     )
 
 
@@ -160,48 +206,13 @@ def minhash_pairs(
     and belong to a cluster-representative pass, not pair enumeration.
     Default None keeps exact pair semantics (the CORRECTNESS row's
     contract)."""
-    sigs = minhash_signatures(docs, id_col, text_col)
-    banded = sigs.select(
-        F.col(id_col), F.explode(_band_keys()).alias("bk")
-    ).select(id_col, "bk.band", "bk.key")
-    # Bucket-local pair enumeration: ONE hash aggregation collects each
-    # bucket's (sorted) member ids, then ordered pairs are projected from
-    # the array — replacing the round-3 two-sided self-join, which
-    # shuffled AND sorted the banded rows twice for a merge join. The
-    # per-bucket array is bounded by the largest duplicate cluster (or by
-    # ``max_bucket_size`` when set — now a plain size filter instead of a
-    # count-join), so collect_list never sees unbounded state.
-    buckets = (
-        banded.groupBy("band", "key")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
-        .filter(F.size("_ids") >= 2)
+    cand = _bucket_id_pairs(
+        band_index(docs, id_col, text_col), id_col, max_bucket_size
     )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("_ids") <= max_bucket_size)
-    cand = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(_ids, (x, i) ->"
-                    " transform(slice(_ids, i + 2, size(_ids)),"
-                    " y -> struct(x AS id_a, y AS id_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
+    sh = with_shingles(docs, text_col).select(id_col, "shingles")
+    return _with_both_shingles(cand, sh, id_col).select(
+        "id_a", "id_b", _jaccard().alias("jaccard")
     )
-    sh = with_shingles(docs, text_col).select(
-        F.col(id_col), F.col("shingles")
-    )
-    joined = (
-        cand.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("shingles", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("shingles", "sh_b"), "id_b")
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return joined.select("id_a", "id_b", jac.alias("jaccard"))
 
 
 def minhash_pairs_incremental(
@@ -248,85 +259,32 @@ def minhash_pairs_incremental(
     ``ivf_write_clustered``); the corpus frame is then touched only to
     verify candidate hits with exact Jaccard. When None, bands are
     recomputed from the corpus text (the raw-parquet fallback)."""
-    b_sig = minhash_signatures(batch, id_col, text_col)
-    b_banded = b_sig.select(
-        F.col(id_col).alias("_bid"), F.explode(_band_keys()).alias("bk")
-    ).select("_bid", "bk.band", "bk.key")
-    if corpus_bands is not None:
-        c_banded = corpus_bands.select(
-            F.col(id_col).alias("_cid"), "band", "key"
-        )
-    else:
-        c_sig = minhash_signatures(corpus, id_col, text_col)
-        c_banded = c_sig.select(
-            F.col(id_col).alias("_cid"), F.explode(_band_keys()).alias("bk")
-        ).select("_cid", "bk.band", "bk.key")
-    if max_bucket_size is not None:
-        c_counts = c_banded.groupBy("band", "key").agg(
-            F.count(F.lit(1)).alias("_n")
-        )
-        c_banded = c_banded.join(
-            c_counts.filter(F.col("_n") <= max_bucket_size), ["band", "key"]
-        ).drop("_n")
-    cross = (
-        b_banded.join(c_banded, ["band", "key"])
-        # Guard against non-disjoint inputs (ADVICE r8): corpus and batch
-        # ids are REQUIRED to be disjoint (a batch re-ingesting a corpus
-        # doc is an upsert problem, not a dedup problem), but if a caller
-        # violates that, least/greatest would emit (id, id) self-pairs at
-        # jaccard 1.0 — a shape minhash_pairs itself can never produce.
-        # The filter is scan-fused and free; it does NOT repair the
-        # shingle-join fanout duplicate ids also cause, so disjointness
-        # stays a documented precondition.
-        .filter(F.col("_bid") != F.col("_cid"))
-        .select(
-            F.least("_bid", "_cid").alias("id_a"),
-            F.greatest("_bid", "_cid").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("pair_kind", F.lit("cross"))
+    b_banded = band_index(batch, id_col, text_col)
+    if corpus_bands is None:
+        corpus_bands = band_index(corpus, id_col, text_col)
+    # order="sorted" drops equal-id hits: corpus and batch ids are
+    # REQUIRED to be disjoint (a batch re-ingesting a corpus doc is an
+    # upsert problem, not a dedup problem), and a violating caller would
+    # otherwise get (id, id) self-pairs at jaccard 1.0 — a shape
+    # minhash_pairs itself can never produce. The filter does NOT repair
+    # the shingle-join fanout duplicate ids also cause, so disjointness
+    # stays a documented precondition.
+    cross = ann.bucket_pairs(
+        b_banded, corpus_bands, on=("band", "key"), id_col=id_col,
+        order="sorted", max_bucket_size=max_bucket_size,
+    ).withColumn("pair_kind", F.lit("cross"))
+    within = _bucket_id_pairs(b_banded, id_col).withColumn(
+        "pair_kind", F.lit("batch_batch")
     )
-    within_buckets = (
-        b_banded.groupBy("band", "key")
-        .agg(F.sort_array(F.collect_list("_bid")).alias("_ids"))
-        .filter(F.size("_ids") >= 2)
-    )
-    within = (
-        within_buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(_ids, (x, i) ->"
-                    " transform(slice(_ids, i + 2, size(_ids)),"
-                    " y -> struct(x AS id_a, y AS id_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("pair_kind", F.lit("batch_batch"))
-    )
-    cand = cross.unionByName(within)
     sh = with_shingles(
         corpus.select(F.col(id_col), F.col(text_col)).unionByName(
             batch.select(F.col(id_col), F.col(text_col))
         ),
         text_col,
     ).select(F.col(id_col), "shingles")
-    joined = cand.join(
-        sh.withColumnRenamed(id_col, "id_a").withColumnRenamed(
-            "shingles", "sh_a"
-        ),
-        "id_a",
-    ).join(
-        sh.withColumnRenamed(id_col, "id_b").withColumnRenamed(
-            "shingles", "sh_b"
-        ),
-        "id_b",
+    return _with_both_shingles(cross.unionByName(within), sh, id_col).select(
+        "id_a", "id_b", _jaccard().alias("jaccard"), "pair_kind"
     )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return joined.select("id_a", "id_b", jac.alias("jaccard"), "pair_kind")
 
 
 def band_index(
@@ -335,10 +293,16 @@ def band_index(
     """The corpus LSH band table as a relation: (id_col, band, key),
     NUM_HASHES/BAND_R rows per document — the candidate-generation side
     of every minhash operator, factored out so it can be PERSISTED."""
-    sigs = minhash_signatures(docs, id_col, text_col)
-    return sigs.select(
-        F.col(id_col), F.explode(_band_keys()).alias("bk")
-    ).select(id_col, "bk.band", "bk.key")
+    keys = [
+        F.concat_ws(
+            "_",
+            *[F.col("minhash").getItem(b * BAND_R + r).cast("string") for r in range(BAND_R)],
+        )
+        for b in range(NUM_HASHES // BAND_R)
+    ]
+    return ann.bucket_rows(
+        minhash_signatures(docs, id_col, text_col), keys, [id_col], ("band", "key")
+    )
 
 
 def band_index_write(
@@ -525,43 +489,17 @@ def embedding_pairs(
     ``dedup_assign``-style cluster representation instead of pair
     enumeration. Default None keeps exact pair semantics (the
     CORRECTNESS row's contract)."""
-    if planes is None:
-        planes = ann.hyperplanes(dim)
-    tables_n = planes.shape[0]
-    sigs = ann.with_signatures(vectors, planes, vec_col)
-    entries = F.array(
-        *[
-            F.struct(F.lit(t).alias("t"), F.col(f"sig_{t}").alias("sig"))
-            for t in range(tables_n)
-        ]
-    )
-    buckets = sigs.select(
-        F.col(id_col), F.col(vec_col), F.explode(entries).alias("b")
-    ).select(id_col, vec_col, F.col("b.t").alias("t"), F.col("b.sig").alias("sig"))
-    if max_bucket_size is not None:
-        counts = buckets.groupBy("t", "sig").agg(F.count(F.lit(1)).alias("_bsize"))
-        buckets = buckets.join(
-            counts.filter(F.col("_bsize") <= max_bucket_size), ["t", "sig"]
-        ).drop("_bsize")
-    a, b = buckets.alias("a"), buckets.alias("b")
     from demo_pgvector_spark.functions.vector import cosine_similarity
 
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{vec_col}").alias("vec_a"),
-            F.col(f"b.{vec_col}").alias("vec_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    if planes is None:
+        planes = ann.hyperplanes(dim)
+    pairs = ann.bucket_pairs(
+        ann.signature_rows(vectors, planes, [id_col, vec_col], vec_col),
+        id_col=id_col,
+        payload=[vec_col],
+        max_bucket_size=max_bucket_size,
     )
-    sim = cosine_similarity(F.col("vec_a"), F.col("vec_b"))
+    sim = cosine_similarity(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b"))
     return pairs.select("id_a", "id_b", sim.alias("cosine")).filter(
         F.col("cosine") >= F.lit(float(threshold))
     )
@@ -680,6 +618,44 @@ def _cc_rounds(edges: DataFrame, labels: DataFrame, max_iters: int) -> DataFrame
     return labels
 
 
+def _rarity_ordered_grams(
+    docs: DataFrame, k: int, id_col: str, text_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The exact n-gram operators' shared prep: ``grams`` (id_col,
+    shingles) and ``per_doc`` (id_col, _ordered) — each document's
+    xxhash64'd k-grams in one GLOBAL rarity order (document frequency
+    asc, gram asc).
+
+    The gram arrays feed THREE plan branches (df/prefix candidates +
+    both verify sides). Materialize them once — the AllPairs systems'
+    standard "tokenize first" pass (at ingest scale this is a persisted
+    gram column, like PQ codes) — instead of recomputing the shingle
+    projection per branch. And if the scan cannot fill the cluster (one
+    small local file), spread the raw text rows first: a narrow
+    corpus-row exchange, a no-op on a real lake layout with thousands of
+    splits. Sizing is pure metadata — the input file listing against
+    spark.sql.files.maxPartitionBytes, never a DataFrame→RDD conversion;
+    remote files skip the probe and trust the lake layout."""
+    spark = docs.sparkSession
+    src = docs.select(id_col, text_col)
+    if scan_splits(src) < spark.sparkContext.defaultParallelism:
+        src = src.repartition(spark.sparkContext.defaultParallelism)
+    grams = (
+        with_shingles(src, text_col, k)
+        .select(id_col, "shingles")
+        .localCheckpoint(eager=False)
+    )
+    ex = grams.select(
+        F.col(id_col), F.explode("shingles").alias("_gs")
+    ).select(F.col(id_col), F.xxhash64("_gs").alias("g"))
+    df = ex.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
+    per_doc = ex.join(df, "g").groupBy(id_col).agg(
+        F.expr("transform(array_sort(collect_list(struct(df, g))), s -> s.g)")
+        .alias("_ordered")
+    )
+    return grams, per_doc
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.3,
@@ -719,36 +695,7 @@ def ngram_jaccard_pairs(
     The CORRECTNESS oracle is the BRUTE-FORCE all-shared-gram-pairs
     Jaccard in DuckDB — a strictly stronger check than replaying the
     algorithm: it proves the prefix filter lost no pair."""
-    spark = docs.sparkSession
-    src = docs.select(id_col, text_col)
-    # The gram arrays feed THREE plan branches (df/prefix candidates +
-    # both verify sides). Materialize them once — the AllPairs systems'
-    # standard "tokenize first" pass (at ingest scale this is a
-    # persisted gram column, like PQ codes) — instead of recomputing
-    # the shingle projection per branch. And if the scan cannot fill
-    # the cluster (one small local file), spread the raw text rows
-    # first: a narrow corpus-row exchange, a no-op on a real lake
-    # layout with thousands of splits. Sizing is pure metadata — the
-    # input file listing against spark.sql.files.maxPartitionBytes
-    # (VERDICT r9 #8: the previous src.rdd.getNumPartitions() probe
-    # forced a DataFrame→RDD conversion on the hot path); remote files
-    # skip the probe and trust the lake layout.
-    if scan_splits(src) < spark.sparkContext.defaultParallelism:
-        src = src.repartition(spark.sparkContext.defaultParallelism)
-    grams = (
-        with_shingles(src, text_col, k)
-        .select(id_col, "shingles")
-        .localCheckpoint(eager=False)
-    )
-    ex = grams.select(
-        F.col(id_col), F.explode("shingles").alias("_gs")
-    ).select(F.col(id_col), F.xxhash64("_gs").alias("g"))
-    df = ex.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    ranked = ex.join(df, "g")
-    per_doc = ranked.groupBy(id_col).agg(
-        F.expr("transform(array_sort(collect_list(struct(df, g))), s -> s.g)")
-        .alias("_ordered")
-    )
+    grams, per_doc = _rarity_ordered_grams(docs, k, id_col, text_col)
     # L = n − ⌈τ·n⌉ + 1 (⌈x⌉ via -floor(-x)). The 1e-9 epsilon matches
     # the under-prune-only convention of the two PPJoin bounds below: if
     # τ·n lands ULP-above an integer boundary in double, floor(-x+ε) can
@@ -799,19 +746,9 @@ def ngram_jaccard_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    sh_a = grams.select(
-        F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")
-    )
-    sh_b = grams.select(
-        F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
     return (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+        _with_both_shingles(cand, grams, id_col)
+        .select("id_a", "id_b", F.round(_jaccard(), 6).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -850,31 +787,7 @@ def ngram_containment_pairs(
     shrinks — hashed containment ≥ true containment, every true pair
     still generates a candidate, and exact verification on the gram
     STRINGS removes any impostor. All epsilons under-prune only."""
-    spark = docs.sparkSession
-    src = docs.select(id_col, text_col)
-    # Metadata-only split estimate, exactly as ngram_jaccard_pairs does
-    # (VERDICT r10 #2 retired this function's .rdd.getNumPartitions()
-    # probe — the last DataFrame→RDD conversion on any hot path).
-    if scan_splits(src) < spark.sparkContext.defaultParallelism:
-        src = src.repartition(spark.sparkContext.defaultParallelism)
-    grams = (
-        with_shingles(src, text_col, k)
-        .select(id_col, "shingles")
-        .localCheckpoint(eager=False)
-    )
-    ex = grams.select(
-        F.col(id_col), F.explode("shingles").alias("_gs")
-    ).select(F.col(id_col), F.xxhash64("_gs").alias("g"))
-    df = ex.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    per_doc = (
-        ex.join(df, "g")
-        .groupBy(id_col)
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(df, g))), s -> s.g)"
-            ).alias("_ordered")
-        )
-    )
+    grams, per_doc = _rarity_ordered_grams(docs, k, id_col, text_col)
     contained = per_doc.select(
         F.col(id_col),
         F.size("_ordered").alias("n"),
@@ -911,16 +824,9 @@ def ngram_containment_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    sh_a = grams.select(
-        F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")
-    )
-    sh_b = grams.select(
-        F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")
-    )
     cont = F.size(F.array_intersect("sh_a", "sh_b")) / F.size("sh_a")
     return (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
+        _with_both_shingles(cand, grams, id_col)
         .select("id_a", "id_b", F.round(cont, 6).alias("containment"))
         .filter(F.col("containment") >= threshold)
     )

@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from demo_pgvector_spark.operators import ann
+
 MD5_BLOCK = 16  # bytes per md5 block
 
 
@@ -236,6 +238,8 @@ def decode_external(media: DataFrame, codec: str) -> DataFrame:
 PHASH_GRID = 8  # 8x8 blocks of a 16x16 image -> 64-bit fingerprint
 PHASH_BANDS = 8  # 8 bands x 8 bits (>= 1 band survives any <=7 flips)
 PHASH_MAX_HAMMING = 3
+# The fingerprint halves: the payload every candidate pair carries.
+_FP = ("phash_lo", "phash_hi")
 
 NEARDUP_GROUPS_MOD = 25
 NEARDUP_MAX_ID = 200
@@ -352,22 +356,26 @@ def banded_fingerprints(
         )
         return f"(({src} >> {off}) & {(1 << r) - 1})"
 
-    return fp.select(
-        "doc_id",
-        "phash_lo",
-        "phash_hi",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.expr(band_key(b)).alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "phash_lo", "phash_hi", "bk.band", "bk.key")
+    return ann.bucket_rows(
+        fp,
+        [F.expr(band_key(b)) for b in range(bands)],
+        ["doc_id", *_FP],
+        ("band", "key"),
+    )
+
+
+def _fingerprint_pairs(
+    banded: DataFrame, index: DataFrame | None = None
+) -> DataFrame:
+    """Candidate pairs of ``banded`` fingerprint rows sharing a (band,
+    key) bucket — among themselves, or against ``index`` (batch ×
+    corpus, either side may hold the smaller id) — carrying both sides'
+    fingerprint halves. The dedup groups on the halves too, so the
+    Hamming gate pushes down into the join."""
+    return ann.bucket_pairs(
+        banded, index, on=("band", "key"), id_col="doc_id", payload=_FP,
+        order="<" if index is None else "sorted", group_payload=True,
+    )
 
 
 def _verify_hamming(cand: DataFrame, max_hamming: int) -> DataFrame:
@@ -377,7 +385,8 @@ def _verify_hamming(cand: DataFrame, max_hamming: int) -> DataFrame:
         cand.withColumn(
             "hamming",
             F.expr(
-                "cast(bit_count(_la ^ _lb) + bit_count(_ha ^ _hb) as int)"
+                "cast(bit_count(phash_lo_a ^ phash_lo_b)"
+                " + bit_count(phash_hi_a ^ phash_hi_b) as int)"
             ),
         )
         .where(F.col("hamming") <= max_hamming)
@@ -391,9 +400,10 @@ def phash_pairs(
     max_hamming: int = PHASH_MAX_HAMMING,
 ) -> DataFrame:
     """Perceptual near-duplicate pairs: block-mean fingerprints fed
-    through the banded pair machinery (the minhash_pairs shape,
-    dedup.py): split the ``grid²``-bit fingerprint into ``bands``
-    equal bands, hash-join same-band buckets (id_a < id_b — never an
+    through the banded pair machinery (the ``ann.bucket_pairs``
+    self-join, carrying the fingerprint halves): split the
+    ``grid²``-bit fingerprint into ``bands`` equal bands, hash-join
+    same-band buckets (id_a < id_b — never an
     all-pairs product; ≤ ``max_hamming`` flipped bits corrupt at most
     ``max_hamming`` bands, so with max_hamming < bands at least one
     band survives and recall is EXACT), then verify with the exact
@@ -406,27 +416,7 @@ def phash_pairs(
     # scale this is the persisted fingerprint column, the band-index
     # shape.
     fp = image_blockhash(media, grid).localCheckpoint(eager=True)
-    banded = banded_fingerprints(fp, grid, bands)
-    a = banded.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("phash_lo").alias("_la"),
-        F.col("phash_hi").alias("_ha"),
-        "band",
-        "key",
-    )
-    b = banded.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("phash_lo").alias("_lb"),
-        F.col("phash_hi").alias("_hb"),
-        "band",
-        "key",
-    )
-    cand = (
-        a.join(b, ["band", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_la", "_ha", "_lb", "_hb")
-        .distinct()
-    )
+    cand = _fingerprint_pairs(banded_fingerprints(fp, grid, bands))
     return _verify_hamming(cand, max_hamming).select("id_a", "id_b", "hamming")
 
 
@@ -503,58 +493,16 @@ def phash_pairs_incremental(
     b_fp = image_blockhash(batch_media, grid).localCheckpoint(eager=True)
     b_banded = banded_fingerprints(b_fp, grid, bands)
     # Within-batch pairs: the phash_pairs self-join over batch rows only.
-    a = b_banded.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("phash_lo").alias("_la"),
-        F.col("phash_hi").alias("_ha"),
-        "band",
-        "key",
-    )
-    b = b_banded.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("phash_lo").alias("_lb"),
-        F.col("phash_hi").alias("_hb"),
-        "band",
-        "key",
-    )
-    bb = (
-        a.join(b, ["band", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_la", "_ha", "_lb", "_hb")
-        .distinct()
-    )
+    bb = _fingerprint_pairs(b_banded)
     # Cross pairs: batch bands hash-joined against the INDEX — the
     # corpus side is a partitioned-parquet scan of ~bands small rows
     # per image, no decode, no shuffle wider than the bucket hits.
+    # Hamming is symmetric, so the fingerprint sides need not follow
+    # the id ordering.
     idx = index.select(
-        F.col("doc_id").alias("_cid"),
-        F.col("phash_lo").alias("_cl"),
-        F.col("phash_hi").alias("_ch"),
-        F.col("band").cast("int").alias("band"),
-        "key",
+        "doc_id", *_FP, F.col("band").cast("int").alias("band"), "key"
     )
-    cross = (
-        b_banded.select(
-            F.col("doc_id").alias("_bid"),
-            F.col("phash_lo").alias("_bl"),
-            F.col("phash_hi").alias("_bh"),
-            "band",
-            "key",
-        )
-        .join(idx, ["band", "key"])
-        .where(F.col("_bid") != F.col("_cid"))
-        .select(
-            F.least("_bid", "_cid").alias("id_a"),
-            F.greatest("_bid", "_cid").alias("id_b"),
-            # Hamming is symmetric: fingerprint sides need not follow
-            # the id ordering.
-            F.col("_bl").alias("_la"),
-            F.col("_bh").alias("_ha"),
-            F.col("_cl").alias("_lb"),
-            F.col("_ch").alias("_hb"),
-        )
-        .distinct()
-    )
+    cross = _fingerprint_pairs(b_banded, idx)
     out_bb = _verify_hamming(bb, max_hamming).select(
         "id_a", "id_b", "hamming", F.lit("batch_batch").alias("pair_kind")
     )
@@ -671,27 +619,7 @@ def audiohash_pairs(
     argument."""
     assert max_hamming < bands
     fp = audio_energyhash(media).localCheckpoint(eager=True)
-    banded = banded_fingerprints(fp, PHASH_GRID, bands)
-    a = banded.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("phash_lo").alias("_la"),
-        F.col("phash_hi").alias("_ha"),
-        "band",
-        "key",
-    )
-    b = banded.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("phash_lo").alias("_lb"),
-        F.col("phash_hi").alias("_hb"),
-        "band",
-        "key",
-    )
-    cand = (
-        a.join(b, ["band", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_la", "_ha", "_lb", "_hb")
-        .distinct()
-    )
+    cand = _fingerprint_pairs(banded_fingerprints(fp, PHASH_GRID, bands))
     return _verify_hamming(cand, max_hamming).select(
         "id_a", "id_b", "hamming"
     )

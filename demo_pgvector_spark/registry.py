@@ -4034,7 +4034,7 @@ def q_mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERDICT r9 #6) — the bridge between the two pillars: perceptual
     block-mean fingerprints computed by the REAL Arrow mapInPandas
     decode over SPKM image binaries (the mm_media path), fed through
-    the banded pair machinery (the dedup.py minhash_pairs shape) and
+    the banded pair machinery (the ann.bucket_pairs self-join) and
     verified with the exact Hamming distance. The planted corpus puts
     25 base images × 8 progressively-edited replicas under doc_id <
     200; recall is exact by construction (≤3 flips cannot corrupt all

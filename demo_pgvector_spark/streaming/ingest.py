@@ -31,6 +31,7 @@ import contextlib
 import os
 from collections.abc import Callable, Mapping, Sequence
 
+import pyarrow.parquet as papq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -169,7 +170,9 @@ def commit_table(
     the retry (the rmtree below), and hardlinks keep file CONTENT
     immutable — vacuuming an old version only unlinks names, never
     bytes a newer version still references. Before the first commit
-    ``delta`` degrades to a whole write (the delta IS the table).
+    ``delta`` degrades to a whole write (the delta IS the table). An
+    empty delta still publishes a version, of the previous files only:
+    the 0-row file Spark writes for it is unlinked before the swap.
     The trade is the small-files accretion every add-file log pays;
     ``compact_table`` is the standing OPTIMIZE pairing.
 
@@ -185,10 +188,24 @@ def commit_table(
             shutil.rmtree(dst, ignore_errors=True)  # orphan from a crash
             os.makedirs(dst)
             prev = os.path.join(root, v)
-            for name in os.listdir(prev):
-                if name.endswith(".parquet"):
-                    os.link(os.path.join(prev, name), os.path.join(dst, name))
+            linked = [n for n in os.listdir(prev) if n.endswith(".parquet")]
+            for name in linked:
+                os.link(os.path.join(prev, name), os.path.join(dst, name))
             out.write.mode("append").parquet(dst)
+            # An empty delta still makes the append write one 0-row
+            # file: unlink it and its checksum, so a no-op commit adds no
+            # file. The footer is read with pyarrow (no Spark job); the
+            # linked files keep the schema readers check.
+            for name in os.listdir(dst) if linked else ():
+                path = os.path.join(dst, name)
+                if (
+                    name.endswith(".parquet")
+                    and name not in linked
+                    and papq.read_metadata(path).num_rows == 0
+                ):
+                    os.unlink(path)
+                    with contextlib.suppress(FileNotFoundError):
+                        os.unlink(os.path.join(dst, f".{name}.crc"))
         else:
             out.write.mode("overwrite").parquet(dst)
     return os.path.basename(dst)

@@ -376,6 +376,31 @@ def test_second_import_links_the_old_files_and_writes_only_its_rows(
         assert sorted(ids) == added
 
 
+def test_import_with_a_known_model_adds_no_file_to_models(
+    spark, tmp_path, small_books
+):
+    """A second import with the same model commits an empty models
+    delta: its version holds exactly hardlinks of the previous
+    version's files, and no empty file of its own."""
+    from demo_pgvector_spark.streaming import ingest
+
+    wh = str(tmp_path / "wh")
+    cli.import_doc(spark, wh, small_books[:1])
+    cli.import_doc(spark, wh, small_books[1:])
+    root = os.path.join(wh, "models")
+    prev, cur = (os.path.join(root, v) for v in ingest.list_versions(root)[-2:])
+    assert ingest.current_version(root) == os.path.basename(cur)
+
+    def inodes(d):
+        return {
+            f: os.stat(os.path.join(d, f)).st_ino
+            for f in os.listdir(d) if f.endswith(".parquet")
+        }
+
+    assert inodes(prev) and inodes(cur) == inodes(prev)
+    assert cli.load_state(spark, wh)["models"].count() == 1
+
+
 def test_quality_filter_verb_scores_and_keeps(spark, tmp_path):
     from demo_pgvector_spark import cli, tables
 

@@ -630,3 +630,64 @@ def test_line_dedup_semantics_and_reassembly_order(spark):
     assert got[2] == (2, 1, "gamma")
     assert got[3] == (1, 1, "delta")
     assert got[4] == (1, 0, "")
+
+
+def test_near_dup_family_has_one_candidate_machinery():
+    """Every near-duplicate operator forms, pairs and verifies its
+    buckets through the shared helpers: bucket rows through
+    ``ann.bucket_rows`` (no function names a band struct of its own),
+    bucket joins through ``ann.bucket_pairs``, the bucket-aggregate pair
+    projection in ``dedup._bucket_id_pairs`` and the both-sides shingle
+    join in ``dedup._with_both_shingles``. The one other join on bucket
+    columns is ``ann_join``'s probe lookup: probe buckets against corpus
+    buckets, which pairs no rows of one table."""
+    import ast
+    import pathlib
+
+    def strings(node):
+        if isinstance(node, (ast.List, ast.Tuple)) and all(
+            isinstance(e, ast.Constant) for e in node.elts
+        ):
+            return [e.value for e in node.elts]
+        return None
+
+    found = {k: set() for k in ("join", "struct", "flatten", "verify")}
+    for path in sorted(pathlib.Path(dedup.__file__).parent.glob("*.py")):
+        for top in ast.parse(path.read_text(encoding="utf-8")).body:
+            owner = (path.name, getattr(top, "name", None))
+            for n in ast.walk(top):
+                if (
+                    isinstance(n, ast.Constant)
+                    and isinstance(n.value, str)
+                    and "flatten(transform(" in n.value
+                ):
+                    found["flatten"].add(owner)
+                if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+                    continue
+                args = [*n.args, *(k.value for k in n.keywords)]
+                if n.func.attr == "join":
+                    if any(strings(a) in (["band", "key"], ["t", "sig"]) for a in args):
+                        found["join"].add(owner)
+                    if any(
+                        isinstance(c, ast.Constant) and c.value in ("sh_a", "sh_b")
+                        for a in args
+                        for c in ast.walk(a)
+                    ):
+                        found["verify"].add(owner)
+                if n.func.attr == "struct" and any(
+                    isinstance(a, ast.Call)
+                    and isinstance(a.func, ast.Attribute)
+                    and a.func.attr == "alias"
+                    and any(
+                        isinstance(c, ast.Constant) and c.value in ("band", "key", "t", "sig")
+                        for c in a.args
+                    )
+                    for a in n.args
+                ):
+                    found["struct"].add(owner)
+    assert found == {
+        "join": {("ann.py", "ann_join")},
+        "struct": set(),
+        "flatten": {("dedup.py", "_bucket_id_pairs")},
+        "verify": {("dedup.py", "_with_both_shingles")},
+    }

@@ -182,6 +182,32 @@ def test_minhash_pairs_bucket_local_enumeration(spark):
     assert plan.count("Exchange hashpartitioning(band") == 1, plan
 
 
+@pytest.mark.parametrize(
+    "key, bucket",
+    [
+        ("mm_phash_dedup", ("band", "key")),
+        ("mm_audio_dedup", ("band", "key")),
+        ("dedup_embedding", ("t", "sig")),
+        ("vec_ann_join", ("t", "sig")),
+    ],
+)
+def test_bucket_pair_candidates_come_from_one_bucket_equi_join(spark, key, bucket):
+    """The self-join family (fingerprint bands, embedding LSH tables,
+    the ANN probe lookup): candidates come from exactly ONE equi-join on
+    the bucket columns, and no join in the plan is a product."""
+    import re
+
+    plan = _plan(spark, key)
+    keys = re.findall(
+        r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[([^\]]*)\]", plan
+    )
+    band, k = bucket
+    on_bucket = [j for j in keys if re.fullmatch(rf"{band}#\d+L?, {k}#\d+L?", j)]
+    assert len(on_bucket) == 1, plan
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
 def test_percentiles_are_range_partitioned_not_buffered(spark):
     """Round-4 shape: exact percentiles must run the distributed-rank
     plan — a RANGE repartition of (key, value) with parallel partition

@@ -752,12 +752,7 @@ def test_curate_sink_serves_near_dups_from_the_provided_index(spark, tmp_path):
     batch = spark.createDataFrame(
         [(1, base + " tail")], "doc_id long, text string"
     )
-    bands = dedup.band_index(corpus) if hasattr(dedup, "band_index") else None
-    if bands is None:
-        sigs = dedup.minhash_signatures(corpus)
-        bands = sigs.select(
-            "doc_id", F.explode(dedup._band_keys()).alias("bk")
-        ).select("doc_id", "bk.band", "bk.key")
+    bands = dedup.band_index(corpus)
 
     def verdicts(root, idx):
         sink = sc.curate_sink(root, corpus, eval_docs, corpus_bands=idx)
