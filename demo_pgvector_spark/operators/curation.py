@@ -59,7 +59,9 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import functools
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 DECON_N = 13  # standard eval-decontamination n-gram window
@@ -103,18 +105,16 @@ BLOOM_M = 1 << 17  # bloom positions; ~10x the eval gram count at sf0.1
 BLOOM_K = 3  # hash functions
 
 
-def _bloom_pos(j: int, gram_sql: str, m: int) -> str:
-    """SQL for hash row ``j``'s bloom position of a gram string — the
-    repo's salted-md5 scheme (count-min / ticket precedent) so DuckDB
-    replays it bit-identically. Production would derive k positions
-    from ONE xxhash64 via Kirsch-Mitzenmacher double hashing; under
-    ANSI mode the unsigned wrap that needs is inexpressible, and DuckDB
-    has no xxhash64 to replay it — md5 costs k digests per gram and
-    buys an exact cross-engine contract."""
-    return (
-        f"cast(conv(substring(md5(concat('{j}', ':', {gram_sql})), 1, 8),"
-        f" 16, 10) as bigint) % {m}"
-    )
+def _bloom_pos(j: int, gram: Column, m: int) -> Column:
+    """Hash row ``j``'s bloom position of a gram string — the repo's
+    salted-md5 scheme (count-min / ticket precedent) so DuckDB replays
+    it bit-identically. Production would derive k positions from ONE
+    xxhash64 via Kirsch-Mitzenmacher double hashing; under ANSI mode
+    the unsigned wrap that needs is inexpressible, and DuckDB has no
+    xxhash64 to replay it — md5 costs k digests per gram and buys an
+    exact cross-engine contract."""
+    digest = F.md5(F.concat(F.lit(f"{j}:"), gram))
+    return F.conv(F.substring(digest, 1, 8), 16, 10).cast("bigint") % m
 
 
 def _with_gram_strings(
@@ -122,13 +122,13 @@ def _with_gram_strings(
 ) -> DataFrame:
     """Like ``_with_gram_hashes`` but keeps the gram STRINGS (the bloom
     positions re-hash per function, so the 8-byte key shortcut does not
-    apply). Same tokenize-once discipline."""
+    apply). Same tokenize-once discipline; a null text has no grams."""
     return (
         df.withColumn("_toks", F.split(F.lower(F.col(text_col)), " "))
         .withColumn(
             out,
             F.expr(
-                f"CASE WHEN size(_toks) < {n} THEN array() "
+                f"CASE WHEN coalesce(size(_toks), 0) < {n} THEN array() "
                 f"ELSE array_distinct(transform(sequence(0, size(_toks) - {n}), "
                 f"i -> concat_ws(' ', slice(_toks, i + 1, {n})))) END"
             ),
@@ -157,9 +157,56 @@ def bloom_build(
         .distinct()
     )
     pos = F.explode(
-        F.array(*[F.expr(_bloom_pos(j, "gram", m)) for j in range(k)])
+        F.array(*[_bloom_pos(j, F.col("gram"), m) for j in range(k)])
     )
     return grams.select(pos.alias("pos")).distinct()
+
+
+def bloom_bitset(positions: DataFrame, m: int = BLOOM_M) -> Column:
+    """A bloom position table (``bloom_build``'s, or the ``stream_bloom``
+    artifact's ``pos`` column) as the m-bit bitset: an ``array<bigint>``
+    literal of m/64 words (16 KiB at BLOOM_M), bit ``pos`` set for every
+    row. Collecting the ≤ m positions is one action on the driver,
+    paid once per filter; every probe after it is a lookup inside the
+    row (``_bloom_maybe``), with no join and no exchange."""
+    words = [0] * -(-m // 64)
+    for (p,) in positions.select("pos").collect():
+        words[p >> 6] |= 1 << (p & 63)
+    signed = (w - (1 << 64) if w >> 63 else w for w in words)
+    # a from_json of a literal constant-folds to one array literal; an
+    # array(lit, …) of 2048 children costs a JVM call per word
+    return F.from_json(
+        F.lit(f"[{','.join(map(str, signed))}]"), "array<bigint>"
+    )
+
+
+def _bloom_maybe(bits: Column, gram: Column, m: int, k: int) -> Column:
+    """A gram is a bloom MAYBE-hit iff all k of its positions are set
+    in ``bits`` (a ``bloom_bitset``)."""
+    hits = []
+    for j in range(k):
+        p = _bloom_pos(j, gram, m)
+        word = F.element_at(bits, F.shiftright(p, 6).cast("int") + 1)
+        hits.append(F.bit_get(word, p % 64) == 1)
+    return functools.reduce(lambda x, y: x & y, hits)
+
+
+def _bloom_probe(
+    df: DataFrame, bits: Column, n: int, text_col: str, m: int, k: int
+) -> DataFrame:
+    """``df`` with the bigint counts ``n_grams`` (its distinct n-grams)
+    and ``n_maybe`` (how many of them are bloom maybe-hits), per row."""
+    return (
+        _with_gram_strings(df, text_col, n)
+        .withColumn("n_grams", F.size("_gstr").cast("bigint"))
+        .withColumn(
+            "n_maybe",
+            F.size(
+                F.filter("_gstr", lambda g: _bloom_maybe(bits, g, m, k))
+            ).cast("bigint"),
+        )
+        .drop("_gstr")
+    )
 
 
 def bloom_decontaminate(
@@ -177,9 +224,12 @@ def bloom_decontaminate(
     positions are set. No false negatives by construction (every true
     overlap flags; pinned against ``decontaminate`` in
     tests/test_curation.py), false positives bounded by the standard
-    (1 − e^{−kn/m})^k. Plan: positions table broadcast, one explode +
-    left join + two partial-combining aggregates (gram-level ALL-k
-    test, then per-doc rollup).
+    (1 − e^{−kn/m})^k. Plan: the position table is collected once into
+    the m-bit ``bloom_bitset`` literal (one driver-side collect); the probe
+    is then a scan-fused projection — ``n_grams`` is ``size`` of the
+    row's distinct gram array, ``n_maybe`` the ``size(filter(...))`` of
+    its maybe-hits — with no explode, join, aggregate or exchange. A
+    null or too-short text has ``n_grams = 0``.
 
     ``bloom_positions``: a PREBUILT position table (the
     ``stream_bloom`` ingest artifact, one ``pos`` column) — when given,
@@ -193,38 +243,14 @@ def bloom_decontaminate(
         raise ValueError(
             "bloom_decontaminate: provide eval_docs or bloom_positions"
         )
-    if bloom_positions is not None:
-        bloom = F.broadcast(bloom_positions.select("pos"))
-    else:
-        bloom = F.broadcast(bloom_build(eval_docs, n, text_col, m, k))
-    tg = _with_gram_strings(train, text_col, n).select(
-        F.col(id_col), F.explode_outer("_gstr").alias("gram")
-    )
-    probes = tg.select(
+    if bloom_positions is None:
+        bloom_positions = bloom_build(eval_docs, n, text_col, m, k)
+    bits = bloom_bitset(bloom_positions, m)
+    return _bloom_probe(train, bits, n, text_col, m, k).select(
         id_col,
-        "gram",
-        F.explode(
-            F.when(
-                F.col("gram").isNull(), F.array().cast("array<bigint>")
-            ).otherwise(
-                F.array(*[F.expr(_bloom_pos(j, "gram", m)) for j in range(k)])
-            )
-        ).alias("pos"),
-    )
-    gram_hits = (
-        probes.join(bloom.withColumn("_set", F.lit(1)), "pos", "left")
-        .groupBy(id_col, "gram")
-        .agg((F.count("_set") == k).alias("_maybe"))
-    )
-    per_doc = gram_hits.groupBy(id_col).agg(
-        F.count("gram").alias("n_grams"),
-        F.count_if(F.col("_maybe")).alias("n_maybe"),
-    )
-    return train.select(id_col).join(per_doc, id_col, "left").select(
-        id_col,
-        F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
-        F.coalesce("n_maybe", F.lit(0)).alias("n_maybe"),
-        (F.coalesce("n_maybe", F.lit(0)) > 0).alias("bloom_contaminated"),
+        "n_grams",
+        "n_maybe",
+        (F.col("n_maybe") > 0).alias("bloom_contaminated"),
     )
 
 
@@ -992,7 +1018,7 @@ CURATE_INC_MIN_TOKENS = 15
 def curate_incremental(
     corpus: DataFrame,
     batch: DataFrame,
-    eval_docs: DataFrame,
+    eval_docs: DataFrame | Column,
     corpus_bands: DataFrame | None = None,
     min_tokens: int = CURATE_INC_MIN_TOKENS,
     tau: float = CURATE_INC_TAU,
@@ -1002,25 +1028,38 @@ def curate_incremental(
 ) -> DataFrame:
     """The DAILY-BATCH curation job — ``curate_corpus`` re-expressed
     for a corpus that is already curated: audit every batch document
-    against the incumbent corpus and the eval suite, touching O(batch)
-    new work plus index scans, never re-curating the corpus. One row
-    per batch doc with four independent verdicts and the final keep:
+    against the incumbent corpus and the eval suite, never re-curating
+    the corpus. One row per batch doc with four independent verdicts
+    and the final keep:
 
         (id, exact_dup, too_short, near_dup, contaminated, kept)
 
     - ``exact_dup``: content hash already in the corpus, OR a
       smaller-id batch doc carries the same hash (min-id keeper, the
-      exact_dedup convention). The corpus hash set is an
-      ingest-maintained index at scale (one narrow column); here it is
-      a semi-join against the corpus projection.
-    - ``too_short``: token count < ``min_tokens`` (scan-fused).
+      exact_dedup convention).
+    - ``too_short``: token count < ``min_tokens``.
     - ``near_dup``: an incremental minhash pair at jaccard ≥ ``tau``
       connects the doc to the corpus (incumbent wins), or to a
       SMALLER-id batch doc (min-id keeper). Candidates come from
       ``minhash_pairs_incremental`` — pass ``corpus_bands`` (the
-      ``band_index_write`` layout) and the corpus is never re-banded.
+      ``band_index_write`` layout) and the corpus is never re-banded,
+      though its text is still shingled for the verify.
     - ``contaminated``: the eval bloom filter flags an n-gram maybe-hit
       (``bloom_decontaminate`` semantics — no false negatives).
+
+    ``eval_docs`` is the eval set, or its ``bloom_bitset`` (of
+    ``bloom_build(eval_docs, n)``) when the caller builds the filter
+    once for many calls, as the stream sink does; given the eval set,
+    the bitset is collected here (one driver-side collect).
+
+    Plan: ``too_short`` and ``contaminated`` are expressions in the
+    batch scan's projection, next to the sha2 (the in-row bloom probe
+    of ``_bloom_probe``). ``exact_dup`` is one window partitioned by
+    the hash over the batch rows and the corpus hashes (a corpus row
+    carries a null id): a batch row is a dup iff its partition holds a
+    corpus row or a smaller batch id. The near-dup ids are the one
+    join, a left join of the distinct flagged ids onto the window's
+    output. A batch row with a null id or null text gets no row.
 
     Verdicts are deliberately INDEPENDENT (each computed over the whole
     batch), not cascaded: the row is the audit record a pipeline logs
@@ -1030,66 +1069,56 @@ def curate_incremental(
     oracle."""
     from demo_pgvector_spark.operators import dedup as dedup_ops
 
-    b_hash = batch.select(
-        F.col(id_col), F.sha2(F.col(text_col), 256).alias("_h")
+    bits = (
+        eval_docs
+        if isinstance(eval_docs, Column)
+        else bloom_bitset(bloom_build(eval_docs, n, text_col))
     )
-    c_hash = corpus.select(
-        F.sha2(F.col(text_col), 256).alias("_h")
-    ).distinct()
-    in_corpus = b_hash.join(c_hash, "_h", "left_semi").select(
-        F.col(id_col), F.lit(True).alias("_in_corpus")
-    )
-    h_min = b_hash.groupBy("_h").agg(F.min(id_col).alias("_mn"))
-    exact = (
-        b_hash.join(h_min, "_h")
-        .join(in_corpus, id_col, "left")
-        .select(
-            F.col(id_col),
-            (
-                F.coalesce("_in_corpus", F.lit(False))
-                | (F.col(id_col) > F.col("_mn"))
-            ).alias("exact_dup"),
-        )
-    )
-    short = batch.select(
-        F.col(id_col),
+    ident, h = F.col(id_col), F.sha2(F.col(text_col), 256).alias("_h")
+    audit = _bloom_probe(
+        batch.filter(ident.isNotNull() & F.col(text_col).isNotNull()),
+        bits, n, text_col, BLOOM_M, BLOOM_K,
+    ).select(
+        ident,
+        h,
         (
             F.size(F.split(F.lower(F.col(text_col)), " ")) < min_tokens
         ).alias("too_short"),
+        (F.col("n_maybe") > 0).alias("contaminated"),
+    )
+    by_hash = Window.partitionBy("_h")
+    exact = (
+        audit.unionByName(
+            corpus.select(
+                F.lit(None).cast(batch.schema[id_col].dataType).alias(id_col), h
+            ),
+            allowMissingColumns=True,
+        )
+        .withColumn(
+            "exact_dup",
+            (F.count(F.when(ident.isNull(), 1)).over(by_hash) > 0)
+            | (ident > F.min(ident).over(by_hash)),
+        )
+        .filter(ident.isNotNull())
     )
     pairs = dedup_ops.minhash_pairs_incremental(
         corpus, batch, id_col, text_col, corpus_bands=corpus_bands
     ).filter(F.col("jaccard") >= tau)
-    batch_ids = batch.select(id_col)
-    nd_cross = (
-        pairs.filter(F.col("pair_kind") == "cross")
-        .select(F.explode(F.array("id_a", "id_b")).alias(id_col))
-        .join(batch_ids, id_col, "left_semi")
-    )
-    nd_within = pairs.filter(F.col("pair_kind") == "batch_batch").select(
-        F.col("id_b").alias(id_col)
-    )
-    nd = (
-        nd_cross.unionByName(nd_within)
-        .distinct()
-        .withColumn("_nd", F.lit(True))
-    )
-    bloom = bloom_decontaminate(
-        batch, eval_docs, n=n, id_col=id_col, text_col=text_col
-    ).select(id_col, F.col("bloom_contaminated").alias("contaminated"))
-    out = (
-        batch.select(id_col)
-        .join(exact, id_col)
-        .join(short, id_col)
-        .join(nd, id_col, "left")
-        .join(bloom, id_col)
-        .select(
-            id_col,
-            "exact_dup",
-            "too_short",
-            F.coalesce("_nd", F.lit(False)).alias("near_dup"),
-            "contaminated",
-        )
+    # a cross pair flags its batch side (its corpus side matches no
+    # batch row), a within-batch pair its larger id
+    nd = pairs.select(
+        F.explode(
+            F.when(
+                F.col("pair_kind") == "cross", F.array("id_a", "id_b")
+            ).otherwise(F.array("id_b"))
+        ).alias(id_col)
+    ).distinct().withColumn("_nd", F.lit(True))
+    out = exact.join(nd, id_col, "left").select(
+        id_col,
+        "exact_dup",
+        "too_short",
+        F.coalesce("_nd", F.lit(False)).alias("near_dup"),
+        "contaminated",
     )
     return out.withColumn(
         "kept",

@@ -256,8 +256,10 @@ def minhash_pairs_incremental(
     given, the corpus side is read from it VERBATIM and the corpus text
     is never re-shingled/re-hashed for banding (VERDICT r8 #3: the
     ingest-maintained write-once index, the dedup twin of
-    ``ivf_write_clustered``); the corpus frame is then touched only to
-    verify candidate hits with exact Jaccard. When None, bands are
+    ``ivf_write_clustered``). The corpus text is still read for the
+    exact-Jaccard verify: ``with_shingles`` runs over the whole
+    corpus ∪ batch on every call, not only over the candidates' ids, so
+    each call shingles the entire corpus. When None, bands are
     recomputed from the corpus text (the raw-parquet fallback)."""
     b_banded = band_index(batch, id_col, text_col)
     if corpus_bands is None:

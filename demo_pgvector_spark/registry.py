@@ -6046,8 +6046,9 @@ def q_curate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller-id batch twin), length screen, near dup (incremental
     minhash at jaccard ≥ τ served from the MATERIALIZED band index —
     the corpus is never re-banded), and eval-bloom contamination — plus
-    the final keep. O(batch) new work + index scans; the corpus text is
-    touched only for hash projection and candidate-hit verification.
+    the final keep. The corpus text is still read whole on every call:
+    hashed for the exact verdict and shingled (all of it, not only the
+    candidates) for the near-dup verify.
     The oracle replays all four verdicts (full pair set restricted to
     non-eval batch-touching pairs; bit-identical bloom)."""
     docs = tables.load(spark, sf_dir, "documents")

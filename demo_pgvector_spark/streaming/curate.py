@@ -14,20 +14,25 @@ maintained by ``ingest.staged_recompute_sink``):
   an anti-join upsert (idempotent: a retried epoch stages nothing new
   and re-commits an identical version — the upsert-sink argument, no
   epoch marker needed);
-- ``verdicts/`` — ``curate_incremental(corpus, staged, eval)``
+- ``verdicts/`` — ``curate_incremental(corpus, staged, eval bitset)``
   recomputed over the FULL staged batch each epoch and committed
   whole.
 
 Recomputing over the staged whole (not the epoch slice) is what makes
 the result EPOCH-SPLIT-INVARIANT: the within-batch verdicts (the
 smaller-id exact/near-dup twin rules) need the entire day-batch, so
-auditing per-slice would tie the output to arrival order. The audit is
-O(staged) + index scans by construction — the corpus is never
-re-banded, the bloom never rebuilt — so an E-epoch day costs E small
-audits, and the FINAL table is bit-identical to the one-shot batch
-call: the registry row drains three files through this sink and shares
-``O_CURATE_INCREMENTAL`` verbatim, proving stream ≡ batch end to end
-(the stream_bloom recipe, one level up the stack).
+auditing per-slice would tie the output to arrival order. The eval
+bloom is built ONCE, when the sink is made: its m-bit bitset is
+collected on the driver then and every epoch probes it inside the row,
+so the eval set is fixed for the life of the stream (a new eval suite
+means a new sink). The corpus is never re-banded (the band index is
+read as given), but each epoch still hashes the corpus for the exact
+verdict and shingles it for the near-dup verify, so an E-epoch day
+costs E audits of O(staged + corpus) scan work. The FINAL table is
+bit-identical to the one-shot batch call: the registry row drains
+three files through this sink and shares ``O_CURATE_INCREMENTAL``
+verbatim, proving stream ≡ batch end to end (the stream_bloom recipe,
+one level up the stack).
 """
 
 from __future__ import annotations
@@ -58,7 +63,13 @@ def curate_sink(
     over the full staged batch and commit the verdict table
     (``ingest.staged_recompute_sink``). Both commits are idempotent
     re-runs on a retried epoch; a crash between them is repaired by the
-    retry."""
+    retry.
+
+    The eval bloom is built here, once per sink: its bitset is collected
+    on the driver when the sink is made (one collect) and every epoch
+    probes it inside the row, so the eval set is fixed for the life of
+    the stream."""
+    bits = curation_ops.bloom_bitset(curation_ops.bloom_build(eval_docs))
     return ingest_ops.staged_recompute_sink(
         root,
         STAGE_SCHEMA_DDL,
@@ -66,7 +77,7 @@ def curate_sink(
         # looked up per call, not bound here, so a wrapped or patched
         # curate_incremental is the one each epoch runs
         lambda staged: curation_ops.curate_incremental(
-            corpus, staged, eval_docs, corpus_bands=corpus_bands
+            corpus, staged, bits, corpus_bands=corpus_bands
         ),
         "verdicts",
     )

@@ -97,6 +97,16 @@ def read_table(
     return _read_version(spark, os.path.join(root, v), schema_ddl)
 
 
+def _fsync(path: str) -> None:
+    """fsync ``path``, a file or a directory, through a read-only
+    descriptor."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 def write_atomic(path: str, text: str) -> None:
     """Replace ``path`` with ``text`` so that a crash leaves the old or
     the new content, never a mix, and a power loss cannot undo it once
@@ -109,11 +119,7 @@ def write_atomic(path: str, text: str) -> None:
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(tmp, path)
-    dir_fd = os.open(parent, os.O_RDONLY)
-    try:
-        os.fsync(dir_fd)
-    finally:
-        os.close(dir_fd)
+    _fsync(parent)
 
 
 def publish_version(root: str, version: str | None) -> None:
@@ -176,14 +182,18 @@ def commit_table(
     The trade is the small-files accretion every add-file log pays;
     ``compact_table`` is the standing OPTIMIZE pairing.
 
-    Durability: the pointer's temp file is fsynced before the
-    ``os.replace`` and the table root directory after it, so once this
-    returns a power loss can neither leave an empty pointer nor roll the
-    rename back to the previous version."""
+    Durability: every data file this commit wrote, then the version
+    directory, is fsynced before the pointer moves (a hardlinked file
+    was synced by the commit that first wrote it), so the pointer never
+    names a file a power loss can take back. The pointer's temp file is
+    fsynced before the ``os.replace`` and the table root directory
+    after it, so once this returns a power loss can neither leave an
+    empty pointer nor roll the rename back to the previous version."""
     import shutil
 
     with _next_version(root) as (v, dst):
         out = df.coalesce(1) if single_file else df
+        linked: list[str] = []
         if delta and v is not None:
             shutil.rmtree(dst, ignore_errors=True)  # orphan from a crash
             os.makedirs(dst)
@@ -208,6 +218,10 @@ def commit_table(
                         os.unlink(os.path.join(dst, f".{name}.crc"))
         else:
             out.write.mode("overwrite").parquet(dst)
+        for name in os.listdir(dst):
+            if name.endswith(".parquet") and name not in linked:
+                _fsync(os.path.join(dst, name))
+        _fsync(dst)
     return os.path.basename(dst)
 
 

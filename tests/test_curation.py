@@ -7,6 +7,7 @@ broadcast eval side, no corpus-side sort-merge join, top-k heap tail.
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 import pytest
@@ -598,11 +599,92 @@ def test_bloom_build_bounded_and_mergeable(spark, docs_df):
     assert all(0 <= p < curation.BLOOM_M for p in a)
 
 
+def _py_grams(text, n=curation.DECON_N):
+    """Distinct n-word grams of ``text`` as the operators tokenize it:
+    lowercased, split on single spaces; none below n tokens or for
+    null text."""
+    if text is None:
+        return set()
+    toks = text.lower().split(" ")
+    return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+
+
+def _py_bloom_pos(j, gram, m):
+    """Pure-Python replay of ``_bloom_pos``: the first 8 hex digits of
+    md5("{j}:{gram}") modulo m."""
+    return int(hashlib.md5(f"{j}:{gram}".encode()).hexdigest()[:8], 16) % m
+
+
+@pytest.mark.parametrize("m", [curation.BLOOM_M, 64])
+@pytest.mark.parametrize("source", ["eval_docs", "bloom_positions"])
+def test_bloom_probe_matches_python_replay(spark, m, source):
+    """``bloom_decontaminate``'s in-row probe equals a pure-Python bloom
+    over hashlib md5 positions: ``n_grams``, ``n_maybe`` and
+    ``bloom_contaminated`` per doc, on null and empty text, a doc below
+    n tokens, a gram repeated inside one doc and docs with spliced eval
+    13-grams; the filter comes from the eval docs or from a position
+    table built in Python. m = 64 saturates the filter, so partial hits
+    and false positives occur too."""
+    k, n = curation.BLOOM_K, curation.DECON_N
+    words = [f"w{i}" for i in range(40)]
+    eval_a = " ".join(f"e{i}" for i in range(20))
+    eval_b = " ".join(f"q{i}" for i in range(13))
+    eval_rows = [(900, eval_a), (901, eval_b), (902, None), (903, "")]
+    train_rows = [
+        (1, None),
+        (2, ""),
+        (3, " ".join(words[:12])),  # one token short of a gram
+        (4, " ".join(words[:13]) + " " + " ".join(words[:13])),  # repeats
+        (5, " ".join(words[:10]) + " " + eval_b + " " + " ".join(words[20:30])),
+        (6, "Intro " + eval_a.upper() + " and " + eval_b + " outro"),
+        (7, " ".join(words)),
+        (8, " ".join(eval_a.split()[3:16]) + " tail"),  # one eval 13-gram
+    ]
+    bits = {
+        _py_bloom_pos(j, g, m)
+        for _, text in eval_rows for g in _py_grams(text) for j in range(k)
+    }
+
+    def maybe(g):
+        return all(_py_bloom_pos(j, g, m) in bits for j in range(k))
+
+    want = {}
+    for doc_id, text in train_rows:
+        grams = _py_grams(text)
+        hits = sum(maybe(g) for g in grams)
+        want[doc_id] = (len(grams), hits, hits > 0)
+
+    ddl = "doc_id long, text string"
+    train = spark.createDataFrame(train_rows, ddl)
+    if source == "eval_docs":
+        out = curation.bloom_decontaminate(
+            train, spark.createDataFrame(eval_rows, ddl), m=m
+        )
+    else:
+        positions = spark.createDataFrame([(p,) for p in sorted(bits)], "pos bigint")
+        out = curation.bloom_decontaminate(
+            train, None, m=m, bloom_positions=positions
+        )
+    got = {r["doc_id"]: tuple(r)[1:] for r in out.collect()}
+    assert got == want
+    assert want[1] == want[2] == want[3] == (0, 0, False)
+    # 14 windows, the first one repeated at the end: 13 distinct grams;
+    # doc 6 holds all 8 grams of eval_a (upper-cased) and eval_b's one
+    assert want[4][0] == 13 and want[6][1] >= 9 and want[8][2]
+    if m == 64:  # the saturated filter: a non-eval gram reads maybe-hit
+        eval_grams = set().union(*(_py_grams(t) for _, t in eval_rows))
+        assert any(
+            maybe(g)
+            for _, text in train_rows for g in _py_grams(text) - eval_grams
+        )
+
+
 def test_curate_incremental_all_four_verdicts(spark):
     """curate_incremental on a corpus where every verdict fires: exact
     corpus twin, exact within-batch twin (min-id keeper), short doc,
     near-dup of a corpus doc, eval-contaminated doc, and one clean
-    keeper. Verdicts are independent audit flags; kept = none fired."""
+    keeper; a null text gets no row, an empty one is short. Verdicts
+    are independent audit flags; kept = none fired."""
     from demo_pgvector_spark.operators.curation import curate_incremental
 
     base = ("the quick brown fox jumps over the lazy dog while the cat "
@@ -636,11 +718,17 @@ def test_curate_incremental_all_four_verdicts(spark):
             (70, "twin text that appears twice inside this same batch "
                  "with enough words to clear the length screen easily "
                  "for both of its two identical copies"),
+            (80, None),                                   # no verdict row
+            (90, ""),                                     # too_short
+            (95, ""),                                     # + exact twin of 90
         ],
         "doc_id long, text string",
     )
     out = {r["doc_id"]: r for r in curate_incremental(
         corpus, batch, eval_docs).collect()}
+    assert 80 not in out and len(out) == 9
+    assert out[90]["too_short"] and not out[90]["exact_dup"]
+    assert out[95]["exact_dup"] and not out[95]["contaminated"]
     assert out[10]["exact_dup"] and not out[10]["kept"]
     assert out[20]["too_short"] and not out[20]["kept"]
     assert out[30]["near_dup"] and not out[30]["kept"]

@@ -499,17 +499,20 @@ def test_read_ignores_nullability(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "commit",
+    "commit, version_synced",
     [
-        ingest.commit_table,
-        lambda df, root: sketches._commit_with_epoch(df, root, 0),
+        (ingest.commit_table, [("dir", False)]),
+        (lambda df, root: sketches._commit_with_epoch(df, root, 0), []),
     ],
     ids=["commit_table", "countmin_commit"],
 )
-def test_commit_fsyncs_pointer_then_root(tmp_path, monkeypatch, commit):
+def test_commit_fsyncs_pointer_then_root(
+    tmp_path, monkeypatch, commit, version_synced
+):
     """Both versioned-table commits make their pointer swap durable: the
     temp pointer file is fsynced before the rename, the table root
-    directory after."""
+    directory after. ``commit_table`` first syncs the version it wrote
+    (here a directory with no data file)."""
     import stat
 
     class _Frame:
@@ -541,5 +544,44 @@ def test_commit_fsyncs_pointer_then_root(tmp_path, monkeypatch, commit):
     assert commit(_Frame(), root) == "v000001"
     # the file is synced while the pointer does not exist yet (before the
     # rename), the directory once it does
-    assert synced == [("file", False), ("dir", True)]
+    assert synced == version_synced + [("file", False), ("dir", True)]
     assert ingest.current_version(root) == "v000001"
+
+
+def test_commit_syncs_every_new_data_file_before_the_pointer_moves(
+    spark, tmp_path, monkeypatch
+):
+    """``commit_table`` fsyncs each data file it wrote into the next
+    version, and the version directory, before ``_CURRENT`` names it —
+    for a whole commit, an add-files delta (whose hardlinked files were
+    synced by the commit that wrote them) and an empty delta."""
+    root = str(tmp_path / "t")
+    synced, at_swap = set(), []
+    real_fsync, real_publish = os.fsync, ingest.publish_version
+
+    def recording_fsync(fd):
+        st = os.fstat(fd)
+        synced.add((st.st_dev, st.st_ino))
+        real_fsync(fd)
+
+    def recording_publish(table_root, version):
+        at_swap.append((version, set(synced)))
+        real_publish(table_root, version)
+
+    monkeypatch.setattr(os, "fsync", recording_fsync)
+    monkeypatch.setattr(ingest, "publish_version", recording_publish)
+    rows = [(i, f"m{i}") for i in range(6)]
+    ingest.commit_table(spark.createDataFrame(rows[:4], SCHEMA).repartition(2), root)
+    ingest.commit_table(spark.createDataFrame(rows[4:], SCHEMA), root, delta=True)
+    ingest.commit_table(spark.createDataFrame([], SCHEMA), root, delta=True)
+
+    assert [v for v, _ in at_swap] == ["v000001", "v000002", "v000003"]
+    for version, synced_then in at_swap:
+        vdir = os.path.join(root, version)
+        files = [f for f in os.listdir(vdir) if f.endswith(".parquet")]
+        assert files, version
+        for path in [vdir] + [os.path.join(vdir, f) for f in files]:
+            st = os.stat(path)
+            assert (st.st_dev, st.st_ino) in synced_then, path
+    got = ingest.read_table(spark, root, SCHEMA).collect()
+    assert sorted(tuple(r) for r in got) == rows

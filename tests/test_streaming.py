@@ -731,6 +731,73 @@ def test_curate_stream_retry_repairs_a_crash_between_the_commits(
     assert got == want and len(got) == 4
 
 
+def test_curate_sink_fires_contaminated_and_builds_the_bloom_once(
+    spark, tmp_path, monkeypatch
+):
+    """A 3-epoch ``curate_sink`` run whose batch holds a doc with a
+    spliced eval passage: the committed verdicts equal one batch
+    ``curate_incremental`` call, with ``contaminated`` set on that doc.
+    The sink builds the eval bloom once, when it is made, and each
+    epoch's verdict commit runs at most 12 Spark jobs."""
+    import os
+
+    from demo_pgvector_spark.operators import curation
+    from demo_pgvector_spark.streaming import curate as sc
+    from demo_pgvector_spark.streaming import ingest
+
+    ddl = "doc_id long, text string"
+    base = " ".join(f"w{i}" for i in range(25))
+    passage = " ".join(f"e{i}" for i in range(20))
+    corpus = spark.createDataFrame(
+        [(100, base), (101, " ".join(f"c{i}" for i in range(25)))], ddl
+    )
+    eval_docs = spark.createDataFrame([(900, passage)], ddl)
+    fresh = " ".join(f"fresh{i}" for i in range(30))
+    slices = [
+        [(0, base), (1, "too short")],
+        [(2, fresh), (3, "intro words " + passage + " closing words")],
+        [(4, fresh), (5, " ".join(f"clean{i}" for i in range(30)))],
+    ]
+    real_build, builds = curation.bloom_build, []
+
+    def counted_build(*args, **kwargs):
+        builds.append(1)
+        return real_build(*args, **kwargs)
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    real_commit, jobs = ingest.commit_table, {}
+
+    def counted_commit(df, table_root, *args, **kwargs):
+        first = sched.nextJobId()
+        v = real_commit(df, table_root, *args, **kwargs)
+        jobs.setdefault(os.path.basename(table_root), []).append(
+            sched.nextJobId() - first
+        )
+        return v
+
+    monkeypatch.setattr(curation, "bloom_build", counted_build)
+    monkeypatch.setattr(ingest, "commit_table", counted_commit)
+    root = str(tmp_path / "curate")
+    sink = sc.curate_sink(root, corpus, eval_docs)
+    assert len(builds) == 1
+    for epoch, rows in enumerate(slices):
+        sink(spark.createDataFrame(rows, ddl), epoch)
+    assert len(builds) == 1
+    assert len(jobs["verdicts"]) == 3 and max(jobs["verdicts"]) <= 12, jobs
+
+    got = sorted(tuple(r) for r in sc.read_verdicts(spark, root).collect())
+    everything = spark.createDataFrame([r for s in slices for r in s], ddl)
+    want = sorted(
+        tuple(r)
+        for r in curation.curate_incremental(corpus, everything, eval_docs).collect()
+    )
+    assert got == want and len(got) == 6
+    v = {t[0]: t for t in got}
+    assert v[3][4] is True and v[3][5] is False  # contaminated, not kept
+    assert [d for d, t in v.items() if t[4]] == [3]
+    assert v[0][1] and v[1][2] and v[4][1] and v[5][5]
+
+
 def test_curate_sink_serves_near_dups_from_the_provided_index(spark, tmp_path):
     """The streaming tick must read corpus bands from the PROVIDED
     index table, never re-band the corpus: with a truthful index the
