@@ -92,13 +92,57 @@ def query_vector_literal(vec: list[float]) -> Column:
     array folded into the plan — effectively broadcast to every task with
     the serialized plan, no shuffle, no join.
 
-    Built as ONE parsed SQL expression instead of ``F.array(*64 F.lit)``:
-    the element-wise form costs ~65 Py4J round-trips per literal, which
-    dominated plan-build time for the LSH operators (32 plane literals
-    ≈ 3 s of driver latency before any job started). ``repr(float)`` is
-    the shortest exact round-trip decimal, so the parsed doubles are
-    bit-identical to the ``F.lit`` path.
+    Built as ONE parsed SQL expression (``array_sql``) instead of
+    ``F.array(*64 F.lit)``: the element-wise form costs ~65 Py4J
+    round-trips per literal, which dominated plan-build time for the LSH
+    operators (32 plane literals ≈ 3 s of driver latency before any job
+    started).
     """
-    if not vec:
-        return F.array()
-    return F.expr("array(" + ",".join(f"{float(v)!r}D" for v in vec) + ")")
+    return F.expr(array_sql(vec))
+
+
+# ---------------------------------------------------------------------------
+# SQL-text kernels: the one spelling of every vector fold the operators
+# embed in parsed expressions (driver-known literals, per-subspace slices,
+# nested higher-order functions), plus their driver-side twin.
+# ---------------------------------------------------------------------------
+
+
+def array_sql(vec) -> str:
+    """SQL text of a double-array literal. ``repr(float)`` is the
+    shortest exact round-trip decimal, so the parsed doubles are
+    bit-identical to the driver's."""
+    return "array(" + ",".join(f"{float(v)!r}D" for v in vec) + ")"
+
+
+def dot_sql(a: str, b: str) -> str:
+    """SQL text of the float64 dot of two array expressions: ``dot``'s
+    fold — each element widened to double, products summed left to
+    right from 0."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> double(x) * double(y)),"
+        " 0D, (a, x) -> a + x)"
+    )
+
+
+def l2sq_sql(a: str, b: str) -> str:
+    """SQL text of the float64 squared L2 distance of two array
+    expressions, folded like ``dot_sql``."""
+    return (
+        f"aggregate(zip_with({a}, {b},"
+        " (x, y) -> (double(x) - double(y)) * (double(x) - double(y))),"
+        " 0D, (a, x) -> a + x)"
+    )
+
+
+def sequential_fold(a, b, l2: bool = False) -> float:
+    """The driver's ``dot_sql`` (or, with ``l2``, ``l2sq_sql``) of two
+    equal-length sequences, bit for bit: float64 terms summed left to
+    right from 0.0. ``numpy.dot`` sums pairwise and can round
+    differently, so driver-side decisions that must match a Spark row
+    (probe buckets, centroid ranks, ADC tables) fold here."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        x, y = float(x), float(y)
+        acc += (x - y) * (x - y) if l2 else x * y
+    return acc

@@ -1,5 +1,13 @@
 """Approximate nearest neighbor search: random-hyperplane LSH with
-multiprobe, candidate filtering, and exact re-rank.
+multiprobe, candidate filtering, and exact re-rank — plus the rest of the
+approximate family (PQ/IVFADC, SQ8, BQ, fp16, small-world graph).
+
+Every vector kernel here is spelled once, in ``functions/vector.py``:
+array literals (``array_sql``), the float64 dot and squared-L2 folds
+(``dot_sql``, ``l2sq_sql``, the Column ``cosine_similarity``) and their
+driver twin (``sequential_fold``). The ranked top-k tail is
+``ivf._ranked_topk``, and ``ivf.INLINE_MAX_LITERALS`` is the one switch
+between an inlined-literal plan and a broadcast join.
 
 The reference has NO ANN index — ``config/init.sql:27-32`` creates no
 ivfflat/hnsw index, so every search is an exact scan (SURVEY §4). Exact
@@ -50,10 +58,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from demo_pgvector_spark.functions.vector import (
+    array_sql,
     cosine_similarity,
-    dot,
+    dot_sql,
+    l2sq_sql,
     query_vector_literal,
+    sequential_fold,
 )
+from demo_pgvector_spark.operators import ivf
 from demo_pgvector_spark.operators.similarity import topk_per_group
 from demo_pgvector_spark.tables import read_partitions, written_schema
 
@@ -72,31 +84,15 @@ def hyperplanes(
     return np.random.RandomState(seed).normal(0, 1, (tables, bits, dim))
 
 
-def signature_col(vec: Column, table_planes: np.ndarray) -> Column:
-    """Int signature of one hash table: bit j set iff dot(v, h_j) >= 0."""
-    sig = F.lit(0)
-    for j, plane in enumerate(table_planes):
-        h = query_vector_literal([float(x) for x in plane])
-        sig = sig + F.when(dot(vec, h) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return sig
-
-
 def _signature_sql(vec_col: str, table_planes: np.ndarray) -> str:
-    """``signature_col`` as ONE SQL string: identical arithmetic (float64
-    zip_with product, sequential fold, sign at >= 0), but parsed in a
-    single Py4J call instead of ~10 Column round-trips per plane — the
-    per-Column form cost ~2 s of driver latency for 32 planes before any
+    """One hash table's int signature as ONE SQL string: bit j set iff
+    ``dot_sql(v, h_j) >= 0``. Parsed in a single Py4J call: a Column
+    built per plane cost ~2 s of driver latency for 32 planes before any
     job started."""
-    terms = []
-    for j, plane in enumerate(table_planes):
-        arr = "array(" + ",".join(f"{float(x)!r}D" for x in plane) + ")"
-        d = (
-            f"aggregate(zip_with({vec_col}, {arr},"
-            " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-            " 0.0D, (acc, x) -> acc + x)"
-        )
-        terms.append(f"IF({d} >= 0.0D, {1 << j}, 0)")
-    return " + ".join(terms)
+    return " + ".join(
+        f"IF({dot_sql(vec_col, array_sql(plane))} >= 0.0D, {1 << j}, 0)"
+        for j, plane in enumerate(table_planes)
+    )
 
 
 def with_signatures(
@@ -203,17 +199,13 @@ def bucket_pairs(
 
 
 def probe_signatures(qvec: list[float], planes: np.ndarray) -> list[int]:
-    """Driver-side signatures of a probe vector (same arithmetic as the
-    column form: float64 dot, sign threshold at >= 0)."""
-    q = np.asarray(qvec, dtype=np.float64)
-    out = []
-    for t in range(planes.shape[0]):
-        sig = 0
-        for j in range(planes.shape[1]):
-            if float(planes[t, j] @ q) >= 0:
-                sig |= 1 << j
-        out.append(sig)
-    return out
+    """Driver-side signatures of a probe vector, equal to its
+    ``with_signatures`` row: the same float64 dot, summed in the same
+    order (``sequential_fold``), sign threshold at >= 0."""
+    return [
+        sum(1 << j for j, h in enumerate(table) if sequential_fold(qvec, h) >= 0)
+        for table in planes
+    ]
 
 
 def multiprobe_buckets(sig: int, bits: int, hamming: int = 1) -> list[int]:
@@ -266,21 +258,7 @@ def ann_topk(
         planes = hyperplanes(len(qvec))
     cand = candidate_filter(vectors, qvec, planes, vec_col, hamming)
     q = query_vector_literal(qvec)
-    scored = cand.select(
-        F.col(id_col),
-        cosine_similarity(F.col(vec_col), q).alias("similarity_score"),
-    )
-    top = scored.orderBy(
-        F.col("similarity_score").desc(), F.col(id_col).asc()
-    ).limit(int(k))
-    # Rank over the ≤k-row result — single tiny partition by construction
-    # (post-limit), not a scale concern.
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.col("similarity_score").desc(), F.col(id_col).asc())
-    return top.select(
-        id_col, "similarity_score", F.row_number().over(w).alias("rank")
-    )
+    return ivf._ranked_topk(cand, cosine_similarity(F.col(vec_col), q), k, id_col)
 
 
 def ann_join(
@@ -361,139 +339,122 @@ def codebooks_from_seeds(
 def _adc_qtables(
     codebooks: list[list[list[float]]], query: list[float]
 ) -> list[list[float]]:
-    """Per-subspace query-to-codeword L2 tables, folded driver-side in
-    POSITION ORDER (a left-to-right IEEE sum — the same addend order
-    DuckDB's list_sum-over-range and the in-plan Spark fold use, so the
-    doubles are bit-identical across engines)."""
-    m = len(codebooks)
+    """Per-subspace query-to-codeword squared-L2 tables, folded on the
+    driver with ``sequential_fold`` (the addend order DuckDB's
+    list_sum-over-range and the in-plan Spark fold use, so the doubles
+    are bit-identical across engines)."""
     subdim = len(codebooks[0][0])
-    out = []
-    for s in range(m):
-        qseg = query[s * subdim:(s + 1) * subdim]
-        table = []
-        for cw in codebooks[s]:
-            acc = 0.0
-            for x, y in zip(qseg, cw):
-                d = float(x) - float(y)
-                acc += d * d
-            table.append(acc)
-        out.append(table)
-    return out
+    return [
+        [sequential_fold(query[s * subdim:(s + 1) * subdim], cw, l2=True) for cw in cb]
+        for s, cb in enumerate(codebooks)
+    ]
 
 
-def _pq_literal_count(codebooks: list[list[list[float]]], dim: int) -> int:
-    """Doubles the inline plan would embed: each (s, codeword) costs its
-    subdim coordinates in the stage-1 fold plus one folded ADC constant,
-    and the exact re-rank embeds the dim-length query once."""
-    return sum(len(cb) * (len(cb[0]) + 1) for cb in codebooks) + dim
-
-
-def _pq_adc_inline(
+def _pq_codes(
     vectors: DataFrame,
     codebooks: list[list[list[float]]],
-    qtables: list[list[float]],
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """(id, vec, _adc) via the zero-exchange inlined-literal plan: one
-    projection with m·k in-subspace fold expressions (codewords as plan
-    literals), then a constant-folded ADC lookup per subspace."""
+    """``code_0..code_{m-1}``: per subspace the argmin-L2 codeword id
+    (0-based, ties to the lowest cid). While the plan's literal count
+    stays under ``ivf.INLINE_MAX_LITERALS`` the codebooks are plan literals and
+    the codes are appended to every column of ``vectors`` in one
+    projection (zero exchanges). Past it the result is (id, codes) only:
+    an explode to (id, s, subvector), a broadcast join against the
+    m·k-row codebook table and one exchange, groupBy(id) with m
+    FILTER'd ``min_by`` argmins — plan size independent of m·k·subdim
+    (production PQ: m=16-64, k*=256, dim 1024+). Both give the same
+    codes (same fold, same tie-break)."""
     m = len(codebooks)
     subdim = len(codebooks[0][0])
-    sub_scores = []
-    for s in range(m):
-        sub = f"slice({vec_col}, {s * subdim + 1}, {subdim})"
+    subs = [f"slice({vec_col}, {s * subdim + 1}, {subdim})" for s in range(m)]
+    # doubles the inline plan embeds: each codeword's subdim coordinates
+    # and its ADC constant, plus the dim-length query of the re-rank
+    literals = sum(len(cb) for cb in codebooks) * (subdim + 1) + m * subdim
+    if literals < ivf.INLINE_MAX_LITERALS:
         dists = [
-            "aggregate(zip_with({}, array({}),"
-            " (x, y) -> (double(x) - y) * (double(x) - y)), 0D, (a, x) -> a + x)"
-            .format(sub, ",".join(f"{float(x)!r}D" for x in cw))
-            for cw in codebooks[s]
+            ", ".join(l2sq_sql(sub, array_sql(cw)) for cw in cb)
+            for sub, cb in zip(subs, codebooks)
         ]
-        sub_scores.append(f"array({', '.join(dists)})")
-    # stage 1 projected separately: HOF lambdas are opaque to codegen
-    # CSE, and the argmin below references each _sd twice (min + position)
-    staged = vectors.select(
-        F.col(id_col),
-        F.col(vec_col),
-        *[F.expr(e).alias(f"_sd{s}") for s, e in enumerate(sub_scores)],
-    )
-    adc_terms = []
-    for s in range(m):
-        qlits = ", ".join(f"{v!r}D" for v in qtables[s])
-        adc_terms.append(
-            f"element_at(array({qlits}),"
-            f" cast(array_position(_sd{s}, array_min(_sd{s})) as int))"
+        # stage 1 projected separately: HOF lambdas are opaque to codegen
+        # CSE, and the argmin below references each _sd twice (min + position)
+        staged = vectors.select(
+            "*", *[F.expr(f"array({d})").alias(f"_sd{s}") for s, d in enumerate(dists)]
         )
-    return staged.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.expr(" + ".join(adc_terms)).alias("_adc"),
-    )
-
-
-def _pq_adc_broadcast(
-    vectors: DataFrame,
-    codebooks: list[list[list[float]]],
-    qtables: list[list[float]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(id, _adc) via the broadcast-join encode path — the strategy for
-    codebooks past the inline-literal plan-compile ceiling (production
-    PQ: m=16-64, k*=256, dim 1024+, where m·k·subdim literals would
-    dominate plan build/parse time; the r3/r4 kmeans lesson applied to
-    PQ, VERDICT r4 #3).
-
-    Shape: one explode to (id, s, subvector) — narrow — then a broadcast
-    join against the m·k-row codebook table (each row carrying its
-    pre-folded query distance), and ONE exchange: groupBy(id) with m
-    FILTER'd partial-aggregable ``min_by`` columns (argmin code per
-    subspace, ties to the lowest cid — identical to the inline
-    ``array_position`` first-match). The ADC sum chains the m terms
-    left-to-right in s order, bit-identical to the inline path.
-    """
-    m = len(codebooks)
-    subdim = len(codebooks[0][0])
-    spark = vectors.sparkSession
-    cb = spark.createDataFrame(
+        return staged.select(
+            *vectors.columns,
+            *[
+                F.expr(
+                    f"cast(array_position(_sd{s}, array_min(_sd{s})) - 1 as int)"
+                ).alias(f"code_{s}")
+                for s in range(m)
+            ],
+        )
+    cb = vectors.sparkSession.createDataFrame(
         [
-            (s, cid, [float(x) for x in cw], float(qtables[s][cid]))
+            (s, cid, [float(x) for x in cw])
             for s in range(m)
             for cid, cw in enumerate(codebooks[s])
         ],
-        "s int, cid int, cv array<double>, qd double",
+        "s int, cid int, cv array<double>",
     )
     sub_structs = F.array(
         *[
-            F.struct(
-                F.lit(s).alias("s"),
-                F.expr(f"slice({vec_col}, {s * subdim + 1}, {subdim})").alias("sub"),
-            )
-            for s in range(m)
+            F.struct(F.lit(s).alias("s"), F.expr(sub).alias("sub"))
+            for s, sub in enumerate(subs)
         ]
     )
     exploded = vectors.select(
         F.col(id_col), F.explode(sub_structs).alias("b")
     ).select(id_col, F.col("b.s").alias("s"), F.col("b.sub").alias("sub"))
-    dist = F.expr(
-        "aggregate(zip_with(sub, cv,"
-        " (x, y) -> (double(x) - y) * (double(x) - y)), 0D, (a, x) -> a + x)"
-    )
     joined = exploded.join(F.broadcast(cb), "s").select(
-        F.col(id_col), "s", "cid", dist.alias("dist"), "qd"
+        F.col(id_col), "s", "cid", F.expr(l2sq_sql("sub", "cv")).alias("dist")
     )
-    per_id = joined.groupBy(id_col).agg(
+    return joined.groupBy(id_col).agg(
         *[
-            F.expr(f"min_by(qd, struct(dist, cid)) FILTER (WHERE s = {s})").alias(
-                f"_qd{s}"
+            F.expr(f"min_by(cid, struct(dist, cid)) FILTER (WHERE s = {s})").alias(
+                f"code_{s}"
             )
             for s in range(m)
         ]
     )
-    adc = F.col("_qd0")
-    for s in range(1, m):
-        adc = adc + F.col(f"_qd{s}")
-    return per_id.select(F.col(id_col), adc.alias("_adc"))
+
+
+def _adc_shortlist(
+    codes: DataFrame, qtables: list[list[float]], shortlist: int, cols: list[str]
+) -> DataFrame:
+    """``cols`` (id first) and ``_adc`` of the ``shortlist`` rows of
+    ``codes`` nearest by asymmetric distance, ties to the lower id: per
+    subspace the constant-array lookup ``element_at(qtable_s, code_s +
+    1)``, summed left to right in s order — no float fold per row."""
+    adc = " + ".join(
+        f"element_at({array_sql(t)}, code_{s} + 1)" for s, t in enumerate(qtables)
+    )
+    return (
+        codes.select(*cols, F.expr(adc).alias("_adc"))
+        .orderBy(F.col("_adc").asc(), F.col(cols[0]).asc())
+        .limit(int(shortlist))
+    )
+
+
+def _l2_rerank(
+    cand: DataFrame, query: list[float], k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, adc_dist, l2_dist): the exact squared-L2 top-``k`` of a
+    shortlist carrying ``_adc``, ties to the lower id, both distances
+    rounded to 6 dp."""
+    l2 = F.expr(l2sq_sql(vec_col, array_sql(query))).alias("_l2")
+    return (
+        cand.select(F.col(id_col), F.col("_adc"), l2)
+        .orderBy(F.col("_l2").asc(), F.col(id_col).asc())
+        .limit(int(k))
+        .select(
+            F.col(id_col),
+            F.round("_adc", 6).alias("adc_dist"),
+            F.round("_l2", 6).alias("l2_dist"),
+        )
+    )
 
 
 def pq_topk(
@@ -506,14 +467,13 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     codebooks: list[list[list[float]]] | None = None,
-    max_literals: int | None = None,
 ) -> DataFrame:
     """Product-quantization top-k: the memory-compressed ANN path.
 
-    Each vector is (logically) encoded as ``m`` codes — per subspace the
-    argmin-L2 codeword, ties to the lowest id — compressing a 64-float
-    vector to 8 bytes (32×); search scores the ASYMMETRIC distance
-    (query subvector ↔ assigned codeword, the classic ADC lookup-table
+    Each vector is encoded as ``m`` codes — per subspace the argmin-L2
+    codeword, ties to the lowest id — compressing a 64-float vector to
+    8 bytes (32×); search scores the ASYMMETRIC distance (query
+    subvector ↔ assigned codeword, the classic ADC lookup-table
     formulation of Jégou et al.'s IVFADC), takes a ``shortlist`` by ADC,
     and exact-re-ranks the shortlist by true L2.
 
@@ -522,17 +482,19 @@ def pq_topk(
     subvectors form every subspace's codebook — the deterministic
     oracle-replay contract).
 
-    Physical strategy is automatic (VERDICT r4 #3): while the codebook
+    Physical strategy: encode, then look up. The codes are
+    ``encode_codes``' argmin (``_pq_codes``), and the ADC shortlist and
+    the exact re-rank are the ``_adc_shortlist`` and ``_l2_rerank`` that
+    ``ivfpq_topk_pruned`` runs over stored codes. While the codebook
     literal budget (m·k·(subdim+1) + dim doubles) stays under
-    ``INLINE_MAX_LITERALS`` (operators/ivf.py) the plan is the pinned
-    zero-exchange form — scan → one projection with m·k in-subspace fold
-    expressions → constant-folded ADC lookups → TakeOrderedAndProject
-    (shortlist) → re-rank projection → TakeOrderedAndProject(k); zero
-    joins, zero Python. Past the ceiling (production PQ: m=16-64,
-    k*=256, dim 1024+) it switches to ``_pq_adc_broadcast`` — codebook
-    broadcast join + one min_by exchange — whose plan size is
-    independent of m·k·subdim. Both paths are bit-identical (ties,
-    fold order) and pinned against each other in tests/test_ann.py.
+    ``ivf.INLINE_MAX_LITERALS`` the plan is the pinned zero-exchange
+    form — scan → one projection with m·k in-subspace fold expressions
+    → ADC lookups → TakeOrderedAndProject (shortlist) → re-rank
+    projection → TakeOrderedAndProject(k); zero joins, zero Python. Past
+    it the codes come from the codebook broadcast join + one min_by
+    exchange, and only the ≤ ``shortlist`` ids are joined back to their
+    vectors (a broadcast of the small side). Both are bit-identical and
+    pinned against each other in tests/test_ann.py.
 
     At 100 TB the codes are PRE-computed at ingest (``encode_codes`` /
     ``ivfpq_write`` persist them, one byte per subspace per row) and
@@ -546,38 +508,14 @@ def pq_topk(
         if seeds is None:
             raise ValueError("pass either seeds or codebooks")
         codebooks = codebooks_from_seeds(seeds, m, dim)
-    qtables = _adc_qtables(codebooks, query)
-    from demo_pgvector_spark.operators.ivf import INLINE_MAX_LITERALS
-
-    budget = INLINE_MAX_LITERALS if max_literals is None else max_literals
-    if _pq_literal_count(codebooks, dim) < budget:
-        scored = _pq_adc_inline(vectors, codebooks, qtables, id_col, vec_col)
-        cand = scored.orderBy(
-            F.col("_adc").asc(), F.col(id_col).asc()
-        ).limit(shortlist)
-    else:
-        adc = _pq_adc_broadcast(vectors, codebooks, qtables, id_col, vec_col)
-        short = adc.orderBy(F.col("_adc").asc(), F.col(id_col).asc()).limit(
-            shortlist
-        )
+    codes = _pq_codes(vectors.select(id_col, vec_col), codebooks, id_col, vec_col)
+    carried = [c for c in (id_col, vec_col) if c in codes.columns]
+    short = _adc_shortlist(codes, _adc_qtables(codebooks, query), shortlist, carried)
+    if vec_col not in carried:
         # re-attach the full vectors for the exact re-rank: the ≤short-
         # list-row result broadcasts against the big side (no shuffle).
-        cand = vectors.select(id_col, vec_col).join(F.broadcast(short), id_col)
-    qlit = "array(" + ",".join(f"{float(x)!r}D" for x in query) + ")"
-    l2 = (
-        f"aggregate(zip_with({vec_col}, {qlit},"
-        " (x, y) -> (double(x) - y) * (double(x) - y)), 0D, (a, x) -> a + x)"
-    )
-    return (
-        cand.select(F.col(id_col), F.col("_adc"), F.expr(l2).alias("_l2"))
-        .orderBy(F.col("_l2").asc(), F.col(id_col).asc())
-        .limit(k)
-        .select(
-            F.col(id_col),
-            F.round("_adc", 6).alias("adc_dist"),
-            F.round("_l2", 6).alias("l2_dist"),
-        )
-    )
+        short = vectors.select(id_col, vec_col).join(F.broadcast(short), id_col)
+    return _l2_rerank(short, query, k, id_col, vec_col)
 
 
 def ivfpq_topk(
@@ -611,10 +549,8 @@ def ivfpq_topk(
     becomes partition pruning (the vec_ivfpq_pruned row gates that
     storage path).
     """
-    from demo_pgvector_spark.operators import ivf as ivf_ops
-
-    probe_ids = ivf_ops._rank_centroids(cents, query, nprobe)
-    assigned = ivf_ops.assign_clusters_auto(vectors, cents, id_col, vec_col)
+    probe_ids = ivf._rank_centroids(cents, query, nprobe)
+    assigned = ivf.assign_clusters_auto(vectors, cents, id_col, vec_col)
     cand = assigned.filter(F.col("cluster").isin(probe_ids)).select(
         id_col, vec_col
     )
@@ -707,7 +643,6 @@ def encode_codes(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_literals: int | None = None,
 ) -> DataFrame:
     """The INGEST-time half of IVFADC: append ``code_0..code_{m-1}``
     int columns (per-subspace argmin-L2 codeword id, 0-based, ties to
@@ -716,84 +651,16 @@ def encode_codes(
     every later probe scores codes against a query lookup table without
     touching the float vectors (``ivfpq_topk_pruned``).
 
-    Strategy auto-switches like ``pq_topk``: inlined-literal argmin
-    projection (zero exchanges) under the plan-compile ceiling, codebook
-    broadcast join + one min_by exchange past it. Both yield identical
-    codes (same tie-break, same float semantics).
-    """
-    from demo_pgvector_spark.operators.ivf import INLINE_MAX_LITERALS
-
-    m = len(codebooks)
-    subdim = len(codebooks[0][0])
-    dim = m * subdim
-    budget = INLINE_MAX_LITERALS if max_literals is None else max_literals
+    The argmin is ``_pq_codes``, the one ``pq_topk`` scores: the
+    inlined-literal projection (zero exchanges) under the plan-compile
+    ceiling, codebook broadcast join + one min_by exchange past it, whose
+    codes an id join re-attaches to the full-width row."""
+    codes = _pq_codes(vectors, codebooks, id_col, vec_col)
+    if vec_col not in codes.columns:
+        codes = vectors.join(codes, id_col)
     other = [c for c in vectors.columns if c not in (id_col, vec_col)]
-    if _pq_literal_count(codebooks, dim) < budget:
-        sub_scores = []
-        for s in range(m):
-            sub = f"slice({vec_col}, {s * subdim + 1}, {subdim})"
-            dists = [
-                "aggregate(zip_with({}, array({}),"
-                " (x, y) -> (double(x) - y) * (double(x) - y)), 0D, (a, x) -> a + x)"
-                .format(sub, ",".join(f"{float(x)!r}D" for x in cw))
-                for cw in codebooks[s]
-            ]
-            sub_scores.append(f"array({', '.join(dists)})")
-        staged = vectors.select(
-            "*", *[F.expr(e).alias(f"_sd{s}") for s, e in enumerate(sub_scores)]
-        )
-        return staged.select(
-            id_col,
-            vec_col,
-            *other,
-            *[
-                F.expr(
-                    f"cast(array_position(_sd{s}, array_min(_sd{s})) - 1 as int)"
-                ).alias(f"code_{s}")
-                for s in range(m)
-            ],
-        )
-    # broadcast path: explode to (id, s, sub), join m·k-row codebook,
-    # argmin per subspace via FILTER'd min_by — one exchange, then a
-    # broadcast join re-attaches the codes to the full-width row.
-    spark = vectors.sparkSession
-    cb = spark.createDataFrame(
-        [
-            (s, cid, [float(x) for x in cw])
-            for s in range(m)
-            for cid, cw in enumerate(codebooks[s])
-        ],
-        "s int, cid int, cv array<double>",
-    )
-    sub_structs = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("s"),
-                F.expr(f"slice({vec_col}, {s * subdim + 1}, {subdim})").alias("sub"),
-            )
-            for s in range(m)
-        ]
-    )
-    exploded = vectors.select(
-        F.col(id_col), F.explode(sub_structs).alias("b")
-    ).select(id_col, F.col("b.s").alias("s"), F.col("b.sub").alias("sub"))
-    dist = F.expr(
-        "aggregate(zip_with(sub, cv,"
-        " (x, y) -> (double(x) - y) * (double(x) - y)), 0D, (a, x) -> a + x)"
-    )
-    joined = exploded.join(F.broadcast(cb), "s").select(
-        F.col(id_col), "s", "cid", dist.alias("dist")
-    )
-    codes = joined.groupBy(id_col).agg(
-        *[
-            F.expr(f"min_by(cid, struct(dist, cid)) FILTER (WHERE s = {s})").alias(
-                f"code_{s}"
-            )
-            for s in range(m)
-        ]
-    )
-    return vectors.join(codes, id_col).select(
-        id_col, vec_col, *other, *[f"code_{s}" for s in range(m)]
+    return codes.select(
+        id_col, vec_col, *other, *[f"code_{s}" for s in range(len(codebooks))]
     )
 
 
@@ -811,9 +678,7 @@ def ivfpq_write(
     serving contract: probes prune to nprobe of k directories
     (partition pruning) and score the stored codes — the assignment and
     encoding cost is paid exactly once at ingest."""
-    from demo_pgvector_spark.operators.ivf import assign_clusters_auto
-
-    assigned = assign_clusters_auto(vectors, cents, id_col, vec_col)
+    assigned = ivf.assign_clusters_auto(vectors, cents, id_col, vec_col)
     coded = encode_codes(assigned, codebooks, id_col, vec_col)
     coded.write.mode("overwrite").partitionBy("cluster").parquet(path)
 
@@ -833,48 +698,20 @@ def ivfpq_topk_pruned(
     """IVFADC probe over an ``ivfpq_write`` layout — the actual 100 TB
     serving path (VERDICT r4 #5): the ``cluster IN (probe ids)``
     predicate is a PARTITION filter (only nprobe of k directories are
-    listed/read), and ADC scoring is a pure lookup over the STORED
-    codes — ``element_at(qtable_s, code_s + 1)`` chained left-to-right
-    in s order, m integer-indexed constant-array lookups per row, no
-    per-row float folds at all (the zip_with work happened once at
-    write). Shortlist exact-re-rank reads the float vectors of ≤
+    listed/read), and ADC scoring (``_adc_shortlist``) is a pure lookup
+    over the STORED codes — m integer-indexed constant-array lookups
+    per row, no per-row float folds at all (the fold work happened once
+    at write). Shortlist exact-re-rank reads the float vectors of ≤
     ``shortlist`` rows. Results are identical to ``ivfpq_topk`` over
     the same centroids/codebooks (pinned in tests/test_ann.py; plan
     pruning + lookup-only scoring pinned in tests/test_plans.py)."""
-    from demo_pgvector_spark.operators.ivf import _rank_centroids
-
-    m = len(codebooks)
-    qtables = _adc_qtables(codebooks, query)
-    probe_ids = _rank_centroids(cents, query, nprobe)
+    probe_ids = ivf._rank_centroids(cents, query, nprobe)
     df = read_partitions(spark, path, "cluster", probe_ids).filter(
         F.col("cluster").isin(probe_ids)
     )
-    adc_terms = []
-    for s in range(m):
-        qlits = ", ".join(f"{v!r}D" for v in qtables[s])
-        adc_terms.append(f"element_at(array({qlits}), code_{s} + 1)")
-    cand = (
-        df.select(
-            F.col(id_col), F.col(vec_col), F.expr(" + ".join(adc_terms)).alias("_adc")
-        )
-        .orderBy(F.col("_adc").asc(), F.col(id_col).asc())
-        .limit(int(shortlist))
-    )
-    qlit = "array(" + ",".join(f"{float(x)!r}D" for x in query) + ")"
-    l2 = (
-        f"aggregate(zip_with({vec_col}, {qlit},"
-        " (x, y) -> (double(x) - y) * (double(x) - y)), 0D, (a, x) -> a + x)"
-    )
-    return (
-        cand.select(F.col(id_col), F.col("_adc"), F.expr(l2).alias("_l2"))
-        .orderBy(F.col("_l2").asc(), F.col(id_col).asc())
-        .limit(int(k))
-        .select(
-            F.col(id_col),
-            F.round("_adc", 6).alias("adc_dist"),
-            F.round("_l2", 6).alias("l2_dist"),
-        )
-    )
+    qtables = _adc_qtables(codebooks, query)
+    short = _adc_shortlist(df, qtables, shortlist, [id_col, vec_col])
+    return _l2_rerank(short, query, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -967,20 +804,15 @@ def sq8_topk(
     shuffle of the corpus anywhere: the bounds aggregate is
     64-rows-out, everything else is scan → project → top-k."""
     bounds = sq8_bounds(emb, vec_col)
-    q_lit = F.array(*[F.lit(float(x)) for x in qvec])
     quant = (
         emb.crossJoin(F.broadcast(bounds))
-        .withColumn("_query", q_lit)
         .withColumn("_rq", F.expr(_sq8_quantize_sql(vec_col)))
         .withColumn("_dec", F.expr(_sq8_decode_sql("_rq")))
     )
     scored = quant.select(
         id_col,
         *payload_cols,
-        F.expr(
-            "aggregate(zip_with(_query, _dec, (a, b) -> a * b),"
-            " cast(0 as double), (acc, x) -> acc + x)"
-        ).alias("_score"),
+        F.expr(dot_sql(array_sql(qvec), "_dec")).alias("_score"),
     )
     return (
         scored.orderBy(F.desc("_score"), F.asc(id_col))
@@ -1004,10 +836,8 @@ def ivfsq_write(
     persisted beside the layout (``<path>_bounds``) as the serving-time
     training artifact — maintained exactly like the IVF centroids
     (retrained when ivf_drift fires)."""
-    from demo_pgvector_spark.operators import ivf as ivf_ops
-
     bounds = sq8_bounds(vectors, vec_col)
-    assigned = ivf_ops.assign_clusters_auto(vectors, cents, id_col, vec_col)
+    assigned = ivf.assign_clusters_auto(vectors, cents, id_col, vec_col)
     coded = (
         assigned.crossJoin(F.broadcast(bounds))
         .withColumn("codes", F.expr(_sq8_quantize_sql(vec_col)))
@@ -1032,37 +862,19 @@ def ivfsq_topk_pruned(
     the strict left fold, top-k with id tiebreak. Per probe the scan
     reads nprobe/k of the directories × 1/4 of the bytes — the
     compounding win this composition exists for."""
-    from demo_pgvector_spark.operators import ivf as ivf_ops
-
-    probe_ids = ivf_ops._rank_centroids(cents, qvec, nprobe)
+    probe_ids = ivf._rank_centroids(cents, qvec, nprobe)
     bounds = spark.read.schema(written_schema(path + "_bounds")).parquet(
         path + "_bounds"
     )
-    q_lit = F.array(*[F.lit(float(x)) for x in qvec])
-    cand = read_partitions(spark, path, "cluster", probe_ids).filter(
-        F.col("cluster").isin(probe_ids)
-    )
-    scored = (
-        cand.crossJoin(F.broadcast(bounds))
-        .withColumn("_query", q_lit)
+    cand = (
+        read_partitions(spark, path, "cluster", probe_ids)
+        .filter(F.col("cluster").isin(probe_ids))
+        .crossJoin(F.broadcast(bounds))
         .withColumn("_dec", F.expr(_sq8_decode_sql("codes")))
-        .select(
-            id_col,
-            F.expr(
-                "aggregate(zip_with(_query, _dec, (a, b) -> a * b),"
-                " cast(0 as double), (acc, x) -> acc + x)"
-            ).alias("_score"),
-        )
     )
-    from pyspark.sql import Window
-
-    top = scored.orderBy(F.desc("_score"), F.asc(id_col)).limit(int(k))
-    w = Window.orderBy(F.desc("_score"), F.asc(id_col))
-    return top.select(
-        id_col,
-        F.round("_score", 6).alias("sq8_score"),
-        F.row_number().over(w).alias("rank"),
-    )
+    score = F.expr(dot_sql(array_sql(qvec), "_dec"))
+    top = ivf._ranked_topk(cand, score, k, id_col, name="_score")
+    return top.select(id_col, F.round("_score", 6).alias("sq8_score"), "rank")
 
 
 def _bq_pack_sql(vec_sql: str, lo_bits: int, dim: int) -> tuple[str, str]:
@@ -1145,7 +957,7 @@ def bq_topk(
         ).alias("hamming"),
     )
     short = packed.orderBy(F.asc("hamming"), F.asc(id_col)).limit(shortlist)
-    q_lit = F.array(*[F.lit(float(x)) for x in qvec])
+    q_lit = query_vector_literal(qvec)
     rescored = short.select(
         id_col,
         *payload_cols,
@@ -1401,23 +1213,17 @@ def smallworld_topk(
         ).limit(int(beam))
         if checkpoint:
             beam_df = beam_df.localCheckpoint(eager=False)
-    from pyspark.sql import Window
+    return _sw_answer(beam_df, k, id_col)
 
-    top = beam_df.orderBy(F.desc("_qs"), F.asc("id")).limit(int(k))
-    # The frame is <= k rows (post-limit), so the single-partition
-    # window is the intended plan; the constant partition key only
-    # keeps WindowExec's moved-to-single-partition warning out of
-    # every parity log (VERDICT r12 #5/#7). `id - id` rather than
-    # lit(1) because a foldable key is constant-folded back to an
-    # EMPTY partition spec and the warning returns; id is non-null so
-    # the key is a plain non-foldable 0 for every row.
-    w = Window.partitionBy(F.col("id") - F.col("id")).orderBy(
-        F.desc("_qs"), F.asc("id")
-    )
+
+def _sw_answer(beam: DataFrame, k: int, id_col: str) -> DataFrame:
+    """(id, similarity_score @6dp, rank): the top-``k`` of a scored
+    (id, _qs) beam through the family's ranked tail."""
+    top = ivf._ranked_topk(beam, F.col("_qs"), k, "id", name="_qs")
     return top.select(
         F.col("id").alias(id_col),
         F.round("_qs", 6).alias("similarity_score"),
-        F.row_number().over(w).cast("int").alias("rank"),
+        "rank",
     )
 
 
@@ -1619,22 +1425,8 @@ def smallworld_topk_pruned(
         ]
         cand = sorted(set(beam_ids) | set(nbr_ids))
         beam_ids = _top_ids(cand, beam)
-    final = (
-        _sw_pruned_scores(spark, root, beam_ids, nb, qvec, id_col, vec_col)
-        .orderBy(F.desc("_qs"), F.asc("id"))
-        .limit(int(k))
-    )
-    from pyspark.sql import Window
-
-    # same ≤k-row constant-key rank projection as smallworld_topk
-    w = Window.partitionBy(F.col("id") - F.col("id")).orderBy(
-        F.desc("_qs"), F.asc("id")
-    )
-    return final.select(
-        F.col("id").alias(id_col),
-        F.round("_qs", 6).alias("similarity_score"),
-        F.row_number().over(w).cast("int").alias("rank"),
-    )
+    final = _sw_pruned_scores(spark, root, beam_ids, nb, qvec, id_col, vec_col)
+    return _sw_answer(final, k, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1713,18 +1505,10 @@ def f16_topk(
     TakeOrderedAndProject with id tiebreak. No shuffle of the corpus,
     no training pass at all (binary16 rounding needs no bounds — the
     one structural simplification vs SQ8's ADC chain)."""
-    q_lit = F.array(*[F.lit(float(x)) for x in qvec])
-    scored = (
-        emb.withColumn("_query", q_lit)
-        .withColumn("_h", F.expr(_f16_round_sql(vec_col)))
-        .select(
-            id_col,
-            *payload_cols,
-            F.expr(
-                "aggregate(zip_with(_query, _h, (a, b) -> a * b),"
-                " cast(0 as double), (acc, x) -> acc + x)"
-            ).alias("_score"),
-        )
+    scored = emb.withColumn("_h", F.expr(_f16_round_sql(vec_col))).select(
+        id_col,
+        *payload_cols,
+        F.expr(dot_sql(array_sql(qvec), "_h")).alias("_score"),
     )
     return (
         scored.orderBy(F.desc("_score"), F.asc(id_col))

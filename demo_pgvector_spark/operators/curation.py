@@ -151,14 +151,14 @@ def bloom_build(
     structure a 100 TB pipeline broadcasts when the eval suite is
     itself large. Mergeable by union (bit-OR ≡ DISTINCT over unioned
     position sets)."""
-    grams = (
-        _with_gram_strings(eval_docs, text_col, n)
-        .select(F.explode("_gstr").alias("gram"))
-        .distinct()
+    grams = _with_gram_strings(eval_docs, text_col, n).select(
+        F.explode("_gstr").alias("gram")
     )
     pos = F.explode(
         F.array(*[_bloom_pos(j, F.col("gram"), m) for j in range(k)])
     )
+    # one distinct: a repeated gram repeats its positions, which the
+    # position distinct removes with every other duplicate
     return grams.select(pos.alias("pos")).distinct()
 
 

@@ -52,7 +52,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from demo_pgvector_spark.functions.vector import dot_sql
 from demo_pgvector_spark.operators import ann
+from demo_pgvector_spark.operators.ivf import centroid_scores_sql
 from demo_pgvector_spark.session import scan_splits, width_for
 
 SHINGLE_K = 5
@@ -853,25 +855,11 @@ def semantic_assign(
     parsed SQL string, two projections (HOF lambdas are opaque to codegen
     CSE, so the scores array is materialized once and read twice).
     """
-    import math
-
-    dots = []
-    for c in cents:
-        n = math.sqrt(sum(float(x) * float(x) for x in c))
-        unit = [float(x) / n if n > 0 else 0.0 for x in c]
-        lit = "array(" + ",".join(f"{x!r}D" for x in unit) + ")"
-        dots.append(
-            f"aggregate(zip_with({vec_col}, {lit},"
-            " (x, y) -> double(x) * y), 0D, (a, x) -> a + x)"
-        )
-    scores = "array(" + ", ".join(dots) + ")"
-    norm = (
-        f"sqrt(aggregate({vec_col}, 0D,"
-        " (a, x) -> a + double(x) * double(x)))"
-    )
     scored = vectors.select(
-        F.col(id_col), F.col(vec_col), F.expr(scores).alias("_scores"),
-        F.expr(norm).alias("_norm"),
+        F.col(id_col),
+        F.col(vec_col),
+        F.expr(centroid_scores_sql(vec_col, cents)).alias("_scores"),
+        F.expr(f"sqrt({dot_sql(vec_col, vec_col)})").alias("_norm"),
     )
     return scored.select(
         F.col(id_col),

@@ -25,7 +25,13 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from demo_pgvector_spark.functions.vector import cosine_similarity, query_vector_literal
+from demo_pgvector_spark.functions.vector import (
+    array_sql,
+    cosine_similarity,
+    dot_sql,
+    query_vector_literal,
+    sequential_fold,
+)
 from demo_pgvector_spark.tables import read_partitions
 
 
@@ -96,7 +102,7 @@ def ivf_topk(
         assigned["cluster"] == top_clusters[centroid_id],
         "leftsemi",
     )
-    return _ranked_topk(cand, q, k, id_col, vec_col)
+    return _ranked_topk(cand, cosine_similarity(F.col(vec_col), q), k, id_col)
 
 
 def ivf_topk_inline(
@@ -126,26 +132,30 @@ def ivf_topk_inline(
     cand = assign_clusters_auto(vectors, cents, id_col, vec_col).filter(
         F.col("cluster").isin(probe_ids)
     )
-    return _ranked_topk(cand, query_vector_literal(qvec), k, id_col, vec_col)
+    return _ranked_topk(cand, _query_cosine(vec_col, qvec), k, id_col)
+
+
+def _query_cosine(vec_col: str, qvec: list[float]):
+    return cosine_similarity(F.col(vec_col), query_vector_literal(qvec))
 
 
 def _ranked_topk(
     cand: DataFrame,
-    q,
+    score,
     k: int,
     id_col: str,
-    vec_col: str,
     payload_cols: tuple[str, ...] = (),
+    name: str = "similarity_score",
 ) -> DataFrame:
-    """The IVF probes' tail: (id, payload..., similarity_score, rank),
-    the exact-cosine top-``k`` candidates against the query literal
-    ``q``, ties to the lower id — TakeOrderedAndProject, then row_number
-    over the ≤k survivors."""
-    order = (F.col("similarity_score").desc(), F.col(id_col).asc())
-    sim = cosine_similarity(F.col(vec_col), q).alias("similarity_score")
-    top = cand.select(id_col, *payload_cols, sim).orderBy(*order).limit(int(k))
+    """The vector family's ranked top-k tail: (id, payload..., name,
+    rank), the top-``k`` candidates by the Column ``score`` (highest
+    first, ties to the lower id) — TakeOrderedAndProject, then
+    row_number over the ≤k survivors."""
+    order = (F.col(name).desc(), F.col(id_col).asc())
+    top = cand.select(id_col, *payload_cols, score.alias(name))
+    top = top.orderBy(*order).limit(int(k))
     rank = F.row_number().over(Window.orderBy(*order)).alias("rank")
-    return top.select(id_col, *payload_cols, "similarity_score", rank)
+    return top.select(id_col, *payload_cols, name, rank)
 
 
 # Ceiling for the inline-literal assignment strategy: above this many
@@ -163,19 +173,18 @@ def assign_clusters_auto(
     cents: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_literals: int = INLINE_MAX_LITERALS,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Driver-known-centroid assignment with automatic physical-strategy
     selection (VERDICT r3 #3): the shuffle-free inlined-literal argmax
     projection while the centroid matrix is small (k·dim <
-    ``max_literals``), the broadcast-join + map-side argmax aggregation
+    ``INLINE_MAX_LITERALS``), the broadcast-join + map-side argmax aggregation
     (``assign_clusters``) once the matrix would blow up the plan. Both
     paths share the same contract — (id, vector, cluster), argmax cosine,
     ties to the LOWEST cid — so callers (the Lloyd loop, the IVF probe)
     never see the switch."""
     kdim = len(cents) * (len(cents[0]) if cents else 0)
-    if kdim < max_literals:
+    if kdim < INLINE_MAX_LITERALS:
         return assign_clusters_inline(vectors, cents, id_col, vec_col, keep_cols)
     cdf = vectors.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
@@ -192,31 +201,22 @@ def _rank_centroids(
     """Top-``nprobe`` centroid ids for a probe vector, ranked on the
     driver with no Spark job, bit for bit as Spark ranks
     ``cosine_similarity(cv, q)`` by (sim DESC, cid ASC) in ``ivf_topk``:
-    sequential float64 left folds for the dots, as ``aggregate(zip_with
-    …)`` evaluates them (``numpy.dot`` sums pairwise and can round
-    differently); sim = dot(c, q) / sqrt(dot(c, c) · dot(q, q)), null
-    when that product is 0 (``try_divide``); nulls rank last, NaN first
-    (Spark's double order), ties to the lower cid. A query whose length
-    differs from a centroid's raises ``ValueError``: ``zip_with`` would
-    pad with nulls, and the probe would silently rank clusters by cid."""
-
-    def dot(a: list[float], b: list[float]) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
+    the dots are ``sequential_fold``s, sim = dot(c, q) / sqrt(dot(c, c)
+    · dot(q, q)), null when that product is 0 (``try_divide``); nulls
+    rank last, NaN first (Spark's double order), ties to the lower cid.
+    A query whose length differs from a centroid's raises
+    ``ValueError``: ``zip_with`` would pad with nulls, and the probe
+    would silently rank clusters by cid."""
     q = [float(x) for x in qvec]
-    qq = dot(q, q)
+    qq = sequential_fold(q, q)
     keys = []
     for cid, cent in enumerate(cents):
         if len(cent) != len(q):
             raise ValueError(
                 f"centroid {cid} has {len(cent)} dimensions, the query {len(q)}"
             )
-        c = [float(x) for x in cent]
-        norm = math.sqrt(dot(c, c) * qq)
-        sim = dot(c, q) / norm if norm != 0.0 else None
+        norm = math.sqrt(sequential_fold(cent, cent) * qq)
+        sim = sequential_fold(cent, q) / norm if norm != 0.0 else None
         if sim is None:
             keys.append((2, 0.0, cid))
         elif math.isnan(sim):
@@ -310,7 +310,7 @@ def ivf_topk_pruned(
     cand = read_partitions(spark, path, "cluster", probe_ids).filter(
         F.col("cluster").isin(probe_ids)
     )
-    return _ranked_topk(cand, query_vector_literal(qvec), k, id_col, vec_col)
+    return _ranked_topk(cand, _query_cosine(vec_col, qvec), k, id_col)
 
 
 def assign_clusters_inline(
@@ -334,20 +334,11 @@ def assign_clusters_inline(
     the LOWEST cid (``array_position`` returns the first match) —
     identical to assign_clusters' ``max_by(cid, struct(sim, -cid))``.
 
-    Built as ONE parsed SQL string: k·dim literals via F.array/F.lit cost
-    ~65 Py4J round-trips each (see functions/vector.py
-    query_vector_literal); one expr string is a single round-trip.
+    Built as ONE parsed SQL string (``centroid_scores_sql``): k·dim
+    literals via F.array/F.lit cost ~65 Py4J round-trips each (see
+    functions/vector.py query_vector_literal); one expr string is a
+    single round-trip.
     """
-    dots = []
-    for c in cents:
-        n = math.sqrt(sum(float(x) * float(x) for x in c))
-        unit = [float(x) / n if n > 0 else 0.0 for x in c]
-        lit = "array(" + ",".join(f"{x!r}D" for x in unit) + ")"
-        dots.append(
-            f"aggregate(zip_with({vec_col}, {lit},"
-            " (x, y) -> double(x) * y), 0D, (a, x) -> a + x)"
-        )
-    scores = "array(" + ", ".join(dots) + ")"
     # Two selects on purpose: HOF lambdas are opaque to codegen CSE, so
     # referencing the scores expression twice (argmax needs max + position)
     # would compute all k dot products twice per row. Projected first, the
@@ -357,7 +348,7 @@ def assign_clusters_inline(
         F.col(id_col),
         F.col(vec_col),
         *[F.col(c) for c in keep_cols],
-        F.expr(scores).alias("_scores"),
+        F.expr(centroid_scores_sql(vec_col, cents)).alias("_scores"),
     )
     return scored.select(
         F.col(id_col),
@@ -367,6 +358,18 @@ def assign_clusters_inline(
             "cluster"
         ),
     )
+
+
+def centroid_scores_sql(vec_col: str, cents: list[list[float]]) -> str:
+    """SQL text of the k-element array of ``vec_col``'s dots with the
+    centroids normalized on the driver (zero centroids stay zero): the
+    score array whose first argmax is the nearest centroid by cosine."""
+    dots = []
+    for c in cents:
+        n = math.sqrt(sequential_fold(c, c))
+        unit = [float(x) / n if n > 0 else 0.0 for x in c]
+        dots.append(dot_sql(vec_col, array_sql(unit)))
+    return "array(" + ", ".join(dots) + ")"
 
 
 DEFAULT_OVERSAMPLE = 8
@@ -676,5 +679,5 @@ def ivf_topk_filtered(
     cand = surv.crossJoin(F.broadcast(pstar)).filter(
         F.col("_pos") <= F.col("_pstar")
     )
-    top = _ranked_topk(cand, query_vector_literal(qvec), k, id_col, vec_col, payload_cols)
+    top = _ranked_topk(cand, _query_cosine(vec_col, qvec), k, id_col, payload_cols)
     return top.withColumn("similarity_score", F.round("similarity_score", 6))

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from demo_pgvector_spark.functions.vector import (
     cosine_similarity,
     dot,
+    dot_sql,
     query_vector_literal,
 )
 
@@ -244,21 +245,11 @@ def mmr_rerank(
         ).alias("pool")
     )
 
-    def _dot(a: str, b: str, s: str) -> str:
-        # same fold as functions.vector.dot — cast to double, zip_with
-        # product, sequential left-to-right sum; unique lambda-variable
-        # suffix ``s`` so nested uses never shadow each other
-        return (
-            f"aggregate(zip_with({a}, {b},"
-            f" (x{s}, y{s}) -> cast(x{s} as double) * cast(y{s} as double)),"
-            f" cast(0.0 as double), (acc{s}, e{s}) -> acc{s} + e{s})"
-        )
-
-    def _cos6(a: str, b: str, s: str) -> str:
+    def _cos6(a: str, b: str) -> str:
         # round(cosine, 6) — identical to round(cosine_similarity(), 6)
         return (
-            f"round(try_divide({_dot(a, b, s + 'p')},"
-            f" sqrt({_dot(a, a, s + 'q')} * {_dot(b, b, s + 'r')})), 6)"
+            f"round(try_divide({dot_sql(a, b)},"
+            f" sqrt({dot_sql(a, a)} * {dot_sql(b, b)})), 6)"
         )
 
     lam_r = repr(lam)
@@ -284,11 +275,7 @@ def mmr_rerank(
     if k >= 2:
         penalty = (
             "array_max(transform(sel, s -> "
-            + _cos6(
-                "p.v",
-                "element_at(filter(pool, pp -> pp.id = s.id), 1).v",
-                "c",
-            )
+            + _cos6("p.v", "element_at(filter(pool, pp -> pp.id = s.id), 1).v")
             + "))"
         )
         step_scored = (

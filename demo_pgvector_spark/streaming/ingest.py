@@ -129,20 +129,12 @@ def publish_version(root: str, version: str | None) -> None:
     write_atomic(os.path.join(root, _POINTER), version or "")
 
 
-@contextlib.contextmanager
-def _next_version(root: str):
-    """Yield ``(current version, next version's directory)`` for the
-    block to write, then publish the next version. A block that raises
-    publishes nothing."""
-    v = current_version(root)
-    nxt = f"v{(int(v[1:]) + 1) if v else 1:06d}"
-    os.makedirs(root, exist_ok=True)
-    yield v, os.path.join(root, nxt)
-    publish_version(root, nxt)
-
-
 def commit_table(
-    df: DataFrame, root: str, single_file: bool = False, delta: bool = False
+    df: DataFrame,
+    root: str,
+    single_file: bool = False,
+    delta: bool = False,
+    sidecar: dict[str, str] | None = None,
 ) -> str:
     """Write ``df`` as the next version and atomically swap the pointer.
 
@@ -182,47 +174,62 @@ def commit_table(
     The trade is the small-files accretion every add-file log pays;
     ``compact_table`` is the standing OPTIMIZE pairing.
 
+    ``sidecar`` maps file names to text written into the version
+    directory after the data (an underscore-prefixed name stays
+    invisible to parquet file discovery, like ``_SUCCESS``), so it
+    publishes with the version under the same pointer swap: the
+    count-min sink's last-applied epoch.
+
     Durability: every data file this commit wrote, then the version
     directory, is fsynced before the pointer moves (a hardlinked file
     was synced by the commit that first wrote it), so the pointer never
     names a file a power loss can take back. The pointer's temp file is
     fsynced before the ``os.replace`` and the table root directory
     after it, so once this returns a power loss can neither leave an
-    empty pointer nor roll the rename back to the previous version."""
+    empty pointer nor roll the rename back to the previous version. A
+    commit that raises publishes nothing."""
     import shutil
 
-    with _next_version(root) as (v, dst):
-        out = df.coalesce(1) if single_file else df
-        linked: list[str] = []
-        if delta and v is not None:
-            shutil.rmtree(dst, ignore_errors=True)  # orphan from a crash
-            os.makedirs(dst)
-            prev = os.path.join(root, v)
-            linked = [n for n in os.listdir(prev) if n.endswith(".parquet")]
-            for name in linked:
-                os.link(os.path.join(prev, name), os.path.join(dst, name))
-            out.write.mode("append").parquet(dst)
-            # An empty delta still makes the append write one 0-row
-            # file: unlink it and its checksum, so a no-op commit adds no
-            # file. The footer is read with pyarrow (no Spark job); the
-            # linked files keep the schema readers check.
-            for name in os.listdir(dst) if linked else ():
-                path = os.path.join(dst, name)
-                if (
-                    name.endswith(".parquet")
-                    and name not in linked
-                    and papq.read_metadata(path).num_rows == 0
-                ):
-                    os.unlink(path)
-                    with contextlib.suppress(FileNotFoundError):
-                        os.unlink(os.path.join(dst, f".{name}.crc"))
-        else:
-            out.write.mode("overwrite").parquet(dst)
-        for name in os.listdir(dst):
-            if name.endswith(".parquet") and name not in linked:
-                _fsync(os.path.join(dst, name))
-        _fsync(dst)
-    return os.path.basename(dst)
+    v = current_version(root)
+    nxt = f"v{(int(v[1:]) + 1) if v else 1:06d}"
+    dst = os.path.join(root, nxt)
+    os.makedirs(root, exist_ok=True)
+    out = df.coalesce(1) if single_file else df
+    linked: list[str] = []
+    if delta and v is not None:
+        shutil.rmtree(dst, ignore_errors=True)  # orphan from a crash
+        os.makedirs(dst)
+        prev = os.path.join(root, v)
+        linked = [n for n in os.listdir(prev) if n.endswith(".parquet")]
+        for name in linked:
+            os.link(os.path.join(prev, name), os.path.join(dst, name))
+        out.write.mode("append").parquet(dst)
+        # An empty delta still makes the append write one 0-row
+        # file: unlink it and its checksum, so a no-op commit adds no
+        # file. The footer is read with pyarrow (no Spark job); the
+        # linked files keep the schema readers check.
+        for name in os.listdir(dst) if linked else ():
+            path = os.path.join(dst, name)
+            if (
+                name.endswith(".parquet")
+                and name not in linked
+                and papq.read_metadata(path).num_rows == 0
+            ):
+                os.unlink(path)
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(os.path.join(dst, f".{name}.crc"))
+    else:
+        out.write.mode("overwrite").parquet(dst)
+    sidecar = sidecar or {}
+    for name, text in sidecar.items():
+        with open(os.path.join(dst, name), "w", encoding="utf-8") as fh:
+            fh.write(text)
+    for name in os.listdir(dst):
+        if (name.endswith(".parquet") and name not in linked) or name in sidecar:
+            _fsync(os.path.join(dst, name))
+    _fsync(dst)
+    publish_version(root, nxt)
+    return nxt
 
 
 def landing_stream(

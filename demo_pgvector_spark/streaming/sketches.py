@@ -68,21 +68,17 @@ def _last_epoch(root: str) -> int:
 
 
 def _commit_with_epoch(df: DataFrame, root: str, epoch_id: int) -> str:
-    """``ingest.commit_table``'s write-then-publish with the epoch marker
-    written INSIDE the not-yet-visible version directory (an
-    underscore-prefixed file, invisible to parquet file discovery like
-    ``_SUCCESS``), so the single atomic pointer ``os.replace`` commits
-    the table version AND its last-applied epoch together (ADVICE r9:
-    a root-level marker written after the swap left a crash window in
-    which a retried epoch re-merged an already-live delta and
-    double-counted)."""
-    with ingest_ops._next_version(root) as (_v, dst):
-        # single file: the sketch is ≤ d×w rows by construction — see
-        # ingest.commit_table(single_file=True) for the small-files argument
-        df.coalesce(1).write.mode("overwrite").parquet(dst)
-        with open(os.path.join(dst, _EPOCH_MARKER), "w", encoding="utf-8") as fh:
-            fh.write(str(epoch_id))
-    return os.path.basename(dst)
+    """``ingest.commit_table`` with the epoch marker as the version's
+    sidecar file: written INSIDE the not-yet-visible version directory
+    and fsynced with its data, so the single atomic pointer
+    ``os.replace`` commits the table version AND its last-applied epoch
+    together (ADVICE r9: a root-level marker written after the swap left
+    a crash window in which a retried epoch re-merged an already-live
+    delta and double-counted). Single file: the sketch is ≤ d×w rows by
+    construction."""
+    return ingest_ops.commit_table(
+        df, root, single_file=True, sidecar={_EPOCH_MARKER: str(epoch_id)}
+    )
 
 
 def countmin_sink(

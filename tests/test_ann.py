@@ -140,17 +140,18 @@ def test_pq_topk_matches_numpy_reference(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_pq_broadcast_path_matches_inline(spark, clustered_df):
+def test_pq_broadcast_path_matches_inline(spark, clustered_df, monkeypatch):
     """The two physical strategies (inlined-literal folds vs codebook
     broadcast join + min_by) are bit-identical — same codes, same ADC
     doubles, same ties."""
+    from demo_pgvector_spark.operators import ivf
+
     books = ann.train_pq_codebooks(clustered_df, m=8, k=16, sample=240, iters=4)
     q = clustered_df.orderBy("vec_id").first()["embedding"]
     q = [float(x) for x in q]
     inline = ann.pq_topk(clustered_df, None, q, codebooks=books).collect()
-    bcast = ann.pq_topk(
-        clustered_df, None, q, codebooks=books, max_literals=1
-    ).collect()
+    monkeypatch.setattr(ivf, "INLINE_MAX_LITERALS", 1)
+    bcast = ann.pq_topk(clustered_df, None, q, codebooks=books).collect()
     assert [tuple(r) for r in inline] == [tuple(r) for r in bcast]
 
 
@@ -202,15 +203,18 @@ def test_trained_codebooks_recall_on_clustered_data(spark, clustered_df):
     assert recall_t >= recall_s
 
 
-def test_encode_codes_strategies_agree(spark, clustered_df):
+def test_encode_codes_strategies_agree(spark, clustered_df, monkeypatch):
+    from demo_pgvector_spark.operators import ivf
+
     books = ann.train_pq_codebooks(clustered_df, m=8, k=16, sample=240, iters=4)
     a = {
         r["vec_id"]: tuple(r[f"code_{s}"] for s in range(8))
         for r in ann.encode_codes(clustered_df, books).collect()
     }
+    monkeypatch.setattr(ivf, "INLINE_MAX_LITERALS", 1)
     b = {
         r["vec_id"]: tuple(r[f"code_{s}"] for s in range(8))
-        for r in ann.encode_codes(clustered_df, books, max_literals=1).collect()
+        for r in ann.encode_codes(clustered_df, books).collect()
     }
     assert a == b
 
@@ -830,3 +834,20 @@ def test_smallworld_append_base_entries_reuse_is_identical(spark, clustered_df):
         )
     )
     assert plain == reused
+
+
+def test_probe_signatures_match_the_stored_row_near_a_hyperplane(spark):
+    """A probe's driver-side signatures equal the ``with_signatures`` row
+    of the same vector, also when it lies on a hyperplane up to rounding:
+    here the float64 fold of q·h is 0.0, while a pairwise (BLAS) sum
+    gives a tiny negative and would flip bit 0 of table 0."""
+    planes = ann.hyperplanes(64)
+    h = planes[0, 0]
+    q = np.random.RandomState(0).normal(0, 1, 64)
+    q = q - (q @ h) / (h @ h) * h
+    row = ann.with_signatures(
+        spark.createDataFrame([([float(x) for x in q],)], "embedding array<double>"),
+        planes,
+    ).first()
+    want = [row[f"sig_{t}"] for t in range(planes.shape[0])]
+    assert ann.probe_signatures([float(x) for x in q], planes) == want

@@ -234,7 +234,7 @@ def test_pruned_probe_plans_without_a_job_and_skips_an_empty_cluster(
     assert empty.collect() == []
 
 
-def test_assign_auto_strategy_switch(spark, clustered_df):
+def test_assign_auto_strategy_switch(spark, clustered_df, monkeypatch):
     """``assign_clusters_auto`` must pick the inlined-literal projection
     below INLINE_MAX_LITERALS and the broadcast-join path above it, with
     IDENTICAL assignments either way (same argmax, same lowest-cid
@@ -242,7 +242,8 @@ def test_assign_auto_strategy_switch(spark, clustered_df):
     _, cents = ivf.kmeans_lloyd(clustered_df, k=8, iters=1)
 
     inline = ivf.assign_clusters_auto(clustered_df, cents)
-    joined = ivf.assign_clusters_auto(clustered_df, cents, max_literals=1)
+    monkeypatch.setattr(ivf, "INLINE_MAX_LITERALS", 1)
+    joined = ivf.assign_clusters_auto(clustered_df, cents)
 
     inline_plan = inline._jdf.queryExecution().executedPlan().toString()
     joined_plan = joined._jdf.queryExecution().executedPlan().toString()

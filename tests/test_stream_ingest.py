@@ -502,7 +502,10 @@ def test_read_ignores_nullability(spark, tmp_path):
     "commit, version_synced",
     [
         (ingest.commit_table, [("dir", False)]),
-        (lambda df, root: sketches._commit_with_epoch(df, root, 0), []),
+        (
+            lambda df, root: sketches._commit_with_epoch(df, root, 0),
+            [("file", False), ("dir", False)],
+        ),
     ],
     ids=["commit_table", "countmin_commit"],
 )
@@ -511,8 +514,9 @@ def test_commit_fsyncs_pointer_then_root(
 ):
     """Both versioned-table commits make their pointer swap durable: the
     temp pointer file is fsynced before the rename, the table root
-    directory after. ``commit_table`` first syncs the version it wrote
-    (here a directory with no data file)."""
+    directory after. Each first syncs the version it wrote: here a
+    directory with no data file, plus the count-min commit's epoch
+    marker."""
     import stat
 
     class _Frame:
@@ -554,8 +558,9 @@ def test_commit_syncs_every_new_data_file_before_the_pointer_moves(
     """``commit_table`` fsyncs each data file it wrote into the next
     version, and the version directory, before ``_CURRENT`` names it —
     for a whole commit, an add-files delta (whose hardlinked files were
-    synced by the commit that wrote them) and an empty delta."""
-    root = str(tmp_path / "t")
+    synced by the commit that wrote them), an empty delta and the
+    count-min sink's commit, whose epoch marker is synced too."""
+    root, cm_root = str(tmp_path / "t"), str(tmp_path / "cm")
     synced, at_swap = set(), []
     real_fsync, real_publish = os.fsync, ingest.publish_version
 
@@ -565,7 +570,7 @@ def test_commit_syncs_every_new_data_file_before_the_pointer_moves(
         real_fsync(fd)
 
     def recording_publish(table_root, version):
-        at_swap.append((version, set(synced)))
+        at_swap.append((table_root, version, set(synced)))
         real_publish(table_root, version)
 
     monkeypatch.setattr(os, "fsync", recording_fsync)
@@ -574,12 +579,20 @@ def test_commit_syncs_every_new_data_file_before_the_pointer_moves(
     ingest.commit_table(spark.createDataFrame(rows[:4], SCHEMA).repartition(2), root)
     ingest.commit_table(spark.createDataFrame(rows[4:], SCHEMA), root, delta=True)
     ingest.commit_table(spark.createDataFrame([], SCHEMA), root, delta=True)
+    sketch = spark.createDataFrame([(0, 3, 2)], sketches.SKETCH_SCHEMA_DDL)
+    sketches._commit_with_epoch(sketch, cm_root, 7)
 
-    assert [v for v, _ in at_swap] == ["v000001", "v000002", "v000003"]
-    for version, synced_then in at_swap:
-        vdir = os.path.join(root, version)
-        files = [f for f in os.listdir(vdir) if f.endswith(".parquet")]
+    assert [v for _, v, _ in at_swap] == ["v000001", "v000002", "v000003", "v000001"]
+    assert sketches._last_epoch(cm_root) == 7
+    for table_root, version, synced_then in at_swap:
+        vdir = os.path.join(table_root, version)
+        files = [
+            f
+            for f in os.listdir(vdir)
+            if f.endswith(".parquet") or f == sketches._EPOCH_MARKER
+        ]
         assert files, version
+        assert (sketches._EPOCH_MARKER in files) == (table_root == cm_root)
         for path in [vdir] + [os.path.join(vdir, f) for f in files]:
             st = os.stat(path)
             assert (st.st_dev, st.st_ino) in synced_then, path

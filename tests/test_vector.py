@@ -8,9 +8,12 @@ from demo_pgvector_spark import tables
 from demo_pgvector_spark.functions.vector import (
     cosine_similarity,
     dot,
+    dot_sql,
     l2_norm,
     l2_normalize,
+    l2sq_sql,
     query_vector_literal,
+    sequential_fold,
 )
 from demo_pgvector_spark.operators.similarity import sim_topk
 from demo_pgvector_spark.registry import _query_vec
@@ -259,3 +262,100 @@ def test_ood_score_matches_numpy_replay(spark, monkeypatch):
                 want = (n * scaled[i] - s1) / den
                 assert abs(got[i]["z"] - round(want, 4)) <= 1e-9
                 assert got[i]["is_outlier"] == (want < -2.0)
+
+
+def test_sql_column_and_driver_folds_agree_bit_for_bit(spark):
+    """``dot_sql``/``l2sq_sql``, the Column ``dot``/``cosine_similarity``
+    and the driver's ``sequential_fold`` give the same doubles, for
+    float32 and float64 rows, zero vectors included (cosine null)."""
+    import math
+
+    import numpy as np
+
+    rng = np.random.RandomState(7)
+    for etype, dtype in (("float", np.float32), ("double", np.float64)):
+        pairs = [rng.normal(0, 1, (2, 37)).astype(dtype) for _ in range(40)]
+        zero = np.zeros(37)
+        pairs += [np.stack([zero, zero]), np.stack([zero, rng.normal(0, 1, 37)])]
+        rows = [
+            (i, [float(x) for x in dtype(a)], [float(x) for x in dtype(b)])
+            for i, (a, b) in enumerate(pairs)
+        ]
+        df = spark.createDataFrame(rows, f"i int, a array<{etype}>, b array<{etype}>")
+        got = df.select(
+            "i",
+            F.expr(dot_sql("a", "b")).alias("dot_sql"),
+            dot(F.col("a"), F.col("b")).alias("dot"),
+            F.expr(l2sq_sql("a", "b")).alias("l2sq"),
+            cosine_similarity(F.col("a"), F.col("b")).alias("cos"),
+        ).collect()
+        for r in got:
+            _, a, b = rows[r["i"]]
+            d = sequential_fold(a, b)
+            norm = math.sqrt(sequential_fold(a, a) * sequential_fold(b, b))
+            assert r["dot_sql"] == r["dot"] == d
+            assert r["l2sq"] == sequential_fold(a, b, l2=True)
+            assert r["cos"] == (d / norm if norm else None)
+
+
+def test_vector_kernels_are_spelled_only_in_functions_vector():
+    """No operator writes its own vector kernel: no ``aggregate(zip_with``
+    fold text, no hand-joined ``{x!r}D`` double-array literal and no
+    ``F.array(*[F.lit(float(...))])`` literal outside docstrings under
+    ``operators/`` — they come from ``functions/vector.py``, the one
+    module that spells them (``_f16_round_sql``'s rounding ``zip_with``
+    is not a fold)."""
+    import ast
+    import pathlib
+
+    from demo_pgvector_spark.functions import vector
+    from demo_pgvector_spark.operators import ann
+
+    def kernels(path):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        docs = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.FunctionDef, ast.ClassDef))
+            and n.body
+            and isinstance(n.body[0], ast.Expr)
+            and isinstance(n.body[0].value, ast.Constant)
+        }
+        found = set()
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and "aggregate(zip_with(" in n.value
+                and id(n) not in docs
+            ):
+                found.add("fold")
+            if (
+                isinstance(n, ast.JoinedStr)
+                and len(n.values) == 2
+                and isinstance(n.values[0], ast.FormattedValue)
+                and n.values[0].conversion == ord("r")
+                and getattr(n.values[1], "value", None) == "D"
+            ):
+                found.add("literal")
+            if (
+                isinstance(n, ast.Call)
+                and getattr(n.func, "attr", None) == "array"
+                and any(
+                    isinstance(c, ast.Call)
+                    and getattr(c.func, "attr", None) == "lit"
+                    and c.args
+                    and isinstance(c.args[0], ast.Call)
+                    and getattr(c.args[0].func, "id", None) == "float"
+                    for a in n.args
+                    if isinstance(a, ast.Starred)
+                    for c in ast.walk(a)
+                )
+            ):
+                found.add("lit_array")
+        return found
+
+    vector_py = pathlib.Path(vector.__file__)
+    assert kernels(vector_py) == {"fold", "literal"}
+    operators = sorted(pathlib.Path(ann.__file__).parent.glob("*.py"))
+    assert {p.name: kernels(p) for p in operators if kernels(p)} == {}
