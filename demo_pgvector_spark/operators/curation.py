@@ -1042,8 +1042,8 @@ def curate_incremental(
       connects the doc to the corpus (incumbent wins), or to a
       SMALLER-id batch doc (min-id keeper). Candidates come from
       ``minhash_pairs_incremental`` — pass ``corpus_bands`` (the
-      ``band_index_write`` layout) and the corpus is never re-banded,
-      though its text is still shingled for the verify.
+      ``band_index_write`` layout) and the corpus is never re-banded;
+      its text is shingled only for the cross candidates.
     - ``contaminated``: the eval bloom filter flags an n-gram maybe-hit
       (``bloom_decontaminate`` semantics — no false negatives).
 
@@ -1052,14 +1052,23 @@ def curate_incremental(
     once for many calls, as the stream sink does; given the eval set,
     the bitset is collected here (one driver-side collect).
 
-    Plan: ``too_short`` and ``contaminated`` are expressions in the
-    batch scan's projection, next to the sha2 (the in-row bloom probe
-    of ``_bloom_probe``). ``exact_dup`` is one window partitioned by
-    the hash over the batch rows and the corpus hashes (a corpus row
-    carries a null id): a batch row is a dup iff its partition holds a
-    corpus row or a smaller batch id. The near-dup ids are the one
-    join, a left join of the distinct flagged ids onto the window's
-    output. A batch row with a null id or null text gets no row.
+    Precondition: batch doc ids are UNIQUE (the stream sink stages by an
+    anti-join on the id, so its batches are). The verdicts are folded
+    per id, so a repeated id gets one row whose flags are the OR of its
+    rows' flags. A batch row with a null id or null text gets no row.
+
+    Plan: the work scales with the batch and its candidates; no
+    exchange carries corpus rows. The batch rows' (id, sha2,
+    ``too_short``, ``contaminated``) are broadcast — the last two are
+    expressions in the batch scan's projection (the in-row bloom probe
+    of ``_bloom_probe``) — and the corpus hashes ∪ the batch hashes
+    stream past them: a match flags its batch id ``exact_dup`` when the
+    streamed row is a corpus row or a smaller batch id, and every batch
+    doc meets at least itself, which carries its other two flags. The
+    near-dup pairs (one side of a cross pair is the batch doc, a
+    within-batch pair flags its larger id) join those match rows in ONE
+    ``groupBy(id)`` of ``max()`` per flag; an id with no batch row of
+    its own (a cross pair's corpus side) is dropped there.
 
     Verdicts are deliberately INDEPENDENT (each computed over the whole
     batch), not cascaded: the row is the audit record a pipeline logs
@@ -1075,10 +1084,8 @@ def curate_incremental(
         else bloom_bitset(bloom_build(eval_docs, n, text_col))
     )
     ident, h = F.col(id_col), F.sha2(F.col(text_col), 256).alias("_h")
-    audit = _bloom_probe(
-        batch.filter(ident.isNotNull() & F.col(text_col).isNotNull()),
-        bits, n, text_col, BLOOM_M, BLOOM_K,
-    ).select(
+    docs = batch.filter(ident.isNotNull() & F.col(text_col).isNotNull())
+    audit = _bloom_probe(docs, bits, n, text_col, BLOOM_M, BLOOM_K).select(
         ident,
         h,
         (
@@ -1086,39 +1093,40 @@ def curate_incremental(
         ).alias("too_short"),
         (F.col("n_maybe") > 0).alias("contaminated"),
     )
-    by_hash = Window.partitionBy("_h")
-    exact = (
-        audit.unionByName(
-            corpus.select(
-                F.lit(None).cast(batch.schema[id_col].dataType).alias(id_col), h
-            ),
-            allowMissingColumns=True,
-        )
-        .withColumn(
-            "exact_dup",
-            (F.count(F.when(ident.isNull(), 1)).over(by_hash) > 0)
-            | (ident > F.min(ident).over(by_hash)),
-        )
-        .filter(ident.isNotNull())
+    # a streamed row with a null _by is a corpus row
+    seen = corpus.select(
+        F.lit(None).cast(batch.schema[id_col].dataType).alias("_by"), h
+    ).unionByName(docs.select(ident.alias("_by"), h))
+    exact = seen.join(F.broadcast(audit), "_h").select(
+        id_col,
+        (F.col("_by").isNull() | (F.col("_by") < ident)).alias("exact_dup"),
+        "too_short",
+        "contaminated",
     )
     pairs = dedup_ops.minhash_pairs_incremental(
         corpus, batch, id_col, text_col, corpus_bands=corpus_bands
     ).filter(F.col("jaccard") >= tau)
-    # a cross pair flags its batch side (its corpus side matches no
-    # batch row), a within-batch pair its larger id
-    nd = pairs.select(
+    # a cross pair flags its batch side (its corpus side has no batch
+    # row, so the too_short filter drops it), a within-batch pair its
+    # larger id
+    near = pairs.select(
         F.explode(
             F.when(
                 F.col("pair_kind") == "cross", F.array("id_a", "id_b")
             ).otherwise(F.array("id_b"))
-        ).alias(id_col)
-    ).distinct().withColumn("_nd", F.lit(True))
-    out = exact.join(nd, id_col, "left").select(
-        id_col,
-        "exact_dup",
-        "too_short",
-        F.coalesce("_nd", F.lit(False)).alias("near_dup"),
-        "contaminated",
+        ).alias(id_col),
+        F.lit(True).alias("near_dup"),
+    )
+    out = (
+        exact.unionByName(near, allowMissingColumns=True)
+        .groupBy(id_col)
+        .agg(
+            F.max("exact_dup").alias("exact_dup"),
+            F.max("too_short").alias("too_short"),
+            F.coalesce(F.max("near_dup"), F.lit(False)).alias("near_dup"),
+            F.max("contaminated").alias("contaminated"),
+        )
+        .filter(F.col("too_short").isNotNull())
     )
     return out.withColumn(
         "kept",

@@ -38,11 +38,11 @@ Scale notes (100 TB posture):
 
 Candidate-then-verify machinery, shared with multimodal.py and ann.py:
 bucket rows come from ``ann.bucket_rows``; pairs from the bucket
-aggregate ``_bucket_id_pairs`` (id-only text buckets — minhash_pairs and
-the within-batch half of minhash_pairs_incremental, where it measured
-faster than a self-join in round 4) or from the ``ann.bucket_pairs``
-self-join (buckets carrying fingerprints or vectors, batch-vs-corpus
-crosses, the small-world build); text pairs are verified by
+aggregate ``_bucket_id_pairs`` (id-only text buckets — minhash_pairs,
+where it measured faster than a self-join in round 4) or from the
+``ann.bucket_pairs`` join (buckets carrying fingerprints or vectors,
+the batch bands of minhash_pairs_incremental against corpus ∪ batch
+bands, the small-world build); text pairs are verified by
 ``_with_both_shingles``.
 """
 
@@ -238,58 +238,66 @@ def minhash_pairs_incremental(
     replays the full computation + the restriction).
 
     Precondition: corpus and batch doc ids are DISJOINT (a batch row
-    re-using a corpus id is an upsert, not a new document). Cross
-    self-pairs from a violating caller are filtered defensively, but
-    duplicate ids would still fan out the shingle-verification joins.
+    re-using a corpus id is an upsert, not a new document). Self-pairs
+    from a violating caller are filtered defensively, but duplicate ids
+    would still fan out the shingle-verification joins.
 
-    Plan: within-batch pairs use the same bucket-local collect_list
-    enumeration as ``minhash_pairs`` over batch rows only; cross pairs
-    are a (band, key) hash JOIN of batch bands against corpus bands —
-    O(batch bands + bucket hits), never corpus-sized. At 100 TB the
-    corpus band table is a write-once index maintained at ingest
-    (bucketed/partitioned by key so this join co-locates without a
-    corpus-side shuffle); here it is recomputed because the testdata is
-    raw parquet. ``max_bucket_size`` caps the CORPUS side per bucket —
-    one pathological bucket (license header) would otherwise join every
-    batch member against thousands of corpus docs.
+    Plan: every batch-sized relation is broadcast and every corpus-sized
+    one streams past it, so no exchange carries corpus rows. Candidates
+    are ONE bucket join (``ann.bucket_pairs``) of the broadcast batch
+    bands against corpus bands ∪ batch bands, each right row carrying
+    whether it is a corpus row, then one dedup of the pairs — no
+    corpus × corpus pair can form, since the left side is the batch.
+    The verify streams the corpus text past the broadcast corpus ids of
+    the cross candidates and shingles only the rows that match; those
+    shingles and the batch's are broadcast into the two-sided verify
+    (``_with_both_shingles``). At 100 TB the corpus band table is a
+    write-once index maintained at ingest; here it is recomputed from
+    the corpus text unless given. ``max_bucket_size`` drops every
+    bucket holding more corpus ∪ batch rows, so the output is
+    ``minhash_pairs(corpus ∪ batch, max_bucket_size=…)`` restricted to
+    the batch.
 
     ``corpus_bands``: the MATERIALIZED corpus band index (the
     ``band_index_write`` layout, columns (id_col, band, key)) — when
     given, the corpus side is read from it VERBATIM and the corpus text
     is never re-shingled/re-hashed for banding (VERDICT r8 #3: the
     ingest-maintained write-once index, the dedup twin of
-    ``ivf_write_clustered``). The corpus text is still read for the
-    exact-Jaccard verify: ``with_shingles`` runs over the whole
-    corpus ∪ batch on every call, not only over the candidates' ids, so
-    each call shingles the entire corpus. When None, bands are
-    recomputed from the corpus text (the raw-parquet fallback)."""
-    b_banded = band_index(batch, id_col, text_col)
+    ``ivf_write_clustered``); the corpus text is read only to shingle
+    the cross candidates. When None, bands are recomputed from the
+    corpus text (the raw-parquet fallback)."""
     if corpus_bands is None:
         corpus_bands = band_index(corpus, id_col, text_col)
-    # order="sorted" drops equal-id hits: corpus and batch ids are
-    # REQUIRED to be disjoint (a batch re-ingesting a corpus doc is an
-    # upsert problem, not a dedup problem), and a violating caller would
-    # otherwise get (id, id) self-pairs at jaccard 1.0 — a shape
-    # minhash_pairs itself can never produce. The filter does NOT repair
-    # the shingle-join fanout duplicate ids also cause, so disjointness
-    # stays a documented precondition.
-    cross = ann.bucket_pairs(
-        b_banded, corpus_bands, on=("band", "key"), id_col=id_col,
-        order="sorted", max_bucket_size=max_bucket_size,
-    ).withColumn("pair_kind", F.lit("cross"))
-    within = _bucket_id_pairs(b_banded, id_col).withColumn(
-        "pair_kind", F.lit("batch_batch")
+    # a boolean payload marks the corpus rows: with a string one the
+    # pair dedup is a sort aggregate, and AQE no longer sees the two
+    # verify sides' broadcasts as one (each runs twice)
+    mine = band_index(batch, id_col, text_col).withColumn("cross", F.lit(False))
+    # id_a is the batch side; order="!=" drops an id found on both sides
+    # (a caller breaking disjointness), which would pair with itself
+    cand = ann.bucket_pairs(
+        F.broadcast(mine),
+        corpus_bands.select(
+            id_col, "band", "key", F.lit(True).alias("cross")
+        ).unionByName(mine),
+        on=("band", "key"), id_col=id_col, payload=("cross",), order="!=",
+        max_bucket_size=max_bucket_size,
+    ).select("id_a", "id_b", F.col("cross_b").alias("cross"))
+    cross_ids = cand.where(F.col("cross")).select(F.col("id_b").alias(id_col))
+    hits = corpus.select(id_col, text_col).join(
+        F.broadcast(cross_ids), id_col, "left_semi"
     )
     sh = with_shingles(
-        corpus.select(F.col(id_col), F.col(text_col)).unionByName(
-            batch.select(F.col(id_col), F.col(text_col))
-        ),
-        text_col,
-    ).select(F.col(id_col), "shingles")
-    return _with_both_shingles(cross.unionByName(within), sh, id_col).select(
-        "id_a", "id_b", _jaccard().alias("jaccard"), "pair_kind"
+        hits.unionByName(batch.select(id_col, text_col)), text_col
+    ).select(id_col, "shingles")
+    # a within-batch pair is met from both of its sides: verify it once
+    once = cand.where(F.col("cross") | (F.col("id_a") < F.col("id_b")))
+    kind = F.when(F.col("cross"), "cross").otherwise("batch_batch")
+    return _with_both_shingles(once, F.broadcast(sh), id_col).select(
+        F.least("id_a", "id_b").alias("id_a"),
+        F.greatest("id_a", "id_b").alias("id_b"),
+        _jaccard().alias("jaccard"),
+        kind.alias("pair_kind"),
     )
-
 
 def band_index(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"

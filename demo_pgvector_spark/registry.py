@@ -3915,9 +3915,9 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id % DEDUP_BATCH_MOD == 0, ~10%) is deduped against the
     already-clean corpus (the rest) WITHOUT re-pairing corpus × corpus —
     the daily-crawl production shape, the dedup twin of
-    ``vec_ivf_append``. Candidates = batch bands ⋈ corpus bands
-    (hash join on (band, key)) plus batch-local bucket enumeration;
-    exact-Jaccard verification as the full row. The oracle replays the
+    ``vec_ivf_append``. Candidates = broadcast batch bands ⋈
+    (corpus ∪ batch bands) on (band, key); exact-Jaccard verification
+    as the full row. The oracle replays the
     FULL minhash pair computation and restricts it to batch-touching
     pairs — proving the incremental path loses nothing and adds
     nothing."""
@@ -6046,9 +6046,9 @@ def q_curate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller-id batch twin), length screen, near dup (incremental
     minhash at jaccard ≥ τ served from the MATERIALIZED band index —
     the corpus is never re-banded), and eval-bloom contamination — plus
-    the final keep. The corpus text is still read whole on every call:
-    hashed for the exact verdict and shingled (all of it, not only the
-    candidates) for the near-dup verify.
+    the final keep. The corpus text is scanned on every call, hashed
+    for the exact verdict, but shingled only for the cross candidates;
+    no corpus row is exchanged.
     The oracle replays all four verdicts (full pair set restricted to
     non-eval batch-touching pairs; bit-identical bloom)."""
     docs = tables.load(spark, sf_dir, "documents")

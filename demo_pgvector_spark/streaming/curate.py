@@ -26,13 +26,17 @@ bloom is built ONCE, when the sink is made: its m-bit bitset is
 collected on the driver then and every epoch probes it inside the row,
 so the eval set is fixed for the life of the stream (a new eval suite
 means a new sink). The corpus is never re-banded (the band index is
-read as given), but each epoch still hashes the corpus for the exact
-verdict and shingles it for the near-dup verify, so an E-epoch day
-costs E audits of O(staged + corpus) scan work. The FINAL table is
-bit-identical to the one-shot batch call: the registry row drains
-three files through this sink and shares ``O_CURATE_INCREMENTAL``
-verbatim, proving stream ≡ batch end to end (the stream_bloom recipe,
-one level up the stack).
+read as given), and no epoch exchanges corpus rows: the corpus hashes,
+the band index and the corpus text each stream past a broadcast of the
+staged side, and only the cross candidates' corpus text is shingled,
+so an epoch's joins, shuffles and shingling scale with the staged
+batch and its candidates (7 Spark jobs per verdict commit). The
+corpus is still SCANNED each epoch: its text is hashed for the exact
+verdict (a hash index kept at ingest would remove that) and its band
+index is read whole. The FINAL table is bit-identical to the one-shot
+batch call: the registry row drains three files through this sink and
+shares ``O_CURATE_INCREMENTAL`` verbatim, proving stream ≡ batch end
+to end (the stream_bloom recipe, one level up the stack).
 """
 
 from __future__ import annotations

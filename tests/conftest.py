@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -33,3 +34,21 @@ def duck(sf_dir):
             f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"
         )
     return con
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Count the Spark jobs a block launches, from any thread (the DAG
+    scheduler's next job id): ``with spark_jobs(spark) as jobs:`` binds
+    ``jobs``, whose call returns the jobs launched since the block was
+    entered — so far inside it, in total after it."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    first, last = sched.nextJobId(), None
+
+    def jobs() -> int:
+        return (sched.nextJobId() if last is None else last) - first
+
+    try:
+        yield jobs
+    finally:
+        last = sched.nextJobId()

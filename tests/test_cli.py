@@ -19,6 +19,7 @@ import zipfile
 import pytest
 
 from demo_pgvector_spark import cli
+from tests.conftest import spark_jobs
 
 EXAMPLES = "/root/reference/examples"
 
@@ -341,13 +342,12 @@ def test_second_import_links_the_old_files_and_writes_only_its_rows(
     cli.import_doc(spark, wh, small_books[:1])
     before = {r["id"] for r in cli.load_state(spark, wh)["chunks"].collect()}
 
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
     real, jobs = ingest.commit_table, {}
 
     def counted(df, root, *args, **kwargs):
-        first = sched.nextJobId()
-        v = real(df, root, *args, **kwargs)
-        jobs[os.path.basename(root)] = sched.nextJobId() - first
+        with spark_jobs(spark) as launched:
+            v = real(df, root, *args, **kwargs)
+        jobs[os.path.basename(root)] = launched()
         return v
 
     monkeypatch.setattr(ingest, "commit_table", counted)

@@ -738,6 +738,104 @@ def test_curate_incremental_all_four_verdicts(spark):
     assert out[60]["kept"] and not out[70]["kept"]
 
 
+def test_curate_incremental_edge_cases(spark, tmp_path):
+    """Hand-derived verdict rows (doc_id, exact_dup, too_short, near_dup,
+    contaminated, kept) at the edges of the audit: null ids and null
+    texts (no row), texts shorter than SHINGLE_K and than DECON_N, a doc
+    that is both an exact and a near dup, in-batch exact twins (only the
+    larger id flagged), a cross pair whose batch id is smaller than its
+    corpus id, corpus rows with a null text or a null id, and an empty
+    batch, which still publishes an empty verdict version through the
+    stream sink. The near pairs share 20 of 22 distinct 5-shingles
+    (Jaccard 0.91 ≥ τ); the LSH bands (fixed hashes) find them."""
+    import os
+
+    from demo_pgvector_spark.operators.curation import curate_incremental
+    from demo_pgvector_spark.operators.dedup import SHINGLE_K
+    from demo_pgvector_spark.streaming import curate as sc
+    from demo_pgvector_spark.streaming import ingest
+
+    def words(prefix, n):
+        return [f"{prefix}{i}" for i in range(n)]
+
+    ddl = "doc_id long, text string"
+    base = " ".join(words("w", 25))
+    near = " ".join(words("w", 24) + ["changed"])
+    cdoc = " ".join(words("c", 25))
+    passage = " ".join(words("e", 20))
+    corpus = spark.createDataFrame(
+        [(100, base), (5, cdoc), (200, None), (None, base)], ddl
+    )
+    eval_docs = spark.createDataFrame([(900, passage)], ddl)
+    assert len("a b c".split()) < SHINGLE_K < 10 < curation.DECON_N
+    batch = spark.createDataFrame(
+        [
+            (1, base),  # corpus twin: exact AND near (Jaccard 1.0)
+            (2, near),  # near-dup of corpus 100 and of batch 1
+            (3, "short"),
+            (4, " ".join(words("c", 24) + ["x"])),  # near corpus 5 > 4
+            (6, " ".join(words("t", 20))),  # kept
+            (7, " ".join(words("t", 20))),  # in-batch twin of 6
+            (None, base),  # null id: no row
+            (8, None),  # null text: no row
+            (9, "a b c"),  # shorter than SHINGLE_K
+            (10, passage + " tail"),  # spliced eval passage
+            (11, near),  # exact twin of 2, near of 100
+            (12, " ".join(words("e", 10))),  # eval words, < DECON_N
+        ],
+        ddl,
+    )
+    got = sorted(
+        tuple(r) for r in curate_incremental(corpus, batch, eval_docs).collect()
+    )
+    assert got == [
+        (1, True, False, True, False, False),
+        (2, False, False, True, False, False),
+        (3, False, True, False, False, False),
+        (4, False, False, True, False, False),
+        (6, False, False, False, False, True),
+        (7, True, False, True, False, False),
+        (9, False, True, False, False, False),
+        (10, False, False, False, True, False),
+        (11, True, False, True, False, False),
+        (12, False, True, False, False, False),
+    ]
+
+    empty = spark.createDataFrame([], ddl)
+    assert curate_incremental(corpus, empty, eval_docs).collect() == []
+    root = str(tmp_path / "curate")
+    sc.curate_sink(root, corpus, eval_docs)(empty, 0)
+    assert ingest.current_version(os.path.join(root, "verdicts")) == "v000001"
+    assert sc.read_verdicts(spark, root).collect() == []
+
+
+def test_curate_incremental_folds_a_repeated_batch_id(spark):
+    """Batch doc ids are a precondition of curate_incremental, not a
+    key it enforces: the verdicts are folded per id, so a repeated id
+    gets ONE row whose flags are the OR of its rows' flags (a window
+    per input row would emit one row per copy). Identical copies fold to
+    the copy's own verdict; they do not make the doc its own near twin."""
+    from demo_pgvector_spark.operators.curation import curate_incremental
+
+    ddl = "doc_id long, text string"
+    base = " ".join(f"w{i}" for i in range(25))
+    corpus = spark.createDataFrame([(100, base)], ddl)
+    eval_docs = spark.createDataFrame(
+        [(900, " ".join(f"e{i}" for i in range(20)))], ddl
+    )
+    batch = spark.createDataFrame(
+        [(1, base), (1, " ".join(["fresh"] * 20)), (2, "x y"), (2, "x y")],
+        ddl,
+    )
+    got = sorted(
+        tuple(r) for r in curate_incremental(corpus, batch, eval_docs).collect()
+    )
+    assert got == [
+        (1, True, False, True, False, False),
+        (2, False, True, False, False, False),
+    ]
+
+
 def test_bloom_decontaminate_rejects_doubly_missing_filter(spark, docs_df):
     """ADVICE r9: eval_docs=None with bloom_positions=None is reachable
     by type since the stream_bloom signature change — it must raise a

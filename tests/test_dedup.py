@@ -363,6 +363,32 @@ def test_incremental_equals_full_restricted_to_batch(corpus_df, spark):
         assert r["id_a"] in batch_ids or r["id_b"] in batch_ids
 
 
+def test_incremental_bucket_cap_counts_corpus_and_batch_rows(corpus_df):
+    """``max_bucket_size`` on the incremental path drops the buckets the
+    full path drops — a bucket's size counts its corpus ∪ batch rows —
+    so the capped output is the capped ``minhash_pairs`` restricted to
+    the batch."""
+    batch_ids = {1, 4}
+    corpus = corpus_df.filter(~F.col("doc_id").isin(list(batch_ids)))
+    batch = corpus_df.filter(F.col("doc_id").isin(list(batch_ids)))
+    sizes = []
+    for cap in (1, 2, 3):
+        got = sorted(
+            (r["id_a"], r["id_b"], round(r["jaccard"], 6))
+            for r in dedup.minhash_pairs_incremental(
+                corpus, batch, max_bucket_size=cap
+            ).collect()
+        )
+        want = sorted(
+            (r["id_a"], r["id_b"], round(r["jaccard"], 6))
+            for r in dedup.minhash_pairs(corpus_df, max_bucket_size=cap).collect()
+            if r["id_a"] in batch_ids or r["id_b"] in batch_ids
+        )
+        assert got == want, cap
+        sizes.append(len(got))
+    assert sizes[0] == 0 < sizes[-1]  # the caps drop buckets, not all
+
+
 def test_incremental_never_pairs_corpus_with_corpus(corpus_df):
     # batch = only the unrelated doc -> no candidate touches it, so the
     # output must be EMPTY even though the corpus contains near-dups

@@ -207,7 +207,7 @@ def test_pruned_probe_plans_without_a_job_and_skips_an_empty_cluster(
     import os
 
     from demo_pgvector_spark import tables
-    from tests.test_stream_ingest import _jobs
+    from tests.conftest import spark_jobs
 
     rows = _clustered()
     cents = [rows[c * 60][1] for c in range(8)]
@@ -218,10 +218,12 @@ def test_pruned_probe_plans_without_a_job_and_skips_an_empty_cluster(
     assert ivf._rank_centroids(cents, q, 2) == [0, 8]
     assert not os.path.isdir(os.path.join(path, "cluster=8"))
 
-    pruned, jobs = _jobs(spark, lambda: ivf.ivf_topk_pruned(spark, path, cents, q, k=10, nprobe=2))
-    assert jobs == 0
-    got, jobs = _jobs(spark, pruned.collect)
-    assert jobs == 1
+    with spark_jobs(spark) as jobs:
+        pruned = ivf.ivf_topk_pruned(spark, path, cents, q, k=10, nprobe=2)
+    assert jobs() == 0
+    with spark_jobs(spark) as jobs:
+        got = pruned.collect()
+    assert jobs() == 1
     inline = ivf.ivf_topk_inline(clustered_df, cents, q, k=10, nprobe=2).collect()
     assert [(r["vec_id"], r["rank"]) for r in got] == [
         (r["vec_id"], r["rank"]) for r in inline

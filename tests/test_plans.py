@@ -721,3 +721,86 @@ def test_sample_temperature_corpus_never_shuffles(spark):
     # between scan and join on the corpus side: every hash exchange in
     # the plan belongs to a groupBy over domain counts (<= 2 of them)
     assert plan.count("Exchange hashpartitioning") <= 2, plan
+
+
+def _exec_tree(node):
+    """The executed plan's operators below ``node``, as (name, node,
+    children) triples: AQE wrappers and stage boundaries are looked
+    through, so the tree is the final plan's operators."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _exec_tree(node.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _exec_tree(node.plan())
+    kids = [node.children().apply(i) for i in range(node.children().size())]
+    return name, node, [_exec_tree(k) for k in kids]
+
+
+def test_curation_audit_streams_the_corpus_past_batch_broadcasts(
+    spark, tmp_path
+):
+    """curate_incremental over parquet corpus, band-index and batch
+    inputs: (a) no exchange carries corpus rows — between every corpus
+    text or band scan and the nearest exchange above it sits a join (in
+    this plan each one streams the corpus past a batch-sized broadcast),
+    so only candidate and match rows are shuffled; (b) the corpus
+    shingle projection sits above the join with the candidate ids, so
+    only candidates are shingled."""
+    from pyspark.sql import functions as F
+
+    from demo_pgvector_spark.operators import curation, dedup
+
+    ddl = "doc_id long, text string"
+
+    def doc(i, n=30):
+        return " ".join(f"t{(i * 7 + j) % 97}x{j % 5}" for j in range(n))
+
+    def parquet(name, rows):
+        path = str(tmp_path / name)
+        spark.createDataFrame(rows, ddl).write.parquet(path)
+        return spark.read.parquet(path)
+
+    corpus = parquet("corpus", [(i, doc(i)) for i in range(40)])
+    batch = parquet(
+        "batch",
+        [(100, doc(3)), (101, doc(5).replace("x0", "y0", 1)), (102, doc(500)),
+         (103, doc(500)), (104, "short text")],
+    )
+    eval_docs = spark.createDataFrame([(900, doc(7))], ddl)
+    dedup.band_index_write(corpus, str(tmp_path / "bands"))
+    bands = spark.read.parquet(str(tmp_path / "bands")).select(
+        "doc_id", F.col("band").cast("int").alias("band"), "key"
+    )
+    out = curation.curate_incremental(corpus, batch, eval_docs, corpus_bands=bands)
+    got = {r["doc_id"]: r for r in out.collect()}
+    assert got[100]["exact_dup"] and got[101]["near_dup"] and got[103]["exact_dup"]
+
+    corpus_dirs = {str(tmp_path / "corpus"), str(tmp_path / "bands")}
+    scanned, exchanged, shingled = set(), [], []
+
+    def walk(tree, nearest, below_shingles):
+        name, node, kids = tree
+        if name.endswith("ExchangeExec") and name != "ReusedExchangeExec":
+            nearest = "exchange"
+        elif "Join" in name or name == "CartesianProductExec":
+            nearest = "join"
+            below_shingles = below_shingles and "join"
+        elif name == "ProjectExec" and "array_distinct(transform(sequence(0" in (
+            node.simpleString(1000)
+        ):
+            below_shingles = "projection"
+        if name == "FileSourceScanExec":
+            root = node.relation().location().rootPaths().apply(0).toString()
+            if root.removeprefix("file:") in corpus_dirs:
+                scanned.add(root.removeprefix("file:"))
+                if nearest == "exchange":
+                    exchanged.append(root)
+                if below_shingles:
+                    shingled.append(below_shingles)
+        for kid in kids:
+            walk(kid, nearest, below_shingles)
+
+    walk(_exec_tree(out._jdf.queryExecution().executedPlan()), None, None)
+    assert scanned == corpus_dirs
+    assert exchanged == [], "corpus rows reach an exchange"
+    assert shingled and set(shingled) == {"join"}, shingled

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from demo_pgvector_spark.operators import write as write_ops
 from demo_pgvector_spark.streaming import ingest, sketches
+from tests.conftest import spark_jobs
 
 SCHEMA = "id long, name string"
 
@@ -73,6 +74,69 @@ def test_stream_upsert_matches_batch_upsert(spark, tmp_path, staged):
     assert sorted(rows.values()) == list(range(1, 7))
     # earlier arrivals hold smaller ids (allocation is append-only)
     assert rows["m0"] < rows["m3"] < rows["m4"]
+
+
+def test_upsert_stream_retry_repairs_a_crash_after_the_commit(
+    spark, tmp_path, staged, monkeypatch
+):
+    """Fault injection through the real drain: epoch 2 commits its
+    novel rows, then raises before the epoch completes. Draining again
+    from the same checkpoint replays epoch 2 (its rows are committed —
+    the upsert allocates nothing) and epoch 3, and the final table
+    equals one batch ``upsert_allocated`` over every slice: same keys,
+    same ids."""
+    import glob
+    import shutil
+    import time
+
+    from pyspark.errors import StreamingQueryException
+
+    land, batches = staged
+    for i, names in enumerate(batches):
+        part = str(tmp_path / f"_part_{i}")
+        spark.createDataFrame([(n,) for n in names], "name string").coalesce(
+            1
+        ).write.parquet(part)
+        flat = str(land / f"arrival_{i}.parquet")
+        shutil.copyfile(glob.glob(f"{part}/part-*.parquet")[0], flat)
+        os.utime(flat, (time.time() - 100 + i * 10,) * 2)
+    root, ckpt = str(tmp_path / "models_table"), str(tmp_path / "ckpt")
+
+    def run():
+        ingest.run_upsert_stream(
+            ingest.landing_stream(spark, str(land), "name string"),
+            root, keys=["name"], schema_ddl=SCHEMA, checkpoint_dir=ckpt,
+        )
+
+    real, commits = ingest.commit_table, []
+
+    def crash_after_second_commit(*args, **kwargs):
+        version = real(*args, **kwargs)
+        commits.append(version)
+        if len(commits) == 2:
+            raise RuntimeError("injected crash after the commit")
+        return version
+
+    monkeypatch.setattr(ingest, "commit_table", crash_after_second_commit)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run()
+    assert ingest.current_version(root) == "v000002"
+    monkeypatch.setattr(ingest, "commit_table", real)
+    run()
+
+    got = sorted(map(tuple, ingest.read_table(spark, root, SCHEMA).collect()))
+    everything = spark.createDataFrame(
+        [(n,) for b in batches for n in b], "name string"
+    )
+    want = sorted(
+        map(
+            tuple,
+            write_ops.upsert_allocated(
+                spark.createDataFrame([], SCHEMA), everything, keys=["name"]
+            ).collect(),
+        )
+    )
+    assert got == want and len(got) == 6
 
 
 def test_retried_epoch_is_a_no_op(spark, tmp_path, staged):
@@ -414,15 +478,6 @@ def test_width_for_is_the_session_width_capped_by_the_scan(spark, tmp_path):
                 assert width_for(files) == min(s, splits)
 
 
-def _jobs(spark, fn):
-    """(result, Spark jobs ``fn`` launched): the scheduler's next job id
-    counts every job, whichever thread launches it."""
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    before = sched.nextJobId()
-    out = fn()
-    return out, sched.nextJobId() - before
-
-
 def test_versioned_reads_plan_without_a_job(spark, tmp_path):
     """Reading the warehouse launches no Spark job (declared schemas, no
     inference), so a ``generate_text`` request costs only its retrieval
@@ -445,21 +500,21 @@ def test_versioned_reads_plan_without_a_job(spark, tmp_path):
     cli.import_doc(spark, wh, [str(first)])
     cli.import_doc(spark, wh, [str(second)])
 
-    state, jobs = _jobs(spark, lambda: cli.load_state(spark, wh))
-    assert jobs == 0
+    with spark_jobs(spark) as jobs:
+        state = cli.load_state(spark, wh)
+    assert jobs() == 0
     assert state["sources"].count() == 2
-    prompt, jobs = _jobs(spark, lambda: cli.generate_text(spark, wh, words))
-    assert jobs == 3
+    with spark_jobs(spark) as jobs:
+        prompt = cli.generate_text(spark, wh, words)
+    assert jobs() == 3
     assert 'Excerpt from "Declared Reads"' in prompt
 
     root = os.path.join(wh, "sources")
     older = ingest.list_versions(root)[0]
     assert older != ingest.current_version(root)
-    old, jobs = _jobs(
-        spark,
-        lambda: ingest.read_table_at(spark, root, tables.SOURCES_SCHEMA, older),
-    )
-    assert jobs == 0
+    with spark_jobs(spark) as jobs:
+        old = ingest.read_table_at(spark, root, tables.SOURCES_SCHEMA, older)
+    assert jobs() == 0
     assert old.count() == 1
 
 

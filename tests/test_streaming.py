@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from demo_pgvector_spark import tables
 from demo_pgvector_spark.streaming import windows as sw
+from tests.conftest import spark_jobs
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -581,10 +582,10 @@ def test_stateful_funnel_boundaries_and_timeout(spark, tmp_path):
 
 def test_curate_sink_is_epoch_idempotent_and_split_invariant(spark, tmp_path):
     """streaming/curate.py curate_sink: (a) a retried epoch changes
-    neither the staged table nor the verdicts; (b) draining the batch
-    in 1 slice or 3 slices commits the SAME final verdict table as the
-    one-shot curate_incremental call — the audit recomputes over the
-    staged whole, so the within-batch twin verdicts never depend on
+    neither the staged table nor the verdicts; (b) draining a 6-doc
+    batch in 1, 3 or 6 slices commits the SAME final verdict table as
+    the one-shot curate_incremental call — the audit recomputes over
+    the staged whole, so the within-batch twin verdicts never depend on
     how the stream happened to split the day."""
     from demo_pgvector_spark.operators import curation
     from demo_pgvector_spark.streaming import curate as sc
@@ -600,13 +601,16 @@ def test_curate_sink_is_epoch_idempotent_and_split_invariant(spark, tmp_path):
     )
     # batch: 0 dup-of-corpus, 1 fresh (vocabulary fully distinct from
     # corpus AND eval — no shared 13-gram, no shingle overlap),
-    # 2 near-twin of 1 (larger id, one word changed), 3 short
+    # 2 near-twin of 1 (larger id, one word changed), 3 short,
+    # 4 exact twin of 1 (larger id), 5 another fresh keeper
     fresh = " ".join(f"fresh{i}" for i in range(30))
     batch_rows = [
         (0, base + " corpustail0"),
         (1, fresh),
         (2, fresh.rsplit(" ", 1)[0] + " changedtail"),
         (3, "too short"),
+        (4, fresh),
+        (5, " ".join(f"other{i}" for i in range(20))),
     ]
 
     def drain(root, slices):
@@ -623,9 +627,10 @@ def test_curate_sink_is_epoch_idempotent_and_split_invariant(spark, tmp_path):
     one = drain(str(tmp_path / "one"), [batch_rows])
     three = drain(
         str(tmp_path / "three"),
-        [batch_rows[:1], batch_rows[1:3], batch_rows[3:]],
+        [batch_rows[:2], batch_rows[2:4], batch_rows[4:]],
     )
-    assert one == three
+    six = drain(str(tmp_path / "six"), [[r] for r in batch_rows])
+    assert one == three == six
     oneshot = sorted(
         tuple(r)
         for r in curation.curate_incremental(
@@ -634,17 +639,18 @@ def test_curate_sink_is_epoch_idempotent_and_split_invariant(spark, tmp_path):
             eval_docs,
         ).collect()
     )
-    assert one == oneshot
+    assert one == oneshot and len(one) == 6
     # semantic spot checks: doc 0 exact-dups the corpus, doc 2 near-dups
-    # its smaller-id twin, doc 3 is short
+    # its smaller-id twin, doc 3 is short, doc 4 exact-dups doc 1
     v = {t[0]: t for t in one}
     assert v[0][1] is True and v[2][3] is True and v[3][2] is True
-    assert v[1][5] is True  # the fresh doc is kept
+    assert v[4][1] is True and v[1][1] is False
+    assert v[1][5] is True and v[5][5] is True  # the fresh docs are kept
 
     # retried epoch: re-apply the LAST slice — nothing may move
     root = str(tmp_path / "three")
     sink = sc.curate_sink(root, corpus, eval_docs)
-    sink(spark.createDataFrame(batch_rows[3:], "doc_id long, text string"), 2)
+    sink(spark.createDataFrame(batch_rows[4:], "doc_id long, text string"), 2)
     again = sorted(
         tuple(r) for r in sc.read_verdicts(spark, root).collect()
     )
@@ -738,7 +744,9 @@ def test_curate_sink_fires_contaminated_and_builds_the_bloom_once(
     spliced eval passage: the committed verdicts equal one batch
     ``curate_incremental`` call, with ``contaminated`` set on that doc.
     The sink builds the eval bloom once, when it is made, and each
-    epoch's verdict commit runs at most 12 Spark jobs."""
+    epoch's verdict commit runs at most 7 Spark jobs: the broadcasts of
+    the batch hashes, the batch bands, the cross ids and the shingles,
+    the pair dedup, the verdict groupBy and the write."""
     import os
 
     from demo_pgvector_spark.operators import curation
@@ -764,15 +772,12 @@ def test_curate_sink_fires_contaminated_and_builds_the_bloom_once(
         builds.append(1)
         return real_build(*args, **kwargs)
 
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
     real_commit, jobs = ingest.commit_table, {}
 
     def counted_commit(df, table_root, *args, **kwargs):
-        first = sched.nextJobId()
-        v = real_commit(df, table_root, *args, **kwargs)
-        jobs.setdefault(os.path.basename(table_root), []).append(
-            sched.nextJobId() - first
-        )
+        with spark_jobs(spark) as launched:
+            v = real_commit(df, table_root, *args, **kwargs)
+        jobs.setdefault(os.path.basename(table_root), []).append(launched())
         return v
 
     monkeypatch.setattr(curation, "bloom_build", counted_build)
@@ -783,7 +788,7 @@ def test_curate_sink_fires_contaminated_and_builds_the_bloom_once(
     for epoch, rows in enumerate(slices):
         sink(spark.createDataFrame(rows, ddl), epoch)
     assert len(builds) == 1
-    assert len(jobs["verdicts"]) == 3 and max(jobs["verdicts"]) <= 12, jobs
+    assert len(jobs["verdicts"]) == 3 and max(jobs["verdicts"]) <= 7, jobs
 
     got = sorted(tuple(r) for r in sc.read_verdicts(spark, root).collect())
     everything = spark.createDataFrame([r for s in slices for r in s], ddl)
