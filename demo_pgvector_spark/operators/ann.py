@@ -65,7 +65,7 @@ from demo_pgvector_spark.functions.vector import (
     query_vector_literal,
     sequential_fold,
 )
-from demo_pgvector_spark.operators import ivf
+from demo_pgvector_spark.operators import graph, ivf
 from demo_pgvector_spark.operators.similarity import topk_per_group
 from demo_pgvector_spark.tables import read_partitions, written_schema
 
@@ -1118,10 +1118,7 @@ def smallworld_append(
     fwd = _sw_topm(pairs, grown, m, id_col, vec_col)
     if not backlinks:
         return fwd
-    rev = fwd.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
-    )
-    return fwd.unionByName(rev)
+    return graph._both_directions(fwd)
 
 
 def smallworld_topk(

@@ -53,9 +53,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from demo_pgvector_spark.functions.vector import dot_sql
-from demo_pgvector_spark.operators import ann
+from demo_pgvector_spark.operators import ann, graph
 from demo_pgvector_spark.operators.ivf import centroid_scores_sql
-from demo_pgvector_spark.session import scan_splits, width_for
+from demo_pgvector_spark.session import scan_splits
 
 SHINGLE_K = 5
 NUM_HASHES = 12
@@ -538,7 +538,8 @@ def dedup_assign(
     long).
 
     Each round is one shuffle keyed on ``id_col`` (edge join + min-agg);
-    the edge list is materialized once symmetric. Min-label propagation
+    the edge list is the pair graph's undirected edge set
+    (``graph._undirected``), materialized once. Min-label propagation
     alone converges in O(diameter) rounds — right for near-dup clusters
     (shallow by construction) but an adversarial CHAIN-shaped component
     of depth d needs d rounds. So from round 3 on (a component survived
@@ -557,23 +558,15 @@ def dedup_assign(
     The rounds run at the session width; the edge pre-partition takes
     ``session.width_for(pairs)``.
     """
-    edges = (
+    # Materialized ONCE: every propagation round joins the edge set, and
+    # without the checkpoint each round would re-run the upstream pair
+    # generation (minhash/LSH — the expensive part) twice, once per
+    # direction. LAZY: round 0's convergence-count job computes it,
+    # caches the blocks, and truncates lineage at job end — an eager
+    # checkpoint would spend a whole extra job on the same
+    # materialization.
+    edges = graph._undirected(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .dropDuplicates(["src", "dst"])
-        # Materialize ONCE: every propagation round joins the edge set,
-        # and without this each round would re-run the upstream pair
-        # generation (minhash/LSH — the expensive part) twice, once per
-        # union branch. Also truncates the lineage the rounds build on.
-        # LAZY: round 0's convergence-count job computes it, caches the
-        # blocks, and truncates lineage at job end — an eager checkpoint
-        # here would spend a whole extra job on the same materialization.
-        # Pre-partitioned by the per-round join key (round 13, guide
-        # §2.4: every propagation round joins edges on dst; one exchange
-        # here instead of one per round — explicit width so AQE cannot
-        # coalesce it away).
-        .repartition(width_for(pairs), F.col("dst"))
-        .localCheckpoint(eager=False)
     )
     labels = docs.select(F.col(id_col).alias("id")).withColumn(
         "keeper_id", F.col("id")
@@ -583,14 +576,16 @@ def dedup_assign(
 
 
 def _cc_rounds(edges: DataFrame, labels: DataFrame, max_iters: int) -> DataFrame:
+    # edges is symmetric and pinned on src: each round joins on src and
+    # sends the label to dst
     for rnd in range(max_iters):
         neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["id"], "inner")
-            .groupBy("src")
+            edges.join(labels, edges["src"] == labels["id"], "inner")
+            .groupBy("dst")
             .agg(F.min("keeper_id").alias("_nbr_min"))
         )
         updated = (
-            labels.join(neighbor_min, labels["id"] == neighbor_min["src"], "left")
+            labels.join(neighbor_min, labels["id"] == neighbor_min["dst"], "left")
             .select(
                 "id",
                 F.least(

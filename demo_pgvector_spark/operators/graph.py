@@ -33,6 +33,13 @@ summation order flipped the rounding — per-step quantization of floats
 shrinks the disagreement window but cannot close it. Fixed point
 closes it: truncation error ~1e-9 rank/step, below the old 6dp grid.)
 
+Every operator reads ``(src, dst)`` edges and turns them into one of
+two edge relations: ``_directed`` (pagerank, hits) or ``_undirected``
+(every other iterative operator here, and ``dedup.dedup_assign``).
+Both are SETS — duplicate rows never count twice — hash-partitioned on
+``src`` behind a lazy localCheckpoint. ``triangle_counts`` keeps its
+own canonical ``(least, greatest)`` pairs, a different relation.
+
 100 TB posture: each iteration is the canonical Pregel shape — one
 shuffle keyed on edge src (rank lookup join), one keyed on dst
 (contribution sum), one rank re-join on node id; the edge list is
@@ -55,38 +62,51 @@ MICRO = 1_000_000
 RESET_MICRO = 150_000  # 0.15 in micro-units; rank_0 = 1.0 = 1_000_000
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 5,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
-    """(node_id, pr) after ``iterations`` fixed PageRank steps over the
-    DISTINCT directed edge set. Nodes = every id appearing as src or
-    dst; integer fixed-point per the module contract, reported as
-    ``pr = r_micro / 1e6`` (one exact-operand double division at the
-    very end — identical on every IEEE-754 engine)."""
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .dropDuplicates(["src", "dst"])
-        # Pre-partition the STATIC edge list by its per-round join key
-        # once (round 13, guide §2.4 "share one exchange"): every
-        # iteration joins e on src, and without this each round paid its
-        # own Exchange of the biggest table in the query. The checkpoint
-        # freezes hashpartitioning(src) into the cached blocks, so
-        # EnsureRequirements shuffles only the (small) rank side per
-        # round. lazy: materialized by the final action's first pass.
-        .repartition(width_for(edges), F.col("src"))
-        .localCheckpoint(eager=False)
+def _pinned(df: DataFrame, key: str, like: DataFrame) -> DataFrame:
+    """``df`` hash-partitioned on ``key`` at ``width_for(like)`` behind
+    a lazy localCheckpoint. Every round joins the static frames of a
+    loop on one key (round 13, guide §2.4 "share one exchange"):
+    partitioning them once freezes ``hashpartitioning(key)`` into the
+    cached blocks, so EnsureRequirements shuffles only the small
+    per-round side. Lazy: the final action's first pass materializes
+    it. ``like`` is the operator's input, whose scan sets the width."""
+    return df.repartition(width_for(like), F.col(key)).localCheckpoint(
+        eager=False
     )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        # same argument: nodes is joined on id every round
-        .repartition(width_for(edges), F.col("id"))
-        .localCheckpoint(eager=False)
+
+
+def _both_directions(edges: DataFrame) -> DataFrame:
+    """``(src, dst)`` rows plus their reverses, duplicates kept."""
+    return edges.select("src", "dst").union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
+
+
+def _directed(edges: DataFrame) -> DataFrame:
+    """The DISTINCT directed edge set of ``(src, dst)``, pinned on src."""
+    return _pinned(edges.select("src", "dst").distinct(), "src", edges)
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The symmetric simple graph of ``(src, dst)``: both directions,
+    self-loops dropped, distinct, pinned on src. Every ``(u, v)`` has
+    its ``(v, u)``, so a round may join on either column."""
+    return _pinned(
+        _both_directions(edges).filter(F.col("src") != F.col("dst")).distinct(),
+        "src",
+        edges,
+    )
+
+
+def _rank_rounds(e: DataFrame, nodes: DataFrame, iterations: int) -> DataFrame:
+    """(id, r): the module's integer rank recurrence over edge relation
+    ``e`` from ``nodes`` (id, reset), ``iterations`` fixed steps:
+
+        r_0(v)     = (reset(v) · 20) div 3
+        r_{t+1}(v) = reset(v) + (17 · Σ_{u→v} (r_t(u)·1000) div outdeg(u)) div 20000
+
+    A reset of RESET_MICRO gives r_0 = MICRO exactly. ``nodes`` comes
+    pinned on id: it is joined on id every round."""
     # deg inherits hashpartitioning(src) from e (groupBy over the
     # co-partitioned input needs no exchange); checkpoint so the agg
     # runs once, not once per round.
@@ -95,7 +115,7 @@ def pagerank(
         .agg(F.count(F.lit(1)).alias("outdeg"))
         .localCheckpoint(eager=False)
     )
-    ranks = nodes.withColumn("r", F.lit(MICRO).cast("bigint"))
+    ranks = nodes.select("id", F.expr("(reset * 20) div 3").alias("r"))
     for _ in range(iterations):
         contrib = (
             e.join(ranks, e["src"] == ranks["id"])
@@ -110,10 +130,27 @@ def pagerank(
         ).select(
             "id",
             (
-                F.lit(RESET_MICRO).cast("bigint")
-                + F.expr("(17 * coalesce(s, 0L)) div 20000")
+                F.col("reset") + F.expr("(17 * coalesce(s, 0L)) div 20000")
             ).alias("r"),
         )
+    return ranks
+
+
+def pagerank(edges: DataFrame, iterations: int = 5) -> DataFrame:
+    """(node_id, pr) after ``iterations`` fixed PageRank steps over the
+    DISTINCT directed edge set. Nodes = every id appearing as src or
+    dst, each a seed of the personalized recurrence (reset 0.15);
+    integer fixed-point per the module contract, reported as
+    ``pr = r_micro / 1e6`` (one exact-operand double division at the
+    very end — identical on every IEEE-754 engine)."""
+    e = _directed(edges)
+    nodes = (
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
+        .distinct()
+        .withColumn("reset", F.lit(RESET_MICRO).cast("bigint"))
+    )
+    ranks = _rank_rounds(e, _pinned(nodes, "id", edges), iterations)
     # `pr`, not `rank`: RANK is a window-function keyword in ANSI SQL and
     # the oracle must use the identical column name
     return ranks.select(
@@ -123,50 +160,33 @@ def pagerank(
 
 
 def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iterations: int = 5,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    seed_col: str = "id",
+    edges: DataFrame, seeds: DataFrame, iterations: int = 5
 ) -> DataFrame:
-    """Personalized PageRank from a seed SET over the UNDIRECTED graph —
-    the TrustRank primitive (Gyöngyi et al., VLDB 2004): random walks
-    restart only at vetted seeds, so rank measures proximity-weighted
-    trust rather than global centrality. The rank complement of
-    ``bfs_hops``' hop radius, over the same symmetrized edge contract
-    (self-loops dropped):
+    """Personalized PageRank from a seed SET (``seeds.id``) over the
+    UNDIRECTED graph — the TrustRank primitive (Gyöngyi et al., VLDB
+    2004): random walks restart only at vetted seeds, so rank measures
+    proximity-weighted trust rather than global centrality. The rank
+    complement of ``bfs_hops``' hop radius, over the same symmetrized
+    edge contract (self-loops dropped):
 
         rank_0(v)     = 1.0·[v ∈ seeds]
         rank_{t+1}(v) = 0.15·[v ∈ seeds] + 0.85 · Σ_{u~v} rank_t(u)/deg(u)
 
-    Same unnormalized fixed-iteration convention and INTEGER FIXED POINT
-    as ``pagerank`` (micro ranks, nano contributions, damping 17/20) —
-    every intermediate BIGINT, order-independent sums, bit-identical
-    parity with the unrolled DuckDB recurrence.
+    ``pagerank``'s recurrence (``_rank_rounds``) with reset 0 off the
+    seeds: integer fixed point, every intermediate BIGINT,
+    order-independent sums, bit-identical parity with the unrolled
+    DuckDB recurrence.
 
     100 TB posture: identical plan shape to ``pagerank`` — K iterations
-    compile into ONE job, lazy localCheckpoints for the symmetrized
-    edges/nodes/degrees, hash joins + partial-combining sums only. The
-    seed flag rides the node frame (one broadcast-size semi-join at
-    build, zero per-iteration seed joins). Mass is seed-proportional:
-    far-from-seed regions hold ~zero rank, which is exactly the signal —
-    spam farms score low however well they interlink."""
-    sym = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .union(
-            edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
-        )
-        .filter(F.col("s") != F.col("d"))
-        .dropDuplicates(["s", "d"])
-        # static side pre-partitioned by its per-round join key (round
-        # 13, guide §2.4) — see pagerank for the argument
-        .repartition(width_for(edges), F.col("s"))
-        .localCheckpoint(eager=False)
-    )
-    seed_ids = seeds.select(F.col(seed_col).alias("sid")).distinct()
+    compile into ONE job. The seed flag rides the node frame (one
+    broadcast-size semi-join at build, zero per-iteration seed joins).
+    Mass is seed-proportional: far-from-seed regions hold ~zero rank,
+    which is exactly the signal — spam farms score low however well
+    they interlink."""
+    e = _undirected(edges)
+    seed_ids = seeds.select(F.col("id").alias("sid")).distinct()
     nodes = (
-        sym.select(F.col("s").alias("id"))
+        e.select(F.col("src").alias("id"))
         .distinct()
         .join(seed_ids, F.col("id") == F.col("sid"), "left")
         .select(
@@ -176,45 +196,15 @@ def personalized_pagerank(
             .cast("bigint")
             .alias("reset"),
         )
-        .repartition(width_for(edges), F.col("id"))
-        .localCheckpoint(eager=False)
     )
-    deg = (
-        sym.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("outdeg"))
-        .localCheckpoint(eager=False)
-    )
-    ranks = nodes.select(
-        "id",
-        # r0 = MICRO on seeds, 0 elsewhere — pure integer: reset is
-        # RESET_MICRO (=0.15·MICRO) or 0, and 150000·20 div 3 = 1000000
-        F.expr("(reset * 20) div 3").alias("r"),
-    )
-    for _ in range(iterations):
-        contrib = (
-            sym.join(ranks, sym["s"] == ranks["id"])
-            .join(deg, "s")
-            .select("d", F.expr("(r * 1000) div outdeg").alias("c"))
-            .groupBy("d")
-            .agg(F.sum("c").alias("s_c"))
-        )
-        ranks = nodes.join(
-            contrib, nodes["id"] == contrib["d"], "left"
-        ).select(
-            "id",
-            (
-                F.col("reset") + F.expr("(17 * coalesce(s_c, 0L)) div 20000")
-            ).alias("r"),
-        )
+    ranks = _rank_rounds(e, _pinned(nodes, "id", edges), iterations)
     return ranks.select(
         F.col("id").alias("node_id"),
         (F.col("r") / F.lit(MICRO)).alias("ppr"),
     )
 
 
-def triangle_counts(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts — GraphX ``triangleCount`` contract
     (public Apache Spark code): triangles of the DEDUPLICATED UNDIRECTED
     graph, self-loops dropped; every triangle increments all three
@@ -239,10 +229,10 @@ def triangle_counts(
     the whole computation is ONE job.
     """
     und = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .filter(F.col("s") != F.col("d"))
+        edges.filter(F.col("src") != F.col("dst"))
         .select(
-            F.least("s", "d").alias("a"), F.greatest("s", "d").alias("b")
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
         )
         .dropDuplicates(["a", "b"])
         .localCheckpoint(eager=False)
@@ -290,18 +280,11 @@ def triangle_counts(
     )
 
 
-def bfs_hops(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_hops: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    seed_col: str = "id",
-) -> DataFrame:
-    """Minimum hop distance from a seed set over the UNDIRECTED graph,
-    bounded at ``max_hops`` — multi-source BFS, the propagation-radius
-    primitive of TrustRank-style corpus curation (how many link hops
-    from a vetted seed is this host?). Output (node_id, hops) for every
+def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 4) -> DataFrame:
+    """Minimum hop distance from a seed set (``seeds.id``) over the
+    UNDIRECTED graph, bounded at ``max_hops`` — multi-source BFS, the
+    propagation-radius primitive of TrustRank-style corpus curation (how
+    many link hops from a vetted seed is this host?). Output (node_id, hops) for every
     REACHED node (hops ≤ max_hops); unreached nodes emit no row, so the
     result is exact with a fixed iteration count rather than an
     unbounded fixed point.
@@ -316,32 +299,21 @@ def bfs_hops(
     end to end — no float anywhere, so the DuckDB oracle replays
     bit-identically by unrolling the same recurrence.
     """
-    sym = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .union(
-            edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
-        )
-        .filter(F.col("s") != F.col("d"))
-        .dropDuplicates(["s", "d"])
-        # static side pre-partitioned by its per-round join key (round
-        # 13, guide §2.4) — see pagerank for the argument
-        .repartition(width_for(edges), F.col("s"))
-        .localCheckpoint(eager=False)
-    )
-    dist = seeds.select(F.col(seed_col).alias("id")).distinct().withColumn(
+    e = _undirected(edges)
+    dist = seeds.select("id").distinct().withColumn(
         "hops", F.lit(0).cast("bigint")
     )
     for _ in range(max_hops):
         relaxed = (
-            sym.join(dist, sym["s"] == dist["id"])
-            .select("d", (F.col("hops") + F.lit(1)).alias("h"))
-            .groupBy("d")
+            e.join(dist, e["src"] == dist["id"])
+            .select("dst", (F.col("hops") + F.lit(1)).alias("h"))
+            .groupBy("dst")
             .agg(F.min("h").alias("h"))
         )
         dist = (
-            dist.join(relaxed, dist["id"] == relaxed["d"], "full_outer")
+            dist.join(relaxed, dist["id"] == relaxed["dst"], "full_outer")
             .select(
-                F.coalesce(F.col("id"), F.col("d")).alias("id"),
+                F.coalesce(F.col("id"), F.col("dst")).alias("id"),
                 F.least(
                     F.coalesce(F.col("hops"), F.lit(max_hops + 1)),
                     F.coalesce(F.col("h"), F.lit(max_hops + 1)),
@@ -351,12 +323,7 @@ def bfs_hops(
     return dist.select(F.col("id").alias("node_id"), "hops")
 
 
-def label_propagation(
-    edges: DataFrame,
-    iterations: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """Community detection via synchronous label propagation (Raghavan
     2007; the GraphX ``LabelPropagation`` contract) over the UNDIRECTED
     graph: label_0(v) = v, then every round each node adopts its
@@ -372,26 +339,15 @@ def label_propagation(
     count aggregate, one max_by argmax per node — all partial-combining
     hash aggregates; per-round state is one BIGINT label per node.
     """
-    sym = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .union(
-            edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
-        )
-        .filter(F.col("s") != F.col("d"))
-        .dropDuplicates(["s", "d"])
-        # static side pre-partitioned by its per-round join key (round
-        # 13, guide §2.4) — see pagerank for the argument
-        .repartition(width_for(edges), F.col("s"))
-        .localCheckpoint(eager=False)
-    )
-    nodes = sym.select(F.col("s").alias("id")).distinct().localCheckpoint(
+    e = _undirected(edges)
+    nodes = e.select(F.col("src").alias("id")).distinct().localCheckpoint(
         eager=False
     )
     labels = nodes.withColumn("label", F.col("id"))
     for _ in range(iterations):
         counts = (
-            sym.join(labels, sym["s"] == labels["id"])
-            .groupBy("d", "label")
+            e.join(labels, e["src"] == labels["id"])
+            .groupBy("dst", "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         # most frequent neighbor label, smallest label on ties:
@@ -400,11 +356,11 @@ def label_propagation(
         # tie-break holds for ANY orderable label domain, including
         # negative ids or strings (ADVICE r7 #3: the earlier
         # max_by(label, (cnt, -label)) silently assumed numeric labels).
-        labels = counts.groupBy("d").agg(
+        labels = counts.groupBy("dst").agg(
             F.min_by("label", F.struct(-F.col("cnt"), F.col("label"))).alias(
                 "label"
             )
-        ).select(F.col("d").alias("id"), "label")
+        ).select(F.col("dst").alias("id"), "label")
     return labels.select(F.col("id").alias("node_id"), "label")
 
 
@@ -421,7 +377,6 @@ def kcore_membership(
     nodes: DataFrame,
     k: int = KCORE_K,
     rounds: int = KCORE_ROUNDS,
-    node_col: str = "node",
 ) -> DataFrame:
     """k-core membership by iterative peeling (Seidman 1983; the
     Batagelj-Zaversnik fixpoint): repeatedly drop nodes whose degree in
@@ -442,35 +397,23 @@ def kcore_membership(
     scales remains pytest-pinned (tests/test_graph.py runs one extra
     round and asserts stability). All comparisons integer; the DuckDB
     oracle unrolls the identical rounds as a CTE chain and derives the
-    same flag from its last two CTEs. ``edges`` is the undirected pair
-    list (id_a < id_b); degrees are computed over its symmetrization.
+    same flag from its last two CTEs. ``edges`` is a ``(src, dst)``
+    list and ``nodes.node`` the node set; degrees are counted over the
+    undirected edge SET (``_undirected``), so a duplicated or reversed
+    pair counts once.
 
     100 TB posture: like the pagerank family the loop compiles into ONE
     job — no per-round action — with a lazy localCheckpoint per round
     to keep the plan linear in ``rounds``; each round is the canonical
     join-aggregate Pregel shape keyed on the node id."""
-    sym = (
-        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            edges.select(
-                F.col("id_b").alias("src"), F.col("id_a").alias("dst")
-            )
-        )
-        # static side pre-partitioned by the first per-round join key
-        # (round 13, guide §2.4); the dst-side join of each round still
-        # shuffles the induced intermediate — that one is fundamental
-        .repartition(width_for(edges), F.col("src"))
-        .localCheckpoint(eager=False)
-    )
-    kept = (
-        nodes.select(F.col(node_col).alias("n"))
-        .repartition(width_for(edges), F.col("n"))
-        .localCheckpoint(eager=False)
-    )
+    # the dst-side join of each round still shuffles the induced
+    # intermediate — that one is fundamental
+    e = _undirected(edges)
+    kept = _pinned(nodes.select(F.col("node").alias("n")), "n", edges)
     prev = kept
     for _ in range(rounds):
         deg = (
-            sym.join(kept.withColumnRenamed("n", "src"), "src")
+            e.join(kept.withColumnRenamed("n", "src"), "src")
             .join(kept.withColumnRenamed("n", "dst"), "dst")
             .groupBy("src")
             .agg(F.count(F.lit(1)).alias("_deg"))
@@ -494,27 +437,20 @@ def kcore_membership(
     )
     return (
         nodes.join(
-            kept.withColumnRenamed("n", node_col).withColumn(
-                "_in", F.lit(True)
-            ),
-            node_col,
+            kept.withColumnRenamed("n", "node").withColumn("_in", F.lit(True)),
+            "node",
             "left",
         )
         .crossJoin(F.broadcast(stable))
         .select(
-            F.col(node_col).alias("node_id"),
+            F.col("node").alias("node_id"),
             F.coalesce(F.col("_in"), F.lit(False)).alias("in_kcore"),
             "converged",
         )
     )
 
 
-def hits(
-    edges: DataFrame,
-    iterations: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = 4) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over the DISTINCT
     directed edge set: ``iterations`` fixed power-iteration rounds of
     a ← Aᵀh, h ← Aa with MAX-normalization each half-step — the
@@ -549,21 +485,13 @@ def hits(
             "half-step"
         )
     # HITS joins the static edge list on BOTH keys, alternating per
-    # half-step — keep TWO pre-partitioned checkpoints (round 13, guide
-    # §2.4): e_src feeds the a ← Aᵀh half (join on src), e_dst the
-    # h ← Aa half (join on dst). e_dst is derived FROM e_src's cache so
-    # the dedup runs once. Two cached copies of the edge list is the
-    # standard price for alternating-key iteration (both are narrow
-    # 2-column frames).
-    e_src = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(width_for(edges), F.col("src"))
-        .localCheckpoint(eager=False)
-    )
-    e_dst = e_src.repartition(
-        width_for(edges), F.col("dst")
-    ).localCheckpoint(eager=False)
+    # half-step — keep TWO pinned copies: e_src feeds the a ← Aᵀh half
+    # (join on src), e_dst the h ← Aa half (join on dst). e_dst is
+    # derived FROM e_src's cache so the dedup runs once. Two cached
+    # copies of the edge list is the standard price for alternating-key
+    # iteration (both are narrow 2-column frames).
+    e_src = _directed(edges)
+    e_dst = _pinned(e_src, "dst", edges)
     hubs = e_src.select(F.col("src").alias("id")).distinct().localCheckpoint(
         eager=False
     )
@@ -618,7 +546,6 @@ def hyperball_harmonic(
     edges: DataFrame,
     nodes: DataFrame,
     rounds: int = 3,
-    node_col: str = "node",
     p: int = 6,
 ) -> DataFrame:
     """Bounded-radius harmonic centrality via HyperBall (Boldi & Vigna,
@@ -672,23 +599,8 @@ def hyperball_harmonic(
     directly."""
     from demo_pgvector_spark.operators import sketch as sketch_ops
 
-    sym = (
-        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            edges.select(
-                F.col("id_b").alias("src"), F.col("id_a").alias("dst")
-            )
-        )
-        .dropDuplicates(["src", "dst"])
-        # static side pre-partitioned by its per-round join key (the
-        # round merge joins sym.dst == state.node each round — round 13,
-        # guide §2.4)
-        .repartition(width_for(edges), F.col("dst"))
-        .localCheckpoint(eager=False)
-    )
-    items0 = nodes.select(
-        F.col(node_col).alias("node"), F.col(node_col).alias("member")
-    )
+    e = _undirected(edges)
+    items0 = nodes.select("node", F.col("node").alias("member"))
     state = sketch_ops.hll_build(
         items0, "member", group_cols=("node",), p=p
     ).localCheckpoint(eager=False)
@@ -700,8 +612,9 @@ def hyperball_harmonic(
 
     ests = [est(state, "e0")]
     for r in range(1, rounds + 1):
-        neigh = sym.join(state, sym["dst"] == state["node"]).select(
-            sym["src"].alias("node"), "register", "rho"
+        # e is symmetric: u's registers flow to every v with (u, v)
+        neigh = e.join(state, e["src"] == state["node"]).select(
+            e["dst"].alias("node"), "register", "rho"
         )
         state = (
             state.unionByName(neigh)
@@ -711,8 +624,8 @@ def hyperball_harmonic(
         )
         ests.append(est(state, f"e{r}"))
     joined = ests[0]
-    for e in ests[1:]:
-        joined = joined.join(e, "node")
+    for later in ests[1:]:
+        joined = joined.join(later, "node")
     harmonic = F.lit(0.0)
     for r in range(1, rounds + 1):
         harmonic = harmonic + (F.col(f"e{r}") - F.col(f"e{r-1}")) / F.lit(

@@ -4106,22 +4106,66 @@ def q_mm_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm_ops.phash_pairs_incremental(batch, idx)
 
 
-def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Static PageRank (operators/graph.py; GraphX's unnormalized
-    fixed-iteration contract — rank_0 = 1, rank' = 0.15 + 0.85·Σ
-    rank/outdeg, dangling mass dropped) over the part→supplier edge list
-    from lineitem (591k distinct edges, 21k nodes at sf0.1; supplier ids
-    offset into their own space). Link-graph centrality is the
-    corpus-quality signal web-scale training pipelines compute over the
-    host graph. 5 iterations, ranks 6dp-quantized per step, ALL
-    iterations one job (no per-iteration action); the oracle unrolls the
-    identical recurrence (the kmeans-oracle pattern)."""
+def _part_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst) part→supplier edges, one per lineitem row (591k
+    distinct, 21k nodes at sf0.1), supplier ids offset by
+    SUPP_NODE_OFFSET into their own space: the graph of graph_pagerank,
+    graph_bfs and graph_ppr."""
     li = tables.load(spark, sf_dir, "lineitem")
-    edges = li.select(
+    return li.select(
         F.col("l_partkey").alias("src"),
         (F.col("l_suppkey") + F.lit(SUPP_NODE_OFFSET)).alias("dst"),
     )
-    return graph_ops.pagerank(edges, iterations=PAGERANK_ITERS)
+
+
+def _vetted_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id): the vetted supplier nodes, s_suppkey % BFS_SEED_MOD == 0,
+    in ``_part_supplier_edges``' id space."""
+    supp = tables.load(spark, sf_dir, "supplier")
+    return supp.filter(F.col("s_suppkey") % BFS_SEED_MOD == 0).select(
+        (F.col("s_suppkey") + F.lit(SUPP_NODE_OFFSET)).alias("id")
+    )
+
+
+def _co_order_graph(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The part CO-ORDER graph and its (node) set: (src, dst) edges with
+    src < dst, two parts linked iff one order holds a line of each
+    (lines thinned to l_quantity > TRI_QTY_MIN so the graph stays
+    proportionate), one row per such order. The graph of
+    graph_triangles, graph_lpa, graph_kcore, graph_hyperball and
+    graph_cc — each operator reads the edges as a set."""
+    li = tables.load(spark, sf_dir, "lineitem").filter(
+        F.col("l_quantity") > TRI_QTY_MIN
+    )
+    a = li.select("l_orderkey", F.col("l_partkey").alias("src"))
+    b = li.select("l_orderkey", F.col("l_partkey").alias("dst"))
+    edges = (
+        a.join(b, "l_orderkey")
+        .filter(F.col("src") < F.col("dst"))
+        .select("src", "dst")
+    )
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    return edges, nodes
+
+
+def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Static PageRank (operators/graph.py; GraphX's unnormalized
+    fixed-iteration contract — rank_0 = 1, rank' = 0.15 + 0.85·Σ
+    rank/outdeg, dangling mass dropped) over the part→supplier edge
+    list. Link-graph centrality is the corpus-quality signal web-scale
+    training pipelines compute over the host graph. 5 iterations in
+    64-bit integer fixed point (micro-unit ranks), ALL iterations one
+    job (no per-iteration action); the oracle unrolls the identical
+    recurrence (the kmeans-oracle pattern)."""
+    return graph_ops.pagerank(
+        _part_supplier_edges(spark, sf_dir), iterations=PAGERANK_ITERS
+    )
 
 
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4135,12 +4179,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain SQL; BIGINT-exact throughout. Degree orientation caps the
     wedge fan-out at O(√m) per node — the 100 TB skew argument lives in
     the operator docstring."""
-    li = tables.load(spark, sf_dir, "lineitem").filter(
-        F.col("l_quantity") > TRI_QTY_MIN
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("src"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("dst"))
-    edges = a.join(b, "l_orderkey").filter(F.col("src") < F.col("dst"))
+    edges, _ = _co_order_graph(spark, sf_dir)
     return graph_ops.triangle_counts(edges)
 
 
@@ -4152,16 +4191,11 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     NO convergence action: all rounds compile into ONE Spark job (the
     graph_pagerank shape). Integer-exact end to end; the oracle unrolls
     the same Bellman-Ford relaxation."""
-    li = tables.load(spark, sf_dir, "lineitem")
-    supp = tables.load(spark, sf_dir, "supplier")
-    edges = li.select(
-        F.col("l_partkey").alias("src"),
-        (F.col("l_suppkey") + F.lit(SUPP_NODE_OFFSET)).alias("dst"),
+    return graph_ops.bfs_hops(
+        _part_supplier_edges(spark, sf_dir),
+        _vetted_seeds(spark, sf_dir),
+        max_hops=BFS_MAX_HOPS,
     )
-    seeds = supp.filter(F.col("s_suppkey") % BFS_SEED_MOD == 0).select(
-        (F.col("s_suppkey") + F.lit(SUPP_NODE_OFFSET)).alias("id")
-    )
-    return graph_ops.bfs_hops(edges, seeds, max_hops=BFS_MAX_HOPS)
 
 
 def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4173,18 +4207,9 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     (restart lands only on seeds). PAGERANK_ITERS iterations compiled
     into ONE job, integer fixed point, no new action-per-round
     (VERDICT r7 #7); oracle unrolls the identical recurrence."""
-    li = tables.load(spark, sf_dir, "lineitem")
-    supp = tables.load(spark, sf_dir, "supplier")
-    edges = li.select(
-        F.col("l_partkey").alias("src"),
-        (F.col("l_suppkey") + F.lit(SUPP_NODE_OFFSET)).alias("dst"),
-    )
-    seeds = supp.filter(F.col("s_suppkey") % BFS_SEED_MOD == 0).select(
-        (F.col("s_suppkey") + F.lit(SUPP_NODE_OFFSET)).alias("id")
-    )
     return graph_ops.personalized_pagerank(
-        edges,
-        seeds,
+        _part_supplier_edges(spark, sf_dir),
+        _vetted_seeds(spark, sf_dir),
         iterations=PAGERANK_ITERS,
     )
 
@@ -4202,23 +4227,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     its boolean core membership plus the convergence flag; oracle
     unrolls the identical peeling rounds and derives the same flag
     from its last two CTEs."""
-    li = tables.load(spark, sf_dir, "lineitem").filter(
-        F.col("l_quantity") > TRI_QTY_MIN
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("id_a"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("id_b"))
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    nodes = (
-        pairs.select(F.col("id_a").alias("node"))
-        .union(pairs.select(F.col("id_b").alias("node")))
-        .distinct()
-    )
-    return graph_ops.kcore_membership(pairs, nodes)
+    return graph_ops.kcore_membership(*_co_order_graph(spark, sf_dir))
 
 
 def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4254,23 +4263,7 @@ def q_graph_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-bridge integers, z_num exact BIGINT, estimates the shared
     one-literal division @4dp, the harmonic a fixed left fold — the
     DuckDB oracle replays the whole chain bit-for-bit."""
-    li = tables.load(spark, sf_dir, "lineitem").filter(
-        F.col("l_quantity") > TRI_QTY_MIN
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("id_a"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("id_b"))
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    nodes = (
-        pairs.select(F.col("id_a").alias("node"))
-        .union(pairs.select(F.col("id_b").alias("node")))
-        .distinct()
-    )
-    return graph_ops.hyperball_harmonic(pairs, nodes)
+    return graph_ops.hyperball_harmonic(*_co_order_graph(spark, sf_dir))
 
 
 def q_graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4281,16 +4274,9 @@ def q_graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output (node_id, component_id) with component_id = the component's
     minimum node id; oracle = the bounded grouped-min recursive CTE
     (the dedup_assign convention)."""
-    li = tables.load(spark, sf_dir, "lineitem").filter(
-        F.col("l_quantity") > TRI_QTY_MIN
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("id_a"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("id_b"))
-    pairs = a.join(b, "l_orderkey").filter(F.col("id_a") < F.col("id_b"))
-    nodes = (
-        pairs.select(F.col("id_a").alias("node"))
-        .union(pairs.select(F.col("id_b").alias("node")))
-        .distinct()
+    edges, nodes = _co_order_graph(spark, sf_dir)
+    pairs = edges.select(
+        F.col("src").alias("id_a"), F.col("dst").alias("id_b")
     )
     out = dedup_ops.dedup_assign(nodes, pairs, id_col="node")
     return out.select(
@@ -4306,12 +4292,7 @@ def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     / domain-cluster grouping is this exact operator over host graphs.
     Fixed LPA_ITERS rounds compile into ONE job; integer-exact; oracle
     unrolls the rounds with a ROW_NUMBER argmax."""
-    li = tables.load(spark, sf_dir, "lineitem").filter(
-        F.col("l_quantity") > TRI_QTY_MIN
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("src"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("dst"))
-    edges = a.join(b, "l_orderkey").filter(F.col("src") < F.col("dst"))
+    edges, _ = _co_order_graph(spark, sf_dir)
     return graph_ops.label_propagation(edges, iterations=LPA_ITERS)
 
 

@@ -188,7 +188,7 @@ def read_bloom(spark, root: str) -> DataFrame:
     return ingest_ops.read_table(spark, root, BLOOM_SCHEMA_DDL)
 
 
-# Default register-table schema for the registry's lineitem demo; a
+# Default read schema of ``read_hll``: the registry's lineitem demo; a
 # different group_cols tuple passes its matching DDL explicitly.
 HLL_SCHEMA_DDL = "l_returnflag string, register bigint, rho int"
 
@@ -198,7 +198,6 @@ def hll_sink(
     item_col: str,
     group_cols: tuple[str, ...] = (),
     p: int = sketch_ops.HLL_P,
-    schema_ddl: str = HLL_SCHEMA_DDL,
 ) -> Callable[[DataFrame, int], None]:
     """A ``foreachBatch`` function maintaining the HyperLogLog register
     RELATION (operators/sketch.py hll_build) as a versioned table — the
@@ -212,12 +211,14 @@ def hll_sink(
     bloom bit-OR is idempotent, and register MAX is idempotent too — a
     retried epoch re-commits an identical version, so at-least-once
     delivery composes to exactly-once table state with no marker. State
-    is ≤ m rows per group forever, regardless of stream length."""
+    is ≤ m rows per group forever, regardless of stream length. The
+    committed registers are read with the epoch delta's own schema, so
+    any ``group_cols`` (none included) folds without a declared DDL."""
 
     def apply(batch: DataFrame, _epoch_id: int) -> None:
         spark = batch.sparkSession
         delta = sketch_ops.hll_build(batch, item_col, group_cols, p)
-        existing = ingest_ops.read_table(spark, root, schema_ddl)
+        existing = ingest_ops.read_table(spark, root, delta.schema)
         merged = (
             existing.unionByName(delta)
             .groupBy(*group_cols, "register")
@@ -235,13 +236,12 @@ def run_hll_stream(
     item_col: str,
     checkpoint_dir: str,
     group_cols: tuple[str, ...] = (),
-    schema_ddl: str = HLL_SCHEMA_DDL,
 ) -> None:
     """Drain ``stream_df`` through the HLL sink (``ingest.drain``)."""
     ingest_ops.drain(
         stream_df,
         checkpoint_dir,
-        hll_sink(root, item_col, group_cols, schema_ddl=schema_ddl),
+        hll_sink(root, item_col, group_cols),
     )
 
 

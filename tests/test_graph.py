@@ -5,6 +5,8 @@ structural properties."""
 
 from __future__ import annotations
 
+import pytest
+
 from demo_pgvector_spark.operators import graph
 
 
@@ -258,28 +260,11 @@ def test_kcore_converges_and_is_a_proper_core(spark):
     survivor set (the fixed-round result IS the fixpoint), the core
     must be non-trivial (some peeled, some kept), and every survivor
     must have induced degree >= k."""
-    from pyspark.sql import functions as F
-
-    from demo_pgvector_spark import registry, tables
+    from demo_pgvector_spark import registry
     from demo_pgvector_spark.operators import graph as g
+    from tests.conftest import SF_SMALL
 
-    sf = "/root/testdata/sf0.001"
-    li = tables.load(spark, sf, "lineitem").filter(
-        F.col("l_quantity") > registry.TRI_QTY_MIN
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("id_a"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("id_b"))
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    nodes = (
-        pairs.select(F.col("id_a").alias("node"))
-        .union(pairs.select(F.col("id_b").alias("node")))
-        .distinct()
-    )
+    pairs, nodes = registry._co_order_graph(spark, SF_SMALL)
     base = {
         r["node_id"]: r["in_kcore"]
         for r in g.kcore_membership(pairs, nodes).collect()
@@ -300,7 +285,7 @@ def test_kcore_converges_and_is_a_proper_core(spark):
     kept = {n for n, f in base.items() if f}
     assert 0 < len(kept) < len(base)  # proper, non-trivial core
     sym = {(x, y) for r in pairs.collect() for x, y in
-           ((r["id_a"], r["id_b"]), (r["id_b"], r["id_a"]))}
+           ((r["src"], r["dst"]), (r["dst"], r["src"]))}
     for n in kept:
         deg = sum(1 for x, y in sym if x == n and y in kept)
         assert deg >= g.KCORE_K, (n, deg)
@@ -377,7 +362,7 @@ def test_hyperball_matches_python_replay(spark):
     Q = sketch_ops.HLL_BITS - P
 
     edges = [(1, 2), (1, 3), (1, 4), (1, 5), (1, 6), (6, 7), (7, 8)]
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    df = spark.createDataFrame(edges, "src long, dst long")
     nodes_df = spark.createDataFrame(
         sorted({(v,) for e in edges for v in e}), "node long"
     )
@@ -450,3 +435,127 @@ def test_loop_partitions_is_result_invariant(spark):
             )
         assert got == base, f"session width {w} changed the pagerank result"
         assert lpa_w == lpa_base, f"session width {w} changed the LPA result"
+
+
+# --- one edge relation -------------------------------------------------------
+
+# A triangle with a two-hop tail and a separate pair; the dirty copy adds
+# duplicated rows, reversed copies and self-loops, none of which may
+# change an undirected operator's output.
+CLEAN_EDGES = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (6, 7)]
+DIRTY_EDGES = CLEAN_EDGES + [
+    (2, 1), (4, 5), (5, 4), (4, 3), (4, 5),  # duplicates and reverses
+    (5, 5), (1, 1), (7, 7),                  # self-loops
+]
+
+
+def _undirected_ops(spark):
+    from pyspark.sql import functions as F
+
+    from demo_pgvector_spark.operators import dedup
+
+    seeds = spark.createDataFrame([(1,)], "id long")
+    nodes = spark.createDataFrame([(v,) for v in range(1, 8)], "node long")
+    return {
+        "ppr": lambda e: graph.personalized_pagerank(e, seeds, 3),
+        "bfs": lambda e: graph.bfs_hops(e, seeds, max_hops=3),
+        "lpa": lambda e: graph.label_propagation(e, iterations=2),
+        "kcore": lambda e: graph.kcore_membership(e, nodes, k=2, rounds=4),
+        "hyperball": lambda e: graph.hyperball_harmonic(e, nodes, rounds=2),
+        "dedup_assign": lambda e: dedup.dedup_assign(
+            nodes.withColumnRenamed("node", "doc_id"),
+            e.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b")),
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "op", ["ppr", "bfs", "lpa", "kcore", "hyperball", "dedup_assign"]
+)
+def test_undirected_operators_read_their_edges_as_a_set(spark, op):
+    """Every undirected operator reads ``graph._undirected``: duplicated
+    rows, reversed copies and self-loops give the same output as the
+    clean edge set (k-core membership once counted a duplicated pair
+    twice toward a node's degree)."""
+    run = _undirected_ops(spark)[op]
+
+    def rows(edges):
+        df = spark.createDataFrame(edges, "src long, dst long")
+        return sorted(map(tuple, run(df).collect()))
+
+    clean = rows(CLEAN_EDGES)
+    assert clean and rows(DIRTY_EDGES) == clean
+    if op == "kcore":  # the clean 2-core is the triangle
+        assert {r[0] for r in clean if r[1]} == {1, 2, 3}
+
+
+def test_package_spells_the_reversed_edge_union_once():
+    """The package has ONE spelling of "an edge list plus its reverses":
+    ``graph._both_directions``. No other function selects an edge
+    frame with its two endpoint columns swapped, whether it unions the
+    swapped select onto a select of the same columns (``union`` or
+    ``unionByName``) or swaps two literal column names in place."""
+    import ast
+    import pathlib
+
+    import demo_pgvector_spark
+
+    def renames(call):
+        # alias -> the F.col(...) argument, over one select's arguments
+        out = {}
+        for a in call.args:
+            if (
+                isinstance(a, ast.Call)
+                and getattr(a.func, "attr", None) == "alias"
+                and a.args
+                and isinstance(a.args[0], ast.Constant)
+                and isinstance(a.func.value, ast.Call)
+                and getattr(a.func.value.func, "attr", None) == "col"
+                and len(a.func.value.args) == 1
+            ):
+                out[a.args[0].value] = a.func.value.args[0]
+        return out
+
+    def is_select(n):
+        return isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "select"
+
+    def dumped(node):
+        return [
+            {x: ast.dump(c) for x, c in renames(n).items()}
+            for n in ast.walk(node)
+            if is_select(n)
+        ]
+
+    def swapped(r, s):
+        return any(
+            r[x] == s[y] and r[y] == s[x] != r[x]
+            for x in r
+            for y in r
+            if x != y and x in s and y in s
+        )
+
+    root = pathlib.Path(demo_pgvector_spark.__file__).parent
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        for top in ast.parse(path.read_text(encoding="utf-8")).body:
+            owner = (path.relative_to(root).as_posix(), getattr(top, "name", None))
+            for n in ast.walk(top):
+                if is_select(n):
+                    lit = {
+                        x: c.value
+                        for x, c in renames(n).items()
+                        if isinstance(c, ast.Constant)
+                    }
+                    if any(lit.get(c) == x != c for x, c in lit.items()):
+                        found.add(owner)
+                if getattr(getattr(n, "func", None), "attr", None) in (
+                    "union",
+                    "unionByName",
+                ) and any(
+                    swapped(r, s)
+                    for r in dumped(n.func.value)
+                    for a in n.args
+                    for s in dumped(a)
+                ):
+                    found.add(owner)
+    assert found == {("operators/graph.py", "_both_directions")}

@@ -268,6 +268,27 @@ def test_streaming_hll_sink_is_idempotent_max(spark, tmp_path):
     assert regs() == whole
 
 
+def test_streaming_hll_sink_folds_ungrouped_epochs(spark, tmp_path):
+    """hll_sink with the default ``group_cols=()``: the committed
+    registers are read with the epoch delta's own schema, so three
+    epochs fold into the same table as ``hll_build`` of their union (a
+    fixed lineitem read DDL made the first epoch's union fail)."""
+    from demo_pgvector_spark.streaming import sketches as ssk
+
+    root = str(tmp_path / "hll")
+    sink = ssk.hll_sink(root, "item")
+    for epoch, chunk in enumerate([ITEMS[0::3], ITEMS[1::3], ITEMS[2::3]]):
+        sink(_df(spark, chunk), epoch)
+    got = sorted(
+        tuple(r)
+        for r in ssk.read_hll(spark, root, "register bigint, rho int").collect()
+    )
+    whole = sorted(
+        tuple(r) for r in sketch.hll_build(_df(spark, ITEMS), "item").collect()
+    )
+    assert got == whole and len(whole) > 0
+
+
 def test_hll_inclusion_exclusion_tracks_true_intersection(spark):
     """Set algebra: union by register MAX, intersection by
     inclusion-exclusion — the estimate must land within 15% of the

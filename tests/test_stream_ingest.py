@@ -42,6 +42,21 @@ def _stage(spark, land, batches):
         ).coalesce(1).write.parquet(str(land / f"arrival_{i}"))
 
 
+def _stage_arrivals(spark, tmp_path, land, slices, ddl):
+    """One flat parquet file per slice in ``land``, mtimes in slice
+    order: ``landing_stream`` drains them as one epoch each."""
+    import glob
+    import shutil
+    import time
+
+    for i, rows in enumerate(slices):
+        part = str(tmp_path / f"_part_{i}")
+        spark.createDataFrame(rows, ddl).coalesce(1).write.parquet(part)
+        flat = str(land / f"arrival_{i}.parquet")
+        shutil.copyfile(glob.glob(f"{part}/part-*.parquet")[0], flat)
+        os.utime(flat, (time.time() - 100 + i * 10,) * 2)
+
+
 def test_stream_upsert_matches_batch_upsert(spark, tmp_path, staged):
     land, batches = staged
     _stage(spark, land, batches)
@@ -85,21 +100,12 @@ def test_upsert_stream_retry_repairs_a_crash_after_the_commit(
     the upsert allocates nothing) and epoch 3, and the final table
     equals one batch ``upsert_allocated`` over every slice: same keys,
     same ids."""
-    import glob
-    import shutil
-    import time
-
     from pyspark.errors import StreamingQueryException
 
     land, batches = staged
-    for i, names in enumerate(batches):
-        part = str(tmp_path / f"_part_{i}")
-        spark.createDataFrame([(n,) for n in names], "name string").coalesce(
-            1
-        ).write.parquet(part)
-        flat = str(land / f"arrival_{i}.parquet")
-        shutil.copyfile(glob.glob(f"{part}/part-*.parquet")[0], flat)
-        os.utime(flat, (time.time() - 100 + i * 10,) * 2)
+    _stage_arrivals(
+        spark, tmp_path, land, [[(n,) for n in b] for b in batches], "name string"
+    )
     root, ckpt = str(tmp_path / "models_table"), str(tmp_path / "ckpt")
 
     def run():
@@ -137,6 +143,106 @@ def test_upsert_stream_retry_repairs_a_crash_after_the_commit(
         )
     )
     assert got == want and len(got) == 6
+
+
+def _bloom_case(spark):
+    from demo_pgvector_spark.operators import curation
+
+    ddl = "doc_id long, text string"
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu"
+    slices = [[(i, f"{words} word{i} tail{i}")] for i in range(3)]
+    return (
+        ddl,
+        slices,
+        lambda stream, root, ckpt: sketches.run_bloom_stream(stream, root, ckpt),
+        lambda root: sketches.read_bloom(spark, root),
+        lambda everything: curation.bloom_build(everything),
+    )
+
+
+def _hll_case(spark):
+    from demo_pgvector_spark.operators import sketch
+
+    ddl = "item long"
+    slices = [[(i,) for i in range(b, 90, 3)] for b in range(3)]
+    return (
+        ddl,
+        slices,
+        lambda stream, root, ckpt: sketches.run_hll_stream(
+            stream, root, "item", ckpt
+        ),
+        lambda root: sketches.read_hll(spark, root, "register bigint, rho int"),
+        lambda everything: sketch.hll_build(everything, "item"),
+    )
+
+
+def _scd2_case(spark):
+    dim_ddl = (
+        "k long, name string, bal double, valid_from string,"
+        " valid_to string, is_current boolean"
+    )
+    attrs = ("name", "bal")
+    # one change row per epoch, keys disjoint across epochs
+    slices = [[(1, "alice", 1.0)], [(2, "bob", 2.0)], [(3, "carol", 3.0)]]
+    return (
+        "k long, name string, bal double",
+        slices,
+        lambda stream, root, ckpt: ingest.run_scd2_stream(
+            stream, root, ("k",), attrs, dim_ddl, ckpt, "1995-06-01"
+        ),
+        lambda root: ingest.read_table(spark, root, dim_ddl),
+        lambda everything: write_ops.scd2_apply(
+            spark.createDataFrame([], dim_ddl),
+            everything,
+            ("k",),
+            attrs,
+            "1995-06-01",
+        ),
+    )
+
+
+@pytest.mark.parametrize(
+    "case", [_bloom_case, _hll_case, _scd2_case], ids=["bloom", "hll", "scd2"]
+)
+def test_sink_stream_retry_repairs_a_crash_after_the_commit(
+    spark, tmp_path, monkeypatch, case
+):
+    """Fault injection through the real drain for the bloom, HLL and
+    SCD2 sinks: epoch 2 commits its table version, then raises before
+    the epoch completes. Draining again from the same checkpoint replays
+    epoch 2 (each sink's fold is idempotent) and epoch 3, and the final
+    table equals the batch fold of every epoch's rows."""
+    from pyspark.errors import StreamingQueryException
+
+    ddl, slices, run_stream, read, batch_fold = case(spark)
+    land = tmp_path / "landing"
+    land.mkdir()
+    _stage_arrivals(spark, tmp_path, land, slices, ddl)
+    root, ckpt = str(tmp_path / "table"), str(tmp_path / "ckpt")
+
+    def run():
+        run_stream(ingest.landing_stream(spark, str(land), ddl), root, ckpt)
+
+    real, commits = ingest.commit_table, []
+
+    def crash_after_second_commit(*args, **kwargs):
+        version = real(*args, **kwargs)
+        commits.append(version)
+        if len(commits) == 2:
+            raise RuntimeError("injected crash after the commit")
+        return version
+
+    monkeypatch.setattr(ingest, "commit_table", crash_after_second_commit)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run()
+    assert ingest.current_version(root) == "v000002"
+    monkeypatch.setattr(ingest, "commit_table", real)
+    run()
+
+    everything = spark.createDataFrame([r for rows in slices for r in rows], ddl)
+    got = sorted(map(tuple, read(root).collect()))
+    assert got == sorted(map(tuple, batch_fold(everything).collect()))
+    assert got
 
 
 def test_retried_epoch_is_a_no_op(spark, tmp_path, staged):
