@@ -67,7 +67,7 @@ from demo_pgvector_spark.functions.vector import (
 )
 from demo_pgvector_spark.operators import graph, ivf
 from demo_pgvector_spark.operators.similarity import topk_per_group
-from demo_pgvector_spark.tables import read_partitions, written_schema
+from demo_pgvector_spark.tables import read_partitions, write_layout
 
 DEFAULT_BITS = 8
 DEFAULT_TABLES = 4
@@ -355,17 +355,19 @@ def _pq_codes(
     codebooks: list[list[list[float]]],
     id_col: str,
     vec_col: str,
+    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """``code_0..code_{m-1}``: per subspace the argmin-L2 codeword id
     (0-based, ties to the lowest cid). While the plan's literal count
     stays under ``ivf.INLINE_MAX_LITERALS`` the codebooks are plan literals and
     the codes are appended to every column of ``vectors`` in one
-    projection (zero exchanges). Past it the result is (id, codes) only:
-    an explode to (id, s, subvector), a broadcast join against the
-    m·k-row codebook table and one exchange, groupBy(id) with m
-    FILTER'd ``min_by`` argmins — plan size independent of m·k·subdim
-    (production PQ: m=16-64, k*=256, dim 1024+). Both give the same
-    codes (same fold, same tie-break)."""
+    projection (zero exchanges). Past it the result is (id, keep_cols,
+    codes): an explode to (id, s, subvector), a broadcast join against
+    the m·k-row codebook table and one exchange, groupBy(id) with m
+    FILTER'd ``min_by`` argmins and ``keep_cols`` (per-id constants)
+    riding through as ``first()``, as in ``ivf.assign_clusters`` — plan
+    size independent of m·k·subdim (production PQ: m=16-64, k*=256, dim
+    1024+). Both give the same codes (same fold, same tie-break)."""
     m = len(codebooks)
     subdim = len(codebooks[0][0])
     subs = [f"slice({vec_col}, {s * subdim + 1}, {subdim})" for s in range(m)]
@@ -406,12 +408,13 @@ def _pq_codes(
         ]
     )
     exploded = vectors.select(
-        F.col(id_col), F.explode(sub_structs).alias("b")
-    ).select(id_col, F.col("b.s").alias("s"), F.col("b.sub").alias("sub"))
+        id_col, *keep_cols, F.explode(sub_structs).alias("b")
+    ).select(id_col, *keep_cols, F.col("b.s").alias("s"), F.col("b.sub").alias("sub"))
     joined = exploded.join(F.broadcast(cb), "s").select(
-        F.col(id_col), "s", "cid", F.expr(l2sq_sql("sub", "cv")).alias("dist")
+        id_col, *keep_cols, "s", "cid", F.expr(l2sq_sql("sub", "cv")).alias("dist")
     )
     return joined.groupBy(id_col).agg(
+        *[F.first(c).alias(c) for c in keep_cols],
         *[
             F.expr(f"min_by(cid, struct(dist, cid)) FILTER (WHERE s = {s})").alias(
                 f"code_{s}"
@@ -653,12 +656,10 @@ def encode_codes(
 
     The argmin is ``_pq_codes``, the one ``pq_topk`` scores: the
     inlined-literal projection (zero exchanges) under the plan-compile
-    ceiling, codebook broadcast join + one min_by exchange past it, whose
-    codes an id join re-attaches to the full-width row."""
-    codes = _pq_codes(vectors, codebooks, id_col, vec_col)
-    if vec_col not in codes.columns:
-        codes = vectors.join(codes, id_col)
+    ceiling, codebook broadcast join + one min_by exchange past it, which
+    carries the rest of the row through the aggregation."""
     other = [c for c in vectors.columns if c not in (id_col, vec_col)]
+    codes = _pq_codes(vectors, codebooks, id_col, vec_col, (vec_col, *other))
     return codes.select(
         id_col, vec_col, *other, *[f"code_{s}" for s in range(len(codebooks))]
     )
@@ -679,8 +680,7 @@ def ivfpq_write(
     (partition pruning) and score the stored codes — the assignment and
     encoding cost is paid exactly once at ingest."""
     assigned = ivf.assign_clusters_auto(vectors, cents, id_col, vec_col)
-    coded = encode_codes(assigned, codebooks, id_col, vec_col)
-    coded.write.mode("overwrite").partitionBy("cluster").parquet(path)
+    write_layout(encode_codes(assigned, codebooks, id_col, vec_col), path, "cluster")
 
 
 def ivfpq_topk_pruned(
@@ -843,7 +843,7 @@ def ivfsq_write(
         .withColumn("codes", F.expr(_sq8_quantize_sql(vec_col)))
         .select(id_col, "codes", "cluster")
     )
-    coded.write.mode("overwrite").partitionBy("cluster").parquet(path)
+    write_layout(coded, path, "cluster")
     bounds.write.mode("overwrite").parquet(path + "_bounds")
 
 
@@ -863,9 +863,7 @@ def ivfsq_topk_pruned(
     reads nprobe/k of the directories × 1/4 of the bytes — the
     compounding win this composition exists for."""
     probe_ids = ivf._rank_centroids(cents, qvec, nprobe)
-    bounds = spark.read.schema(written_schema(path + "_bounds")).parquet(
-        path + "_bounds"
-    )
+    bounds = read_partitions(spark, path + "_bounds")
     cand = (
         read_partitions(spark, path, "cluster", probe_ids)
         .filter(F.col("cluster").isin(probe_ids))
@@ -1073,7 +1071,7 @@ def smallworld_append(
     base_entries: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental small-world maintenance — the graph-ANN member of
-    the module's O(batch) family (ivf_append / dedup_index /
+    the module's O(batch) family (vec_ivf_append / dedup_index /
     layout_zorder_append / mm_phash_incremental): a new crawl batch
     joins the index WITHOUT rebuilding it.
 
@@ -1271,32 +1269,24 @@ def smallworld_store_write(
         n = emb.count()
         nb = max(8, -(-int(n) // 512))
     spark = emb.sparkSession
-    bucket = F.pmod(F.col(id_col), F.lit(int(nb))).cast("int")
-    # repartition(bucket) before the partitioned write → exactly ONE
-    # file per bucket directory (the ivf_compact lesson: without it
-    # every input task writes a sliver into every bucket and the
-    # point-lookup pays nb× the listing/open cost)
-    (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .withColumn("bucket", bucket)
-        .repartition(F.col("bucket"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(root, "vectors"))
+    # one file per bucket directory (``tables.write_layout``): a point
+    # lookup lists and opens only the files of its buckets
+    write_layout(
+        emb.select(id_col, vec_col).withColumn(
+            "bucket", F.pmod(F.col(id_col), F.lit(int(nb))).cast("int")
+        ),
+        os.path.join(root, "vectors"),
+        "bucket",
     )
     if adj is None:
         adj = smallworld_build(
             emb, planes, m=m, coarse_bits=coarse_bits,
             id_col=id_col, vec_col=vec_col,
         )
-    (
-        adj.withColumn(
-            "bucket", F.pmod(F.col("src"), F.lit(int(nb))).cast("int")
-        )
-        .repartition(F.col("bucket"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(root, "adjacency"))
+    write_layout(
+        adj.withColumn("bucket", F.pmod(F.col("src"), F.lit(int(nb))).cast("int")),
+        os.path.join(root, "adjacency"),
+        "bucket",
     )
     (
         with_signatures(emb, planes[:1, :coarse_bits, :], vec_col)
@@ -1388,8 +1378,7 @@ def smallworld_topk_pruned(
     import os
 
     def read(name: str) -> DataFrame:
-        path = os.path.join(root, name)
-        return spark.read.schema(written_schema(path)).parquet(path)
+        return read_partitions(spark, os.path.join(root, name))
 
     if nb is None:
         nb = int(read("meta").collect()[0]["nb"])

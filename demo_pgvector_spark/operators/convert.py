@@ -93,17 +93,6 @@ def convert_external(media: DataFrame, tool: str) -> DataFrame:
     )
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: tuple[str, ...] = ("lang",), mode: str = "overwrite"
-) -> None:
-    """The engine's sink (``sink_pg`` analog — reference
-    src/lib/database.py:217-280 writes per-row INSERTs; the engine writes
-    one columnar job). Hive-style partition directories mean later scans
-    with a predicate on the partition column read only matching
-    directories — partition pruning, the 100 TB analog of an index."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
 # ---------------------------------------------------------------------------
 # REAL EPUB ingestion (round 3): the reference ships five actual Project
 # Gutenberg EPUBs (examples/*.epub + *.meta.yml sidecars). pandoc is not

@@ -56,6 +56,7 @@ from demo_pgvector_spark.functions.vector import dot_sql
 from demo_pgvector_spark.operators import ann, graph
 from demo_pgvector_spark.operators.ivf import centroid_scores_sql
 from demo_pgvector_spark.session import scan_splits
+from demo_pgvector_spark.tables import write_layout
 
 SHINGLE_K = 5
 NUM_HASHES = 12
@@ -228,7 +229,7 @@ def minhash_pairs_incremental(
     """Incremental near-dup detection: candidate pairs ONLY between a
     NEW batch and the existing corpus, plus within-batch pairs — never
     corpus × corpus. The daily-crawl production shape (the dedup twin of
-    ``ivf_append``): yesterday's 100 TB corpus is already deduped, so
+    an IVF append): yesterday's 100 TB corpus is already deduped, so
     re-running ``minhash_pairs`` over the union re-pays the full
     pair-enumeration for pairs that cannot be new. Output
     (id_a, id_b, jaccard, pair_kind) with id_a < id_b and pair_kind ∈
@@ -318,65 +319,30 @@ def band_index(
 
 
 def band_index_write(
-    docs: DataFrame, path: str, id_col: str = "doc_id", text_col: str = "text"
+    docs: DataFrame,
+    path: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    append: bool = False,
 ) -> None:
     """Materialize the corpus band index (VERDICT r8 #3): shingle +
     minhash + band the corpus ONCE at ingest and store (id, band, key)
-    partitioned by band — the write-once layout that turns every later
-    incremental-dedup run's corpus side into a plain index SCAN instead
-    of a full re-shingle/re-hash of the corpus text (the
-    ``ivf_write_clustered`` contract for the dedup pillar). At 100 TB
-    the index is ~6 small rows per document vs the document text, and
-    the batch-vs-corpus candidate join reads it directly; a cluster
-    deployment would additionally BUCKET each band partition by ``key``
-    so the join co-locates with zero corpus-side shuffle
-    (relational.write_bucketed is that path).
+    partitioned by band (``tables.write_layout``) — the write-once
+    layout that turns every later incremental-dedup run's corpus side
+    into a plain index SCAN instead of a full re-shingle/re-hash of the
+    corpus text (the ``ivf_write_clustered`` contract for the dedup
+    pillar). At 100 TB the index is ~6 small rows per document vs the
+    document text, and the batch-vs-corpus candidate join reads it
+    directly; a cluster deployment would additionally BUCKET each band
+    partition by ``key`` so the join co-locates with zero corpus-side
+    shuffle (relational.write_bucketed is that path).
 
-    The repartition before the write co-locates each band into ONE
-    file: without it every shuffle partition writes a sliver into every
-    band dir (32 partitions × 6 bands ≈ 200 files per write) and the
-    steady-state index SCAN becomes file-listing-bound — measured 40%
-    slower than re-banding at 10× before the fix (SCALE.md round 9),
-    the same small-files tax ``ivf_compact`` exists to repay."""
-    band_index(docs, id_col, text_col).repartition("band").write.mode(
-        "overwrite"
-    ).partitionBy("band").parquet(path)
-
-
-def band_index_append(
-    batch: DataFrame, path: str, id_col: str = "doc_id", text_col: str = "text"
-) -> None:
-    """Append a new batch's bands into an existing index: banding is a
-    pure per-document function of the text, so write(corpus) +
-    append(batch) is row-for-row identical to a full re-band of
-    corpus ∪ batch (the ``ivf_append`` argument; oracle-gated by
-    ``dedup_index_write``'s summary row and pinned row-for-row in
-    tests/test_dedup.py). O(batch) work per ingest tick, never
-    O(corpus); each append adds ONE file per band (repartition — the
-    band_index_write rationale), so file count grows per batch, not
-    per batch × shuffle width, and a periodic rewrite (the
-    ``ivf_compact`` shape) repays even that."""
-    band_index(batch, id_col, text_col).repartition("band").write.mode(
-        "append"
-    ).partitionBy("band").parquet(path)
-
-
-def band_index_compact(spark, src_path: str, dst_path: str) -> None:
-    """Compact an appended band index: rewrite so each band dir holds
-    ONE file again (appends add a file per batch; the sliver layout was
-    measured file-listing-bound — SCALE.md round 9). The ``ivf_compact``
-    shape verbatim: read, co-locate per band, write to a FRESH dir
-    (overwriting raw parquet in place while reading it is unsafe; the
-    caller swaps dirs). Row contents untouched, so incremental-dedup
-    runs before and after are identical — pinned in
-    tests/test_dedup.py."""
-    (
-        spark.read.parquet(src_path)
-        .repartition(F.col("band"))
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(dst_path)
-    )
+    ``append=True`` adds a new batch's bands: banding is a pure
+    per-document function of the text, so write(corpus) +
+    append(batch) is row-for-row a full re-band of corpus ∪ batch
+    (oracle-gated by ``dedup_index_write``'s summary row, pinned in
+    tests/test_dedup.py) — O(batch) per ingest tick, never O(corpus)."""
+    write_layout(band_index(docs, id_col, text_col), path, "band", append=append)
 
 
 # Tracking params are matched ONLY at a [?&] boundary (ADVICE r9: the

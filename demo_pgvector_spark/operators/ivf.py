@@ -32,7 +32,7 @@ from demo_pgvector_spark.functions.vector import (
     query_vector_literal,
     sequential_fold,
 )
-from demo_pgvector_spark.tables import read_partitions
+from demo_pgvector_spark.tables import read_partitions, write_layout
 
 
 def assign_clusters(
@@ -232,59 +232,29 @@ def ivf_write_clustered(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    append: bool = False,
 ) -> None:
     """Write-time IVF clustering: assign every vector to its centroid and
-    store the table PARTITIONED BY cluster — the physical layout that
-    turns probe-time cluster filters into partition PRUNING (only nprobe
-    of k directories are ever listed/read). This is the 100 TB shape: the
-    assignment cost is paid once at ingest, and every probe afterwards is
-    sublinear I/O."""
-    assigned = assign_clusters_auto(vectors, cents, id_col, vec_col)
-    assigned.write.mode("overwrite").partitionBy("cluster").parquet(path)
+    store the table PARTITIONED BY cluster (``tables.write_layout``) —
+    the physical layout that turns probe-time cluster filters into
+    partition PRUNING (only nprobe of k directories are ever
+    listed/read). This is the 100 TB shape: the assignment cost is paid
+    once at ingest, and every probe afterwards is sublinear I/O.
 
-
-def ivf_append(
-    new_vectors: DataFrame,
-    cents: list[list[float]],
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental index maintenance (VERDICT r7 #3): assign a batch of
-    NEW vectors to the EXISTING trained centroids and APPEND them into
-    the cluster-partitioned layout — no rebuild. Because per-vector
-    assignment depends only on (vector, centroids), append-then-probe
-    is EXACTLY equal to a full rebuild over the union (pinned in
-    tests/test_ivf.py row-for-row, not just top-k): the daily
-    corpus-growth path a 100 TB deployment runs at ingest, paying
-    O(batch) instead of O(corpus).
-
-    What append does NOT do is re-TRAIN: centroids drift as the corpus
-    distribution shifts, and recall degrades when clusters overgrow.
-    The maintenance loop is append per batch → ``ivf_compact`` when a
-    partition's file count passes a threshold (appends add one file per
-    touched cluster per batch) → full ``kmeans_lloyd`` re-train +
-    rewrite only when cluster-size skew or drift crosses policy, which
-    is weeks of appends, not every batch."""
-    assigned = assign_clusters_auto(new_vectors, cents, id_col, vec_col)
-    assigned.write.mode("append").partitionBy("cluster").parquet(path)
-
-
-def ivf_compact(spark, src_path: str, dst_path: str) -> None:
-    """Compact an appended IVF layout: rewrite so each cluster dir holds
-    ONE file again (appends add a file per batch; small files tax the
-    probe's listing + open cost). Reads the existing layout, co-locates
-    each cluster, writes to ``dst_path`` — a fresh dir, because
-    overwriting raw parquet in place while reading it is unsafe; the
-    caller swaps dirs (object stores: write-new + repoint, the Delta
-    OPTIMIZE shape without the transaction log). Row contents are
-    untouched, so probes before and after are identical."""
-    (
-        spark.read.parquet(src_path)
-        .repartition(F.col("cluster"))
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(dst_path)
+    ``append=True`` is incremental maintenance: a batch of NEW vectors
+    is assigned to the EXISTING trained centroids and appended, no
+    rebuild. Assignment depends only on (vector, centroids), so
+    append-then-probe equals a full rebuild over the union (pinned in
+    tests/test_ivf.py row for row): O(batch) per ingest instead of
+    O(corpus). What append does NOT do is re-TRAIN: the maintenance
+    loop is append per batch → ``tables.compact_layout`` when a
+    cluster's file count grows → full ``kmeans_lloyd`` re-train and
+    rewrite when ``ivf_drift`` says the cluster shares moved."""
+    write_layout(
+        assign_clusters_auto(vectors, cents, id_col, vec_col),
+        path,
+        "cluster",
+        append=append,
     )
 
 
@@ -505,11 +475,11 @@ def ivf_drift(
     drift_per_mille: int = IVF_DRIFT_PER_MILLE,
 ) -> DataFrame:
     """Centroid-drift diagnostic (VERDICT r8 #7) — the missing third
-    step of the IVF maintenance loop (``ivf_append`` per batch →
-    ``ivf_compact`` on file-count → re-train when THIS says so): compare
-    each cluster's CURRENT occupancy share against its TRAINING-time
-    share and flag a re-train when any cluster drifted ≥
-    ``drift_per_mille``. Appends assign new vectors to frozen centroids,
+    step of the IVF maintenance loop (``ivf_write_clustered(append=True)``
+    per batch → ``tables.compact_layout`` on file count → re-train when
+    THIS says so): compare each cluster's CURRENT occupancy share
+    against its TRAINING-time share and flag a re-train when any
+    cluster drifted ≥ ``drift_per_mille``. Appends assign new vectors to frozen centroids,
     so a shifting corpus distribution shows up precisely as occupancy
     drift — recall degrades as clusters overgrow their training shape.
 
@@ -597,10 +567,11 @@ def ivf_write_filtered(
     pruned parquet scan (PushedFilters next to the cluster
     PartitionFilters), so a filtered probe reads only the probed
     directories AND row-group-skips on the metadata inside them."""
-    assigned = assign_clusters_auto(
-        vectors, cents, id_col, vec_col, keep_cols=meta_cols
+    write_layout(
+        assign_clusters_auto(vectors, cents, id_col, vec_col, keep_cols=meta_cols),
+        path,
+        "cluster",
     )
-    assigned.write.mode("overwrite").partitionBy("cluster").parquet(path)
 
 
 def ivf_topk_filtered(

@@ -25,12 +25,11 @@ in BIGINT on every engine — the classic parallel bit-spread:
     z = spread(x) | spread(y) << 1         (x, y masked to 16 bits)
 
 Scale notes: the projection is scan-fused (zero shuffles, zero joins) —
-at write time a ``repartitionByRange(z)`` + per-file sort turns it into
-the physical layout; the registry row aggregates the per-bucket
-envelopes (one hash exchange, partial-combined map-side) because the
-envelope is the verifiable artifact. Skew-free by construction: Z-values
-inherit the key distribution, and range partitioning on z samples the
-actual density.
+at write time ``tables.write_layout`` (one file per bucket, z-sorted
+inside) turns it into the physical layout; the registry row aggregates
+the per-bucket envelopes (one hash exchange, partial-combined map-side)
+because the envelope is the verifiable artifact. Z-values inherit the
+key distribution, so a dense region means a large tile.
 """
 
 from __future__ import annotations
@@ -38,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from demo_pgvector_spark.tables import read_partitions
+from demo_pgvector_spark.tables import read_partitions, write_layout
 
 ZBITS = 16  # bits kept per dimension; z fits in 32 bits
 
@@ -73,10 +72,11 @@ def zorder_write(
     x_col: str,
     y_col: str,
     bucket_bits: int = 16,
+    append: bool = False,
 ) -> None:
     """Write the table Z-ORDERED: every row gets its Morton bucket (the
     code's top ``bucket_bits`` bits) as a PARTITION column, rows sorted
-    by bucket within each output file. This closes the layout loop that
+    by z within each output file. This closes the layout loop that
     ``zorder_envelopes`` only measured (VERDICT r7 #2): the bucket dirs
     are the "files" of a ZORDER compaction, and a rectangle predicate
     over (x, y) becomes a partition-PRUNED scan — Spark lists only the
@@ -87,56 +87,22 @@ def zorder_write(
     ingest/compaction (Delta's OPTIMIZE ZORDER does the same work); with
     real Delta/Iceberg the bucket would stay a hidden file-stats range,
     but on raw parquet a partition column is the Spark-native way to
-    make the skip visible to the reader. ``repartition(z_bucket)``
-    co-locates each tile so every dir gets one file, and
-    ``sortWithinPartitions`` keeps in-file z order (row-group pruning
-    inside surviving tiles rides on parquet min/max for free)."""
-    z = morton_z(F.col(x_col), F.col(y_col))
-    shift = 2 * ZBITS - bucket_bits
-    (
-        df.withColumn("z_bucket", F.shiftright(z, shift))
-        .withColumn("_z", z)
-        .repartition(F.col("z_bucket"))
-        .sortWithinPartitions("z_bucket", "_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .partitionBy("z_bucket")
-        .parquet(path)
-    )
+    make the skip visible to the reader. ``tables.write_layout`` gives
+    each tile one file and keeps in-file z order (row-group pruning
+    inside surviving tiles rides on parquet min/max for free).
 
-
-def zorder_append(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    bucket_bits: int = 16,
-) -> None:
-    """Incremental Z-order maintenance — the ``ivf_append`` /
-    ``band_index_append`` contract for the layout pillar: a new batch's
-    Morton buckets are a pure per-row function of (x, y), so appending
-    the bucketed batch into an existing ``zorder_write`` layout is
-    row-for-row identical to a full rewrite of the union (oracle-gated
-    by ``layout_zorder_append``'s shared pruned-scan oracle; pinned
-    row-for-row in tests/test_layout.py) — the daily-ingest path that
-    makes the layout a maintained artifact instead of a
-    rebuild-the-world compaction. O(batch) work per tick; each append
-    adds one file per TOUCHED tile (``repartition`` on the bucket), so
-    file count grows per batch and a periodic per-tile rewrite (the
-    ``ivf_compact`` shape) repays it. Pruned reads before and after an
-    append return exactly the union's rows — partition pruning never
-    sees file lineage, only dir names."""
+    ``append=True`` is incremental maintenance: a batch's Morton
+    buckets are a pure per-row function of (x, y), so appending it is
+    row-for-row a full rewrite of the union (oracle-gated by
+    ``layout_zorder_append``'s shared pruned-scan oracle, pinned in
+    tests/test_layout.py) — O(batch) work per tick."""
     z = morton_z(F.col(x_col), F.col(y_col))
-    shift = 2 * ZBITS - bucket_bits
-    (
-        df.withColumn("z_bucket", F.shiftright(z, shift))
-        .withColumn("_z", z)
-        .repartition(F.col("z_bucket"))
-        .sortWithinPartitions("z_bucket", "_z")
-        .drop("_z")
-        .write.mode("append")
-        .partitionBy("z_bucket")
-        .parquet(path)
+    write_layout(
+        df.withColumn("z_bucket", F.shiftright(z, 2 * ZBITS - bucket_bits)),
+        path,
+        "z_bucket",
+        append=append,
+        sort=(z,),
     )
 
 

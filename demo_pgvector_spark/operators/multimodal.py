@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from demo_pgvector_spark.operators import ann
+from demo_pgvector_spark.tables import write_layout
 
 MD5_BLOCK = 16  # bytes per md5 block
 
@@ -425,43 +426,26 @@ def phash_index_write(
     path: str,
     grid: int = PHASH_GRID,
     bands: int = PHASH_BANDS,
+    append: bool = False,
 ) -> None:
     """Materialize the corpus phash band index: decode + fingerprint
     the corpus ONCE at ingest and persist (doc_id, phash_lo, phash_hi,
-    band, key) partitioned by band — the mm twin of dedup.py's
-    band_index_write, completing the ingest-maintained artifact family
-    (IVF clusters, dedup bands, Z-order tiles, phash bands). At 100 TB
-    the payoff is bigger than the text case: the expensive stage is
-    the image DECODE, and because the stored fingerprint halves are
-    also the verification payload, an incremental near-dup run served
-    from this index never touches a corpus binary at all. The
-    repartition co-locates each band into ONE file per write (the
-    band_index_write small-files rationale, measured in SCALE.md
-    round 9)."""
-    banded_fingerprints(
-        image_blockhash(media, grid), grid, bands
-    ).repartition("band").write.mode("overwrite").partitionBy("band").parquet(
-        path
-    )
-
-
-def phash_index_append(
-    media: DataFrame,
-    path: str,
-    grid: int = PHASH_GRID,
-    bands: int = PHASH_BANDS,
-) -> None:
-    """Append a new batch's fingerprint bands into an existing phash
-    index. Fingerprinting is a pure per-image function, so
-    write(corpus) + append(batch) is row-for-row identical to a full
-    re-fingerprint of corpus ∪ batch (the band_index_append argument;
-    pinned in tests/test_multimodal.py). O(batch decodes) per ingest
-    tick; one file per band per append (band_index_compact's shape
-    repays the growth)."""
-    banded_fingerprints(
-        image_blockhash(media, grid), grid, bands
-    ).repartition("band").write.mode("append").partitionBy("band").parquet(
-        path
+    band, key) partitioned by band (``tables.write_layout``) — the mm
+    twin of dedup.py's band_index_write, completing the
+    ingest-maintained artifact family (IVF clusters, dedup bands,
+    Z-order tiles, phash bands). At 100 TB the payoff is bigger than
+    the text case: the expensive stage is the image DECODE, and because
+    the stored fingerprint halves are also the verification payload, an
+    incremental near-dup run served from this index never touches a
+    corpus binary at all. ``append=True`` adds a batch: fingerprinting
+    is a pure per-image function, so write(corpus) + append(batch) is
+    row-for-row a full re-fingerprint of corpus ∪ batch (pinned in
+    tests/test_multimodal.py), O(batch decodes) per ingest tick."""
+    write_layout(
+        banded_fingerprints(image_blockhash(media, grid), grid, bands),
+        path,
+        "band",
+        append=append,
     )
 
 

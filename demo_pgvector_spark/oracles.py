@@ -1375,12 +1375,12 @@ WHERE id_a % {DEDUP_BATCH_MOD} = 0 OR id_b % {DEDUP_BATCH_MOD} = 0
 
 
 # Corpus band index summary (registry q_dedup_index_write →
-# operators/dedup.py band_index_write + band_index_append): the Spark
+# operators/dedup.py band_index_write, then append=True): the Spark
 # side writes the index as CORPUS rows (doc_id % MOD != 0) then APPENDS
 # the batch (doc_id % MOD = 0) and summarizes the read-back layout; the
 # oracle bands the FULL documents table in one shot — a green row
 # therefore proves write + append ≡ full re-band (banding is a pure
-# per-document function; the ivf_append argument), not merely that some
+# per-document function; the tables.write_layout argument), not merely that some
 # parquet landed on disk.
 O_DEDUP_INDEX = f"""
 WITH {_O_SHINGLES},

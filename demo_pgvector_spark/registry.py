@@ -1917,7 +1917,7 @@ def q_vec_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct()); recall@10 on clustered data is pytest-gated (the
     bq_topk protocol)."""
     emb = tables.load(spark, sf_dir, "embeddings")
-    adj = spark.read.parquet(_sw_adjacency(spark, sf_dir, "full"))
+    adj = tables.read_partitions(spark, _sw_adjacency(spark, sf_dir, "full"))
     return ann_ops.smallworld_topk(
         emb, _query_vec(spark, sf_dir), k=10, adj=adj
     )
@@ -1934,7 +1934,7 @@ def _sw_store(spark: SparkSession, sf_dir: str) -> str:
         emb = tables.load(spark, sf_dir, "embeddings")
         planes = ann_ops.hyperplanes(len(_query_vec(spark, sf_dir)))
         # reuse the staged full adjacency rather than re-running the build
-        adj = spark.read.parquet(_sw_adjacency(spark, sf_dir, "full"))
+        adj = tables.read_partitions(spark, _sw_adjacency(spark, sf_dir, "full"))
         ann_ops.smallworld_store_write(emb, planes, work, adj=adj)
         return work
 
@@ -1967,7 +1967,7 @@ def q_vec_hnsw_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_vec_hnsw_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental graph-ANN maintenance (operators/ann.py
     smallworld_append) — the graph-index member of the O(batch)
-    family next to ivf_append / dedup_index / layout_zorder_append /
+    family next to vec_ivf_append / dedup_index / layout_zorder_append /
     mm_phash_incremental: 4/5 of the corpus is the standing index
     (bootstrap smallworld_build, untouched by the append), the last
     1/5 (vec_id % 5 = 0, the ivf_append convention) joins as a crawl
@@ -1984,7 +1984,7 @@ def q_vec_hnsw_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-batch-rows ≡ full-rebuild-restricted-to-batch is
     pytest-pinned (the pure-function candidate rule)."""
     emb = tables.load(spark, sf_dir, "embeddings")
-    adj = spark.read.parquet(_sw_adjacency(spark, sf_dir, "append"))
+    adj = tables.read_partitions(spark, _sw_adjacency(spark, sf_dir, "append"))
     return ann_ops.smallworld_topk(
         emb, _query_vec(spark, sf_dir), k=10, adj=adj
     )
@@ -2030,7 +2030,7 @@ def q_stream_hnsw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         planes,
         checkpoint_dir=os.path.join(work, "ckpt"),
     )
-    adj = spark.read.parquet(_sw_adjacency(spark, sf_dir, "base")).unionByName(
+    adj = tables.read_partitions(spark, _sw_adjacency(spark, sf_dir, "base")).unionByName(
         stream_ann_ops.read_adjacency(spark, root)
     )
     return ann_ops.smallworld_topk(emb, qvec, k=10, adj=adj)
@@ -2138,8 +2138,8 @@ def _ivf_layout(spark: SparkSession, sf_dir: str, kind: str) -> str:
             ivf_ops.ivf_write_clustered(
                 emb.filter(F.col("vec_id") % 5 != 0), cents, work
             )
-            ivf_ops.ivf_append(
-                emb.filter(F.col("vec_id") % 5 == 0), cents, work
+            ivf_ops.ivf_write_clustered(
+                emb.filter(F.col("vec_id") % 5 == 0), cents, work, append=True
             )
         elif kind == "ivf_filtered":
             # label rides into the partitioned store so probe-time
@@ -3943,8 +3943,8 @@ def _band_index_layout(spark: SparkSession, sf_dir: str) -> str:
         dedup_ops.band_index_write(
             docs.filter(F.col("doc_id") % DEDUP_BATCH_MOD != 0), p
         )
-        dedup_ops.band_index_append(
-            docs.filter(F.col("doc_id") % DEDUP_BATCH_MOD == 0), p
+        dedup_ops.band_index_write(
+            docs.filter(F.col("doc_id") % DEDUP_BATCH_MOD == 0), p, append=True
         )
         return p
 
@@ -3953,7 +3953,7 @@ def _band_index_layout(spark: SparkSession, sf_dir: str) -> str:
 
 def q_dedup_index_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized corpus band index (VERDICT r8 #3;
-    operators/dedup.py band_index_write / band_index_append): the
+    operators/dedup.py band_index_write, corpus then append=True): the
     corpus' (doc_id, band, key) rows persisted partitioned-by-band at
     ingest, the batch APPENDED — then summarized per band (row count,
     distinct keys, ≥2-doc buckets) from the READ-BACK layout. The
@@ -3963,7 +3963,7 @@ def q_dedup_index_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets. 100 TB: the index build is the one-time shingle+minhash
     pass; every later incremental-dedup run scans ~6 small rows/doc
     instead of re-hashing corpus text."""
-    idx = spark.read.parquet(_band_index_layout(spark, sf_dir))
+    idx = tables.read_partitions(spark, _band_index_layout(spark, sf_dir))
     bk = idx.groupBy("band", "key").agg(F.count(F.lit(1)).alias("n_docs"))
     return bk.groupBy(F.col("band").cast("long").alias("band")).agg(
         F.sum("n_docs").alias("n_rows"),
@@ -3989,7 +3989,7 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables.load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % DEDUP_BATCH_MOD != 0)
     batch = docs.filter(F.col("doc_id") % DEDUP_BATCH_MOD == 0)
-    idx = spark.read.parquet(_band_index_layout(spark, sf_dir))
+    idx = tables.read_partitions(spark, _band_index_layout(spark, sf_dir))
     c_bands = idx.filter(F.col("doc_id") % DEDUP_BATCH_MOD != 0).select(
         "doc_id", F.col("band").cast("int").alias("band"), "key"
     )
@@ -4076,7 +4076,9 @@ def _phash_index_layout(spark: SparkSession, sf_dir: str) -> str:
         )
         p = os.path.join(work, "phash_bands")
         mm_ops.phash_index_write(media.filter(F.col("doc_id") < 100), p)
-        mm_ops.phash_index_append(media.filter(F.col("doc_id") >= 100), p)
+        mm_ops.phash_index_write(
+            media.filter(F.col("doc_id") >= 100), p, append=True
+        )
         return p
 
     return _staged(sf_dir, "spark_graft_phashidx_", build)
@@ -4102,7 +4104,7 @@ def q_mm_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = mm_ops.fake_images_neardup(docs).filter(
         F.col("doc_id") % DEDUP_BATCH_MOD == 0
     )
-    idx = spark.read.parquet(_phash_index_layout(spark, sf_dir))
+    idx = tables.read_partitions(spark, _phash_index_layout(spark, sf_dir))
     return mm_ops.phash_pairs_incremental(batch, idx)
 
 
@@ -4339,9 +4341,10 @@ def _zorder_layout(spark: SparkSession, sf_dir: str, kind: str = "full") -> str:
                 li.filter(F.col("l_orderkey") % 5 != 0), work,
                 "l_partkey", "l_suppkey", bucket_bits=ZORDER_BUCKET_BITS,
             )
-            layout_ops.zorder_append(
+            layout_ops.zorder_write(
                 li.filter(F.col("l_orderkey") % 5 == 0), work,
                 "l_partkey", "l_suppkey", bucket_bits=ZORDER_BUCKET_BITS,
+                append=True,
             )
         else:
             layout_ops.zorder_write(
@@ -4396,7 +4399,7 @@ def q_layout_zorder_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_layout_zorder_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental Z-order maintenance (operators/layout.py
-    zorder_append — the layout pillar's ``ivf_append`` twin, completing
+    zorder_write(append=True) — the layout pillar's IVF-append twin, completing
     the ingest-maintained-artifact trilogy: IVF clusters, dedup bands,
     Z-order tiles): the layout is built GROWN — 4/5 of lineitem written
     as the base compaction, the last 1/5 appended later with the same
@@ -5093,7 +5096,7 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Python would bottleneck (and could OOM) the driver.
     res_path = os.path.join(work, "result")
     out.write.mode("overwrite").parquet(res_path)
-    return spark.read.parquet(res_path)
+    return tables.read_partitions(spark, res_path)
 
 
 def q_vec_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5134,7 +5137,7 @@ def q_vec_ivfsq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_vec_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF maintenance (VERDICT r7 #3; operators/ivf.py
-    ivf_append): the layout is built as a GROWN corpus — 4/5 of the
+    ivf_write_clustered(append=True)): the layout is built as a GROWN corpus — 4/5 of the
     vectors written cluster-partitioned, the last 1/5 appended later
     against the same trained seed centroids, no rebuild — then probed
     exactly like ``vec_ivf_pruned``. Assignment is a pure per-vector
@@ -5173,7 +5176,7 @@ def q_vec_ivf_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n_train"))
     )
-    return ivf_ops.ivf_drift(spark.read.parquet(work), train_counts)
+    return ivf_ops.ivf_drift(tables.read_partitions(spark, work), train_counts)
 
 
 def q_dedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6038,7 +6041,7 @@ def q_curate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(non_eval & ~is_batch)
     batch = docs.filter(non_eval & is_batch)
     eval_docs = docs.filter(~non_eval)
-    idx = spark.read.parquet(_band_index_layout(spark, sf_dir))
+    idx = tables.read_partitions(spark, _band_index_layout(spark, sf_dir))
     c_bands = idx.filter(
         (F.col("doc_id") % 41 != 0) & (F.col("doc_id") % DEDUP_BATCH_MOD != 0)
     ).select("doc_id", F.col("band").cast("int").alias("band"), "key")
@@ -6081,7 +6084,7 @@ def q_stream_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_batch = F.col("doc_id") % DEDUP_BATCH_MOD == 0
     corpus = docs.filter(non_eval & ~is_batch)
     eval_docs = docs.filter(~non_eval)
-    idx = spark.read.parquet(_band_index_layout(spark, sf_dir))
+    idx = tables.read_partitions(spark, _band_index_layout(spark, sf_dir))
     c_bands = idx.filter(
         (F.col("doc_id") % 41 != 0) & (F.col("doc_id") % DEDUP_BATCH_MOD != 0)
     ).select("doc_id", F.col("band").cast("int").alias("band"), "key")

@@ -133,10 +133,15 @@ def run_late_data_stream_update(
     nothing).
 
     Spark's file sink rejects UPDATE mode, so the changelog drains
-    through ``foreachBatch`` → per-batch parquet APPEND into the same
-    sibling out-dir the append row uses — exactly how a deployment
-    lands an update-mode changelog on files, and the accumulated files
-    ARE the delta multiset. No driver materialization (VERDICT r6 #4)."""
+    through ``foreachBatch`` into the sibling out-dir the append row
+    uses, one ``epoch=<id>`` directory per micro-batch — exactly how a
+    deployment lands an update-mode changelog on files, and the
+    directories ARE the delta multiset. A retried epoch replays the
+    same batch id and the same delta (the state store restarts from the
+    version before it), so overwriting its directory makes the write
+    idempotent: a crash after the write and before the epoch commits
+    cannot land the delta twice. No driver materialization (VERDICT r6
+    #4)."""
     _require_split_watermark(spark)
     stream = landing_stream(spark, landing, schema_ddl)
     agg = (
@@ -150,10 +155,12 @@ def run_late_data_stream_update(
     out_dir = checkpoint_dir.rstrip("/") + ".out"
     os.makedirs(out_dir, exist_ok=True)
 
-    def _append_delta(batch: DataFrame, _epoch_id: int) -> None:
-        batch.write.mode("append").parquet(out_dir)
+    def _write_delta(batch: DataFrame, epoch_id: int) -> None:
+        batch.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"epoch={epoch_id}")
+        )
 
-    drain(agg, checkpoint_dir, _append_delta, output_mode="update")
+    drain(agg, checkpoint_dir, _write_delta, output_mode="update")
     return spark.read.schema(agg.schema).parquet(out_dir).select(
         F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         F.col(key_col),

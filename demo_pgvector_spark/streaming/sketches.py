@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from demo_pgvector_spark.operators import sketch as sketch_ops
 from demo_pgvector_spark.streaming import ingest as ingest_ops
+from demo_pgvector_spark.tables import read_partitions
 
 SKETCH_SCHEMA_DDL = "r int, bucket bigint, cnt bigint"
 
@@ -188,11 +189,6 @@ def read_bloom(spark, root: str) -> DataFrame:
     return ingest_ops.read_table(spark, root, BLOOM_SCHEMA_DDL)
 
 
-# Default read schema of ``read_hll``: the registry's lineitem demo; a
-# different group_cols tuple passes its matching DDL explicitly.
-HLL_SCHEMA_DDL = "l_returnflag string, register bigint, rho int"
-
-
 def hll_sink(
     root: str,
     item_col: str,
@@ -245,6 +241,12 @@ def run_hll_stream(
     )
 
 
-def read_hll(spark, root: str, schema_ddl: str = HLL_SCHEMA_DDL) -> DataFrame:
-    """The committed HLL register table (empty before first commit)."""
-    return ingest_ops.read_table(spark, root, schema_ddl)
+def read_hll(spark, root: str) -> DataFrame:
+    """The committed HLL register table, read with the schema its files
+    were written with, so grouped and ungrouped sinks read back alike
+    (the empty ungrouped ``register bigint, rho int`` frame before the
+    first commit)."""
+    v = ingest_ops.current_version(root)
+    if v is None:
+        return spark.createDataFrame([], "register bigint, rho int")
+    return read_partitions(spark, os.path.join(root, v))

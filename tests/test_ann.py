@@ -219,6 +219,33 @@ def test_encode_codes_strategies_agree(spark, clustered_df, monkeypatch):
     assert a == b
 
 
+def test_encode_codes_past_the_inline_ceiling_exchanges_the_rows_once(
+    spark, monkeypatch
+):
+    """On the codebook broadcast path the rest of the row rides through
+    the min_by aggregation as ``first()``: the final plan hash-exchanges
+    the 300-row vector table once, on vec_id, and no join re-attaches
+    the codes to the full-width row."""
+    from demo_pgvector_spark.operators import ivf
+
+    rows = _clustered(n_clusters=5, per_cluster=60)
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    df = df.withColumn("label", F.col("vec_id") % 3)
+    books = ann.codebooks_from_seeds([r[1] for r in rows[:16]], 8, 64)
+    monkeypatch.setattr(ivf, "INLINE_MAX_LITERALS", 1)
+    out = ann.encode_codes(df, books)
+    assert out.columns == [
+        "vec_id", "embedding", "label", *[f"code_{s}" for s in range(8)]
+    ]
+    got = out.collect()
+    assert len(got) == 300
+    assert all(r["label"] == r["vec_id"] % 3 for r in got)
+    final = out._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert final.count("Exchange hashpartitioning(vec_id") == 1, final
+    assert final.count("Join") == 1 and "BroadcastHashJoin" in final, final
+
+
 def test_ivfpq_pruned_matches_direct_composition(spark, clustered_df, tmp_path):
     """The write-time layout (partitioned clusters + stored codes) is a
     plan change only: ivfpq_topk_pruned over ivfpq_write output must

@@ -1,11 +1,13 @@
 """Conversion + sink tests (operators/convert.py): container→markdown
-round-trip and the partitioned parquet sink with partition pruning."""
+round-trip, and the partitioned parquet sink (tables.write_layout) with
+partition pruning."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from demo_pgvector_spark import tables
 from demo_pgvector_spark.operators import convert
 
 
@@ -35,7 +37,7 @@ def test_convert_external_is_stub(docs_df):
 
 def test_partitioned_sink_prunes(spark, docs_df, tmp_path):
     path = str(tmp_path / "docs_by_lang")
-    convert.write_partitioned(docs_df, path, partition_cols=("lang",))
+    tables.write_layout(docs_df, path, "lang")
 
     back = spark.read.parquet(path)
     assert back.count() == 3

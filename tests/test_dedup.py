@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from demo_pgvector_spark import tables
 from demo_pgvector_spark.operators import dedup
 
 BASE = (
@@ -478,14 +479,14 @@ def test_incremental_guards_against_overlapping_ids(corpus_df):
 
 
 def test_band_index_append_equals_full_reband(corpus_df, spark, tmp_path):
-    """band_index_write(corpus) + band_index_append(batch) must be
+    """band_index_write(corpus) + band_index_write(batch, append=True) must be
     row-for-row identical to band_index(corpus ∪ batch) — banding is a
     pure per-document function (the ivf_append argument)."""
     p = str(tmp_path / "bands")
     corpus = corpus_df.filter(F.col("doc_id") % 2 == 1)
     batch = corpus_df.filter(F.col("doc_id") % 2 == 0)
     dedup.band_index_write(corpus, p)
-    dedup.band_index_append(batch, p)
+    dedup.band_index_write(batch, p, append=True)
     got = sorted(
         (r["doc_id"], int(r["band"]), r["key"])
         for r in spark.read.parquet(p).collect()
@@ -538,14 +539,14 @@ def test_incremental_indexed_trusts_the_index(corpus_df, spark, tmp_path):
 def test_band_index_compact_preserves_rows_and_merges_files(
     corpus_df, spark, tmp_path
 ):
-    """band_index_compact: after several appends the rewrite must leave
+    """tables.compact_layout: after several appends the rewrite must leave
     the row set untouched while collapsing each band dir to one file."""
     import glob
 
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     dedup.band_index_write(corpus_df.filter("doc_id = 0"), src)
     for i in (1, 2, 3, 4):
-        dedup.band_index_append(corpus_df.filter(f"doc_id = {i}"), src)
+        dedup.band_index_write(corpus_df.filter(f"doc_id = {i}"), src, append=True)
 
     def rows(p):
         return sorted(
@@ -560,7 +561,7 @@ def test_band_index_compact_preserves_rows_and_merges_files(
         )
 
     assert files_per_band(src) >= 5  # one file per append per touched band
-    dedup.band_index_compact(spark, src, dst)
+    tables.compact_layout(spark, src, dst, "band")
     assert rows(dst) == rows(src) and len(rows(dst)) > 0
     assert files_per_band(dst) == 1
 

@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from demo_pgvector_spark import tables
 from demo_pgvector_spark.operators import ivf
 from tests.test_ann import _clustered
 
@@ -206,7 +207,6 @@ def test_pruned_probe_plans_without_a_job_and_skips_an_empty_cluster(
     probe must skip it and still equal the inline probe."""
     import os
 
-    from demo_pgvector_spark import tables
     from tests.conftest import spark_jobs
 
     rows = _clustered()
@@ -298,7 +298,7 @@ def test_ivf_append_equals_full_rebuild(spark, clustered_df, tmp_path):
 
     grown = str(tmp_path / "grown")
     ivf.ivf_write_clustered(base, cents, grown)
-    ivf.ivf_append(batch, cents, grown)
+    ivf.ivf_write_clustered(batch, cents, grown, append=True)
 
     rebuilt = str(tmp_path / "rebuilt")
     ivf.ivf_write_clustered(clustered_df, cents, rebuilt)
@@ -324,12 +324,13 @@ def test_ivf_compact_preserves_rows_and_merges_files(spark, clustered_df, tmp_pa
     grown = str(tmp_path / "grown")
     ivf.ivf_write_clustered(clustered_df.filter(F.col("vec_id") % 5 != 0), cents, grown)
     for m in range(3):  # three append batches -> multiple files per dir
-        ivf.ivf_append(
+        ivf.ivf_write_clustered(
             clustered_df.filter(
                 (F.col("vec_id") % 5 == 0) & (F.col("vec_id") % 3 == m)
             ),
             cents,
             grown,
+            append=True,
         )
 
     def n_files(p):
@@ -339,7 +340,7 @@ def test_ivf_compact_preserves_rows_and_merges_files(spark, clustered_df, tmp_pa
         )
 
     compacted = str(tmp_path / "compacted")
-    ivf.ivf_compact(spark, grown, compacted)
+    tables.compact_layout(spark, grown, compacted, "cluster")
     rows = lambda p: sorted(
         (r["vec_id"], r["cluster"])
         for r in spark.read.parquet(p).select("vec_id", "cluster").collect()

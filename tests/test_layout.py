@@ -106,7 +106,7 @@ def test_zorder_pruned_scan_reads_only_intersecting_tiles(spark, tmp_path):
 
 
 def test_zorder_append_equals_full_rewrite(spark, tmp_path):
-    """zorder_append (the layout pillar's ivf_append twin): write 4/5,
+    """zorder_write(append=True) (the layout pillar's IVF-append twin): write 4/5,
     append 1/5 — the resulting table must be ROW-FOR-ROW the full
     rewrite of the union, and the pruned rectangle scan over the
     appended layout must return exactly the rewrite's rows."""
@@ -116,8 +116,8 @@ def test_zorder_append_equals_full_rewrite(spark, tmp_path):
     full = str(tmp_path / "full")
     layout.zorder_write(df.filter(F.col("id") % 5 != 0), grown, "x", "y",
                         bucket_bits=6)
-    layout.zorder_append(df.filter(F.col("id") % 5 == 0), grown, "x", "y",
-                         bucket_bits=6)
+    layout.zorder_write(df.filter(F.col("id") % 5 == 0), grown, "x", "y",
+                        bucket_bits=6, append=True)
     layout.zorder_write(df, full, "x", "y", bucket_bits=6)
 
     def rows_of(path):

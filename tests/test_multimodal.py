@@ -164,13 +164,13 @@ def test_fake_images_neardup_payload_contract(spark):
 def test_phash_index_append_equals_rebuild(spark, tmp_path):
     """write(first half) + append(second half) is row-for-row identical
     to a one-shot write of the union: fingerprinting is a pure
-    per-image function (the band_index_append argument)."""
+    per-image function (the band index's append argument)."""
     docs = spark.createDataFrame([(i,) for i in range(80)], "doc_id long")
     media = mm.fake_images_neardup(docs)
     full, inc = str(tmp_path / "full"), str(tmp_path / "inc")
     mm.phash_index_write(media, full)
     mm.phash_index_write(media.filter(F.col("doc_id") < 40), inc)
-    mm.phash_index_append(media.filter(F.col("doc_id") >= 40), inc)
+    mm.phash_index_write(media.filter(F.col("doc_id") >= 40), inc, append=True)
     cols = ["doc_id", "phash_lo", "phash_hi", "band", "key"]
     a = sorted(tuple(r) for r in spark.read.parquet(full).select(cols).collect())
     b = sorted(tuple(r) for r in spark.read.parquet(inc).select(cols).collect())

@@ -804,3 +804,51 @@ def test_curation_audit_streams_the_corpus_past_batch_broadcasts(
     assert scanned == corpus_dirs
     assert exchanged == [], "corpus rows reach an exchange"
     assert shingled and set(shingled) == {"join"}, shingled
+
+
+def test_layouts_are_written_and_read_back_only_through_tables():
+    """Every DataFrameWriter ``.partitionBy(`` in the package is in
+    tables.py (``write_layout``, the one partitioned writer; a
+    ``Window.partitionBy`` spec is not a write). And no package module
+    reads a directory the engine wrote with a bare
+    ``spark.read.parquet(``, which launches a schema-inference job: the
+    only bare reads left are of user-supplied inputs in cli.py and of
+    the testdata and golden files that ship beside the package."""
+    import ast
+    import pathlib
+
+    import demo_pgvector_spark
+
+    def root_name(node):
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            node = node.value if isinstance(node, ast.Attribute) else node.func
+        return getattr(node, "id", None)
+
+    pkg = pathlib.Path(demo_pgvector_spark.__file__).parent
+    writers, bare = set(), set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for top in tree.body:
+            name = getattr(top, "name", "<module>")
+            for n in ast.walk(top):
+                if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+                    continue
+                if n.func.attr == "partitionBy" and root_name(n.func.value) != "Window":
+                    writers.add((rel, name))
+                if (
+                    n.func.attr == "parquet"
+                    and isinstance(n.func.value, ast.Attribute)
+                    and n.func.value.attr == "read"
+                ):
+                    bare.add((rel, name))
+    assert writers == {("tables.py", "write_layout")}
+    assert bare == {
+        ("cli.py", "curate"),
+        ("cli.py", "mix"),
+        ("cli.py", "quality_filter"),
+        ("cli.py", "semdedup"),
+        ("registry.py", "q_text_quality_model"),
+        ("streaming/windows.py", "read_events_stream"),
+        ("tables.py", "load"),
+    }

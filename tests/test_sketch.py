@@ -272,16 +272,22 @@ def test_streaming_hll_sink_folds_ungrouped_epochs(spark, tmp_path):
     """hll_sink with the default ``group_cols=()``: the committed
     registers are read with the epoch delta's own schema, so three
     epochs fold into the same table as ``hll_build`` of their union (a
-    fixed lineitem read DDL made the first epoch's union fail)."""
+    fixed lineitem read DDL made the first epoch's union fail).
+    ``read_hll`` takes no DDL either: the empty ungrouped frame before
+    the first commit, then the schema the files were written with (a
+    lineitem DDL default failed the footer check on this table)."""
     from demo_pgvector_spark.streaming import sketches as ssk
 
     root = str(tmp_path / "hll")
+    empty = ssk.read_hll(spark, root)
+    assert empty.dtypes == [("register", "bigint"), ("rho", "int")]
+    assert empty.collect() == []
     sink = ssk.hll_sink(root, "item")
     for epoch, chunk in enumerate([ITEMS[0::3], ITEMS[1::3], ITEMS[2::3]]):
         sink(_df(spark, chunk), epoch)
     got = sorted(
         tuple(r)
-        for r in ssk.read_hll(spark, root, "register bigint, rho int").collect()
+        for r in ssk.read_hll(spark, root).collect()
     )
     whole = sorted(
         tuple(r) for r in sketch.hll_build(_df(spark, ITEMS), "item").collect()

@@ -171,7 +171,7 @@ def _hll_case(spark):
         lambda stream, root, ckpt: sketches.run_hll_stream(
             stream, root, "item", ckpt
         ),
-        lambda root: sketches.read_hll(spark, root, "register bigint, rho int"),
+        lambda root: sketches.read_hll(spark, root),
         lambda everything: sketch.hll_build(everything, "item"),
     )
 
@@ -201,17 +201,48 @@ def _scd2_case(spark):
     )
 
 
+def _hnsw_case(spark):
+    from demo_pgvector_spark.operators import ann
+    from demo_pgvector_spark.streaming import ann as stream_ann
+    from tests.test_ann import _clustered
+
+    rows = _clustered(n_clusters=4, per_cluster=20)
+    ddl = "vec_id long, embedding array<double>"
+    base = spark.createDataFrame([r for r in rows if r[0] % 5], ddl)
+    batch = [r for r in rows if r[0] % 5 == 0]
+    planes = ann.hyperplanes(len(rows[0][1]))
+    return (
+        ddl,
+        [batch[b::3] for b in range(3)],
+        lambda stream, root, ckpt: stream_ann.run_hnsw_stream(
+            stream, root, base, planes, ckpt
+        ),
+        lambda root: stream_ann.read_adjacency(spark, root),
+        lambda everything: ann.smallworld_append(base, everything, planes),
+    )
+
+
 @pytest.mark.parametrize(
-    "case", [_bloom_case, _hll_case, _scd2_case], ids=["bloom", "hll", "scd2"]
+    "case, crash_at, table",
+    [
+        (_bloom_case, 2, ""),
+        (_hll_case, 2, ""),
+        (_scd2_case, 2, ""),
+        # two commits per epoch: crash between epoch 2's staging commit
+        # and its adjacency commit
+        (_hnsw_case, 3, "staged"),
+    ],
+    ids=["bloom", "hll", "scd2", "hnsw"],
 )
 def test_sink_stream_retry_repairs_a_crash_after_the_commit(
-    spark, tmp_path, monkeypatch, case
+    spark, tmp_path, monkeypatch, case, crash_at, table
 ):
-    """Fault injection through the real drain for the bloom, HLL and
-    SCD2 sinks: epoch 2 commits its table version, then raises before
-    the epoch completes. Draining again from the same checkpoint replays
-    epoch 2 (each sink's fold is idempotent) and epoch 3, and the final
-    table equals the batch fold of every epoch's rows."""
+    """Fault injection through the real drain for the bloom, HLL, SCD2
+    and small-world index sinks: epoch 2 commits its ``table`` version,
+    then raises before the epoch completes. Draining again from the
+    same checkpoint replays epoch 2 (each sink's fold is idempotent)
+    and epoch 3, and the final table equals the batch fold of every
+    epoch's rows."""
     from pyspark.errors import StreamingQueryException
 
     ddl, slices, run_stream, read, batch_fold = case(spark)
@@ -225,17 +256,17 @@ def test_sink_stream_retry_repairs_a_crash_after_the_commit(
 
     real, commits = ingest.commit_table, []
 
-    def crash_after_second_commit(*args, **kwargs):
+    def crash_after_epoch_2_commit(*args, **kwargs):
         version = real(*args, **kwargs)
         commits.append(version)
-        if len(commits) == 2:
+        if len(commits) == crash_at:
             raise RuntimeError("injected crash after the commit")
         return version
 
-    monkeypatch.setattr(ingest, "commit_table", crash_after_second_commit)
+    monkeypatch.setattr(ingest, "commit_table", crash_after_epoch_2_commit)
     with pytest.raises(StreamingQueryException, match="injected crash"):
         run()
-    assert ingest.current_version(root) == "v000002"
+    assert ingest.current_version(os.path.join(root, table)) == "v000002"
     monkeypatch.setattr(ingest, "commit_table", real)
     run()
 

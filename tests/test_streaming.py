@@ -272,6 +272,73 @@ def test_late_data_drop_and_holdback(spark, tmp_path):
     assert "2023-12-31 23:50:00" not in got
 
 
+def test_late_update_changelog_survives_a_crash_after_the_write(
+    spark, tmp_path, monkeypatch
+):
+    """Fault injection in the update-mode changelog: epoch 1 writes its
+    delta, then raises before the epoch commits. Draining again from
+    the same checkpoint replays epoch 1, and the changelog must equal
+    a clean drain's: the replayed delta replaces its first write
+    instead of landing beside it."""
+    import os
+
+    import duckdb
+    from pyspark.errors import StreamingQueryException
+
+    from demo_pgvector_spark.streaming import late
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    batches = [
+        [(1, "2024-01-01 00:01:00", "a"), (3, "2024-01-01 00:02:00", "a")],
+        [(5, "2024-01-01 00:05:00", "a")],
+        [(7, "2024-01-01 00:15:00", "a")],
+    ]
+    con = duckdb.connect()
+    for b, rows in enumerate(batches):
+        vals = ", ".join(f"({i}, TIMESTAMP '{t}', '{k}')" for i, t, k in rows)
+        p = str(landing / f"b{b}.parquet")
+        con.execute(
+            f"COPY (SELECT * FROM (VALUES {vals}) t(event_id, ts, event_type))"
+            f" TO '{p}' (FORMAT parquet)"
+        )
+        os.utime(p, (1_000_000 + b * 1000, 1_000_000 + b * 1000))
+
+    def run(ckpt):
+        out = late.run_late_data_stream_update(
+            spark,
+            str(landing),
+            checkpoint_dir=str(tmp_path / ckpt),
+            schema_ddl="event_id long, ts timestamp, event_type string",
+            delay="10 minutes",
+            window="10 minutes",
+        )
+        return sorted(map(tuple, out.collect()))
+
+    clean = run("clean")
+    assert clean == [
+        ("2024-01-01 00:00:00", "a", 2, 4),
+        ("2024-01-01 00:00:00", "a", 3, 9),
+        ("2024-01-01 00:10:00", "a", 1, 7),
+    ]
+
+    real_drain = late.drain
+
+    def crash_after_epoch_1(df, checkpoint_dir, sink, **kwargs):
+        def write_then_crash(batch, epoch_id):
+            sink(batch, epoch_id)
+            if epoch_id == 1:
+                raise RuntimeError("injected crash after the write")
+
+        return real_drain(df, checkpoint_dir, write_then_crash, **kwargs)
+
+    monkeypatch.setattr(late, "drain", crash_after_epoch_1)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run("crashed")
+    monkeypatch.setattr(late, "drain", real_drain)
+    assert run("crashed") == clean
+
+
 def test_stream_stream_join_matches_batch_join_across_batch_boundary(spark, tmp_path):
     """The watermarked stream-stream inner join must emit exactly the
     batch band-join pairs, INCLUDING a match whose partner arrives in a
